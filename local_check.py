@@ -2,8 +2,11 @@
 """Local mirror of the driver's correctness gate.
 
 Usage:
-  sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/vout <q1,q2,...>"
-  python3 local_check.py /root/testdata/sf0.01 /tmp/vout [q1 q2 ...]
+  sbt -batch "runMain graft.Verify <sfDir> <outDir> <q1,q2,...>"
+  python3 local_check.py <sfDir> <outDir> [q1 q2 ...]
+
+A name ending in `*` selects every query with that prefix, in both
+commands (e.g. `q_pipeline_*`; quote it from the shell).
 
 For each dumped query result under outDir/<name>/, runs the oracle SQL
 from outDir/oracle_sql.json in DuckDB against the sfDir parquet tables,
@@ -34,7 +37,7 @@ def norm(v):
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:]) or None
+    only = sys.argv[3:] or None
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     con = duckdb.connect()
     for t in TABLES:
@@ -43,7 +46,9 @@ def main():
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     fails = []
-    names = sorted(n for n in oracle if only is None or n in only)
+    names = sorted(n for n in oracle if only is None or any(
+        n.startswith(p[:-1]) if p.endswith("*") else n == p
+        for p in only))
     for name in names:
         res_dir = f"{out_dir}/{name}"
         if not glob.glob(f"{res_dir}/*.parquet"):

@@ -5,15 +5,18 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query names for a fast local
-    // gate on just-changed entries (the driver always runs the full set)
+    // gate on just-changed entries (a full run passes no list); a name
+    // ending in `*` selects every query with that prefix
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
-      case Array(s, o, q) => (s, o, Some(q.split(',').toSet))
+      case Array(s, o, q) => (s, o, Some(q.split(',').toSeq))
     }
+    def selected(name: String): Boolean = only.forall(_.exists(p =>
+      if (p.endsWith("*")) name.startsWith(p.dropRight(1)) else p == name))
     val spark = LocalSession(defaultCpus = "4")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -36,7 +36,7 @@ object Pipeline {
 
   /** One config step: a registry operator name plus its parameters.
     * Values are plain Scala (String / Long / Double / Boolean /
-    * Seq / Map) — what [[fromJson]] / [[fromYaml]] produce. */
+    * Seq / Map) — what [[parse]] produces. */
   final case class Step(op: String, params: Map[String, Any] = Map.empty)
 
   /** Validated parameter view handed to operator bodies: typed
@@ -2893,7 +2893,14 @@ object Pipeline {
     * source, transforms from the streamable whitelist between, last
     * step a streaming sink. The whole config validates — including
     * the non-streamable-step rejection — before the source is
-    * touched; the started [[StreamingQuery]] returns to the caller. */
+    * touched; the started [[StreamingQuery]] returns to the caller.
+    *
+    * A chain carrying a STORE-FAILURES contract gate
+    * (`expect_condition` with `quarantine_path`) runs as ONE query
+    * through the unified gated runner ([[startGatedUnified]]): its
+    * survivors overwrite `<path>/batch=<id>` under the
+    * `write_stream_parquet` sink's path. The runner owns that write,
+    * so no other sink is legal in a gated config. */
   def startStreamSteps(spark: org.apache.spark.sql.SparkSession,
                        steps: Seq[Step],
                        extra: Map[String, OpSpec] = Map.empty,
@@ -2902,102 +2909,52 @@ object Pipeline {
     val expanded = expandIncludes(steps)
     require(expanded.size >= 2,
       "streaming job config needs a source step and a sink step")
-    val (sreq, sopt, mk) = streamSourceOps.getOrElse(expanded.head.op,
-      throw new IllegalArgumentException(
-        s"first step must be a streaming source; " +
-          s"'${expanded.head.op}' is not one of " +
-          streamSourceOps.keys.toSeq.sorted.mkString(", ")))
-    validateKeys("streaming source", expanded.head, sreq, sopt)
-    val (kreq, kopt, sink) = streamSinkOps.getOrElse(expanded.last.op,
-      throw new IllegalArgumentException(
-        s"last step must be a streaming sink; '${expanded.last.op}' " +
-          "is not one of " +
-          streamSinkOps.keys.toSeq.sorted.mkString(", ")))
-    validateKeys("streaming sink", expanded.last, kreq, kopt)
-    val chain = fromStepsStreaming(expanded.drop(1).dropRight(1),
-      extra, extraStreamable)
-    sink(chain(mk(spark,
-        new Params(expanded.head.op, expanded.head.params))),
-      new Params(expanded.last.op, expanded.last.params))
+    val (source, sink) = (expanded.head, expanded.last)
+    val read = lookup(streamSourceOps, "first", "streaming source", source)
+    val write = lookup(streamSinkOps, "last", "streaming sink", sink)
+    val chain = expanded.slice(1, expanded.size - 1)
+    val sp = new Params(sink.op, sink.params)
+    val start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery =
+      if (chain.exists(isGate)) {
+        require(sink.op == "write_stream_parquet",
+          "gated streaming config: sink must be write_stream_parquet " +
+            "(the unified runner owns the survivors write); got " +
+            s"'${sink.op}'")
+        val run = compileGated(chain, extra, extraStreamable)
+        run(_, sp.str("path"), sp.str("checkpoint"))
+      } else {
+        val f = compileStreaming(chain, extra, extraStreamable)
+        df => write(f(df), sp)
+      }
+    start(read(spark, new Params(source.op, source.params)))
   }
 
-  /** Run a COMPLETE STREAMING job config whose transform chain may
-    * carry STORE-FAILURES contract gates (`expect_condition` with
-    * `quarantine_path`): the main chain runs survivors-only into the
-    * config's sink, and each gate starts its own violation writer
-    * ([[graft.streaming.StreamOps.quarantineGateStream]] — per-batch
-    * `gate=<name>`/batch=<id> overwrite, replay-idempotent). Returns
-    * the started queries MAIN FIRST, then one writer per gate in
-    * config order; the caller owns stop/awaitTermination on each.
-    * Writer checkpoints live under `<gate dir>/_checkpoint`
-    * (underscore-prefixed — invisible to parquet partition
-    * discovery, so reading the gate dir still just works). A config
-    * with no gated contract behaves exactly like
-    * [[startStreamSteps]] and returns one query. */
-  def startStreamStepsGated(spark: org.apache.spark.sql.SparkSession,
-                            steps: Seq[Step],
-                            extra: Map[String, OpSpec] = Map.empty,
-                            extraStreamable: Set[String] = Set.empty)
-      : Seq[org.apache.spark.sql.streaming.StreamingQuery] = {
-    val expanded = expandIncludes(steps)
-    require(expanded.size >= 2,
-      "streaming job config needs a source step and a sink step")
-    val (sreq, sopt, mk) = streamSourceOps.getOrElse(expanded.head.op,
-      throw new IllegalArgumentException(
-        s"first step must be a streaming source; " +
-          s"'${expanded.head.op}' is not one of " +
-          streamSourceOps.keys.toSeq.sorted.mkString(", ")))
-    validateKeys("streaming source", expanded.head, sreq, sopt)
-    val (kreq, kopt, sink) = streamSinkOps.getOrElse(expanded.last.op,
-      throw new IllegalArgumentException(
-        s"last step must be a streaming sink; '${expanded.last.op}' " +
-          "is not one of " +
-          streamSinkOps.keys.toSeq.sorted.mkString(", ")))
-    validateKeys("streaming sink", expanded.last, kreq, kopt)
-    val (chain, gates) = fromStepsStreamingGated(
-      expanded.drop(1).dropRight(1), extra, extraStreamable)
-    val src = mk(spark,
-      new Params(expanded.head.op, expanded.head.params))
-    val main = sink(chain(src),
-      new Params(expanded.last.op, expanded.last.params))
-    main +: gates.map(g => graft.streaming.StreamOps
-      .quarantineGateStream(src, g, s"${g.dir}/_checkpoint"))
-  }
+  /** Self-contained streaming config text ([[parse]]) → started
+    * query ([[startStreamSteps]]). */
+  def startStreamJson(spark: org.apache.spark.sql.SparkSession,
+                      json: String,
+                      extra: Map[String, OpSpec] = Map.empty,
+                      extraStreamable: Set[String] = Set.empty)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    startStreamSteps(spark, parse(json), extra, extraStreamable)
 
-  /** Self-contained streaming JSON job config with contract gates →
-    * started queries, main first. */
-  def startStreamJsonGated(spark: org.apache.spark.sql.SparkSession,
-                           json: String,
-                           extra: Map[String, OpSpec] = Map.empty,
-                           extraStreamable: Set[String] = Set.empty)
-      : Seq[org.apache.spark.sql.streaming.StreamingQuery] =
-    startStreamStepsGated(spark,
-      parseSteps(new ObjectMapper().readTree(json)), extra,
-      extraStreamable)
-
-  /** Self-contained streaming YAML job config with contract gates →
-    * started queries, main first. */
-  def startStreamYamlGated(spark: org.apache.spark.sql.SparkSession,
-                           yaml: String,
-                           extra: Map[String, OpSpec] = Map.empty,
-                           extraStreamable: Set[String] = Set.empty)
-      : Seq[org.apache.spark.sql.streaming.StreamingQuery] =
-    startStreamStepsGated(spark,
-      parseSteps(new ObjectMapper(new YAMLFactory()).readTree(yaml)),
-      extra, extraStreamable)
+  /** [[startStreamJson]] under the name perfbench's `stream_gate`
+    * workload starts its gated job with. */
+  def startStreamJsonGatedUnified(spark: org.apache.spark.sql.SparkSession,
+                                  json: String,
+                                  extra: Map[String, OpSpec] = Map.empty,
+                                  extraStreamable: Set[String] = Set.empty)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    startStreamJson(spark, json, extra, extraStreamable)
 
   /** UNIFIED gated streaming: ONE StreamingQuery feeds every
     * quarantine gate AND the survivors sink from the SAME
-    * materialized micro-batch — the correct form when a
-    * batch-boundary-sensitive stateful step (e.g.
-    * `first_seen_flags_watermarked`) precedes a gate. The two-query
-    * form ([[startStreamStepsGated]]) re-runs the chain prefix as an
-    * independent query per gate; independent queries batch the source
-    * differently and advance watermarks independently, so a stateful
-    * prefix can flag a row first-seen in the main query but duplicate
-    * in the writer — the row is then dropped by the main chain AND
-    * absent from quarantine (silently lost), or kept and also
-    * quarantined. Here there is no second computation to diverge.
+    * materialized micro-batch. A batch-boundary-sensitive stateful
+    * step (e.g. `first_seen_flags_watermarked`) ahead of a gate
+    * therefore flags each row exactly once: the row is a survivor or
+    * quarantined, never lost and never both. The caller supplies the
+    * streaming source frame and the survivors path;
+    * [[startStreamSteps]] routes a complete gated job config here.
     *
     * Chain layout contract, validated eagerly: steps BEFORE the first
     * gate run once in the streaming plan (stateful steps allowed —
@@ -3019,12 +2976,25 @@ object Pipeline {
                         sinkPath: String, checkpoint: String,
                         extra: Map[String, OpSpec] = Map.empty,
                         extraStreamable: Set[String] = Set.empty)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val expanded = expandIncludes(steps)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    compileGated(expandIncludes(steps), extra, extraStreamable)(src,
+      sinkPath, checkpoint)
+
+  /** A store-failures contract gate: the step the unified runner
+    * splits each micro-batch on. */
+  private def isGate(s: Step): Boolean =
+    s.op == "expect_condition" && s.params.contains("quarantine_path")
+
+  /** [[startGatedUnified]]'s compile over an expanded chain: every
+    * step validates here, and the returned function starts the query
+    * on a source frame, survivors path and checkpoint. */
+  private def compileGated(expanded: Seq[Step],
+                           extra: Map[String, OpSpec],
+                           extraStreamable: Set[String])
+      : (DataFrame, String, String) =>
+        org.apache.spark.sql.streaming.StreamingQuery = {
     streamingValidate(expanded, streamableOps ++ extraStreamable)
     val registry = builtinOps ++ extra
-    def isGate(s: Step): Boolean =
-      s.op == "expect_condition" && s.params.contains("quarantine_path")
     val firstGate = expanded.indexWhere(isGate)
     require(firstGate >= 0,
       "startGatedUnified: no store-failures gate (expect_condition " +
@@ -3038,18 +3008,19 @@ object Pipeline {
         "gate — stateful steps must precede every gate (they run " +
         "once in the streaming plan; gates and later steps re-apply " +
         "per materialized micro-batch)")
-    val prefix = fromStepsStreaming(pre, extra, extraStreamable)
+    val prefix = compileAll(registry, pre)
     // compile the suffix eagerly: gate splits + stateless transforms
     val suffix: Seq[Either[(String, Column), DataFrame => DataFrame]] =
       post.map { s =>
         if (isGate(s)) {
-          validateStepParams(registry("expect_condition"), s)
+          val spec = registry("expect_condition")
+          checkParams("pipeline op", s, spec.required, spec.optional)
           val p = new Params(s.op, s.params)
           val cond = parseEagerly(p.str("condition"))
           Left((quarantineTarget(p, "expect_condition").get, cond))
         } else Right(compileStep(registry, s))
       }
-    prefix(src).writeStream
+    (src, sinkPath, checkpoint) => prefix(src).writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val pinned = batch.persist()
@@ -3072,99 +3043,23 @@ object Pipeline {
       .start()
   }
 
-  /** Run a COMPLETE STREAMING job config through the unified gated
-    * runner ([[startGatedUnified]]): source step first, transform
-    * chain with at least one store-failures gate, and a
-    * `write_stream_parquet` sink — the runner owns the survivors
-    * write (batch=<id> overwrite layout, replay-idempotent like the
-    * gate dirs), so only the parquet path sink is legal here. */
-  def startStreamStepsGatedUnified(spark: org.apache.spark.sql.SparkSession,
-                                   steps: Seq[Step],
-                                   extra: Map[String, OpSpec] = Map.empty,
-                                   extraStreamable: Set[String] = Set.empty)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val expanded = expandIncludes(steps)
-    require(expanded.size >= 2,
-      "streaming job config needs a source step and a sink step")
-    val (sreq, sopt, mk) = streamSourceOps.getOrElse(expanded.head.op,
-      throw new IllegalArgumentException(
-        s"first step must be a streaming source; " +
-          s"'${expanded.head.op}' is not one of " +
-          streamSourceOps.keys.toSeq.sorted.mkString(", ")))
-    validateKeys("streaming source", expanded.head, sreq, sopt)
-    val last = expanded.last
-    require(last.op == "write_stream_parquet",
-      "startStreamStepsGatedUnified: sink must be " +
-        s"write_stream_parquet (the unified runner owns the " +
-        s"survivors write); got '${last.op}'")
-    validateKeys("streaming sink", last,
-      Seq("path", "checkpoint"), Seq())
-    val sp = new Params(last.op, last.params)
-    startGatedUnified(
-      mk(spark, new Params(expanded.head.op, expanded.head.params)),
-      expanded.drop(1).dropRight(1),
-      sp.str("path"), sp.str("checkpoint"), extra, extraStreamable)
-  }
-
-  /** [[startGatedUnified]] with the transform chain as a JSON step
-    * array — the caller supplies the streaming source frame and the
-    * survivors sink path directly (the MemoryStream-test face). */
-  def startGatedUnifiedJson(src: DataFrame, json: String,
-                            sinkPath: String, checkpoint: String,
-                            extra: Map[String, OpSpec] = Map.empty,
-                            extraStreamable: Set[String] = Set.empty)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startGatedUnified(src,
-      parseSteps(new ObjectMapper().readTree(json)), sinkPath,
-      checkpoint, extra, extraStreamable)
-
-  /** Self-contained streaming JSON job config → unified gated query
-    * ([[startStreamStepsGatedUnified]]). */
-  def startStreamJsonGatedUnified(spark: org.apache.spark.sql.SparkSession,
-                                  json: String,
-                                  extra: Map[String, OpSpec] = Map.empty,
-                                  extraStreamable: Set[String] = Set.empty)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startStreamStepsGatedUnified(spark,
-      parseSteps(new ObjectMapper().readTree(json)), extra,
-      extraStreamable)
-
-  /** Self-contained streaming JSON job config → started query. */
-  def startStreamJson(spark: org.apache.spark.sql.SparkSession,
-                      json: String,
-                      extra: Map[String, OpSpec] = Map.empty,
-                      extraStreamable: Set[String] = Set.empty)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startStreamSteps(spark,
-      parseSteps(new ObjectMapper().readTree(json)), extra,
-      extraStreamable)
-
-  /** Self-contained streaming YAML job config → started query. */
-  def startStreamYaml(spark: org.apache.spark.sql.SparkSession,
-                      yaml: String,
-                      extra: Map[String, OpSpec] = Map.empty,
-                      extraStreamable: Set[String] = Set.empty)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startStreamSteps(spark,
-      parseSteps(new ObjectMapper(new YAMLFactory()).readTree(yaml)),
-      extra, extraStreamable)
-
   /** Config composition: an `include` step splices another config
     * file's steps in place — the modularity primitive that lets a
     * team ship one reviewed gate file (contracts, dedup recipe) and
     * reference it from every job. Resolution is EAGER and recursive
-    * at config-compile time (`.yaml`/`.yml` parse as YAML, anything
-    * else as JSON); a cycle or a >16-deep chain errors naming the
-    * include chain; an unreadable file errors with its path. The
-    * expanded step list is what source/sink detection, the streaming
-    * whitelist, and registry validation all see — an included file
-    * may therefore contribute any step kind, and a non-streamable
-    * step arriving via include is still rejected by name. */
+    * at config-compile time (the file's text goes through [[parse]],
+    * whatever its extension); a cycle or a >16-deep chain errors
+    * naming the include chain; an unreadable file errors with its
+    * path. The expanded step list is what source/sink detection, the
+    * streaming whitelist, and registry validation all see — an
+    * included file may therefore contribute any step kind, and a
+    * non-streamable step arriving via include is still rejected by
+    * name. */
   private def expandIncludes(steps: Seq[Step],
                              stack: List[String] = Nil): Seq[Step] =
     steps.flatMap {
       case s if s.op == "include" =>
-        validateKeys("pipeline op", s, Seq("path"), Seq())
+        checkParams("pipeline op", s, Seq("path"), Seq())
         val raw = s.params("path") match {
           case p: String => p
           case other => throw new IllegalArgumentException(
@@ -3201,26 +3096,77 @@ object Pipeline {
                   s"(resolved via Hadoop FS as '$canon'): " +
                   e.getMessage, e)
           }
-        val mapper =
-          if (raw.endsWith(".yaml") || raw.endsWith(".yml"))
-            new ObjectMapper(new YAMLFactory())
-          else new ObjectMapper()
-        expandIncludes(parseSteps(mapper.readTree(text)), canon :: stack)
+        expandIncludes(parse(text), canon :: stack)
       case s => Seq(s)
     }
 
-  private def validateKeys(what: String, step: Step,
-                           req: Seq[String], opt: Seq[String]): Unit = {
-    val allowed = (req ++ opt).toSet
-    val unknown = step.params.keySet -- allowed
+  /** The param-set check every step kind shares — registry
+    * operators, sources, sinks and includes: unknown and
+    * missing-required params throw at config time, never
+    * mid-pipeline, naming the allowed set. */
+  private def checkParams(kind: String, s: Step,
+                          required: Iterable[String],
+                          optional: Iterable[String]): Unit = {
+    val allowed = (required ++ optional).toSet
+    val unknown = s.params.keySet -- allowed
     require(unknown.isEmpty,
-      s"$what '${step.op}': unknown params " +
+      s"$kind '${s.op}': unknown params " +
         s"${unknown.toSeq.sorted.mkString(", ")}; allowed: " +
         allowed.toSeq.sorted.mkString(", "))
-    val missing = req.toSet -- step.params.keySet
+    val missing = required.toSet -- s.params.keySet
     require(missing.isEmpty,
-      s"$what '${step.op}': missing required params " +
+      s"$kind '${s.op}': missing required params " +
         missing.toSeq.sorted.mkString(", "))
+  }
+
+  /** A source or sink step's registry body, its params checked. */
+  private def lookup[F](registry: Map[String, (Seq[String], Seq[String], F)],
+                        position: String, kind: String, s: Step): F = {
+    val (req, opt, body) = registry.getOrElse(s.op,
+      throw new IllegalArgumentException(
+        s"$position step must be a $kind step; '${s.op}' is not one " +
+          "of " + registry.keys.toSeq.sorted.mkString(", ")))
+    checkParams(kind, s, req, opt)
+    body
+  }
+
+  /** The batch compile behind every run entry point: includes expand
+    * once, the source (first step) and — for a job — the sink (last
+    * step) are looked up and param-checked once, and every transform
+    * between compiles before the source is read, so a config error
+    * beats an I/O error. Returns the frame builder and the sink
+    * write; `tap` sees every step's output frame (the source's is
+    * step 0). */
+  private def compileBatch(steps: Seq[Step], job: Boolean,
+                           extra: Map[String, OpSpec],
+                           tap: (Int, String, DataFrame) => DataFrame =
+                             (_, _, df) => df)
+      : (org.apache.spark.sql.SparkSession => DataFrame,
+         DataFrame => Unit) = {
+    val expanded = expandIncludes(steps)
+    val write: DataFrame => Unit =
+      if (job) {
+        require(expanded.size >= 2,
+          "job config needs a source step and a sink step")
+        val sink = expanded.last
+        val body = lookup(sinkOps, "last", "sink", sink)
+        df => body(df, new Params(sink.op, sink.params))
+      } else {
+        require(expanded.nonEmpty,
+          "pipeline config needs at least a source step")
+        _ => ()
+      }
+    val source = expanded.head
+    val read = lookup(sourceOps, "first", "source", source)
+    val registry = builtinOps ++ extra
+    val chain = expanded.slice(1, expanded.size - (if (job) 1 else 0))
+      .map(s => (s.op, compileStep(registry, s)))
+    val frame = (spark: org.apache.spark.sql.SparkSession) =>
+      chain.zipWithIndex.foldLeft(tap(0, source.op,
+        read(spark, new Params(source.op, source.params)))) {
+        case (df, ((op, f), i)) => tap(i + 1, op, f(df))
+      }
+    (frame, write)
   }
 
   /** Run a COMPLETE job config: first step a source, last step a
@@ -3229,23 +3175,15 @@ object Pipeline {
   def runJobSteps(spark: org.apache.spark.sql.SparkSession,
                   steps: Seq[Step],
                   extra: Map[String, OpSpec] = Map.empty): Unit = {
-    val expanded = expandIncludes(steps)
-    require(expanded.size >= 2,
-      "job config needs a source step and a sink step")
-    val (req, opt, write) = sinkOps.getOrElse(expanded.last.op,
-      throw new IllegalArgumentException(
-        s"last step must be a sink operator; '${expanded.last.op}' " +
-          s"is not one of " + sinkOps.keys.toSeq.sorted.mkString(", ")))
-    validateKeys("sink", expanded.last, req, opt)
-    val sinkParams = new Params(expanded.last.op, expanded.last.params)
-    write(runSteps(spark, expanded.dropRight(1), extra), sinkParams)
+    val (frame, write) = compileBatch(steps, job = true, extra)
+    write(frame(spark))
   }
 
-  /** Self-contained JSON job config (source → ops → sink) → executed. */
+  /** Self-contained job config text (source → ops → sink,
+    * [[parse]]) → executed. */
   def runJobJson(spark: org.apache.spark.sql.SparkSession, json: String,
                  extra: Map[String, OpSpec] = Map.empty): Unit =
-    runJobSteps(spark, parseSteps(new ObjectMapper().readTree(json)),
-      extra)
+    runJobSteps(spark, parse(json), extra)
 
   /** [[runJobSteps]] with a per-step row-count AUDIT: every step's
     * output frame carries a `CollectMetrics` observation
@@ -3266,25 +3204,6 @@ object Pipeline {
                          steps: Seq[Step],
                          extra: Map[String, OpSpec] = Map.empty)
       : DataFrame = {
-    val expanded = expandIncludes(steps)
-    require(expanded.size >= 2,
-      "job config needs a source step and a sink step")
-    val (req, opt, write) = sinkOps.getOrElse(expanded.last.op,
-      throw new IllegalArgumentException(
-        s"last step must be a sink operator; '${expanded.last.op}' " +
-          s"is not one of " + sinkOps.keys.toSeq.sorted.mkString(", ")))
-    validateKeys("sink", expanded.last, req, opt)
-    val sinkParams = new Params(expanded.last.op, expanded.last.params)
-    val (sreq, sopt, mk) = sourceOps.getOrElse(expanded.head.op,
-      throw new IllegalArgumentException(
-        s"first step must be a source operator; " +
-          s"'${expanded.head.op}' is not one of " +
-          sourceOps.keys.toSeq.sorted.mkString(", ")))
-    validateKeys("source", expanded.head, sreq, sopt)
-    // compile every transform BEFORE the source read (the runSteps
-    // discipline: config errors beat I/O errors)
-    val mids = expanded.drop(1).dropRight(1)
-    val fns = mids.map(s => (s.op, fromSteps(Seq(s), extra)))
     val taps = scala.collection.mutable.Buffer
       .empty[(Int, String, org.apache.spark.sql.Observation)]
     def tap(i: Int, op: String, frame: DataFrame): DataFrame = {
@@ -3293,12 +3212,8 @@ object Pipeline {
       taps += ((i, op, obs))
       frame.observe(obs, count(lit(1)).as("n_rows"))
     }
-    var df = tap(0, expanded.head.op,
-      mk(spark, new Params(expanded.head.op, expanded.head.params)))
-    fns.zipWithIndex.foreach { case ((op, f), i) =>
-      df = tap(i + 1, op, f(df))
-    }
-    write(df, sinkParams)
+    val (frame, write) = compileBatch(steps, job = true, extra, tap)
+    write(frame(spark))
     val report = taps.toSeq.map { case (i, op, obs) =>
       (i, op, obs.get("n_rows").asInstanceOf[Long])
     }
@@ -3306,21 +3221,13 @@ object Pipeline {
     report.toDF("step", "op", "n_rows")
   }
 
-  /** Self-contained JSON job config → executed with the per-step
+  /** Self-contained job config text → executed with the per-step
     * row-count report returned ([[runJobStepsAudited]]). */
   def runJobJsonAudited(spark: org.apache.spark.sql.SparkSession,
                         json: String,
                         extra: Map[String, OpSpec] = Map.empty)
       : DataFrame =
-    runJobStepsAudited(spark,
-      parseSteps(new ObjectMapper().readTree(json)), extra)
-
-  /** Self-contained YAML job config (source → ops → sink) → executed. */
-  def runJobYaml(spark: org.apache.spark.sql.SparkSession, yaml: String,
-                 extra: Map[String, OpSpec] = Map.empty): Unit =
-    runJobSteps(spark,
-      parseSteps(new ObjectMapper(new YAMLFactory()).readTree(yaml)),
-      extra)
+    runJobStepsAudited(spark, parse(json), extra)
 
   /** Run a config whose FIRST step is a source (`read_parquet`,
     * `read_table`, `read_orc`, `read_warc_gz`) and whose remaining
@@ -3328,33 +3235,13 @@ object Pipeline {
     * JSON/YAML file IS the job. */
   def runSteps(spark: org.apache.spark.sql.SparkSession,
                steps: Seq[Step],
-               extra: Map[String, OpSpec] = Map.empty): DataFrame = {
-    val expanded = expandIncludes(steps)
-    require(expanded.nonEmpty,
-      "pipeline config needs at least a source step")
-    val (req, opt, mk) = sourceOps.getOrElse(expanded.head.op,
-      throw new IllegalArgumentException(
-        s"first step must be a source operator; " +
-          s"'${expanded.head.op}' is not one of " +
-          sourceOps.keys.toSeq.sorted.mkString(", ")))
-    validateKeys("source", expanded.head, req, opt)
-    // compile the transform chain BEFORE touching the source so a
-    // config error surfaces even when the source read would fail too
-    val chain = fromSteps(expanded.tail, extra)
-    chain(mk(spark, new Params(expanded.head.op, expanded.head.params)))
-  }
+               extra: Map[String, OpSpec] = Map.empty): DataFrame =
+    compileBatch(steps, job = false, extra)._1(spark)
 
-  /** Self-contained JSON config → result frame. */
+  /** Self-contained config text ([[parse]]) → result frame. */
   def runJson(spark: org.apache.spark.sql.SparkSession, json: String,
               extra: Map[String, OpSpec] = Map.empty): DataFrame =
-    runSteps(spark, parseSteps(new ObjectMapper().readTree(json)), extra)
-
-  /** Self-contained YAML config → result frame. */
-  def runYaml(spark: org.apache.spark.sql.SparkSession, yaml: String,
-              extra: Map[String, OpSpec] = Map.empty): DataFrame =
-    runSteps(spark,
-      parseSteps(new ObjectMapper(new YAMLFactory()).readTree(yaml)),
-      extra)
+    runSteps(spark, parse(json), extra)
 
   /** The builtin steps whose compiled bodies are STREAM-SAFE: pure
     * per-row/per-batch transforms (projections, filters, explodes,
@@ -3408,17 +3295,12 @@ object Pipeline {
 
   /** Streamable steps whose OUTPUT depends on micro-batch boundaries
     * or watermark progression — stateful windows/timers and
-    * arrival-order semantics. Two independent StreamingQueries over
-    * the same real source batch DIFFERENTLY (each query owns its
-    * offsets and watermark), so these steps compute divergent rows
-    * across queries even on identical input. The gated two-query
-    * compile ([[fromStepsStreamingGated]]) therefore REJECTS them
-    * ahead of a quarantine gate — the violation writer re-runs the
-    * prefix as its own query, and e.g. first_seen_flags could flag a
-    * row first-seen in the main query but duplicate in the writer
-    * (silently lost) or vice versa (kept AND quarantined). Use
-    * [[startGatedUnified]] for that composition: one query, both
-    * sinks fed from the same materialized micro-batch. */
+    * arrival-order semantics. The unified gated runner
+    * ([[startGatedUnified]]) runs them once in the streaming plan, so
+    * they must PRECEDE every quarantine gate: the first gate and
+    * everything after it re-apply per materialized micro-batch, where
+    * such a step would compute per-batch rows instead of the
+    * stream's. */
   val batchSensitiveStreamingOps: Set[String] = Set(
     "windowed_stats_watermarked", "windowed_quantiles_watermarked",
     "trending_tokens_watermarked", "host_graph_windowed",
@@ -3438,23 +3320,23 @@ object Pipeline {
   def fromStepsStreaming(steps: Seq[Step],
                          extra: Map[String, OpSpec] = Map.empty,
                          extraStreamable: Set[String] = Set.empty)
+      : DataFrame => DataFrame =
+    compileStreaming(expandIncludes(steps), extra, extraStreamable)
+
+  private def compileStreaming(expanded: Seq[Step],
+                               extra: Map[String, OpSpec],
+                               extraStreamable: Set[String])
       : DataFrame => DataFrame = {
-    val expanded = expandIncludes(steps)
     streamingValidate(expanded, streamableOps ++ extraStreamable)
-    expanded.foreach { s =>
-      // quarantine mode needs a violation WRITE per micro-batch —
-      // only the gated compile ([[fromStepsStreamingGated]]) carries
-      // the writer; reject by PARAM here (the step name itself stays
-      // stream-safe in abort mode)
-      if (s.op == "expect_condition" &&
-          s.params.contains("quarantine_path"))
-        throw new IllegalArgumentException(
-          "streaming step 'expect_condition': quarantine_path needs " +
-            "the gated compile — use fromStepsStreamingGated / " +
-            "fromJsonStreamingGated and start each gate's violation " +
-            "writer (StreamOps.quarantineGateStream)")
-    }
-    fromSteps(expanded, extra)
+    // quarantine mode needs a violation WRITE per micro-batch — only
+    // the unified gated runner carries it; reject by PARAM here (the
+    // step name itself stays stream-safe in abort mode)
+    require(!expanded.exists(isGate),
+      "streaming step 'expect_condition': quarantine_path needs the " +
+        "unified gated runner — start the whole job with " +
+        "startStreamSteps / startStreamJson, or the chain over your " +
+        "own source with startGatedUnified")
+    compileAll(builtinOps ++ extra, expanded)
   }
 
   /** Whitelist + determinism checks shared by the streaming
@@ -3478,94 +3360,6 @@ object Pipeline {
       })
     }
   }
-
-  /** A streaming contract gate compiled in store-failures mode:
-    * `violations` maps the SOURCE stream to this gate's violating
-    * rows — the main-chain prefix up to the gate (so rows another,
-    * earlier gate already quarantined never reach it, exactly the
-    * batch sequencing) with the condition inverted. Start one writer
-    * per gate ([[graft.streaming.StreamOps.quarantineGateStream]]):
-    * each micro-batch overwrites `dir`/batch=<id>, so a replayed
-    * batch rewrites its own table instead of double-appending — the
-    * artifact-store idempotence convention. Reading `dir` as parquet
-    * yields all quarantined rows with the batch id as a partition
-    * column. */
-  final case class QuarantineGate(name: String, dir: String,
-                                  violations: DataFrame => DataFrame)
-
-  /** Compile a step list for a STREAMING DataFrame WITH
-    * store-failures contract gates: like [[fromStepsStreaming]], but
-    * `expect_condition` steps carrying `quarantine_path` compile to
-    * a survivors-only filter in the main chain (stream-legal — no
-    * eager write) and surface a [[QuarantineGate]] whose `violations`
-    * stream the caller starts as a side query. The violation pass
-    * re-runs the chain prefix per gate — the same documented "one
-    * extra upstream pass" the batch quarantine mode costs. */
-  def fromStepsStreamingGated(steps: Seq[Step],
-                              extra: Map[String, OpSpec] = Map.empty,
-                              extraStreamable: Set[String] = Set.empty)
-      : (DataFrame => DataFrame, Seq[QuarantineGate]) = {
-    val expanded = expandIncludes(steps)
-    streamingValidate(expanded, streamableOps ++ extraStreamable)
-    val registry = builtinOps ++ extra
-    def isGate(s: Step): Boolean =
-      s.op == "expect_condition" && s.params.contains("quarantine_path")
-    // batch-boundary-sensitive stateful steps must not precede a gate
-    // in THIS compile: the gate's violation stream re-runs the prefix
-    // as an independent query with its own micro-batch boundaries and
-    // watermark, so a stateful prefix can compute DIFFERENT rows in
-    // the main query and the writer — a row silently lost (dropped by
-    // main, absent from quarantine) or double-kept. The unified
-    // single-query runner handles that composition correctly.
-    val lastGate = expanded.lastIndexWhere(isGate)
-    val badPrefix = expanded.take(math.max(lastGate, 0)).map(_.op)
-      .filter(batchSensitiveStreamingOps).distinct
-    require(badPrefix.isEmpty,
-      "gated streaming compile: batch-boundary-sensitive step(s) " +
-        s"${badPrefix.sorted.mkString(", ")} ahead of a quarantine " +
-        "gate — the per-gate violation writer is an independent " +
-        "query that batches differently, so stateful prefixes " +
-        "diverge between main and quarantine. Use the single-query " +
-        "runner (startGatedUnified / startStreamStepsGatedUnified) " +
-        "for stateful-then-gate compositions")
-    val gates = Seq.newBuilder[QuarantineGate]
-    // fold left over steps, carrying the survivors-only prefix
-    // composition so each gate's violation stream sees exactly what
-    // the batch twin's gate saw
-    var prefix: DataFrame => DataFrame = identity
-    expanded.foreach { s =>
-      if (isGate(s)) {
-        // gates bypass compileStep (their body compiles inline) —
-        // run the same param-set gate so a typo'd param on a gated
-        // step throws at config time like everywhere else
-        validateStepParams(registry("expect_condition"), s)
-        val p = new Params(s.op, s.params)
-        val sql = p.str("condition")
-        val cond = parseEagerly(sql)
-        val dir = quarantineTarget(p, "expect_condition").get
-        val name = p.str("name")
-        val before = prefix
-        gates += QuarantineGate(name, dir,
-          df => before(df).filter(!coalesce(cond, lit(false))))
-        prefix = df => before(df).filter(coalesce(cond, lit(false)))
-      } else {
-        val f = compileStep(registry, s)
-        val before = prefix
-        prefix = df => f(before(df))
-      }
-    }
-    (prefix, gates.result())
-  }
-
-  /** JSON config → gated streaming compile
-    * ([[fromStepsStreamingGated]] over [[fromJson]]'s format). */
-  def fromJsonStreamingGated(json: String,
-                             extra: Map[String, OpSpec] = Map.empty,
-                             extraStreamable: Set[String] = Set.empty)
-      : (DataFrame => DataFrame, Seq[QuarantineGate]) =
-    fromStepsStreamingGated(
-      parseSteps(new ObjectMapper().readTree(json)), extra,
-      extraStreamable)
 
   /** Streaming-config guard: reject non-deterministic SQL in
     * `filter`/`with_column` steps EAGERLY, before any stream starts.
@@ -3597,23 +3391,13 @@ object Pipeline {
         "content instead (e.g. split_by_hash / sample_fraction)")
   }
 
-  /** JSON config → compiled STREAMING pipeline ([[fromStepsStreaming]]
-    * over [[fromJson]]'s format). */
+  /** Config text ([[parse]]) → compiled STREAMING pipeline
+    * ([[fromStepsStreaming]]). */
   def fromJsonStreaming(json: String,
                         extra: Map[String, OpSpec] = Map.empty,
                         extraStreamable: Set[String] = Set.empty)
       : DataFrame => DataFrame =
-    fromStepsStreaming(parseSteps(new ObjectMapper().readTree(json)),
-      extra, extraStreamable)
-
-  /** YAML config → compiled STREAMING pipeline. */
-  def fromYamlStreaming(yaml: String,
-                        extra: Map[String, OpSpec] = Map.empty,
-                        extraStreamable: Set[String] = Set.empty)
-      : DataFrame => DataFrame =
-    fromStepsStreaming(
-      parseSteps(new ObjectMapper(new YAMLFactory()).readTree(yaml)),
-      extra, extraStreamable)
+    fromStepsStreaming(parse(json), extra, extraStreamable)
 
   /** Compile a step list against the registry (builtins plus `extra`;
     * extra entries override builtin names — the `register_function`
@@ -3623,60 +3407,46 @@ object Pipeline {
     * DataFrame. */
   def fromSteps(steps: Seq[Step],
                 extra: Map[String, OpSpec] = Map.empty)
-      : DataFrame => DataFrame = {
-    val registry = builtinOps ++ extra
-    val compiled: Seq[DataFrame => DataFrame] =
-      expandIncludes(steps).map(compileStep(registry, _))
+      : DataFrame => DataFrame =
+    compileAll(builtinOps ++ extra, expandIncludes(steps))
+
+  /** Compile expanded steps in config order into one transform. */
+  private def compileAll(registry: Map[String, OpSpec],
+                         expanded: Seq[Step]): DataFrame => DataFrame = {
+    val compiled = expanded.map(compileStep(registry, _))
     df => compiled.foldLeft(df)((d, f) => f(d))
   }
 
   /** Compile ONE step against a registry: param-set validation (a
     * typo throws at config time, naming the allowed set) + the
     * spec's compile. */
-  /** The param-set gate shared by every compile path: unknown and
-    * missing-required params throw at config time, never
-    * mid-pipeline. */
-  private def validateStepParams(spec: OpSpec, s: Step): Unit = {
-    val allowed = spec.required ++ spec.optional
-    val unknown = s.params.keySet -- allowed
-    require(unknown.isEmpty,
-      s"pipeline op '${s.op}': unknown params " +
-        s"${unknown.toSeq.sorted.mkString(", ")}; allowed: " +
-        allowed.toSeq.sorted.mkString(", "))
-    val missing = spec.required -- s.params.keySet
-    require(missing.isEmpty,
-      s"pipeline op '${s.op}': missing required params " +
-        missing.toSeq.sorted.mkString(", "))
-  }
-
   private def compileStep(registry: Map[String, OpSpec],
                           s: Step): DataFrame => DataFrame = {
     val spec = registry.getOrElse(s.op,
       throw new IllegalArgumentException(
         s"unknown pipeline operator '${s.op}'; available: " +
           registry.keys.toSeq.sorted.mkString(", ")))
-    validateStepParams(spec, s)
+    checkParams("pipeline op", s, spec.required, spec.optional)
     spec.compile(new Params(s.op, s.params))
   }
 
-  /** JSON config → compiled pipeline. Accepts a top-level array of
-    * steps or `{"steps": [...]}`; each step is
-    * `{"op": "...", "params": {...}}` (params optional). */
+  /** Config text ([[parse]]) → compiled pipeline. */
   def fromJson(json: String,
                extra: Map[String, OpSpec] = Map.empty)
       : DataFrame => DataFrame =
-    fromSteps(parseSteps(new ObjectMapper().readTree(json)), extra)
+    fromSteps(parse(json), extra)
 
-  /** YAML config → compiled pipeline (the reference README's own
-    * example format), same shape as [[fromJson]]. */
-  def fromYaml(yaml: String,
-               extra: Map[String, OpSpec] = Map.empty)
-      : DataFrame => DataFrame =
-    fromSteps(
-      parseSteps(new ObjectMapper(new YAMLFactory()).readTree(yaml)),
-      extra)
-
-  private def parseSteps(root: JsonNode): Seq[Step] = {
+  /** Config text → step list: the one place the format is decided.
+    * JSON when the first non-blank character is `[` or `{`, YAML (the
+    * reference README's own example format) otherwise. Either
+    * format holds a top-level step array or `{"steps": [...]}`; each
+    * step is `{"op": "...", "params": {...}}` (params optional). */
+  def parse(text: String): Seq[Step] = {
+    val json = text.dropWhile(_.isWhitespace).headOption
+      .exists(c => c == '[' || c == '{')
+    val root =
+      (if (json) new ObjectMapper() else new ObjectMapper(new YAMLFactory()))
+        .readTree(text)
     val arr =
       if (root.isArray) root
       else if (root.isObject && root.has("steps") &&

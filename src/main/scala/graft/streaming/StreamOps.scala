@@ -2480,7 +2480,8 @@ object StreamOps {
       }
   }
 
-  /** One quarantined micro-batch of a streaming contract gate:
+  /** One quarantined micro-batch of a streaming contract gate (the
+    * unified gated runner, [[graft.operators.Pipeline.startGatedUnified]]):
     * overwrite `dir`/batch=<id> — keyed by the micro-batch id, the
     * canonical exactly-once `foreachBatch` sink pattern (a REPLAYED
     * batch rewrites its own table instead of double-appending).
@@ -2489,24 +2490,6 @@ object StreamOps {
   def writeQuarantineBatch(batch: DataFrame, dir: String,
                            id: Long): Unit =
     batch.write.mode("overwrite").parquet(s"$dir/batch=$id")
-
-  /** Start the violation writer for one streaming contract gate
-    * ([[graft.operators.Pipeline.QuarantineGate]], from the gated
-    * streaming compile): the gate's violation stream — the main
-    * chain's prefix with the condition inverted — appends
-    * replay-idempotently under the gate's `gate=<name>` directory
-    * via [[writeQuarantineBatch]]. One checkpoint per gate, distinct
-    * from the main query's. */
-  def quarantineGateStream(source: DataFrame,
-                           gate: graft.operators.Pipeline.QuarantineGate,
-                           checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    gate.violations(source).writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        writeQuarantineBatch(batch, gate.dir, id)
-      }
-      .start()
 
   def transitionPairsStream(events: Dataset[Scd2Event],
                             idleRetentionSeconds: Option[Long] = None): Dataset[TransitionPair] = {

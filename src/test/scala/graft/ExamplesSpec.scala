@@ -64,7 +64,7 @@ class ExamplesSpec extends AnyFunSuite {
     spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "lang", "text").limit(60)
       .coalesce(1).write.parquet(in)
-    val q = Pipeline.startStreamYaml(spark,
+    val q = Pipeline.startStreamJson(spark,
       read("streaming_ingest_gate.yaml")
         .replace("__IN__", in).replace("__OUT__", out)
         .replace("__CKPT__", base.resolve("ck").toString))
@@ -75,8 +75,8 @@ class ExamplesSpec extends AnyFunSuite {
     assert(survivors.columns.contains("keep"))
   }
 
-  test("examples/streaming_contract_gate.yaml starts main + gate " +
-       "writer, quarantines violations per batch, appends survivors") {
+  test("examples/streaming_contract_gate.yaml runs as one gated query") {
+    // one query quarantines violations per batch and writes survivors
     val base = java.nio.file.Files
       .createTempDirectory("graft-example-quar")
     val in = base.resolve("in").toString
@@ -85,14 +85,13 @@ class ExamplesSpec extends AnyFunSuite {
     spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "lang", "text").limit(60)
       .coalesce(1).write.parquet(in)
-    val qs = Pipeline.startStreamYamlGated(spark,
+    val q = Pipeline.startStreamJson(spark,
       read("streaming_contract_gate.yaml")
         .replace("__IN__", in).replace("__OUT__", out)
         .replace("__QUARANTINE__", quar)
         .replace("__CKPT__", base.resolve("ck").toString))
-    assert(qs.size == 2) // main + one gate writer
-    qs.foreach(_.processAllAvailable())
-    qs.foreach(_.stop())
+    q.processAllAvailable()
+    q.stop()
     val survivors = spark.read.parquet(out)
     val quarantined = spark.read.parquet(s"$quar/gate=min_tokens")
     assert(survivors.count() > 0 && quarantined.count() > 0)

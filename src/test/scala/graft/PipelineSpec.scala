@@ -75,7 +75,28 @@ class PipelineSpec extends AnyFunSuite {
         |    params:
         |      cols: [doc_id, lang, source, n_tokens, split]
         |""".stripMargin
-    assert(rows(Pipeline.fromYaml(yaml)(docs)) == rows(handWritten))
+    assert(rows(Pipeline.fromJson(yaml)(docs)) == rows(handWritten))
+    // one parse decides the format from the text alone: a JSON array,
+    // {"steps": ...} JSON after a leading newline and block YAML that
+    // opens with a comment all give the same step list
+    val steps = Pipeline.parse(yaml)
+    assert(Pipeline.parse(curateJson) == steps)
+    assert(Pipeline.parse(s"""\n{"steps": $curateJson}""") == steps)
+    assert(Pipeline.parse(s"# the curation recipe\n$yaml") == steps)
+    // ...and so does an include, whatever the file's extension
+    val base = java.nio.file.Files.createTempDirectory("graft-parse")
+    val (head, tail) = yaml.linesIterator.toSeq.tail.splitAt(6)
+    def write(name: String, lines: Seq[String]): String = {
+      val f = base.resolve(name)
+      java.nio.file.Files.write(f,
+        ("steps:" +: lines).mkString("\n").getBytes("UTF-8"))
+      f.toString
+    }
+    val (upper, bare) = (write("head.YAML", head), write("tail", tail))
+    val included = Pipeline.fromJson(
+      s"""[{"op": "include", "params": {"path": "$upper"}},
+         | {"op": "include", "params": {"path": "$bare"}}]""".stripMargin)
+    assert(rows(included(docs)) == rows(handWritten))
   }
 
   test("unknown operator names error at COMPILE time, naming the " +
@@ -1612,14 +1633,14 @@ class PipelineSpec extends AnyFunSuite {
     }
     assert(badName.getMessage.contains("path-safe"))
     // the UNGATED streaming compile rejects quarantine mode by
-    // PARAM, not by step name — pointing at the gated compile that
-    // carries the per-batch violation writer
+    // PARAM, not by step name — pointing at the unified gated runner
+    // that carries the per-batch violation write
     val ns = intercept[IllegalArgumentException] {
       Pipeline.fromStepsStreaming(Seq(Step("expect_condition",
         Map("condition" -> "v > 0", "name" -> "g",
           "quarantine_path" -> q))))
     }
-    assert(ns.getMessage.contains("fromStepsStreamingGated"))
+    assert(ns.getMessage.contains("startGatedUnified"))
     Pipeline.fromStepsStreaming(Seq(Step("expect_condition",
       Map("condition" -> "v > 0")))) // abort mode still streams
   }

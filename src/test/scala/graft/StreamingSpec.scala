@@ -2707,11 +2707,10 @@ class StreamingSpec extends AnyFunSuite {
     q.stop()
   }
 
-  test("fromJsonStreamingGated: expect_condition store-failures mode " +
-       "on a stream — survivors equal the batch twin, each gate's " +
-       "violations (incl. NULL conditions, sequenced after earlier " +
-       "gates) land per-batch under gate=<name>, replays overwrite " +
-       "their own batch") {
+  test("startGatedUnified: store-failures gates on a stream match batch") {
+    // survivors equal the batch twin, each gate's violations (incl.
+    // NULL conditions, sequenced after earlier gates) land per-batch
+    // under gate=<name>, replays overwrite their own batch
     import graft.operators.Pipeline
     val s = spark
     import s.implicits._
@@ -2742,28 +2741,19 @@ class StreamingSpec extends AnyFunSuite {
       s.read.parquet(s"$root/gate=$gate").select("k", "v")
         .na.fill(Map("v" -> -999L))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // streaming: gated compile + one violation writer per gate
-    val (xform, gates) = Pipeline.fromJsonStreamingGated(cfg(qStream))
-    assert(gates.map(_.name) == Seq("v_pos", "v2_cap"))
+    // streaming: ONE query splits every micro-batch at both gates
     val input = MemoryStream[(Long, Option[Long])]
-    val src = input.toDS().toDF("k", "v")
-    val out = xform(src)
-    assert(out.isStreaming)
-    val main = out.writeStream.format("memory")
-      .queryName("quar_gated").outputMode("append").start()
-    val writers = gates.map(g => StreamOps.quarantineGateStream(
-      src, g, base.resolve(s"ckpt-${g.name}").toString))
-    def drainAll(): Unit = {
-      writers.foreach(_.processAllAvailable())
-      main.processAllAvailable()
-    }
+    val survivors = base.resolve("survivors").toString
+    val q = Pipeline.startGatedUnified(input.toDS().toDF("k", "v"),
+      Pipeline.parse(cfg(qStream)), survivors,
+      base.resolve("ckpt").toString)
     input.addData(rows.take(4): _*)
-    drainAll()
+    q.processAllAvailable()
     input.addData(rows.drop(4): _*)
-    drainAll()
-    main.stop(); writers.foreach(_.stop())
+    q.processAllAvailable()
+    q.stop()
     // survivors match the batch twin exactly
-    val got = s.sql("select k, v from quar_gated").collect()
+    val got = s.read.parquet(survivors).select("k", "v").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == batchKept && got.nonEmpty)
     // per-gate violations match the batch twin's gate tables —
@@ -3523,35 +3513,38 @@ class StreamingSpec extends AnyFunSuite {
     assert(s.sql("select user_id from ddw_stream").collect()
       .map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
     // composition: first-seen flags + gated expect_condition =
-    // duplicates QUARANTINED instead of silently dropped. The
-    // TWO-QUERY gated compile must REJECT this shape: the per-gate
-    // violation writer is an independent query that batches the
-    // source differently, so the stateful flags could diverge
-    // between the main chain and the quarantine writer (a row
-    // silently lost or kept AND quarantined)
+    // duplicates QUARANTINED instead of silently dropped. The stateful
+    // step must PRECEDE the gate: from the first gate on, steps
+    // re-apply per materialized micro-batch, so the runner REJECTS a
+    // stateful step placed after it
     val quar = java.nio.file.Files
       .createTempDirectory("graft-fsf-quar").toString
-    val gatedCfg =
-      s"""[{"op": "first_seen_flags_watermarked",
-         |  "params": {"keys": ["user_id"],
-         |             "watermark_delay": "2 seconds",
-         |             "order_cols": ["ts", "event_id"]}},
-         | {"op": "expect_condition",
+    val flagStep =
+      """{"op": "first_seen_flags_watermarked",
+        |  "params": {"keys": ["user_id"],
+        |             "watermark_delay": "2 seconds",
+        |             "order_cols": ["ts", "event_id"]}}""".stripMargin
+    val gateStep =
+      s"""{"op": "expect_condition",
          |  "params": {"condition": "is_first", "name": "unique_user",
-         |             "quarantine_path": "$quar"}}]""".stripMargin
+         |             "quarantine_path": "$quar"}}""".stripMargin
+    val gatedCfg = s"[$flagStep, $gateStep]"
+    def ck(): String = java.nio.file.Files
+      .createTempDirectory("graft-fsf-ck").toString
     val rejected = intercept[IllegalArgumentException] {
-      Pipeline.fromJsonStreamingGated(gatedCfg)
+      Pipeline.startGatedUnified(MemoryStream[Ev].toDF(),
+        Pipeline.parse(s"[$gateStep, $flagStep]"), quar, ck())
     }
     assert(rejected.getMessage.contains("startGatedUnified") &&
       rejected.getMessage.contains("first_seen_flags_watermarked"))
-    // ...and the UNIFIED runner handles it: ONE query, gate store
-    // and survivors sink both fed from the same materialized batch
+    // ...and the UNIFIED runner handles the stateful-then-gate
+    // order: ONE query, gate store and survivors sink both fed from
+    // the same materialized batch
     val input3 = MemoryStream[Ev]
     val survivors = java.nio.file.Files
       .createTempDirectory("graft-fsf-out").toString
-    val q3 = Pipeline.startGatedUnifiedJson(input3.toDF(), gatedCfg,
-      survivors, java.nio.file.Files
-        .createTempDirectory("graft-fsf-ck").toString)
+    val q3 = Pipeline.startGatedUnified(input3.toDF(),
+      Pipeline.parse(gatedCfg), survivors, ck())
     batches.take(2).foreach { b =>
       input3.addData(b: _*); q3.processAllAvailable()
     }
@@ -3568,11 +3561,13 @@ class StreamingSpec extends AnyFunSuite {
     // typo'd params on a GATED step throw at config time — the gate
     // bypasses compileStep but runs the same param-set validation
     val typo = intercept[IllegalArgumentException] {
-      Pipeline.fromJsonStreamingGated(
-        s"""[{"op": "expect_condition",
-           |  "params": {"condition": "true", "name": "g",
-           |             "quarantine_path": "$quar",
-           |             "qurantine_pth": "oops"}}]""".stripMargin)
+      Pipeline.startGatedUnified(MemoryStream[Ev].toDF(),
+        Pipeline.parse(
+          s"""[{"op": "expect_condition",
+             |  "params": {"condition": "true", "name": "g",
+             |             "quarantine_path": "$quar",
+             |             "qurantine_pth": "oops"}}]""".stripMargin),
+        quar, ck())
     }
     assert(typo.getMessage.contains("unknown params") &&
       typo.getMessage.contains("qurantine_pth"))
@@ -3591,10 +3586,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(collide.getMessage.contains("already exists"))
   }
 
-  test("startStreamStepsGatedUnified: a COMPLETE job config — file " +
-       "stream source, stateful first-seen prefix, quarantine gate, " +
-       "parquet survivors sink — runs as ONE query; survivors + " +
-       "quarantined partition the input; non-parquet sinks reject") {
+  test("a complete gated streaming job config runs as ONE query") {
+    // file stream source, stateful first-seen prefix, quarantine
+    // gate, parquet survivors sink: survivors + quarantined partition
+    // the input; non-parquet sinks reject
     import graft.operators.Pipeline
     val s = spark
     val base = java.nio.file.Files
