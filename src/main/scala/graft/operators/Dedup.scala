@@ -126,11 +126,13 @@ object Dedup {
       TextAnalysis.hashedShingles(col(textCol), n).as("shingles"))
       .withColumn("set_size", size(col("shingles")))
       .filter(col("set_size") > 0)
-      // deliberately NOT checkpointed: shingling is one native-expression
-      // pass over the scan, and re-deriving it per join branch measures
-      // ~15% FASTER than paying the checkpoint write barrier (sf0.1);
-      // revisit if the upstream becomes expensive relative to a local
-      // materialization
+      // not checkpointed here: shingling is one native-expression pass,
+      // and re-deriving it per join branch measures ~15% FASTER than
+      // paying the checkpoint write barrier (sf0.1). An expensive
+      // UPSTREAM is the caller's to pin: a config job's
+      // drop_near_duplicates persists its input for the job (Pipeline's
+      // JobScope), so every branch here, and the anti-join after it,
+      // re-reads cached rows instead of re-running the steps before it
 
   /** All pairs with n-gram Jaccard similarity ≥ `threshold`, computed
     * exactly via a prefix-filtered shingle inverted index.

@@ -3,15 +3,16 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.graftext.UnicodeNormalize
+import org.apache.spark.sql.graftext.NormalizeText
 
 /** Text normalization / mojibake repair -- the cleaning pass that runs
   * BEFORE tokenization, dedup, or language-ID on any real crawl
   * corpus: encoding noise otherwise fractures every downstream signal
   * (the NFC and NFD byte-forms of one accented word hash apart,
   * shingle apart, and train as two vocabulary entries). The ftfy/NFKC
-  * class of fixes, as one codegen'd per-row projection -- zero shuffle
-  * at any scale.
+  * class of fixes, as ONE native per-row kernel
+  * ([[org.apache.spark.sql.graftext.NormalizeText]]) -- one scan of
+  * the bytes per document, zero shuffle at any scale.
   *
   * Pipeline, in order (order is part of the contract):
   *   1. Mojibake repair: the classic UTF-8-bytes-decoded-as-cp1252
@@ -20,7 +21,7 @@ import org.apache.spark.sql.graftext.UnicodeNormalize
   *      "A-tilde + copyright" back to e-acute, ...). Pattern-based
   *      (fixed table), BEFORE normalization so the byte signatures are
   *      still intact.
-  *   2. Unicode normalization via the native
+  *   2. Unicode normalization, `java.text.Normalizer` as in the
   *      [[org.apache.spark.sql.graftext.UnicodeNormalize]] expression
   *      (form is the caller's choice; NFKC is the corpus-pipeline
   *      default, NFC the externally-oracle-able one).
@@ -32,73 +33,42 @@ import org.apache.spark.sql.graftext.UnicodeNormalize
   *      even under NFKC (which maps the spaces but not the
   *      zero-widths).
   *
-  * Source hygiene: every character in the tables and regex classes
-  * below is a backslash-u escape -- the file must grep/diff as plain
-  * ASCII, and "A-tilde followed by NBSP" is indistinguishable from
-  * "A-tilde followed by space" to a reviewer otherwise.
+  * Text whose every byte is printable ASCII, TAB or LF is left
+  * unchanged by all five steps under every form; the kernel returns it
+  * as is without decoding it.
   *
   * Emits (id, text_norm, changed) + `passthroughCols`; `changed` makes
   * the noise rate observable (the fraction of repaired docs is itself
   * a corpus-quality signal). */
 object Normalize {
 
-  /** cp1252-misdecoded UTF-8 signatures -> intended character. Each KEY
-    * is the exact char sequence a cp1252 decode produces from the
-    * UTF-8 bytes of the VALUE (for the one byte cp1252 leaves
-    * unmapped, 0x9D, the latin-1 fallback U+009D). No key is a prefix
-    * of another and no signature's lead char (U+00E2, U+00C3, U+00C2)
-    * appears inside another signature's tail, so application order
-    * cannot change the result. */
-  val MojibakeRepairs: Seq[(String, String)] = Seq(
-    "\u00E2\u20AC\u2122" -> "\u2019", // right single quote
-    "\u00E2\u20AC\u02DC" -> "\u2018", // left single quote (98 -> small tilde)
-    "\u00E2\u20AC\u0153" -> "\u201C", // left double quote
-    "\u00E2\u20AC\u009D" -> "\u201D", // right double quote (9D via latin-1)
-    "\u00E2\u20AC\u201C" -> "\u2013", // en dash
-    "\u00E2\u20AC\u201D" -> "\u2014", // em dash
-    "\u00E2\u20AC\u00A6" -> "\u2026", // ellipsis
-    "\u00E2\u20AC\u00A2" -> "\u2022", // bullet
-    "\u00C3\u00A9" -> "\u00E9", // e acute
-    "\u00C3\u00A8" -> "\u00E8", // e grave
-    "\u00C3\u00A1" -> "\u00E1", // a acute
-    "\u00C3\u00A0" -> "\u00E0", // a grave (signature ends in NBSP)
-    "\u00C3\u00A4" -> "\u00E4", // a umlaut
-    "\u00C3\u00B6" -> "\u00F6", // o umlaut
-    "\u00C3\u00BC" -> "\u00FC", // u umlaut
-    "\u00C3\u00B1" -> "\u00F1", // n tilde
-    "\u00C3\u00A7" -> "\u00E7", // c cedilla
-    "\u00C3\u00B3" -> "\u00F3", // o acute
-    "\u00C3\u00AD" -> "\u00ED", // i acute (signature ends in SOFT HYPHEN)
-    "\u00C3\u00BA" -> "\u00FA", // u acute
-    "\u00C2\u00A0" -> "\u00A0") // NBSP; space normalization finishes it
+  /** cp1252-misdecoded UTF-8 signatures -> intended character: the
+    * repair table of step 1 (see
+    * [[org.apache.spark.sql.graftext.NormalizeText.MojibakeRepairs]]). */
+  val MojibakeRepairs: Seq[(String, String)] = NormalizeText.MojibakeRepairs
 
   /** The full normalization chain as a Column -- the registry-friendly
     * form ([[graft.Functioniser.registerFunction]] takes exactly this
-    * shape; see the "normalize_text" spec). */
+    * shape; see the "normalize_text" spec). One pass: the native
+    * [[org.apache.spark.sql.graftext.NormalizeText]] kernel returns
+    * clean text (every byte printable ASCII, TAB or LF) unchanged
+    * without decoding it, and otherwise decodes once, runs the five
+    * steps and encodes once. */
   def normalizeColumn(c: Column, form: String = "NFKC",
-                      repairMojibake: Boolean = true): Column = {
-    val repaired =
-      if (repairMojibake)
-        MojibakeRepairs.foldLeft(c) { case (x, (pat, rep)) =>
-          replace(x, lit(pat), lit(rep))
-        }
-      else c
-    val normalized = UnicodeNormalize(repaired, form)
-    val lf = regexp_replace(
-      regexp_replace(normalized, "\r\n", "\n"), "\r", "\n")
-    // C0 minus tab/LF (CR already folded above), DEL, C1
-    val noCtl = regexp_replace(lf, "[\u0000-\u0008\u000B\u000C\u000E-\u001F\u007F-\u009F]", "")
-    val spaces = regexp_replace(noCtl, "[\u00A0\u1680\u2000-\u200A\u202F\u205F\u3000]", " ")
-    regexp_replace(spaces, "[\u200B-\u200D\uFEFF]", "")
-  }
+                      repairMojibake: Boolean = true): Column =
+    NormalizeText(c, form, repairMojibake)
 
   def normalizeText(docs: DataFrame, idCol: String = "doc_id",
                     textCol: String = "text", form: String = "NFKC",
                     repairMojibake: Boolean = true,
                     passthroughCols: Seq[String] = Nil): DataFrame = {
-    val norm = normalizeColumn(col(textCol), form, repairMojibake)
-    docs.select(Seq(col(idCol), norm.as("text_norm"),
-      (!(norm <=> col(textCol))).as("changed")) ++
-      passthroughCols.map(col): _*)
+    // the kernel behind an alias of its own, so `text_norm` and
+    // `changed` read one evaluation (CollapseProject keeps a non-cheap
+    // producer with two uses in its own Project)
+    val norm = "_graft_text_norm"
+    docs.withColumn(norm, normalizeColumn(col(textCol), form, repairMojibake))
+      .select(Seq(col(idCol), col(norm).as("text_norm"),
+        (!(col(norm) <=> col(textCol))).as("changed")) ++
+        passthroughCols.map(col): _*)
   }
 }

@@ -261,7 +261,10 @@ object Pipeline {
 
     // LSH near-dup removal: pairs found + dropped in one step (the
     // q_dedup_clean composition) — the near-dup complement of
-    // drop_exact_duplicates
+    // drop_exact_duplicates. The input has two readers (the LSH pair
+    // search and the anti-join), so inside a job run it is persisted
+    // for the job ([[JobScope]]) and the upstream steps run once per
+    // document; a returned frame keeps the lazy plan
     "drop_near_duplicates" -> OpSpec(Set(),
       Set("id_col", "text_col", "n", "num_hashes", "bands",
         "threshold"),
@@ -272,8 +275,11 @@ object Pipeline {
         val hashes = p.int("num_hashes", Some(64))
         val bands = p.int("bands", Some(32))
         val t = p.dbl("threshold", Some(0.5))
-        df => Dedup.dropNearDuplicates(df, id,
-          Dedup.minHashLshPairs(df, id, text, n, hashes, bands, t))
+        df => {
+          JobScope.persist(df)
+          Dedup.dropNearDuplicates(df, id,
+            Dedup.minHashLshPairs(df, id, text, n, hashes, bands, t))
+        }
       }),
 
     "sample_fraction" -> OpSpec(Set("fraction", "key_cols"), Set(),
@@ -2963,12 +2969,15 @@ object Pipeline {
     * first gate on only stateless row-deterministic steps are legal
     * ([[batchSensitiveStreamingOps]] rejected by name).
     *
-    * Sinks: each gate's violations overwrite
-    * `<quarantine_path>/gate=<name>/batch=<id>` and the survivors
-    * overwrite `sinkPath/batch=<id>` — BOTH replay-idempotent (a
-    * replayed micro-batch rewrites its own tables, never
-    * double-appends), so reading either root as parquet is
-    * end-to-end exactly-once with the batch id as a partition
+    * Sinks: the survivors overwrite `sinkPath/batch=<id>` first, and
+    * that one job counts each gate's violations (a `Dataset.observe`
+    * at the gate's position); then each gate that quarantined rows
+    * overwrites `<quarantine_path>/gate=<name>/batch=<id>`, and a gate
+    * that quarantined none writes nothing (its batch table, if an
+    * earlier attempt left one, is deleted). BOTH roots are
+    * replay-idempotent (a replayed micro-batch rewrites its own
+    * tables, never double-appends), so reading either root as parquet
+    * is end-to-end exactly-once with the batch id as a partition
     * column. The micro-batch is persisted for the duration of its
     * writes: every gate split and the survivors write observe one
     * pinned set of flagged rows. */
@@ -3025,16 +3034,36 @@ object Pipeline {
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val pinned = batch.persist()
         try {
+          // survivors first: the same job counts every gate's
+          // violations (an observation at the gate's position), so
+          // only gates that quarantined rows cost a write afterwards
           var cur: DataFrame = pinned
-          suffix.foreach {
-            case Left((dir, cond)) =>
+          val gates = Seq.newBuilder[(String, DataFrame,
+            org.apache.spark.sql.Observation)]
+          suffix.zipWithIndex.foreach {
+            case (Left((dir, cond)), i) =>
               val ok = coalesce(cond, lit(false))
-              graft.streaming.StreamOps
-                .writeQuarantineBatch(cur.filter(!ok), dir, id)
-              cur = cur.filter(ok)
-            case Right(f) => cur = f(cur)
+              val seen = new org.apache.spark.sql.Observation(
+                s"graft_gate_${id}_$i")
+              gates += ((dir, cur.filter(!ok), seen))
+              cur = cur.observe(seen, count(when(!ok, lit(1)))
+                .as("violations")).filter(ok)
+            case (Right(f), _) => cur = f(cur)
           }
           cur.write.mode("overwrite").parquet(s"$sinkPath/batch=$id")
+          // counts arrive through the listener bus; a count that does
+          // not arrive in time, or arrives empty (a later step pruned
+          // the gate's subtree from the plan), leaves the gate unknown,
+          // and an unknown gate writes its violation set
+          val deadline = scala.concurrent.duration.Duration(10, "s").fromNow
+          gates.result().foreach { case (dir, bad, seen) =>
+            val violations = scala.util.Try(scala.concurrent.Await
+              .result(seen.future, deadline.timeLeft).getLong(0))
+            if (violations.toOption.contains(0L))
+              graft.streaming.StreamOps.clearQuarantineBatch(
+                batch.sparkSession, dir, id)
+            else graft.streaming.StreamOps.writeQuarantineBatch(bad, dir, id)
+          }
         } finally {
           pinned.unpersist()
           ()
@@ -3169,6 +3198,42 @@ object Pipeline {
     (frame, write)
   }
 
+  /** Frames a step persists for the rest of a job run: a step whose
+    * input has several readers ([[JobScope.persist]]) keeps it at
+    * MEMORY_AND_DISK — lineage kept, so a lost block recomputes
+    * instead of failing the job — and the job runners
+    * ([[runJobSteps]], [[runJobStepsAudited]]) unpersist everything
+    * once the sink returns or throws. Outside a job run (entry points
+    * that hand back a frame, whose actions happen later) nothing is
+    * persisted and the plan stays lazy. */
+  private object JobScope {
+    private val held =
+      new ThreadLocal[Option[scala.collection.mutable.Buffer[DataFrame]]] {
+        override def initialValue() = None
+      }
+
+    def run[T](body: => T): T = {
+      val outer = held.get
+      val mine = scala.collection.mutable.Buffer.empty[DataFrame]
+      held.set(Some(mine))
+      try body
+      finally {
+        held.set(outer)
+        mine.foreach(_.unpersist(blocking = false))
+      }
+    }
+
+    /** Persist `df` for the running job; a no-op outside one, or when
+      * its plan is already cached (that cache is not ours to
+      * release). */
+    def persist(df: DataFrame): Unit = held.get match {
+      case Some(mine) if df.storageLevel ==
+          org.apache.spark.storage.StorageLevel.NONE =>
+        mine += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      case _ =>
+    }
+  }
+
   /** Run a COMPLETE job config: first step a source, last step a
     * sink, operators between. The whole config validates before the
     * source is touched. */
@@ -3176,7 +3241,7 @@ object Pipeline {
                   steps: Seq[Step],
                   extra: Map[String, OpSpec] = Map.empty): Unit = {
     val (frame, write) = compileBatch(steps, job = true, extra)
-    write(frame(spark))
+    JobScope.run(write(frame(spark)))
   }
 
   /** Self-contained job config text (source → ops → sink,
@@ -3213,7 +3278,7 @@ object Pipeline {
       frame.observe(obs, count(lit(1)).as("n_rows"))
     }
     val (frame, write) = compileBatch(steps, job = true, extra, tap)
-    write(frame(spark))
+    JobScope.run(write(frame(spark)))
     val report = taps.toSeq.map { case (i, op, obs) =>
       (i, op, obs.get("n_rows").asInstanceOf[Long])
     }

@@ -905,7 +905,13 @@ object TextAnalysis {
     * expressions and codegen'd builtins — zero shuffle at any scale,
     * the same scan-speed shape as the quality gate, so the two compose
     * into the full Gopher filter at one scan's cost.
-    * `passthroughCols` ride along unchanged (streaming form). */
+    * `passthroughCols` ride along unchanged (streaming form).
+    *
+    * `keep` is pinned to this projection ([[org.apache.spark.sql.graftext.PlanAnchor]]):
+    * a later filter on it would otherwise be pushed below an upstream
+    * join (a dedup anti-join) with every ratio inlined into the
+    * predicate, and the n-gram kernels would run twice per document —
+    * once in the pushed filter, once here. */
   def gopherRepetitionFlags(docs: DataFrame, idCol: String = "doc_id",
                             textCol: String = "text",
                             maxDupLineFrac: Double = 0.30,
@@ -918,7 +924,7 @@ object TextAnalysis {
                               Seq(5 -> 0.15, 6 -> 0.14, 7 -> 0.13,
                                 8 -> 0.12, 9 -> 0.11, 10 -> 0.10),
                             passthroughCols: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.graftext.{DupSegmentCharFraction, NgramCharFractions}
+    import org.apache.spark.sql.graftext.{DupSegmentCharFraction, NgramCharFractions, PlanAnchor}
     val t = col(textCol)
     def dupSegFrac(segs: Column): Column =
       lit(1.0) - size(array_distinct(segs)).cast("double") /
@@ -952,7 +958,7 @@ object TextAnalysis {
       round(dupParaChars, 6).as("dup_para_char_frac")) ++
       tops.map { case (n, _, c) => round(c, 6).as(s"top_${n}gram_char_frac") } ++
       dups.map { case (n, _, c) => round(c, 6).as(s"dup_${n}gram_char_frac") } ++
-      Seq(keep.reduce(_ && _).as("keep")) ++
+      Seq(PlanAnchor(keep.reduce(_ && _)).as("keep")) ++
       passthroughCols.map(col): _*)
   }
 

@@ -2491,6 +2491,20 @@ object StreamOps {
                            id: Long): Unit =
     batch.write.mode("overwrite").parquet(s"$dir/batch=$id")
 
+  /** The empty-gate side of [[writeQuarantineBatch]]: a gate that
+    * quarantined nothing in micro-batch `id` writes no table (no job,
+    * no empty file per gate per trigger); a table an earlier attempt
+    * of the same batch id left there is deleted, so the batch's
+    * quarantine state is still this attempt's, as an overwrite
+    * would leave it. */
+  def clearQuarantineBatch(spark: org.apache.spark.sql.SparkSession,
+                           dir: String, id: Long): Unit = {
+    val path = new org.apache.hadoop.fs.Path(s"$dir/batch=$id")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(path)) fs.delete(path, true)
+    ()
+  }
+
   def transitionPairsStream(events: Dataset[Scd2Event],
                             idleRetentionSeconds: Option[Long] = None): Dataset[TransitionPair] = {
     import events.sparkSession.implicits._

@@ -6316,6 +6316,95 @@ class OperatorsSpec extends AnyFunSuite {
       "caf\u00E9 menu")
   }
 
+  /** The step-per-pass Column chain `Normalize.normalizeColumn` was
+    * before its one-pass kernel: the oracle the kernel must match. */
+  private def normalizeChain(c: org.apache.spark.sql.Column, form: String,
+                             repair: Boolean): org.apache.spark.sql.Column = {
+    val repaired =
+      if (repair)
+        Normalize.MojibakeRepairs.foldLeft(c) { case (x, (pat, rep)) =>
+          replace(x, lit(pat), lit(rep))
+        }
+      else c
+    val normalized =
+      org.apache.spark.sql.graftext.UnicodeNormalize(repaired, form)
+    val lf = regexp_replace(
+      regexp_replace(normalized, "\r\n", "\n"), "\r", "\n")
+    val noCtl = regexp_replace(lf,
+      "[\u0000-\u0008\u000B\u000C\u000E-\u001F\u007F-\u009F]", "")
+    val spaces = regexp_replace(noCtl,
+      "[\u00A0\u1680\u2000-\u200A\u202F\u205F\u3000]", " ")
+    regexp_replace(spaces, "[\u200B-\u200D\uFEFF]", "")
+  }
+
+  test("normalizeText kernel equals the step-per-pass chain on 6000 " +
+       "generated strings, every form, repair on and off") {
+    val keys = Normalize.MojibakeRepairs.map(_._1)
+    val alphabet: IndexedSeq[String] = (
+      keys.flatMap(k => (1 to k.length).map(k.take)) ++
+      Normalize.MojibakeRepairs.map(_._2) ++
+      Seq("\r", "\n", "\r\n", "\r\r\n", "\n\r", "\t") ++
+      // control-class boundaries, NULL included
+      Seq("\u0000", "\u0008", "\u0009", "\u000B", "\u000C", "\u000E",
+        "\u001F", "\u0020", "\u007E", "\u007F", "\u0080", "\u009F",
+        "\u00A0", "\u00A1") ++
+      // the Unicode space separators and their neighbours
+      Seq("\u1680", "\u202F", "\u205F", "\u3000", "\u2060", "\u200E") ++
+      (0x2000 to 0x200A).map(c => c.toChar.toString) ++
+      // zero-widths
+      Seq("\u200B", "\u200C", "\u200D", "\uFEFF") ++
+      // full-width letters, ligatures, compatibility forms
+      Seq("\uFF21", "\uFF45", "\uFF4F", "\uFB01", "\uFB02", "\u2460",
+        "\u00B2", "\u2126") ++
+      // combining marks (NFC composes, NFD splits)
+      Seq("e\u0301", "\u0301", "\u0308", "A\u030A", "\u00C5",
+        "\u1100\u1161", "\uAC00") ++
+      // surrogate pairs: an emoji, mathematical bold A (NFKC -> A)
+      Seq("\uD83D\uDE00", "\uD835\uDC00") ++
+      Seq("a", "cafe", "ok.", " ", "  ", "word")).toIndexedSeq
+    val rnd = new scala.util.Random(20261019L)
+    val strings = (0 until 6000).map { i =>
+      if (i % 10 == 0) // printable ASCII, TAB and LF only: the fast path
+        Seq.fill(rnd.nextInt(12))(Seq("a", "b c", ".", "\t", "\n", "~")(
+          rnd.nextInt(6))).mkString
+      else Seq.fill(rnd.nextInt(16))(alphabet(rnd.nextInt(alphabet.size)))
+        .mkString
+    }
+    val s = spark
+    import s.implicits._
+    val df = (strings.zipWithIndex.map { case (t, i) => (i.toLong, t) } :+
+      ((-1L, null: String))).toDF("doc_id", "text")
+    def esc(t: String): String = if (t == null) "null" else
+      t.flatMap(c => if (c >= 0x20 && c < 0x7F) c.toString
+                     else f"<U+${c.toInt}%04X>")
+    for (form <- Seq("NFC", "NFD", "NFKC", "NFKD"); repair <- Seq(true, false)) {
+      val oracle = normalizeChain(col("text"), form, repair)
+      val rows = Normalize.normalizeText(df, form = form,
+          repairMojibake = repair, passthroughCols = Seq("text"))
+        .select(col("text_norm"), col("changed"), oracle.as("oracle"),
+          (!(oracle <=> col("text"))).as("oracle_changed"), col("text"))
+        .collect()
+      assert(rows.length == strings.size + 1)
+      rows.foreach { r =>
+        assert(r.getString(0) == r.getString(2) &&
+          r.getBoolean(1) == r.getBoolean(3),
+          s"$form repair=$repair on '${esc(r.getString(4))}': kernel " +
+            s"'${esc(r.getString(0))}' changed=${r.getBoolean(1)}, chain " +
+            s"'${esc(r.getString(2))}' changed=${r.getBoolean(3)}")
+      }
+    }
+    // the sequential-pass semantics the table relies on: the left
+    // double quote one repair produces completes the en-dash key
+    val cascade = Seq((1L, "\u00E2\u20AC\u00E2\u20AC\u0153"))
+      .toDF("doc_id", "text")
+    assert(Normalize.normalizeText(cascade).collect()(0).getString(1) ==
+      "\u2013")
+    val e = intercept[IllegalArgumentException] {
+      Normalize.normalizeColumn(col("text"), "NFX")
+    }
+    assert(e.getMessage.contains("unknown normalization form"))
+  }
+
   test("s_stem and sentence_array dogfood the parity registry") {
     val df = spark.sql(
       "select named_struct('word', 'babies', 'n', 1L) as doc")

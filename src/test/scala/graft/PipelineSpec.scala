@@ -2038,4 +2038,209 @@ class PipelineSpec extends AnyFunSuite {
     assert(!plan.linesIterator.exists(l =>
       l.contains("ReadSchema") && l.contains("props")))
   }
+
+  // ---- the curation chain: each text kernel once per document ----
+
+  /** A small curation corpus in 4 parquet files: 240 base docs of
+    * 60-119 words, then (larger ids) 20 exact copies (every other one
+    * with a full-width e, equal only after NFKC), 20 near copies (one
+    * word replaced), 15 short docs and 15 repetitive ones. Returns the
+    * path and the row count. */
+  private lazy val curationCorpus: (String, Long) = {
+    val rnd = new scala.util.Random(7L)
+    val vocab = (0 until 3000).map(i => Integer.toString(i * 7919 + 13, 36))
+    def words(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size)))
+    val base = (0 until 240).map(_ => words(60 + rnd.nextInt(60)))
+    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String)]
+    base.zipWithIndex.foreach { case (w, i) =>
+      rows += ((i.toLong, w.mkString(" "), "web")) }
+    def add(text: String, source: String) =
+      rows += ((1000L + rows.size, text, source))
+    (0 until 20).foreach { i =>
+      val t = base(i).mkString(" ")
+      add(if (i % 2 == 0) t.replace("e", "\uFF45") else t, "copy")
+    }
+    (20 until 40).foreach(i =>
+      add(base(i).updated(5, s"zzuniq$i").mkString(" "), "near"))
+    (0 until 15).foreach(_ => add(words(3 + rnd.nextInt(15)).mkString(" "),
+      "short"))
+    (0 until 15).foreach { _ =>
+      val phrase = words(4 + rnd.nextInt(4))
+      add(Seq.fill(15)(phrase).flatten.mkString(" "), "repetitive")
+    }
+    val s = spark
+    import s.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft-curation")
+      .toString + "/corpus"
+    rows.toSeq.toDF("doc_id", "text", "source").repartition(4)
+      .write.parquet(path)
+    (path, rows.size.toLong)
+  }
+
+  private def curationJob(in: String, out: String,
+                          sinkMode: String = "overwrite"): String =
+    s"""[
+       |  {"op": "read_parquet", "params": {"path": "$in"}},
+       |  {"op": "normalize_text",
+       |   "params": {"passthrough_cols": ["source"]}},
+       |  {"op": "drop_exact_duplicates", "params": {"text_col": "text_norm"}},
+       |  {"op": "drop_near_duplicates", "params": {"text_col": "text_norm"}},
+       |  {"op": "token_count", "params": {"text_col": "text_norm"}},
+       |  {"op": "dup_ngram_fraction",
+       |   "params": {"n": 3, "text_col": "text_norm"}},
+       |  {"op": "gopher_repetition_flags",
+       |   "params": {"text_col": "text_norm", "passthrough_cols":
+       |              ["text_norm", "source", "n_tokens", "dup3"]}},
+       |  {"op": "filter",
+       |   "params": {"condition": "keep AND n_tokens >= 50 AND dup3 < 0.2"}},
+       |  {"op": "write_parquet", "params": {"path": "$out", "mode": "$sinkMode"}}
+       |]""".stripMargin
+
+  private def tempOut(tag: String): String =
+    java.nio.file.Files.createTempDirectory(tag).toString + "/out"
+
+  /** Every physical node a finished plan runs: AQE's final plan, query
+    * stages, and each cached relation's plan once (however many scans
+    * read it); a reused exchange is counted where it was built. */
+  private def planNodes(root: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive._
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val cached = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case c: CommandResultExec => c +: walk(c.commandPhysicalPlan)
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case r: ReusedExchangeExec => Seq(r)
+      case m: InMemoryTableScanExec =>
+        m +: (if (cached.add(m.relation.cacheBuilder))
+                walk(m.relation.cachedPlan) else Nil)
+      case other => other +: other.children.flatMap(walk)
+    }
+    walk(root)
+  }
+
+  private def kernelCount(nodes: Seq[org.apache.spark.sql.execution.SparkPlan],
+                          name: String): Int =
+    nodes.flatMap(_.expressions)
+      .map(_.collect { case e if e.prettyName == name => e }.size).sum
+
+  test("curation job: each text kernel runs once per document — the " +
+       "input is read once, normalize_text and ngram_char_fractions " +
+       "appear once in the executed plan, no filter below the " +
+       "anti-join calls either") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val (in, n) = curationCorpus
+    val sc = spark.sparkContext
+    var recordsRead = 0L
+    val tasks = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) synchronized {
+          recordsRead += e.taskMetrics.inputMetrics.recordsRead
+        }
+    }
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val queries = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    sc.addSparkListener(tasks)
+    spark.listenerManager.register(queries)
+    val out = tempOut("graft-curation-once")
+    try {
+      Pipeline.runJobJson(spark, curationJob(in, out))
+      org.apache.spark.sql.graftext.SparkInternals.drainListenerBus(sc)
+    } finally {
+      sc.removeSparkListener(tasks)
+      spark.listenerManager.unregister(queries)
+    }
+    // every planted duplicate, short and repetitive doc is gone
+    assert(spark.read.parquet(out).select("doc_id").collect()
+      .map(_.getLong(0)).toSet == (0L until 240L).toSet)
+    val write = plans.synchronized(plans.toList).map(planNodes).filter(
+      _.exists(_.isInstanceOf[
+        org.apache.spark.sql.execution.command.DataWritingCommandExec]))
+    assert(write.size == 1, plans.mkString("\n"))
+    val nodes = write.head
+    // the parquet scan produced each input row once, and the task
+    // input counters read the input once (a cached block read adds
+    // one record per columnar batch, not per row)
+    val scanned = nodes.collect { case s: FileSourceScanExec =>
+      s.metrics("numOutputRows").value }
+    assert(scanned.size == 1 && scanned.sum == n, scanned)
+    assert(recordsRead >= n && recordsRead < n + 64, recordsRead)
+    assert(kernelCount(nodes, "normalize_text") == 1)
+    assert(kernelCount(nodes, "ngram_char_fractions") == 1)
+    val antiJoins = nodes.collect {
+      case j: BaseJoinExec if j.joinType == LeftAnti => j }
+    assert(antiJoins.nonEmpty)
+    antiJoins.foreach { j =>
+      val pushed = planNodes(j).collect { case f: FilterExec => f }
+        .filter(f => kernelCount(Seq(f), "normalize_text") +
+          kernelCount(Seq(f), "ngram_char_fractions") > 0)
+      assert(pushed.isEmpty, pushed.mkString("\n"))
+    }
+  }
+
+  test("curation job: the frame drop_near_duplicates persists is " +
+       "released when the job returns and when its sink fails") {
+    val (in, _) = curationCorpus
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    def released(): Unit = {
+      assert(cache.isEmpty)
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore)
+        .isEmpty)
+    }
+    Pipeline.runJobJson(spark, curationJob(in, tempOut("graft-release")))
+    released()
+    // a sink that fails: appending under a path that is a regular file
+    val file = java.nio.file.Files.createTempFile("graft-release", ".txt")
+    intercept[Exception] {
+      Pipeline.runJobJson(spark, curationJob(in, file.toString, "append"))
+    }
+    released()
+    // a frame-returning entry point keeps the lazy plan: nothing cached
+    val steps = Pipeline.parse(curationJob(in, "unused"))
+    val frame = Pipeline.runSteps(spark, steps.dropRight(1))
+    assert(cache.isEmpty && frame.count() == 240)
+  }
+
+  test("curation job output is identical under shuffle partitions 1, " +
+       "7 and 64, with AQE on and off") {
+    val (in, _) = curationCorpus
+    val conf = spark.conf
+    val saved = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+      .map(k => k -> conf.getOption(k))
+    def output(): Seq[String] = {
+      val out = tempOut("graft-invariance")
+      Pipeline.runJobJson(spark, curationJob(in, out))
+      spark.read.parquet(out).collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    }
+    try {
+      val runs = for (parts <- Seq(1, 7, 64); aqe <- Seq(true, false)) yield {
+        conf.set("spark.sql.shuffle.partitions", parts.toLong)
+        conf.set("spark.sql.adaptive.enabled", aqe)
+        (parts, aqe) -> output()
+      }
+      val (_, first) = runs.head
+      assert(first.size == 240)
+      runs.foreach { case (setting, rows) =>
+        assert(rows == first, s"output differs under $setting") }
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
 }

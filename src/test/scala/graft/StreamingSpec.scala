@@ -2768,12 +2768,19 @@ class StreamingSpec extends AnyFunSuite {
     val vPosDirs = new java.io.File(s"$qStream/gate=v_pos")
       .listFiles().map(_.getName).filter(_.startsWith("batch=")).toSet
     assert(vPosDirs.size >= 2)
+    // a gate that quarantined nothing in a micro-batch writes nothing
+    // for it: v2_cap's only violation arrived in batch 0
+    assert(new java.io.File(s"$qStream/gate=v2_cap/batch=0").isDirectory)
+    assert(!new java.io.File(s"$qStream/gate=v2_cap/batch=1").exists())
     // replaying a batch id OVERWRITES its own table — no double rows
     val replayDir = base.resolve("replay").toString
     val d = Seq((1L, 2L)).toDF("k", "v")
     StreamOps.writeQuarantineBatch(d, replayDir, 7L)
     StreamOps.writeQuarantineBatch(d, replayDir, 7L)
     assert(s.read.parquet(replayDir).count() == 1)
+    // and a replay that finds the gate empty leaves no table behind
+    StreamOps.clearQuarantineBatch(s, replayDir, 7L)
+    assert(!new java.io.File(s"$replayDir/batch=7").exists())
   }
 
   test("applyChangesStream maintains a parquet snapshot from a CDC " +
