@@ -148,7 +148,7 @@ object Layout {
               sortCol: Option[String] = None): (Int, Int) = {
     require(targetBytes > 0, "targetBytes must be positive")
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val files = fs.listStatus(p)
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
     require(files.nonEmpty, s"compact: no parquet files under $path")
@@ -392,7 +392,7 @@ object Layout {
     val remaining = merged.select("__bucket").distinct()
       .collect().map(_.getInt(0)).toSet
     val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     touched.filterNot(remaining).foreach { b =>
       fs.delete(new org.apache.hadoop.fs.Path(path, s"__bucket=$b"),
         true)

@@ -132,7 +132,7 @@ object PslRules {
   def load(spark: org.apache.spark.sql.SparkSession,
            path: String): PslRules = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val in = fs.open(p)
     try parse(new String(in.readAllBytes(), "UTF-8").linesIterator.toSeq)
     finally in.close()

@@ -334,7 +334,7 @@ object WarcGzFiles {
   def recordRows(spark: SparkSession, paths: Seq[String],
                  pathCol: String = "path"): DataFrame = {
     val sc = spark.sparkContext
-    val hconf = sc.hadoopConfiguration
+    val hconf = spark.sessionState.newHadoopConf()
     val files: Seq[(String, Long)] = paths.flatMap { p =>
       val hp = new org.apache.hadoop.fs.Path(p)
       val fs = hp.getFileSystem(hconf)

@@ -2190,7 +2190,7 @@ object StreamOps {
               snap, eligible, keyCols, seqCol, opCol)
             // the write action reads the CURRENT snapshot while
             // producing tmp; the swap happens only after it completes
-            writeAndSwap(snapshotPath, "applyChangesStream")(tmp =>
+            writeAndSwap(spark, snapshotPath, "applyChangesStream")(tmp =>
               merged.write.mode("overwrite").parquet(tmp))
         }
       }
@@ -2214,11 +2214,11 @@ object StreamOps {
     * missing but `__merge_old` exists, it is renamed back before
     * producing — so a restarted stream heals the park instead of
     * failing its first read. */
-  private def writeAndSwap(livePath: String, what: String)
+  private def writeAndSwap(spark: org.apache.spark.sql.SparkSession,
+                           livePath: String, what: String)
                           (produce: String => Unit): Unit = {
     val p = new org.apache.hadoop.fs.Path(livePath)
-    val fs = p.getFileSystem(org.apache.spark.sql.SparkSession.active
-      .sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new org.apache.hadoop.fs.Path(p.getParent,
       p.getName + "__merge_tmp")
     val old = new org.apache.hadoop.fs.Path(p.getParent,
@@ -2272,7 +2272,7 @@ object StreamOps {
         val fresh = batch
           .join(existing, col(idCol) === col("__seen"), "left_anti")
         if (!fresh.isEmpty) {
-          writeAndSwap(indexPath, "mergeSearchIndexStream")(tmp =>
+          writeAndSwap(spark, indexPath, "mergeSearchIndexStream")(tmp =>
             graft.operators.TextSearch.mergeSearchIndex(
               spark, indexPath, fresh, tmp, idCol, textCol, shards))
         }
@@ -2500,7 +2500,7 @@ object StreamOps {
   def clearQuarantineBatch(spark: org.apache.spark.sql.SparkSession,
                            dir: String, id: Long): Unit = {
     val path = new org.apache.hadoop.fs.Path(s"$dir/batch=$id")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(path)) fs.delete(path, true)
     ()
   }

@@ -660,4 +660,314 @@ class SourcesSpec extends AnyFunSuite {
     assert(t.contains("café article body"))
     assert(!t.contains("<p>"))
   }
+
+  // ---- graft.sources.LocalFileSystems: file:// through NIO ----------
+
+  private def unixMode(p: java.nio.file.Path): Int =
+    java.nio.file.Files.getAttribute(p, "unix:mode",
+      java.nio.file.LinkOption.NOFOLLOW_LINKS).asInstanceOf[Int] & 0xfff
+
+  /** The class Hadoop serves for `file://` without graft's settings
+    * (its service loader's last registration), fresh and initialized. */
+  private def stockLocalFs(conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.hadoop.fs.FileSystem = {
+    val fs = org.apache.hadoop.fs.FileSystem
+      .getFileSystemClass("file", new org.apache.hadoop.conf.Configuration())
+      .getDeclaredConstructor().newInstance()
+    fs.initialize(java.net.URI.create("file:///"), conf)
+    fs
+  }
+
+  /** Every entry under `root`: relative path -> (mode, bytes or dir). */
+  private def tree(root: java.nio.file.Path)
+      : Map[String, (Int, Option[Seq[Byte]])] = {
+    import scala.jdk.CollectionConverters._
+    val w = java.nio.file.Files.walk(root)
+    try w.iterator().asScala.filterNot(_ == root).map { p =>
+      root.relativize(p).toString -> ((unixMode(p),
+        if (java.nio.file.Files.isDirectory(p)) None
+        else Some(java.nio.file.Files.readAllBytes(p).toSeq)))
+    }.toMap
+    finally w.close()
+  }
+
+  test("NioLocalFileSystem sets the stock local file system's modes and " +
+       ".crc files on mkdirs, create and rename under several umasks; a " +
+       "sticky bit takes the stock path") {
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    import org.apache.hadoop.fs.permission.FsPermission
+    import graft.sources.NioLocalFileSystem
+    val root = java.nio.file.Files.createTempDirectory("graft-fs-modes")
+    val dirPerms = Seq("755", "700", "775", "711", "777", "750")
+    val filePerms = Seq("644", "600", "666", "640", "444", "755", "400")
+    def populate(fs: FileSystem, base: String): Seq[Boolean] = {
+      dirPerms.foreach(m =>
+        assert(fs.mkdirs(new Path(s"$base/d$m/sub"), new FsPermission(m))))
+      filePerms.foreach { m =>
+        val out = fs.create(new Path(s"$base/f$m"), new FsPermission(m),
+          true, 4096, 1.toShort, 1L << 20, null)
+        out.write(s"payload $m\n".getBytes("UTF-8"))
+        out.close()
+      }
+      // FsPermission.applyUMask drops a sticky bit, so only a direct
+      // setPermission carries one — NIO cannot set it, Hadoop's own
+      // chmod path must
+      fs.setPermission(new Path(s"$base/d755"), new FsPermission("1777"))
+      intercept[java.io.IOException](fs.setPermission(
+        new Path(s"$base/missing"), new FsPermission("644")))
+      // onto an existing file (refused by the stock class on this
+      // classpath) and onto a free name; .crc files follow
+      val renamed = Seq(fs.rename(new Path(s"$base/f644"),
+          new Path(s"$base/f600")),
+        fs.rename(new Path(s"$base/f644"), new Path(s"$base/g644")))
+      assert(renamed.last)
+      renamed
+    }
+    for (umask <- Seq("022", "077", "002", "000")) {
+      val conf = new Configuration()
+      conf.set("fs.permissions.umask-mode", umask)
+      val stock = root.resolve(s"stock$umask")
+      val nio = root.resolve(s"nio$umask")
+      val stockRenamed = populate(stockLocalFs(conf), stock.toString)
+      val graftFs = new NioLocalFileSystem()
+      graftFs.initialize(java.net.URI.create("file:///"), conf)
+      assert(populate(graftFs, nio.toString) == stockRenamed)
+      val (s, n) = (tree(stock), tree(nio))
+      assert(n == s, s"umask $umask")
+      assert(s("d755")._1 == 0x3ff, "the sticky bit was set")
+      assert(s.contains(".g644.crc") && s.contains("d700/sub"))
+      if (umask == "022") {
+        assert(s("f666")._1 == Integer.parseInt("644", 8))
+        assert(s("d777/sub")._1 == Integer.parseInt("755", 8))
+      }
+    }
+  }
+
+  test("NioLocalFileSystem.getFileLinkStatus equals the stock one on a " +
+       "file, a directory, a symlink, a dangling symlink and a missing " +
+       "path") {
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path,
+      RawLocalFileSystem}
+    import graft.sources.{NioLocalFileSystem, NioRawLocalFileSystem}
+    val dir = java.nio.file.Files.createTempDirectory("graft-fs-links")
+    val file = java.nio.file.Files.write(dir.resolve("f"),
+      "12345".getBytes("UTF-8"))
+    java.nio.file.Files.createDirectory(dir.resolve("d"))
+    java.nio.file.Files.createSymbolicLink(dir.resolve("link"), file)
+    java.nio.file.Files.createSymbolicLink(dir.resolve("dangling"),
+      dir.resolve("nowhere"))
+    def view(st: FileStatus): Seq[Any] =
+      Seq(st.getPath, st.isFile, st.isDirectory, st.isSymlink, st.getLen,
+        if (st.isSymlink) st.getSymlink else null, st.getPermission,
+        st.getOwner, st.getGroup, st.getModificationTime)
+    def probe(fs: FileSystem, p: Path): Either[String, Seq[Any]] =
+      try Right(view(fs.getFileLinkStatus(p)))
+      catch { case e: java.io.IOException => Left(e.getClass.getName) }
+    val conf = new Configuration()
+    def init(fs: FileSystem): FileSystem = {
+      fs.initialize(java.net.URI.create("file:///"), conf); fs
+    }
+    val pairs = Seq(
+      init(new RawLocalFileSystem()) -> init(new NioRawLocalFileSystem()),
+      stockLocalFs(conf) -> init(new NioLocalFileSystem()))
+    for ((stock, nio) <- pairs;
+         name <- Seq("f", "d", "link", "dangling", "missing");
+         p <- Seq(new Path(dir.resolve(name).toString),
+                  new Path(dir.resolve(name).toUri))) {
+      assert(probe(nio, p) == probe(stock, p), s"$name as $p")
+    }
+    // the cases are what they claim to be on the stock side
+    val raw = pairs.head._1
+    def at(name: String) = new Path(dir.resolve(name).toString)
+    assert(raw.getFileLinkStatus(at("link")).isSymlink)
+    assert(raw.getFileLinkStatus(at("dangling")).isSymlink)
+    assert(raw.getFileLinkStatus(at("d")).isDirectory)
+    assert(probe(raw, at("missing")) ==
+      Left(classOf[java.io.FileNotFoundException].getName))
+  }
+
+  test("NioLocalFs behind Spark's checkpoint manager leaves the stock " +
+       "LocalFs's files, modes and .crc files") {
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.streaming.checkpointing
+      .CheckpointFileManager
+    val root = java.nio.file.Files.createTempDirectory("graft-fs-ckpt")
+    def run(conf: Configuration, base: java.nio.file.Path): Unit = {
+      val dir = new Path(base.resolve("offsets").toUri)
+      val cm = CheckpointFileManager.create(dir, conf)
+      assert(cm.getClass.getSimpleName ==
+        "FileContextBasedCheckpointFileManager")
+      cm.mkdirs(dir)
+      def write(name: String, body: String): Unit = {
+        val out = cm.createAtomic(new Path(dir, name),
+          overwriteIfPossible = true)
+        out.write(body.getBytes("UTF-8"))
+        out.close()
+      }
+      write("0", "v1\n{\"batchId\":0}\n")
+      write("1", "v1\n{\"batchId\":1}\n")
+      write("0", "v1\n{\"batchId\":0,\"retry\":true}\n") // rename over
+      write("2", "v1\n{\"batchId\":2}\n")
+      cm.delete(new Path(dir, "1"))
+      assert(cm.list(dir).map(_.getPath.getName).sorted.toSeq ==
+        Seq("0", "2"))
+      assert(cm.exists(new Path(dir, "2")) &&
+        !cm.exists(new Path(dir, "1")))
+    }
+    val stockConf = new Configuration()
+    val nioConf = new Configuration()
+    nioConf.set("fs.AbstractFileSystem.file.impl",
+      classOf[graft.sources.NioLocalFs].getName)
+    run(stockConf, root.resolve("stock"))
+    run(nioConf, root.resolve("nio"))
+    val (s, n) = (tree(root.resolve("stock")), tree(root.resolve("nio")))
+    assert(n == s)
+    assert(s.keySet == Set("offsets", "offsets/0", "offsets/2",
+      "offsets/.0.crc", "offsets/.2.crc"), s.keySet.toString)
+  }
+
+  test("the local session serves file:// through the NIO file system: " +
+       "no chmod or readlink process on a parquet overwrite or a " +
+       "checkpointed gated micro-batch") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.hadoop.fs.{FileContext, FileSystem, Path,
+      RawLocalFileSystem}
+    import org.apache.hadoop.fs.permission.FsPermission
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.operators.Pipeline
+    import graft.sources.{NioLocalFileSystem, NioLocalFs}
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val root = java.net.URI.create("file:///")
+    // FileSystem.get answers from Hadoop's cache, keyed by scheme,
+    // authority and user — not by class. A stock instance resolved
+    // before the session existed would be served here, and to every
+    // Spark write, without a word.
+    for (conf <- Seq(s.sessionState.newHadoopConf(),
+                     s.sparkContext.hadoopConfiguration))
+      assert(FileSystem.get(root, conf).isInstanceOf[NioLocalFileSystem])
+    assert(FileContext.getFileContext(root, s.sessionState.newHadoopConf())
+      .getDefaultFileSystem.isInstanceOf[NioLocalFs])
+    val base = java.nio.file.Files.createTempDirectory("graft-fs-spawns")
+    val canary = java.nio.file.Files.createFile(base.resolve("canary"))
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try {
+      val t = base.resolve("t").toString
+      s.range(0, 100).write.parquet(t)
+      s.range(0, 50).write.mode("overwrite").parquet(t)
+      val qdir = base.resolve("quarantine").toString
+      val input = MemoryStream[(Long, Long)]
+      val q = Pipeline.startGatedUnified(input.toDS().toDF("k", "v"),
+        Pipeline.parse(
+          s"""[{"op": "expect_condition",
+             |  "params": {"condition": "v > 0", "name": "v_pos",
+             |             "quarantine_path": "$qdir"}}]""".stripMargin),
+        base.resolve("survivors").toString,
+        base.resolve("ckpt").toString)
+      input.addData((1L, 5L), (2L, -1L))
+      q.processAllAvailable()
+      q.stop()
+      assert(s.read.parquet(base.resolve("survivors").toString).count() == 1)
+      // the recording does catch such starts: the stock raw file
+      // system starts one chmod here (none where libhadoop loads)
+      val stock = new RawLocalFileSystem()
+      stock.initialize(root, new Configuration())
+      stock.setPermission(new Path(canary.toString), new FsPermission("600"))
+    } finally rec.stop()
+    val dump = base.resolve("spawns.jfr")
+    rec.dump(dump)
+    rec.close()
+    val fsStarts = jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+      .asScala.filter(_.getEventType.getName == "jdk.ProcessStart")
+      .map(_.getString("command"))
+      .filter(c => Set("chmod", "readlink")(
+        c.split(' ').head.split('/').last))
+    val expected =
+      if (org.apache.hadoop.io.nativeio.NativeIO.isAvailable) 0 else 1
+    assert(fsStarts.size == expected &&
+      fsStarts.forall(_.contains(canary.toString)), fsStarts.mkString("\n"))
+  }
+
+  test("graft's own FileSystem lookups see Hadoop options set only on " +
+       "the session, as Spark's reads and writes of the same paths do") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.graftext.PslRules
+    import graft.sources.{Layout, Warc}
+    import graft.streaming.StreamOps
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val scheme = "graftsession"
+    s.conf.set(s"fs.$scheme.impl", classOf[SessionSchemeFileSystem].getName)
+    // uncached: an instance a session-conf lookup made must not answer
+    // a later lookup that lacks the option
+    s.conf.set(s"fs.$scheme.impl.disable.cache", "true")
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("graft-session-fs")
+      def at(name: String): String = s"$scheme://$dir/$name"
+      assertThrows[org.apache.hadoop.fs.UnsupportedFileSystemException](
+        new Path(at("x")).getFileSystem(s.sparkContext.hadoopConfiguration))
+      // PslRules.load
+      java.nio.file.Files.write(dir.resolve("psl.dat"),
+        "com\nco.uk\n".getBytes("UTF-8"))
+      assert(PslRules.load(s, at("psl.dat"))
+        .registrableOf("a.b.co.uk") == "b.co.uk")
+      // Layout.compact
+      s.range(0, 300).repartition(6).write.parquet(at("compact"))
+      assert(Layout.compact(s, at("compact")) == ((6, 1)))
+      assert(s.read.parquet(at("compact")).count() == 300)
+      // Layout.applyChangesBucketed dropping an emptied bucket
+      val snap = at("snap")
+      Layout.writeBucketedSnapshot(
+        (0L until 40L).map(i => (i, i * 10)).toDF("id", "v"),
+        snap, Seq("id"), 4)
+      val b0 = s.read.parquet(snap).filter("__bucket = 0")
+        .select("id").as[Long].collect()
+      assert(b0.nonEmpty)
+      Layout.applyChangesBucketed(s, snap,
+        b0.toSeq.map(i => (i, 0L, 1L, "delete")).toDF("id", "v", "seq", "op"),
+        Seq("id"), 4)
+      assert(!java.nio.file.Files.exists(dir.resolve("snap/__bucket=0")))
+      assert(s.read.parquet(snap).count() == 40 - b0.length)
+      // StreamOps.clearQuarantineBatch
+      s.range(3).write.parquet(at("quarantine/batch=4"))
+      StreamOps.clearQuarantineBatch(s, at("quarantine"), 4L)
+      assert(!java.nio.file.Files.exists(dir.resolve("quarantine/batch=4")))
+      // Warc.readWarcGz lists and opens the files
+      java.nio.file.Files.write(dir.resolve("a.warc.gz"),
+        gz(warcRecBytes("response", "one".getBytes)))
+      assert(Warc.readWarcGz(s, Seq(at("a.warc.gz"))).count() == 1)
+      // StreamOps.applyChangesStream's swap of the merged snapshot
+      val cdc = at("cdc")
+      Seq((1L, "a", 10, 0L), (2L, "b", 20, 0L)).toDF("id", "s", "v", "seq")
+        .coalesce(1).write.parquet(cdc)
+      val input = MemoryStream[CdcChg]
+      val q = StreamOps.applyChangesStream(input.toDF(), cdc, Seq("id"),
+        dir.resolve("ckpt").toString)
+      input.addData(CdcChg(2, 1, "upsert", "b2", 21),
+        CdcChg(1, 1, "delete", null, 0))
+      q.processAllAvailable()
+      q.stop()
+      assert(s.read.parquet(cdc).select("id", "s").as[(Long, String)]
+        .collect().toSeq == Seq((2L, "b2")))
+    } finally {
+      s.conf.unset(s"fs.$scheme.impl")
+      s.conf.unset(s"fs.$scheme.impl.disable.cache")
+    }
+  }
+}
+
+/** `file://` under the scheme `graftsession`, for specs that configure
+  * a file system on the session only. */
+class SessionSchemeFileSystem extends graft.sources.NioRawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftsession:///")
+  override def getScheme: String = "graftsession"
 }

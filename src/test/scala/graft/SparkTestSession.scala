@@ -12,6 +12,7 @@ object SparkTestSession {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(LocalSession.fileSystemConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
