@@ -466,7 +466,7 @@ object Dedup {
     * band index is ~10⁻⁴ of corpus bytes), and an id-keyed verify join
     * against stored shingles for candidate ids only. Nothing re-derives
     * corpus signatures, so per-batch time stays near-flat as the stored
-    * corpus grows (measured: CurationScaleProbe store table in
+    * corpus grows (measured: `graft.Probe curation`, the store table in
     * BASELINE.md). */
   def writeBandSignatures(corpus: DataFrame, idCol: String, textCol: String,
                           path: String, n: Int = 3, numHashes: Int = 64,

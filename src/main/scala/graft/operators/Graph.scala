@@ -1297,7 +1297,7 @@ object Graph {
       // global table's Σdeg². Scoped wins iff (steps−1)·walkers <
       // Σdeg = |E|. (The earlier av-degree form of this rule ignored
       // frontier size and chose scoped even when steps·walkers ≫ |E|
-      // — WalkScaleProbe's hub-star frontier sweep caught it.) Both
+      // — `graft.Probe walk_second_order`'s frontier sweep caught it.) Both
       // probes are bounded driver scalars; the pick grammar — and
       // therefore every position — is identical either way
       // (spec-pinned).
@@ -1624,8 +1624,7 @@ object Graph {
     trainLoop(examples, dim, iters, lr, seed)._2
 
   private[graft] def trainLoop(examples: DataFrame, dim: Int,
-                               iters: Int, lr: Double, seed: String,
-                               persistScored: Boolean = false)
+                               iters: Int, lr: Double, seed: String)
       : (DataFrame, DataFrame) = {
     require(dim >= 1 && dim <= 64, "dim must be in [1, 64]")
     require(iters >= 1, "iters must be >= 1")
@@ -1666,12 +1665,12 @@ object Graph {
       val cRows = emb.select(col("node").as("context"), col("j"),
         col("cw"))
       // σ(e·c) per distinct example (round-9, the logreg discipline).
-      // persistScored (scale probe, r17): the score join is read by
-      // the loss aggregate AND the gradient residuals — recompute
-      // (default) measured faster up to 100× the bench example table
-      // (TrainScaleProbe, BASELINE.md), so the checkpoint stays
-      // opt-in for regimes where one score-join pass dominates two.
-      val scoredSig0 = ex
+      // The score join is read by the loss aggregate AND the gradient
+      // residuals, and is recomputed, not checkpointed: materializing
+      // the example-sized frames per iteration measured 1.71× slower
+      // at 4M examples (BASELINE.md, "trainLoop recompute beats
+      // checkpoint AT SCALE").
+      val scoredSig = ex
         .join(eRows, Seq("center")).join(cRows, Seq("context", "j"))
         .groupBy(col("center"), col("context"), col("label"),
           col("cnt"))
@@ -1681,9 +1680,6 @@ object Graph {
           round(lit(1.0) /
               (lit(1.0) + exp(-col("sRaw").cast("double"))), 9)
             .cast("decimal(14,9)").as("sig"))
-      val scoredSig =
-        if (persistScored) scoredSig0.truncateLineage(false)
-        else scoredSig0
       // this round's log-loss (model state ENTERING the round): the
       // clamped-sigmoid ln terms on the 1e-9 integer lattice, weighted
       // by the duplicate count in exact longs, ONE final division
@@ -1703,11 +1699,8 @@ object Graph {
         .select(col("center"), col("context"),
           ((col("sig") - col("label").cast("decimal(14,9)"))
             * col("cnt")).cast("decimal(19,9)").as("rc"))
-      val withVecs0 = scored
+      val withVecs = scored
         .join(eRows, Seq("center")).join(cRows, Seq("context", "j"))
-      val withVecs =
-        if (persistScored) withVecs0.truncateLineage(false)
-        else withVecs0
       // BOTH gradient matrices in ONE aggregate (r17, guide §2.4):
       // each example row explodes into its two (node, role) gradient
       // terms and one groupBy(node, j) sums them per role — the

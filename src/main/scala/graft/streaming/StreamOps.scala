@@ -2097,28 +2097,6 @@ object StreamOps {
                             dst_type: String)
   case class TransState(lastFinal: Option[Scd2Buf], buf: Seq[Scd2Buf])
 
-  /** Streaming first-order transition pairs — the live feed of
-    * [[graft.operators.Events.transitionMatrix]]: for each user, emit
-    * (src_type, dst_type) the moment BOTH endpoints are finalized by
-    * the watermark. A pair is frozen only when no still-admissible
-    * late event could land between its endpoints, so this needs the
-    * sessionizeStream buffering discipline (unlike
-    * [[decayedActivityStream]], whose top-k state is order-free):
-    * incoming rows merge into a per-user pending buffer sorted by
-    * (ts, id); rows below the watermark release in order, each pairing
-    * with the previously released event; the last released event is
-    * retained as the next pair's source. Append mode — downstream a
-    * plain streaming `groupBy(src, dst).count()` (or the batch
-    * normalization over a sink table) rebuilds the matrix; the
-    * finalized pair multiset is spec-pinned equal to the batch
-    * operator's pairs under shuffled multi-batch arrival.
-    *
-    * State per user: one retained event plus the watermark-bounded
-    * pending buffer. With unbounded user cardinality set
-    * `idleRetentionSeconds` to evict idle users' retained event — a
-    * returning user's first event then starts a fresh chain (one
-    * boundary pair lost; the sessionize-counter TTL tradeoff).
-    * Caller applies `withWatermark` upstream. */
   /** Streaming snapshot maintenance — the streaming form of
     * `Layout.applyChanges`: a CDC change stream (key + payload +
     * `seqCol` + `opCol` ∈ upsert|delete) continuously merges into a
@@ -2505,6 +2483,28 @@ object StreamOps {
     ()
   }
 
+  /** Streaming first-order transition pairs — the live feed of
+    * [[graft.operators.Events.transitionMatrix]]: for each user, emit
+    * (src_type, dst_type) the moment BOTH endpoints are finalized by
+    * the watermark. A pair is frozen only when no still-admissible
+    * late event could land between its endpoints, so this needs the
+    * sessionizeStream buffering discipline (unlike
+    * [[decayedActivityStream]], whose top-k state is order-free):
+    * incoming rows merge into a per-user pending buffer sorted by
+    * (ts, id); rows below the watermark release in order, each pairing
+    * with the previously released event; the last released event is
+    * retained as the next pair's source. Append mode — downstream a
+    * plain streaming `groupBy(src, dst).count()` (or the batch
+    * normalization over a sink table) rebuilds the matrix; the
+    * finalized pair multiset is spec-pinned equal to the batch
+    * operator's pairs under shuffled multi-batch arrival.
+    *
+    * State per user: one retained event plus the watermark-bounded
+    * pending buffer. With unbounded user cardinality set
+    * `idleRetentionSeconds` to evict idle users' retained event — a
+    * returning user's first event then starts a fresh chain (one
+    * boundary pair lost; the sessionize-counter TTL tradeoff).
+    * Caller applies `withWatermark` upstream. */
   def transitionPairsStream(events: Dataset[Scd2Event],
                             idleRetentionSeconds: Option[Long] = None): Dataset[TransitionPair] = {
     import events.sparkSession.implicits._
