@@ -62,6 +62,18 @@ class ProbeSpec extends AnyFunSuite {
     started
   }
 
+  test("a run counts only its own jobs while other probes run beside it: " +
+       "on the one-partition sf0.01 corpus, heavy_hitters' sketch writes " +
+       "one shuffle record and explode one per distinct trigram") {
+    val lines = Await.result(runs("heavy_hitters"), 10.minutes)
+      .map(json.readTree)
+    val v = lines.map(o => o.get("variant").asText -> o).toMap
+    assert(v("sketch").get("map_partitions").asLong == 1)
+    assert(v("sketch").get("shuffle_records").asLong == 1)
+    assert(v("explode").get("shuffle_records").asLong ==
+      v("explode").get("vocab").asLong)
+  }
+
   Probe.all.foreach { p =>
     test(s"probe ${p.name} runs at its smallest size: its check passes, " +
          "every line is JSON with the common keys, a shuffling variant " +
