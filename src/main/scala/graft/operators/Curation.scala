@@ -317,8 +317,8 @@ object Curation {
   /** The scan-speed banding gate of [[bucketByQuantile]] against
     * pre-fit thresholds — split out (the fitMad/madGate pattern) so a
     * corpus-fit banding can label a DIFFERENT frame, most usefully an
-    * unbounded stream where the gate is a stateless projection
-    * ([[graft.streaming.StreamOps.quantileBucketStream]]). */
+    * unbounded stream, where it runs unchanged as a stateless
+    * projection. */
   def bucketByThresholds(df: DataFrame, score: Column,
                          thresholds: Seq[Double], labels: Seq[String],
                          bucketCol: String = "bucket"): DataFrame = {

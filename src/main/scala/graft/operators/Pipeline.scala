@@ -175,9 +175,41 @@ object Pipeline {
     * body. `compile` runs EAGERLY per step — read (and thereby
     * validate) every param in the outer stage and return the
     * DataFrame transform, so a malformed value or unparsable
-    * expression throws at config-compile time, never mid-pipeline. */
+    * expression throws at config-compile time, never mid-pipeline.
+    * `streaming` is the entry's streaming contract, the one place the
+    * streaming compiles read it from. */
   final case class OpSpec(required: Set[String], optional: Set[String],
-                          compile: Params => DataFrame => DataFrame)
+                          compile: Params => DataFrame => DataFrame,
+                          streaming: Streaming = BatchOnly)
+
+  /** How a registry entry runs on a stream. An entry streams when its
+    * compiled body is stream-safe: a pure per-row/per-batch transform
+    * (projections, filters, explodes, hash gates), a stored-model
+    * scorer whose artifact loads as driver literals at config-compile
+    * time, a stream-static join, or a stateful step that carries its
+    * own watermark in the config. Everything else either aggregates or
+    * joins the in-flight frame WITHOUT a watermark
+    * (drop_exact_duplicates, drop_near_duplicates) or collects from it
+    * (the index probe steps) — shapes a micro-batch stream cannot run
+    * unless the config states the event-time bound, which those steps
+    * have no parameter for. `sql` names the params that hold SQL:
+    * on a stream they must be deterministic, since a micro-batch retry
+    * would otherwise emit different rows. */
+  sealed abstract class Streaming(val sql: Set[String])
+  /** Rejected by name from every streaming compile (the default). */
+  case object BatchOnly extends Streaming(Set.empty)
+  /** Runs on a stream with the batch body unchanged. */
+  final case class Streamable(sqlParams: String*)
+      extends Streaming(sqlParams.toSet)
+  /** Streams, but its OUTPUT depends on micro-batch boundaries or
+    * watermark progression (stateful windows/timers, arrival-order
+    * semantics): the unified gated runner ([[startGatedUnified]]) runs
+    * it once in the streaming plan, so it must PRECEDE every quarantine
+    * gate — from the first gate on, steps re-apply per materialized
+    * micro-batch, where it would compute per-batch rows instead of the
+    * stream's. */
+  final case class BatchSensitive(sqlParams: String*)
+      extends Streaming(sqlParams.toSet)
 
   /** The builtin whitelist. Names are snake_case (config-file
     * convention); bodies call the same oracled operators the
@@ -195,7 +227,7 @@ object Pipeline {
         val out = p.str("out_col", Some("n_tokens"))
         val text = p.str("text_col", Some("text"))
         df => df.withColumn(out, TextAnalysis.tokenCount(col(text)))
-      }),
+      }, Streamable()),
 
     "dup_ngram_fraction" -> OpSpec(Set("n"), Set("text_col", "out_col"),
       p => {
@@ -204,7 +236,7 @@ object Pipeline {
         val text = p.str("text_col", Some("text"))
         df => df.withColumn(out,
           TextAnalysis.dupNgramFraction(col(text), n))
-      }),
+      }, Streamable()),
 
     // Catalyst-parsed SQL predicate: parse errors throw at config
     // compile (parseEagerly — Column construction alone defers the
@@ -214,19 +246,19 @@ object Pipeline {
       p => {
         val cond = parseEagerly(p.str("condition"))
         df => df.filter(cond)
-      }),
+      }, Streamable("condition")),
 
     "with_column" -> OpSpec(Set("name", "expr"), Set(),
       p => {
         val (name, e) = (p.str("name"), parseEagerly(p.str("expr")))
         df => df.withColumn(name, e)
-      }),
+      }, Streamable("expr")),
 
     "select" -> OpSpec(Set("cols"), Set(),
       p => {
         val cols = p.strs("cols").map(col)
         df => df.select(cols: _*)
-      }),
+      }, Streamable()),
 
     // the PARITY CORE as a pipeline step: ordered [path, function]
     // pairs compile through Functioniser.fromConfig to ONE select over
@@ -239,13 +271,13 @@ object Pipeline {
       p => {
         val f = graft.Functioniser.fromConfig(p.strPairs("fields"))
         df => f(df)
-      }),
+      }, Streamable()),
 
     "split_by_hash" -> OpSpec(Set("weights", "key_cols"), Set(),
       p => {
         val (w, keys) = (p.weights("weights"), p.strs("key_cols"))
         df => Curation.splitByHash(df, w, keys)
-      }),
+      }, Streamable()),
 
     "normalize_text" -> OpSpec(Set(),
       Set("id_col", "text_col", "form", "repair_mojibake",
@@ -257,7 +289,7 @@ object Pipeline {
         val repair = p.bool("repair_mojibake", Some(true))
         val pass = p.strs("passthrough_cols", Some(Nil))
         df => Normalize.normalizeText(df, id, text, form, repair, pass)
-      }),
+      }, Streamable()),
 
     // LSH near-dup removal: pairs found + dropped in one step (the
     // q_dedup_clean composition) — the near-dup complement of
@@ -286,7 +318,7 @@ object Pipeline {
       p => {
         val (f, keys) = (p.dbl("fraction"), p.strs("key_cols"))
         df => Curation.sampleByHashThreshold(df, f, keys)
-      }),
+      }, Streamable()),
 
     // ---- the data-recipe sampling family as config: every mixing,
     // splitting, capping, and budget step a training-data recipe
@@ -326,7 +358,7 @@ object Pipeline {
         val w = parseEagerly(p.str("weight"))
         val keys = p.strs("key_cols")
         df => Curation.sampleByWeightedHash(df, w, keys)
-      }),
+      }, Streamable("weight")),
 
     "sample_weighted_top_k" -> OpSpec(
       Set("weight", "k", "key_cols"), Set(),
@@ -431,7 +463,7 @@ object Pipeline {
         val maxT = p.int("max_tokens", Some(512))
         val ov = p.int("overlap", Some(64))
         df => TextAnalysis.chunkByTokens(df, id, text, maxT, ov)
-      }),
+      }, Streamable()),
 
     "c4_clean" -> OpSpec(Set(),
       Set("id_col", "text_col", "min_words_per_line", "min_sentences",
@@ -443,14 +475,14 @@ object Pipeline {
         val ms = p.int("min_sentences", Some(3))
         val pass = p.strs("passthrough_cols", Some(Nil))
         df => TextAnalysis.c4Clean(df, id, text, mw, ms, pass)
-      }),
+      }, Streamable()),
 
     "scrub_pii" -> OpSpec(Set(), Set("text_col", "out_col"),
       p => {
         val text = p.str("text_col", Some("text"))
         val out = p.str("out_col", Some("text"))
         df => df.withColumn(out, TextAnalysis.scrubPii(col(text)))
-      }),
+      }, Streamable()),
 
     // event-analytics steps: the frame in flight is the event log
     "windowed_stats" -> OpSpec(Set(), Set("ts_col", "window_length"),
@@ -473,7 +505,7 @@ object Pipeline {
         val ts = p.str("ts_col", Some("ts"))
         val win = p.str("window_length", Some("1 hour"))
         df => graft.streaming.StreamOps.windowedStats(df, ts, win, wm)
-      }),
+      }, BatchSensitive()),
 
     "sessionize" -> OpSpec(Set("gap_seconds"),
       Set("user_col", "ts_col", "id_col"),
@@ -514,7 +546,10 @@ object Pipeline {
     // exactly one of `on` (same-name using-columns) or `condition`
     // (SQL over the aliased sides — the frame in flight is `l`, the
     // loaded table `r`); broadcast=true pins the hint the way a
-    // dimension join at 100 TB wants it
+    // dimension join at 100 TB wants it. Streams as a stream-STATIC
+    // join: the loaded side is a batch table re-read per micro-batch
+    // (inner / left_outer per Spark's own support matrix — unsupported
+    // shapes fail at stream start with Spark's error)
     "join_table" -> OpSpec(Set("path"),
       Set("on", "condition", "how", "broadcast"),
       p => {
@@ -537,7 +572,7 @@ object Pipeline {
             case None => df.join(right, onCols, how)
           }
         }
-      }),
+      }, Streamable("condition")),
 
     "union_table" -> OpSpec(Set("path"),
       Set("by_name", "allow_missing_columns", "right_filter",
@@ -661,7 +696,8 @@ object Pipeline {
     // skew-salted equi-join: the frame in flight (big side) gets a
     // content-derived salt, the loaded (small) side replicates
     // salt_factor times, so one hot key splits across salt_factor
-    // reducers; result equals the plain join row-for-row
+    // reducers; result equals the plain join row-for-row. Streams as
+    // a stream-static join, like join_table
     "salted_join" -> OpSpec(Set("path", "on", "salt_factor"),
       Set("right_filter", "right_renames"),
       p => {
@@ -672,13 +708,15 @@ object Pipeline {
         val ren = p.strPairs("right_renames", Some(Nil))
         df => Skew.saltedJoin(df, loadSide(df, path, filt, ren),
           keys, factor)
-      }),
+      }, Streamable()),
 
     // bloom-reduced equi-join: the loaded (dimension) side is
     // sketched into a bloom filter and the frame in flight (fact
     // side) is might_contain-filtered BEFORE its shuffle — exact for
     // inner/left_semi (no false negatives), false positives only
-    // cost shuffle rows
+    // cost shuffle rows. Streams: the sketch builds ONCE at
+    // chain-compile time from the static side, and its might_contain
+    // pre-filter is a stateless row gate ahead of a stream-static join
     "bloom_join" -> OpSpec(Set("path", "fact_key", "dim_key"),
       Set("fpp", "how", "right_filter", "right_renames"),
       p => {
@@ -690,7 +728,7 @@ object Pipeline {
         val ren = p.strPairs("right_renames", Some(Nil))
         df => Joins.bloomReducedJoin(df,
           loadSide(df, path, filt, ren), fk, dk, fpp, how)
-      }),
+      }, Streamable()),
 
     // the diagnostic to run BEFORE a big join: top keys, shares, and
     // the max/mean ratio that floors a salted_join factor
@@ -837,21 +875,21 @@ object Pipeline {
         val o = p.str("out_col", Some("lang_id"))
         df => df.withColumn(o,
           TextAnalysis.langIdHeuristic(col(t)))
-      }),
+      }, Streamable()),
 
     "quality_score" -> OpSpec(Set(), Set("text_col", "out_col"),
       p => {
         val t = p.str("text_col", Some("text"))
         val o = p.str("out_col", Some("quality"))
         df => df.withColumn(o, TextAnalysis.qualityScore(col(t)))
-      }),
+      }, Streamable()),
 
     "fingerprint" -> OpSpec(Set(), Set("text_col", "out_col"),
       p => {
         val t = p.str("text_col", Some("text"))
         val o = p.str("out_col", Some("fingerprint"))
         df => df.withColumn(o, TextAnalysis.fingerprint(col(t)))
-      }),
+      }, Streamable()),
 
     // corpus-level keyword extraction (one count + one topK window)
     "keywords_tfidf" -> OpSpec(Set(),
@@ -1222,7 +1260,7 @@ object Pipeline {
           if (p.has("base_url_col")) Some(p.str("base_url_col"))
           else None
         df => HtmlExtract.extractLinks(df, id, html, base)
-      }),
+      }, Streamable()),
 
     "host_graph" -> OpSpec(Set("src_col", "dst_url_col"),
       Set("page_id_col", "src_is_url", "to_domain", "psl_path"),
@@ -1330,7 +1368,7 @@ object Pipeline {
     // expect_columns checks the in-flight SCHEMA the moment the frame
     // reaches the step (before any job); expect_condition rides
     // in-plan as a row-level assert, so a violating row fails the
-    // job LOUDLY instead of flowing downstream ----
+    // job LOUDLY instead of flowing downstream; both stream-safe ----
 
     // schema contract: the DDL parses (and thereby validates) at
     // config-compile time; the check itself runs when the frame
@@ -1369,7 +1407,7 @@ object Pipeline {
               .mkString("; "))
           df
         }
-      }),
+      }, Streamable()),
 
     // schema CONFORMANCE — the contract's repairing sibling: reshape
     // the frame TO the DDL. Missing columns materialize as typed
@@ -1407,7 +1445,7 @@ object Pipeline {
             else Nil
           df.select(declared ++ extras: _*)
         }
-      }),
+      }, Streamable()),
 
     // sink layout control: hash-repartition by count and/or columns
     // (one shuffle, the write-parallelism / co-location knob), or
@@ -1514,7 +1552,7 @@ object Pipeline {
             df.filter(!ok).write.mode("overwrite").parquet(dir)
             df.filter(ok)
         }
-      }),
+      }, Streamable("condition")),
 
     // ---- statistical tests / model-quality / key-health steps:
     // the rest of the Stats surface as config (one in-flight frame
@@ -1860,7 +1898,7 @@ object Pipeline {
         val gcols = p.strs("group_cols", Some(Nil))
         df => graft.streaming.StreamOps.windowedQuantilesStream(
           df, v, qs, ts, win, wm, eps, gcols)
-      }),
+      }, BatchSensitive()),
 
     // per-window trending tokens (Misra-Gries state, append-mode on
     // window close). Input frame needs (doc_id, text, ts) — the
@@ -1886,7 +1924,7 @@ object Pipeline {
               .as[graft.streaming.StreamOps.StreamDoc],
             winS, cap, topK).toDF()
         }
-      }),
+      }, BatchSensitive()),
 
     // live host-graph edges per closed window (the host_graph
     // companion for streams; approx distinct pages — exact
@@ -1903,7 +1941,7 @@ object Pipeline {
         val isUrl = p.bool("src_is_url", Some(true))
         df => graft.streaming.StreamOps.hostGraphWindowedStream(
           df, src, dst, page, ts, win, wm, isUrl)
-      }),
+      }, BatchSensitive()),
 
     // stateful gap-sessionization for streams: the
     // flatMapGroupsWithState operator behind the config surface —
@@ -1932,7 +1970,7 @@ object Pipeline {
               .as[graft.streaming.StreamOps.SessionEvent],
             gap, idle).toDF()
         }
-      }),
+      }, BatchSensitive()),
 
     // streaming dedup by key: Spark's dropDuplicatesWithinWatermark
     // (state = one stored row per live key, evicted when the
@@ -1949,7 +1987,7 @@ object Pipeline {
             df.withWatermark(tsCol, wm)
               .dropDuplicatesWithinWatermark(keys)
           else df.dropDuplicates(keys)
-      }),
+      }, BatchSensitive()),
 
     // the SPLITTING form of streaming dedup: every row rides through
     // with a deterministic first-seen boolean (arrival order,
@@ -1988,7 +2026,7 @@ object Pipeline {
                 .partitionBy(keys.map(col): _*)
                 .orderBy(ords.map(col): _*)) === 1)
         }
-      }),
+      }, BatchSensitive()),
 
     // per-closed-window smoothed KL drift against a persisted
     // reference (named by path, the drift-step convention) — the
@@ -2015,7 +2053,7 @@ object Pipeline {
               .as[graft.streaming.StreamOps.DriftEvent],
             ss.read.parquet(refPath), refCat, winS, k).toDF()
         }
-      }),
+      }, BatchSensitive()),
 
     // streaming SCD2: closed validity intervals emit as the
     // watermark passes their end boundary — the live companion of
@@ -2041,7 +2079,7 @@ object Pipeline {
               .withWatermark("ts", wm)
               .as[graft.streaming.StreamOps.Scd2Event]).toDF()
         }
-      }),
+      }, BatchSensitive()),
 
     // streaming time-correlation joins: ONE stream in flight splits
     // by two compile-parsed row conditions into the left and right
@@ -2076,7 +2114,7 @@ object Pipeline {
             .as[graft.streaming.StreamOps.RightEvent]
           graft.streaming.StreamOps.asOfJoinStream(l, r, wm).toDF()
         }
-      }),
+      }, BatchSensitive("left_condition", "right_condition")),
 
     "range_join_watermarked" -> OpSpec(
       Set("left_condition", "right_condition", "lower_seconds",
@@ -2101,7 +2139,7 @@ object Pipeline {
           graft.streaming.StreamOps.rangeJoinStream(l, r,
             key, ts, lo, hi, Seq("event_id"), Seq("right_id"), wm)
         }
-      }),
+      }, BatchSensitive("left_condition", "right_condition")),
 
     // stateful streaming tranche 4: the remaining per-user
     // flatMapGroupsWithState operators behind config. All take the
@@ -2131,7 +2169,7 @@ object Pipeline {
               .as[graft.streaming.StreamOps.FunnelEvent],
             steps, win, ret).toDF()
         }
-      }),
+      }, BatchSensitive()),
 
     "gap_fill_watermarked" -> OpSpec(Set("watermark_delay"),
       Set("period_seconds", "idle_retention_seconds"),
@@ -2153,7 +2191,7 @@ object Pipeline {
               .as[graft.streaming.StreamOps.GapEvent],
             per, idle).toDF()
         }
-      }),
+      }, BatchSensitive()),
 
     "rolling_anomalies_watermarked" -> OpSpec(Set("watermark_delay"),
       Set("n_prior", "min_prior", "z_threshold",
@@ -2178,7 +2216,7 @@ object Pipeline {
               .as[graft.streaming.StreamOps.AnomEvent],
             n, m, z, idle).toDF()
         }
-      }),
+      }, BatchSensitive()),
 
     "decayed_activity_watermarked" -> OpSpec(Set("watermark_delay"),
       Set("max_events", "decay", "idle_retention_seconds"),
@@ -2201,7 +2239,7 @@ object Pipeline {
               .as[graft.streaming.StreamOps.AnomEvent],
             n, d, idle).toDF()
         }
-      }),
+      }, BatchSensitive()),
 
     "top_paths_watermarked" -> OpSpec(Set("watermark_delay"),
       Set("k", "type_col"),
@@ -2219,7 +2257,7 @@ object Pipeline {
                 col("ts"), col(tp).cast("string").as("value"))
               .as[graft.streaming.StreamOps.Scd2Event], k).toDF()
         }
-      }),
+      }, BatchSensitive()),
 
     "transition_pairs_watermarked" -> OpSpec(Set("watermark_delay"),
       Set("idle_retention_seconds", "type_col"),
@@ -2240,12 +2278,12 @@ object Pipeline {
                 col("ts"), col(tp).cast("string").as("value"))
               .as[graft.streaming.StreamOps.Scd2Event], idle).toDF()
         }
-      }),
+      }, BatchSensitive()),
 
     // ---- multimodal steps: the asset pipeline's config surface ----
 
     // wrap a payload column as the (id, content, meta) asset table —
-    // the entry point of the asset domain
+    // the entry point of the asset domain; per-row, so stream-safe
     "as_assets" -> OpSpec(Set("mime"),
       Set("id_col", "payload_col", "source_col"),
       p => {
@@ -2254,13 +2292,13 @@ object Pipeline {
         val pay = p.str("payload_col", Some("text"))
         val src = p.str("source_col", Some("source"))
         df => Multimodal.asAssets(df, id, pay, mime, src)
-      }),
+      }, Streamable()),
 
     // mime-dispatched decode + feature extraction (WAV/BMP/PNG/GIF/
     // JPEG/MJPEG-AVI real decoders, stub fallback) — per-row, so
     // stream-safe
     "decode_features" -> OpSpec(Set(), Set(),
-      _ => df => Multimodal.extractFeatures(df)),
+      _ => df => Multimodal.extractFeatures(df), Streamable()),
 
     // perceptual-hash near-dup pairs over an asset frame: decode
     // once to an 8-byte hash, then the banded chunk equi-join —
@@ -2326,7 +2364,7 @@ object Pipeline {
         val www = p.bool("strip_www", Some(true))
         val pass = p.strs("passthrough_cols", Some(Nil))
         df => UrlOps.canonicalizeUrls(df, id, url, www, pass)
-      }),
+      }, Streamable()),
 
     "split_sentences" -> OpSpec(Set(),
       Set("id_col", "text_col", "passthrough_cols"),
@@ -2335,7 +2373,7 @@ object Pipeline {
         val text = p.str("text_col", Some("text"))
         val pass = p.strs("passthrough_cols", Some(Nil))
         df => Sentences.splitSentences(df, id, text, pass)
-      }),
+      }, Streamable()),
 
     "readability_scores" -> OpSpec(Set(),
       Set("id_col", "text_col", "passthrough_cols"),
@@ -2344,7 +2382,7 @@ object Pipeline {
         val text = p.str("text_col", Some("text"))
         val pass = p.strs("passthrough_cols", Some(Nil))
         df => Sentences.readabilityScores(df, id, text, pass)
-      }),
+      }, Streamable()),
 
     "gopher_repetition_flags" -> OpSpec(Set(),
       Set("id_col", "text_col", "passthrough_cols"),
@@ -2354,7 +2392,7 @@ object Pipeline {
         val pass = p.strs("passthrough_cols", Some(Nil))
         df => TextAnalysis.gopherRepetitionFlags(df, id, text,
           passthroughCols = pass)
-      }),
+      }, Streamable()),
 
     "compression_ratio" -> OpSpec(Set(),
       Set("text_col", "out_col", "level"),
@@ -2364,7 +2402,7 @@ object Pipeline {
         val level = p.int("level", Some(6))
         df => df.withColumn(out,
           TextAnalysis.compressionRatio(col(text), level))
-      }),
+      }, Streamable()),
 
     // persisted-model inference steps: the model loads (and its kind
     // tag verifies) at CONFIG-COMPILE time — a config pointing a BPE
@@ -2379,7 +2417,7 @@ object Pipeline {
         val text = p.str("text_col", Some("text"))
         val id = p.str("id_col", Some("doc_id"))
         df => TextAnalysis.bpeTokenize(df, merges, text, id)
-      }),
+      }, Streamable()),
 
     "score_logistic_stored" -> OpSpec(Set("model_path"),
       Set("text_col", "id_col"),
@@ -2389,7 +2427,7 @@ object Pipeline {
         val text = p.str("text_col", Some("text"))
         val id = p.str("id_col", Some("doc_id"))
         df => TextClassify.scoreLogisticInline(df, weights, id, text)
-      }),
+      }, Streamable()),
 
     // prose-vs-code routing signal: appends n_lines / code_lines /
     // code_frac / is_codey to the frame (pure projection, stream-safe)
@@ -2399,7 +2437,7 @@ object Pipeline {
         val text = p.str("text_col", Some("text"))
         val thr = p.dbl("threshold", Some(0.3))
         df => TextAnalysis.codeLineStats(df, text, thr)
-      }),
+      }, Streamable()),
 
     "pieces_tokenize_stored" -> OpSpec(Set("model_path"),
       Set("text_col", "id_col"),
@@ -2410,7 +2448,7 @@ object Pipeline {
         val id = p.str("id_col", Some("doc_id"))
         df => TextAnalysis.piecesTokenize(df, id, text, vocab,
           maxPieceLen = window)
-      }),
+      }, Streamable()),
 
     "unigram_tokenize_stored" -> OpSpec(Set("model_path"),
       Set("text_col", "id_col", "unk_lp"),
@@ -2422,7 +2460,7 @@ object Pipeline {
         val unk = p.dbl("unk_lp", Some(-100.0))
         df => TextAnalysis.unigramTokenize(df, id, text, vocab,
           maxPieceLen = window, unkLp = unk)
-      }),
+      }, Streamable()),
 
     // perplexity-proxy fluency gates from persisted LMs (batch-only:
     // KN scoring aggregates per-document over the in-flight frame)
@@ -2461,17 +2499,17 @@ object Pipeline {
         df => TextAnalysis.gopherQualityFlags(df, id, text,
           minWords = minW, maxWords = maxW, minStopwords = minS,
           passthroughCols = pass)
-      }),
+      }, Streamable()),
 
     // raw WARC record rows (path, rec_id, __rec) — what the warcgz
     // file source and read_warc_gz emit — projected to the parsed
     // record shape (warc_type, target_uri, content_length, payload).
-    // Pure projection: streams unchanged (in streamableOps)
+    // Pure projection: streams unchanged
     "parse_warc_records" -> OpSpec(Set(), Set("id_col"),
       p => {
         val id = p.str("id_col", Some("path"))
         df => graft.sources.Warc.parseRecordRows(df, id)
-      }),
+      }, Streamable()),
 
     // the HTTP split + charset-chain decode over parsed records —
     // parse_warc_records's downstream half of the crawl chain.
@@ -2480,7 +2518,7 @@ object Pipeline {
       p => {
         val payload = p.str("payload_col", Some("payload"))
         df => graft.sources.Warc.httpResponses(df, payload)
-      }),
+      }, Streamable()),
 
     // jusText-class main-content extraction: html -> text lines with
     // boilerplate rules. Pure projection: streams unchanged
@@ -2495,7 +2533,7 @@ object Pipeline {
         val pass = p.strs("passthrough_cols", Some(Nil))
         df => HtmlExtract.extractText(df, id, html, minChars, mld,
           passthroughCols = pass)
-      }),
+      }, Streamable()),
 
     // persisted-ARTIFACT probe steps: the frame in flight is the
     // probe side (a query table, a new-document batch), the artifact
@@ -2909,8 +2947,7 @@ object Pipeline {
     * so no other sink is legal in a gated config. */
   def startStreamSteps(spark: org.apache.spark.sql.SparkSession,
                        steps: Seq[Step],
-                       extra: Map[String, OpSpec] = Map.empty,
-                       extraStreamable: Set[String] = Set.empty)
+                       extra: Map[String, OpSpec] = Map.empty)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val expanded = expandIncludes(steps)
     require(expanded.size >= 2,
@@ -2926,10 +2963,10 @@ object Pipeline {
           "gated streaming config: sink must be write_stream_parquet " +
             "(the unified runner owns the survivors write); got " +
             s"'${sink.op}'")
-        val run = compileGated(chain, extra, extraStreamable)
+        val run = compileGated(chain, extra)
         run(_, sp.str("path"), sp.str("checkpoint"))
       } else {
-        val f = compileStreaming(chain, extra, extraStreamable)
+        val f = compileStreaming(chain, extra)
         df => write(f(df), sp)
       }
     start(read(spark, new Params(source.op, source.params)))
@@ -2939,19 +2976,17 @@ object Pipeline {
     * query ([[startStreamSteps]]). */
   def startStreamJson(spark: org.apache.spark.sql.SparkSession,
                       json: String,
-                      extra: Map[String, OpSpec] = Map.empty,
-                      extraStreamable: Set[String] = Set.empty)
+                      extra: Map[String, OpSpec] = Map.empty)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    startStreamSteps(spark, parse(json), extra, extraStreamable)
+    startStreamSteps(spark, parse(json), extra)
 
   /** [[startStreamJson]] under the name perfbench's `stream_gate`
     * workload starts its gated job with. */
   def startStreamJsonGatedUnified(spark: org.apache.spark.sql.SparkSession,
                                   json: String,
-                                  extra: Map[String, OpSpec] = Map.empty,
-                                  extraStreamable: Set[String] = Set.empty)
+                                  extra: Map[String, OpSpec] = Map.empty)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    startStreamJson(spark, json, extra, extraStreamable)
+    startStreamJson(spark, json, extra)
 
   /** UNIFIED gated streaming: ONE StreamingQuery feeds every
     * quarantine gate AND the survivors sink from the SAME
@@ -2967,7 +3002,7 @@ object Pipeline {
     * that is the point); the first gate and EVERYTHING after it
     * re-apply per micro-batch inside one `foreachBatch`, so from the
     * first gate on only stateless row-deterministic steps are legal
-    * ([[batchSensitiveStreamingOps]] rejected by name).
+    * ([[BatchSensitive]] entries rejected by name).
     *
     * Sinks: the survivors overwrite `sinkPath/batch=<id>` first, and
     * that one job counts each gate's violations (a `Dataset.observe`
@@ -2983,11 +3018,9 @@ object Pipeline {
     * pinned set of flagged rows. */
   def startGatedUnified(src: DataFrame, steps: Seq[Step],
                         sinkPath: String, checkpoint: String,
-                        extra: Map[String, OpSpec] = Map.empty,
-                        extraStreamable: Set[String] = Set.empty)
+                        extra: Map[String, OpSpec] = Map.empty)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    compileGated(expandIncludes(steps), extra, extraStreamable)(src,
-      sinkPath, checkpoint)
+    compileGated(expandIncludes(steps), extra)(src, sinkPath, checkpoint)
 
   /** A store-failures contract gate: the step the unified runner
     * splits each micro-batch on. */
@@ -2998,19 +3031,18 @@ object Pipeline {
     * step validates here, and the returned function starts the query
     * on a source frame, survivors path and checkpoint. */
   private def compileGated(expanded: Seq[Step],
-                           extra: Map[String, OpSpec],
-                           extraStreamable: Set[String])
+                           extra: Map[String, OpSpec])
       : (DataFrame, String, String) =>
         org.apache.spark.sql.streaming.StreamingQuery = {
-    streamingValidate(expanded, streamableOps ++ extraStreamable)
+    streamingValidate(expanded, extra)
     val registry = builtinOps ++ extra
     val firstGate = expanded.indexWhere(isGate)
     require(firstGate >= 0,
       "startGatedUnified: no store-failures gate (expect_condition " +
         "with quarantine_path) in the chain — use startStreamSteps")
     val (pre, post) = expanded.splitAt(firstGate)
-    val badPost = post.filterNot(isGate).map(_.op)
-      .filter(batchSensitiveStreamingOps).distinct
+    val badPost = post.filterNot(isGate).map(_.op).distinct
+      .filter(streamingOf(extra, _).isInstanceOf[BatchSensitive])
     require(badPost.isEmpty,
       "startGatedUnified: batch-boundary-sensitive step(s) " +
         s"${badPost.sorted.mkString(", ")} after the first quarantine " +
@@ -3308,91 +3340,21 @@ object Pipeline {
               extra: Map[String, OpSpec] = Map.empty): DataFrame =
     runSteps(spark, parse(json), extra)
 
-  /** The builtin steps whose compiled bodies are STREAM-SAFE: pure
-    * per-row/per-batch transforms (projections, filters, explodes,
-    * hash gates), stored-model scorers whose artifact loads as
-    * driver literals at config-compile time, and the one STATEFUL
-    * entry that carries its own watermark in the config
-    * (windowed_stats_watermarked — bounded state, append-mode
-    * emission as windows finalize). Everything else in the registry
-    * either aggregates/joins the in-flight frame WITHOUT a watermark
-    * (drop_exact_duplicates, drop_near_duplicates) or collects from
-    * it (the index probe steps) — shapes a micro-batch stream cannot
-    * run unless the config states the event-time bound, which those
-    * steps have no parameter for. */
-  val streamableOps: Set[String] = Set(
-    "filter", "with_column", "select", "token_count",
-    "dup_ngram_fraction", "normalize_text", "c4_clean", "scrub_pii",
-    "gopher_quality_flags", "chunk_by_tokens", "sample_fraction",
-    "weighted_sample", // row-local hash filter, like sample_fraction
-    "lang_id", "quality_score", "fingerprint", // per-row projections
-    "split_by_hash", "bpe_tokenize_stored", "score_logistic_stored",
-    "pieces_tokenize_stored", "unigram_tokenize_stored",
-    "windowed_stats_watermarked", "code_line_stats",
-    "parse_warc_records", "http_responses", "extract_text",
-    "extract_links", // stateless projection + posexplode
-    "canonicalize_urls", "split_sentences", "readability_scores",
-    "gopher_repetition_flags", "compression_ratio",
-    // stateful entries that carry their own watermark in the config
-    "windowed_quantiles_watermarked", "trending_tokens_watermarked",
-    "host_graph_windowed", "sessionize_watermarked",
-    "kl_drift_watermarked", "scd2_watermarked",
-    "funnel_watermarked", "gap_fill_watermarked",
-    "rolling_anomalies_watermarked", "decayed_activity_watermarked",
-    "top_paths_watermarked", "transition_pairs_watermarked",
-    "asof_join_watermarked", "range_join_watermarked",
-    "drop_duplicates_watermarked", "first_seen_flags_watermarked",
-    // stream-STATIC enrichment: the loaded side is a batch table
-    // re-read per micro-batch by Spark's stream-static join (inner /
-    // left_outer per Spark's own support matrix — unsupported shapes
-    // fail at stream start with Spark's error); bloom_join builds its
-    // sketch ONCE at chain-compile time from the static side, and its
-    // might_contain pre-filter is a stateless row gate
-    "join_table", "bloom_join", "salted_join",
-    // the parity core: one stateless Project
-    "apply_functions",
-    // per-row multimodal plumbing
-    "as_assets", "decode_features",
-    // data contracts: a schema check and a stateless assert filter
-    "expect_columns", "expect_condition",
-    // schema conformance is a pure projection
-    "conform_schema")
-
-  /** Streamable steps whose OUTPUT depends on micro-batch boundaries
-    * or watermark progression — stateful windows/timers and
-    * arrival-order semantics. The unified gated runner
-    * ([[startGatedUnified]]) runs them once in the streaming plan, so
-    * they must PRECEDE every quarantine gate: the first gate and
-    * everything after it re-apply per materialized micro-batch, where
-    * such a step would compute per-batch rows instead of the
-    * stream's. */
-  val batchSensitiveStreamingOps: Set[String] = Set(
-    "windowed_stats_watermarked", "windowed_quantiles_watermarked",
-    "trending_tokens_watermarked", "host_graph_windowed",
-    "sessionize_watermarked", "kl_drift_watermarked",
-    "scd2_watermarked", "funnel_watermarked", "gap_fill_watermarked",
-    "rolling_anomalies_watermarked", "decayed_activity_watermarked",
-    "top_paths_watermarked", "transition_pairs_watermarked",
-    "asof_join_watermarked", "range_join_watermarked",
-    "drop_duplicates_watermarked", "first_seen_flags_watermarked")
-
   /** Compile a step list for a STREAMING DataFrame: the same
     * registry bodies as [[fromSteps]] (a config gates the stream with
     * the exact transforms its batch twin runs — parity spec-pinned on
-    * MemoryStream), but non-streamable steps are rejected EAGERLY by
-    * name, before any stream starts. `extra` entries must be
-    * explicitly declared stream-safe via `extraStreamable`. */
+    * MemoryStream), but steps whose [[OpSpec.streaming]] is
+    * [[BatchOnly]] are rejected EAGERLY by name, before any stream
+    * starts. */
   def fromStepsStreaming(steps: Seq[Step],
-                         extra: Map[String, OpSpec] = Map.empty,
-                         extraStreamable: Set[String] = Set.empty)
+                         extra: Map[String, OpSpec] = Map.empty)
       : DataFrame => DataFrame =
-    compileStreaming(expandIncludes(steps), extra, extraStreamable)
+    compileStreaming(expandIncludes(steps), extra)
 
   private def compileStreaming(expanded: Seq[Step],
-                               extra: Map[String, OpSpec],
-                               extraStreamable: Set[String])
+                               extra: Map[String, OpSpec])
       : DataFrame => DataFrame = {
-    streamingValidate(expanded, streamableOps ++ extraStreamable)
+    streamingValidate(expanded, extra)
     // quarantine mode needs a violation WRITE per micro-batch — only
     // the unified gated runner carries it; reject by PARAM here (the
     // step name itself stays stream-safe in abort mode)
@@ -3404,30 +3366,36 @@ object Pipeline {
     compileAll(builtinOps ++ extra, expanded)
   }
 
+  /** An op's streaming contract. A builtin name keeps its builtin
+    * declaration even when `extra` replaces its body (a re-registration
+    * that wraps the body, such as a tracer, declares nothing new); any
+    * other `extra` entry declares its own. */
+  private def streamingOf(extra: Map[String, OpSpec],
+                          op: String): Streaming =
+    builtinOps.get(op).orElse(extra.get(op)).fold[Streaming](BatchOnly)(
+      _.streaming)
+
   /** Whitelist + determinism checks shared by the streaming
     * compiles. */
   private def streamingValidate(expanded: Seq[Step],
-                                ok: Set[String]): Unit = {
-    val bad = expanded.map(_.op).filterNot(ok.contains).distinct
+                                extra: Map[String, OpSpec]): Unit = {
+    val bad = expanded.map(_.op).distinct
+      .filter(streamingOf(extra, _) == BatchOnly)
     require(bad.isEmpty,
       s"steps not streamable: ${bad.sorted.mkString(", ")}; " +
-        "streamable steps: " + ok.toSeq.sorted.mkString(", "))
+        "streamable steps: " + (builtinOps ++ extra).keys
+          .filter(streamingOf(extra, _) != BatchOnly).toSeq.sorted
+          .mkString(", "))
     expanded.foreach { s =>
-      val exprParam = s.op match {
-        case "filter" => Some("condition")
-        case "with_column" => Some("expr")
-        case "weighted_sample" => Some("weight")
-        case _ => None
-      }
-      exprParam.foreach(k => s.params.get(k).foreach {
+      streamingOf(extra, s.op).sql.foreach(k => s.params.get(k).foreach {
         case sql: String => requireDeterministic(s.op, sql)
         case _ => () // non-string value: fromSteps rejects it loudly
       })
     }
   }
 
-  /** Streaming-config guard: reject non-deterministic SQL in
-    * `filter`/`with_column` steps EAGERLY, before any stream starts.
+  /** Streaming-config guard: reject non-deterministic SQL in a step's
+    * declared SQL params EAGERLY, before any stream starts.
     * Under micro-batch retries a `rand()`/`uuid()` projection emits
     * DIFFERENT rows on the retry attempt, so an append sink can
     * record divergent output — breaking the batch==stream parity the
@@ -3459,10 +3427,9 @@ object Pipeline {
   /** Config text ([[parse]]) → compiled STREAMING pipeline
     * ([[fromStepsStreaming]]). */
   def fromJsonStreaming(json: String,
-                        extra: Map[String, OpSpec] = Map.empty,
-                        extraStreamable: Set[String] = Set.empty)
+                        extra: Map[String, OpSpec] = Map.empty)
       : DataFrame => DataFrame =
-    fromStepsStreaming(parse(json), extra, extraStreamable)
+    fromStepsStreaming(parse(json), extra)
 
   /** Compile a step list against the registry (builtins plus `extra`;
     * extra entries override builtin names — the `register_function`

@@ -96,10 +96,10 @@ object Robots {
 
   /** The [[sitemapDirectives]] line scan WITHOUT the dedup exchange —
     * one (host, sitemap_url) row per directive LINE. This is the
-    * shared stateless core: the batch form adds `.distinct()`, the
-    * streaming form ([[graft.streaming.StreamOps.sitemapDirectivesStream]])
-    * cannot (unbounded dedup needs state) and uses this directly, so
-    * the parse grammar can never diverge between the two. */
+    * shared stateless core: the batch form adds `.distinct()`, a
+    * stream cannot (unbounded dedup needs state) and runs this
+    * directly, so the parse grammar can never diverge between the
+    * two. */
   def sitemapDirectivesRaw(robots: DataFrame, hostCol: String = "host",
                            bodyCol: String = "body"): DataFrame =
     robots.select(col(hostCol).as("host"),

@@ -355,8 +355,7 @@ object Stats {
   /** Fit the [[madOutliers]] thresholds on a reference frame: (median,
     * scaled MAD), both round-6 driver scalars. Split out so a fit can
     * gate a DIFFERENT frame — most usefully an unbounded stream, where
-    * the gate below is a stateless projection
-    * ([[graft.streaming.StreamOps.madGateStream]]). */
+    * [[madGate]] runs unchanged as a stateless projection. */
   def fitMad(df: DataFrame, valueCol: String): (Double, Double) = {
     def r6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble

@@ -351,8 +351,7 @@ object TextClassify {
     * compiled higher-order fold — tokenize, bucket, distinct, then
     * left-fold the bias + bucket weights as exact decimals within the
     * row. No join, no aggregation, no state: the form that runs
-    * UNCHANGED on an unbounded stream in append mode
-    * ([[graft.streaming.StreamOps.scoreLogisticStream]]).
+    * UNCHANGED on an unbounded stream in append mode.
     *
     * Decimal addition is exact and associative, so the per-row fold
     * equals the batch groupBy sum bit-for-bit (parity spec). */

@@ -413,8 +413,8 @@ object TextSearch {
     * queries): per-row work is O(words × Σ phrase lengths) and the scan
     * never shuffles. Use [[phraseSearch]] when the query set is itself
     * a big DataFrame. Being stateless, this form runs UNCHANGED on an
-    * unbounded stream in append mode —
-    * [[graft.streaming.StreamOps.phraseSearchStream]]. */
+    * unbounded stream in append mode (pass `passthroughCols` to keep
+    * event time for downstream windowing). */
   def phraseSearchInline(docs: DataFrame, phrases: Seq[(Int, String)],
                          idCol: String = "doc_id",
                          textCol: String = "text",

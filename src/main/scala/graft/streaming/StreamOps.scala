@@ -12,8 +12,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * The parity core (`graft.Functioniser`) is a stateless narrow projection
   * and therefore works on streaming DataFrames unchanged — see
-  * `StreamingSpec`. The operators here are the stateful ones that need
-  * watermarks.
+  * `StreamingSpec`. So is every other stateless batch operator: it
+  * needs no form here, and the config registry streams it under its
+  * batch name (`Pipeline.OpSpec.streaming`). The operators here are the
+  * stateful ones that need watermarks, and the streaming sinks.
   *
   * Scale notes: all state is keyed, and everything EVENT-sized is
   * bounded by the watermark horizon. The one exception is
@@ -91,16 +93,6 @@ object StreamOps {
       .select(col("w.start").as("window_start"), col("src_host"),
         col("dst_host"), col("n_links"), col("n_pages_approx"))
   }
-
-  /** Streaming exact dedup: first event per key wins (a replayed event
-    * with a different timestamp is still a duplicate); state expires with
-    * the watermark so memory is bounded by the dedup horizon. */
-  def dedupByKey(events: DataFrame, keyCols: Seq[String],
-                 tsCol: String = "ts",
-                 watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(keyCols)
 
   /** Input/output/state rows for streaming MinHash dedup. */
   case class StreamDoc(doc_id: Long, text: String, ts: Timestamp)
@@ -314,198 +306,6 @@ object StreamOps {
       .select(col("doc_id"), col("n_shared"))
   }
 
-  /** Streaming Gopher quality gate — the Structured Streaming form of
-    * `TextAnalysis.gopherQualityFlags`: each arriving document is
-    * measured against the Rae 2021 Appendix-A rules and emitted with
-    * the per-rule measurements and combined `keep` flag, plus the event
-    * time for downstream windowing.
-    *
-    * Shape: the batch operator is a pure codegen'd projection (zero
-    * shuffle, zero state), so the streaming form is IDENTICAL code
-    * applied to the micro-batch — stateless, append-mode, no watermark
-    * required; rows flow at scan speed. This is the 100 TB ingest
-    * pattern: gate text quality inline on arrival, before any stateful
-    * dedup spends shuffle capacity on junk. */
-  def gopherGateStream(docs: Dataset[StreamDoc],
-                       minWords: Int = 50, maxWords: Int = 100000,
-                       minMeanWordLen: Double = 3.0,
-                       maxMeanWordLen: Double = 10.0,
-                       maxSymbolRatio: Double = 0.1,
-                       maxBulletFrac: Double = 0.9,
-                       maxEllipsisFrac: Double = 0.3,
-                       minAlphaFrac: Double = 0.8,
-                       minStopwords: Int = 2): DataFrame = {
-    graft.operators.TextAnalysis.gopherQualityFlags(
-      docs.toDF(), "doc_id", "text", minWords, maxWords, minMeanWordLen,
-      maxMeanWordLen, maxSymbolRatio, maxBulletFrac, maxEllipsisFrac,
-      minAlphaFrac, minStopwords,
-      // ts passes through the projection — re-joining it here would be
-      // a stateful stream-stream self-join for a stateless gate
-      passthroughCols = Seq("ts"))
-  }
-
-  /** Streaming Gopher repetition gate — the Structured Streaming form
-    * of `TextAnalysis.gopherRepetitionFlags` (Rae 2021 App. A
-    * repetition rules: duplicate line/paragraph fractions, top/dup
-    * n-gram character fractions). Like [[gopherGateStream]] the batch
-    * operator is a stateless per-row projection (native one-pass
-    * expressions, zero shuffle), so the streaming form is IDENTICAL
-    * code on the micro-batch — append-mode, no watermark; the two
-    * gates compose into the full Gopher filter on the ingest path. */
-  def repetitionGateStream(docs: Dataset[StreamDoc]): DataFrame =
-    graft.operators.TextAnalysis.gopherRepetitionFlags(
-      docs.toDF(), "doc_id", "text", passthroughCols = Seq("ts"))
-
-  /** Streaming ensemble quality blend — the Structured Streaming form
-    * of `TextAnalysis.blendQuality`: normalization bounds are fit ONCE
-    * on a reference corpus (`TextAnalysis.fitQualityStats`, six
-    * doubles) and ride as plan literals, so each micro-batch scores as
-    * a stateless constant-folded projection — append-mode, no
-    * watermark, zero shuffle. Re-fitting the bounds means restarting
-    * the query: a normalization must not drift mid-stream. */
-  def blendQualityStream(docs: Dataset[StreamDoc],
-                         stats: graft.operators.TextAnalysis.QualityStats,
-                         cutoff: Double = 0.5): DataFrame =
-    graft.operators.TextAnalysis.blendQuality(
-      docs.toDF(), stats, "doc_id", "text", cutoff = cutoff,
-      passthroughCols = Seq("ts"))
-
-  /** Streaming subword tokenization against a trained piece inventory
-    * — the ingest-side of the WordPiece family: the inventory (a
-    * [[graft.operators.TextAnalysis.trainPieces]] result, bounded topN
-    * rows) collects once at stream START and rides inside the compiled
-    * `GreedyPieces` expression, so each micro-batch tokenizes at scan
-    * speed with zero shuffle, zero state, no watermark — append-mode.
-    * Retraining the inventory means restarting the query, which is the
-    * correct semantics: a tokenizer must not drift mid-corpus. */
-  def piecesTokenizeStream(docs: Dataset[StreamDoc], vocab: DataFrame,
-                           maxPieceLen: Int = 8): DataFrame =
-    graft.operators.TextAnalysis.piecesTokenize(
-      docs.toDF(), "doc_id", "text", vocab, maxPieceLen)
-
-  /** Streaming BPE tokenization from a PERSISTED model
-    * ([[graft.operators.ModelStore.writeBpeModel]]): the merge table
-    * loads once at stream start (kind/row-count verified eagerly,
-    * before the query runs) and rides as literals inside compiled
-    * greedy folds — each micro-batch tokenizes at scan speed with
-    * zero shuffle, zero state, append-mode. This is the
-    * trained-Monday-gates-Tuesday shape: the stream restarts against
-    * the same store and produces the same subwords, no retraining.
-    * Retraining means writing a NEW store and restarting the query
-    * (the piecesTokenizeStream no-drift contract). */
-  def bpeTokenizeStream(docs: Dataset[StreamDoc],
-                        modelPath: String): DataFrame =
-    graft.operators.TextAnalysis.bpeTokenize(docs.toDF(),
-      graft.operators.ModelStore.bpeFromModel(
-        docs.sparkSession, modelPath),
-      "text", "doc_id")
-
-  /** Streaming WordPiece tokenization from a persisted pieces store —
-    * [[bpeTokenizeStream]]'s greedy-longest-match sibling: inventory
-    * + maxPieceLen load and kind-verify at stream start, then each
-    * micro-batch tokenizes as a zero-state scan-speed projection. */
-  def piecesTokenizeStoredStream(docs: Dataset[StreamDoc],
-                                 modelPath: String): DataFrame =
-    graft.operators.ModelStore.piecesTokenizeFromModel(
-      docs.toDF(), modelPath)
-
-  /** Streaming quality-classifier scoring from a persisted weight
-    * store — [[scoreLogisticStream]] with the weights loaded (and
-    * kind-verified) from [[graft.operators.ModelStore]] at stream
-    * start instead of passed in-session: the classifier trained
-    * Monday gates Tuesday's stream with no retraining. Stateless
-    * compiled-literal projection, append-mode. */
-  def scoreLogisticStoredStream(docs: Dataset[StreamDoc],
-                                modelPath: String): DataFrame =
-    graft.operators.TextClassify.scoreLogisticInline(
-      docs.toDF(),
-      graft.operators.ModelStore.logisticFromModel(
-        docs.sparkSession, modelPath),
-      "doc_id", "text", passthroughCols = Seq("ts"))
-
-  /** Streaming order-n Kneser-Ney fluency scoring from a PERSISTED
-    * n-gram stack ([[graft.operators.ModelStore.writeNgramModel]]):
-    * the model loads (kind/row-count verified) at stream start; each
-    * micro-batch's grams stream-static LEFT-join the model-sized
-    * statistic tables and the per-document mean log-prob aggregates
-    * in update/complete mode. State is one row per document ever
-    * seen (the streaming-exact-dedup posture — bound it upstream by
-    * batching or key TTL if the doc-id space is unbounded). The
-    * model must not drift mid-stream: retraining = new store +
-    * query restart (the piecesTokenizeStream contract). */
-  def knScoreStream(docs: Dataset[StreamDoc], modelPath: String,
-                    order: Int = 3): DataFrame =
-    graft.operators.LanguageModel.scoreByKneserNeyN(docs.toDF(),
-      graft.operators.ModelStore.ngramsFromModel(
-        docs.sparkSession, modelPath),
-      "doc_id", "text", order)
-
-  /** Streaming quality-classifier scoring — the inference side of
-    * `TextClassify.trainLogisticHashed`: the trained weight frame
-    * (dim+1 bounded rows) collects once at stream start and rides
-    * inside a compiled decimal fold, so each micro-batch scores as a
-    * stateless zero-shuffle projection — append-mode, no watermark.
-    * Retraining means restarting the query (a filter model must not
-    * drift mid-corpus — the piecesTokenizeStream contract). */
-  def scoreLogisticStream(docs: Dataset[StreamDoc],
-                          weights: DataFrame): DataFrame =
-    graft.operators.TextClassify.scoreLogisticInline(
-      docs.toDF(), weights, "doc_id", "text",
-      passthroughCols = Seq("ts"))
-
-  /** Streaming MAD outlier gate: thresholds are fit ONCE on a
-    * reference frame (`Stats.fitMad`, two round-6 scalars) and ride as
-    * plan literals — each micro-batch gates as a stateless projection,
-    * append-mode, zero state (the blendQualityStream pattern applied
-    * to robust value cleaning). */
-  def madGateStream(rows: DataFrame, valueCol: String, median: Double,
-                    scaledMad: Double, k: Double = 3.5): DataFrame =
-    graft.operators.Stats.madGate(rows, valueCol, median, scaledMad, k)
-
-  /** Streaming perceptual-image dedup: each arriving image asset
-    * (id, content, meta.mime — the multimodal asset schema) is decoded
-    * once, pHashed, and probed against a static corpus-hash frame (a
-    * persisted [[graft.operators.Multimodal.perceptualHashes]] result);
-    * matches within `hammingMax` emit (id, corpus_id, hamming).
-    *
-    * Shape: decode is the codec-boundary `mapPartitions` on the
-    * micro-batch; the probe is a stream-static equi-join on the
-    * pigeonhole chunk keys; candidate dedup is the first-agreeing-chunk
-    * EXPRESSION rather than `distinct()`, so the whole pipeline is
-    * stateless — append-mode, no watermark, per-batch cost flat in the
-    * stored corpus. This is the image ingest mirror of
-    * [[dedupAgainstStoreStream]]. */
-  def phashDedupStream(assets: DataFrame, corpusHashes: DataFrame,
-                       hammingMax: Int = 3, chunks: Int = 4): DataFrame =
-    graft.operators.Multimodal.phashNearDupPairsAgainst(
-      graft.operators.Multimodal.perceptualHashes(assets),
-      corpusHashes, hammingMax, chunks)
-
-  /** Streaming C4 line-level cleaning — the Structured Streaming form
-    * of `TextAnalysis.c4Clean` (Raffel 2020 §2.2 heuristics:
-    * terminal-punctuation line filter, short-line drop, page gates).
-    * Stateless per-row projection like the Gopher gates — append-mode,
-    * no watermark, scan-speed on arrival. */
-  def c4CleanStream(docs: Dataset[StreamDoc],
-                    minWordsPerLine: Int = 5,
-                    minSentences: Int = 3): DataFrame =
-    graft.operators.TextAnalysis.c4Clean(
-      docs.toDF(), "doc_id", "text", minWordsPerLine, minSentences,
-      passthroughCols = Seq("ts"))
-
-  /** Streaming Unicode normalization / mojibake repair — the
-    * Structured Streaming form of `Normalize.normalizeText` (ftfy/NFKC
-    * class fixes), the very first hop of a crawl ingest stream:
-    * encoding noise is cheapest to kill before any stateful operator
-    * sees (and keys state by) the noisy bytes. Stateless per-row
-    * projection — append-mode, no watermark, scan-speed on arrival. */
-  def normalizeTextStream(docs: Dataset[StreamDoc],
-                          form: String = "NFKC",
-                          repairMojibake: Boolean = true): DataFrame =
-    graft.operators.Normalize.normalizeText(
-      docs.toDF(), "doc_id", "text", form, repairMojibake,
-      passthroughCols = Seq("ts"))
-
   /** Streaming robots gate — the Structured Streaming form of
     * `Robots.robotsGate`: each arriving frontier record checks against
     * the parsed rule table. The batch operator's per-key decision
@@ -541,84 +341,6 @@ object StreamOps {
         coalesce(winner.getField("_2"), lit(true)))
       .withColumn("rule_prefix", winner.getField("_3"))
   }
-
-  /** Streaming URL canonicalization — the Structured Streaming form
-    * of `UrlOps.canonicalizeUrls`, the frontier/ingest hop that keys
-    * URL-level dedup: canonical key + host + approximate eTLD+1 per
-    * arriving record. Stateless per-row projection — append-mode, no
-    * watermark; takes a DataFrame (any upstream schema with an id and
-    * a url column) like the other stream-static/stateless ops. */
-  def canonicalizeUrlsStream(records: DataFrame,
-                             idCol: String = "doc_id",
-                             urlCol: String = "url",
-                             stripWww: Boolean = true,
-                             passthroughCols: Seq[String] = Seq("ts"))
-      : DataFrame =
-    graft.operators.UrlOps.canonicalizeUrls(
-      records, idCol, urlCol, stripWww, passthroughCols)
-
-  /** Streaming HTML → main-content extraction — the Structured
-    * Streaming form of `HtmlExtract.extractText` (jusText-class markup
-    * stripping + line-level boilerplate rules), the ingest-time entry
-    * point for raw crawl pages: the `text` field carries the HTML.
-    * Stateless per-row projection like the C4/Gopher gates —
-    * append-mode, no watermark, scan-speed on arrival; feeds
-    * [[c4CleanStream]] downstream exactly as in batch. */
-  def extractTextStream(docs: Dataset[StreamDoc],
-                        minChars: Int = 25,
-                        maxLinkDensity: Double = 0.33,
-                        minStopFrac: Double = 0.0): DataFrame =
-    graft.operators.HtmlExtract.extractText(
-      docs.toDF(), "doc_id", "text", minChars, maxLinkDensity,
-      minStopFrac, passthroughCols = Seq("ts"))
-
-  /** Streaming sentence segmentation — the Structured Streaming form
-    * of `Sentences.splitSentences`: each arriving doc fans out to its
-    * per-sentence rows (the unit for passage dedup / retrieval /
-    * packing downstream). Stateless projection + one Generate —
-    * append-mode, no watermark, scan-speed on arrival. */
-  def splitSentencesStream(docs: Dataset[StreamDoc]): DataFrame =
-    graft.operators.Sentences.splitSentences(
-      docs.toDF(), "doc_id", "text", passthroughCols = Seq("ts"))
-
-  /** Streaming readability — `Sentences.readabilityScores` on arrival:
-    * the per-doc quality columns (words/sentences/syllables, Flesch,
-    * FK grade) join the Gopher/C4 gates as ingest-time signals.
-    * Stateless per-row projection — append-mode, no watermark. */
-  def readabilityScoresStream(docs: Dataset[StreamDoc]): DataFrame =
-    graft.operators.Sentences.readabilityScores(
-      docs.toDF(), "doc_id", "text", passthroughCols = Seq("ts"))
-
-  /** Streaming sitemap parsing — `Sitemaps.parseSitemaps` over
-    * arriving fetched sitemap bodies: each file fans out to its
-    * per-entry rows (and index files to their child-sitemap locs, fed
-    * back into the fetch frontier). Stateless projection + one
-    * Generate — append-mode, no watermark. */
-  def parseSitemapsStream(files: DataFrame, hostCol: String = "host",
-                          xmlCol: String = "xml"): DataFrame =
-    graft.operators.Sitemaps.parseSitemaps(files, hostCol, xmlCol)
-
-  /** Streaming robots `Sitemap:` discovery — the line scan of
-    * `Robots.sitemapDirectives` minus its batch-side distinct (a
-    * stream cannot dedup unboundedly without state; feed the output
-    * through URL-keyed dedup downstream if exactly-once discovery
-    * matters). Stateless explode + filter — append-mode. */
-  def sitemapDirectivesStream(robots: DataFrame,
-                              hostCol: String = "host",
-                              bodyCol: String = "body"): DataFrame =
-    graft.operators.Robots.sitemapDirectivesRaw(robots, hostCol, bodyCol)
-
-  /** Streaming rendezvous sharding — `Layout.rendezvousShards` on
-    * arriving records: the stable-store router at ingest time (each
-    * record goes to the shard that owns its key, and growing the
-    * shard count re-routes only ~1/(n+1) of traffic). Stateless
-    * O(nShards)-hash projection — append-mode, == batch assignment
-    * for the same key by construction. */
-  def rendezvousShardsStream(records: DataFrame, keyCols: Seq[String],
-                             nShards: Int,
-                             outCol: String = "shard"): DataFrame =
-    graft.sources.Layout.rendezvousShards(records, keyCols, nShards,
-      outCol)
 
   /** Typed event shape for [[seasonalAnomaliesStream]] inputs. */
   case class MetricEvent(event_id: Long, ts: java.sql.Timestamp,
@@ -674,83 +396,6 @@ object StreamOps {
             lit(k) * col("__cell._3")).as("is_anomaly"))
   }
 
-  /** Streaming WARC parsing — `Warc.parseWarc` over arriving crawl
-    * blobs: the ingest entry point that turns fetched WARC batches
-    * into per-record rows (native length-driven walk, malformed tails
-    * drop). Stateless projection + one Generate — append-mode, no
-    * watermark; feeds [[extractTextStream]] downstream as in batch. */
-  def parseWarcStream(records: DataFrame, idCol: String = "doc_id",
-                      blobCol: String = "blob"): DataFrame =
-    graft.sources.Warc.parseWarc(records, idCol, blobCol)
-
-  /** Streaming `.warc.gz` ingest — `Warc.parseWarcGz` then
-    * `Warc.httpResponses` over arriving compressed crawl batches: the
-    * REAL CommonCrawl entry point as a stream (per-record gzip
-    * members, byte-level record walk, HTTP split, charset-chain body
-    * decode). Stateless projections + one Generate — append-mode, no
-    * watermark; `body` feeds [[extractTextStream]] exactly as in
-    * batch. */
-  def parseWarcGzStream(records: DataFrame, idCol: String = "doc_id",
-                        blobCol: String = "blob"): DataFrame =
-    graft.sources.Warc.httpResponses(
-      graft.sources.Warc.parseWarcGz(records, idCol, blobCol))
-
-  /** Streaming heavy hitters — the Structured Streaming form of
-    * `TextAnalysis.heavyHitterTokens` (running top tokens per group via
-    * the Misra-Gries sketch aggregate): IDENTICAL batch code on the
-    * unbounded stream, complete-mode output. The streaming state per
-    * group is the sketch's own buffer — at most `capacity` counters
-    * regardless of vocabulary, so state stays bounded forever without a
-    * watermark: the streaming "trending terms" pattern, with the same
-    * exactness guarantee as batch when `capacity` covers the
-    * vocabulary. */
-  def heavyHitterTokensStream(docs: DataFrame, textCol: String = "text",
-                              groupCols: Seq[String] = Nil,
-                              capacity: Int = 4096,
-                              topN: Int = 20): DataFrame =
-    graft.operators.TextAnalysis.heavyHitterTokens(
-      docs, textCol, groupCols, capacity, topN)
-
-  /** Streaming distinct-token estimation — the Structured Streaming form
-    * of `TextAnalysis.approxDistinctTokens` (running vocabulary size per
-    * group via the KMV sketch aggregate): identical batch code on the
-    * unbounded stream, complete-mode output. Per-group state is the
-    * sketch's own buffer — at most `k` 8-byte hashes regardless of
-    * vocabulary, bounded forever without a watermark; and because the
-    * KMV estimate depends only on the hashed-token SET, the running
-    * answer after any prefix equals the batch answer on that prefix. */
-  def approxDistinctTokensStream(docs: DataFrame, textCol: String = "text",
-                                 groupCols: Seq[String] = Nil,
-                                 k: Int = 1024): DataFrame =
-    graft.operators.TextAnalysis.approxDistinctTokens(
-      docs, textCol, groupCols, k)
-
-  /** Streaming distribution statistics — the Structured Streaming form
-    * of `Stats.quantileStats` (running per-group quantiles via the
-    * mergeable GK sketch aggregate): identical batch code on the
-    * unbounded stream, complete-mode output. Per-group state is the
-    * sketch's own summary — O((1/ε)·log(εn)) tuples for ε > 0, bounded
-    * without a watermark; at ε = 0 the summary is the exact sorted
-    * multiset (a pure function of the values seen), so the running
-    * answer after any prefix equals the batch answer on that prefix —
-    * the chunking-proof regime the parity spec pins. */
-  def quantileStatsStream(docs: DataFrame, valueCol: String,
-                          qs: Seq[Double], eps: Double = 0.0,
-                          groupCols: Seq[String] = Nil): DataFrame =
-    graft.operators.Stats.quantileStats(docs, valueCol, qs, eps, groupCols)
-
-  /** Running equal-width histogram — the Structured Streaming form of
-    * `Stats.histogram` (the live distribution monitor that feeds the
-    * same bins PSI/KS drift read offline): identical batch code on the
-    * unbounded stream, complete/update-mode output. State is one count
-    * per OBSERVED bin — bounded by value range / binWidth, no
-    * watermark needed; the running answer after any prefix equals the
-    * batch answer on that prefix (counts are prefix-decomposable),
-    * which the parity spec pins. */
-  def histogramStream(rows: DataFrame, valueCol: String,
-                      binWidth: Double): DataFrame =
-    graft.operators.Stats.histogram(rows, valueCol, binWidth)
-
   /** Per-window quantiles on streams — the "hourly p99" metric: exact
     * (ε = 0) or bounded-state (ε > 0) quantiles per tumbling event-time
     * window and group, emitted APPEND-mode when the watermark closes
@@ -785,35 +430,6 @@ object StreamOps {
         element_at(qlits, col("pos") + 1).as("q"),
         col("col").as("value")): _*)
   }
-
-  /** CCNet-style perplexity/quality banding on streams — the
-    * Structured Streaming form of `Curation.bucketByQuantile`:
-    * thresholds fit ONCE on a reference corpus (batch quantiles,
-    * rounded 6) ride as literals and every arriving row is banded by
-    * a stateless append-mode projection — the live head/middle/tail
-    * router in front of a training-mix sink. Identical labels to the
-    * batch gate on the same thresholds (parity-spec'd). */
-  def quantileBucketStream(rows: DataFrame,
-                           scoreCol: String,
-                           thresholds: Seq[Double],
-                           labels: Seq[String] =
-                             Seq("tail", "middle", "head"),
-                           bucketCol: String = "bucket"): DataFrame =
-    graft.operators.Curation.bucketByThresholds(
-      rows, col(scoreCol), thresholds, labels, bucketCol)
-
-  /** Streaming phrase watch — the Structured Streaming form of
-    * `TextSearch.phraseSearchInline`: the phrase list rides as literals
-    * inside compiled higher-order functions and every arriving
-    * document's matches are computed within its own row, so the op is
-    * stateless, append-mode, watermark-free — the live content-watch /
-    * benchmark-leak alarm pattern, at scan speed. Event time passes
-    * through for downstream windowing. */
-  def phraseSearchStream(docs: DataFrame, phrases: Seq[(Int, String)],
-                         idCol: String = "doc_id",
-                         textCol: String = "text"): DataFrame =
-    graft.operators.TextSearch.phraseSearchInline(
-      docs, phrases, idCol, textCol, passthroughCols = Seq("ts"))
 
   /** Streaming ingest dedup against a persisted LSH signature store —
     * the Structured Streaming form of
@@ -1470,7 +1086,8 @@ object StreamOps {
     * tokens by frequency, in append mode, exactly once when the
     * watermark passes the window end (the klDriftStream
     * window-lifecycle machinery). The complement of
-    * [[heavyHitterTokensStream]], which tracks RUNNING totals forever:
+    * `TextAnalysis.heavyHitterTokens` run on a stream in complete mode,
+    * which tracks RUNNING totals forever:
     * running totals never surface a burst that is small against
     * history, per-window ranking exists for exactly that.
     *

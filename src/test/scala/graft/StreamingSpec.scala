@@ -28,6 +28,12 @@ case class VecRow(vec_id: Long, embedding: Seq[Float])
 class StreamingSpec extends AnyFunSuite {
   import SparkTestSession._
 
+  /** One config step compiled for a stream. */
+  private def configStream(op: String, params: (String, Any)*)
+      : org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+    graft.operators.Pipeline.fromStepsStreaming(Seq(
+      graft.operators.Pipeline.Step(op, params.toMap)))
+
   test("Functioniser applies to a streaming DataFrame unchanged") {
     val s = spark
     import s.implicits._
@@ -72,7 +78,8 @@ class StreamingSpec extends AnyFunSuite {
         r.getDouble(4), r.getDouble(5), r.getDouble(6), r.getLong(7),
         r.getBoolean(8))).toSet
     val input = MemoryStream[StreamDoc]
-    val out = StreamOps.gopherGateStream(input.toDS(), minStopwords = 1)
+    val out = configStream("gopher_quality_flags",
+      "min_stopwords" -> 1L, "passthrough_cols" -> Seq("ts"))(input.toDF())
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("gopher_stream")
       .outputMode("append").start()
@@ -224,7 +231,8 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4), r.getBoolean(5))).toSet
     val input = MemoryStream[StreamDoc]
-    val out = StreamOps.blendQualityStream(input.toDS(), stats)
+    val out = graft.operators.TextAnalysis.blendQuality(input.toDF(), stats,
+      passthroughCols = Seq("ts"))
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("blend_stream")
       .outputMode("append").start()
@@ -268,7 +276,8 @@ class StreamingSpec extends AnyFunSuite {
     val docs = docsDf.select("doc_id", "text").collect()
       .map(r => StreamDoc(r.getLong(0), r.getString(1), tsOf(r.getLong(0))))
     val input = MemoryStream[StreamDoc]
-    val out = StreamOps.scoreLogisticStream(input.toDS(), wts)
+    val out = graft.operators.TextClassify.scoreLogisticInline(
+      input.toDF(), wts, "doc_id", "text", passthroughCols = Seq("ts"))
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("logreg_stream")
       .outputMode("append").start()
@@ -291,7 +300,7 @@ class StreamingSpec extends AnyFunSuite {
     val batch = graft.operators.Stats.madGate(ref, "v", med, scaled)
       .collect().map(r => r.getDouble(0) -> r.getBoolean(2)).toMap
     val input = MemoryStream[Double]
-    val out = StreamOps.madGateStream(input.toDS().toDF("v"), "v",
+    val out = graft.operators.Stats.madGate(input.toDS().toDF("v"), "v",
       med, scaled)
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("mad_stream")
@@ -324,8 +333,8 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3),
         r.getLong(4))).toSet
     val input = MemoryStream[LangDoc]
-    val out = StreamOps.heavyHitterTokensStream(input.toDF(), "text",
-      Seq("lang"), capacity = 256, topN = 5)
+    val out = graft.operators.TextAnalysis.heavyHitterTokens(input.toDF(),
+      "text", Seq("lang"), capacity = 256, topN = 5)
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("hh_stream")
       .outputMode("complete").start()
@@ -354,7 +363,7 @@ class StreamingSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).toSet
     val input = MemoryStream[(Long, String, Long)]
-    val out = StreamOps.quantileStatsStream(
+    val out = graft.operators.Stats.quantileStats(
       input.toDF().toDF("doc_id", "lang", "n_chars"),
       "n_chars", qs, groupCols = Seq("lang"))
     assert(out.isStreaming)
@@ -431,8 +440,9 @@ class StreamingSpec extends AnyFunSuite {
         r.getAs[String]("bucket")).toMap
     val rows = docsDf.collect().map(r => (r.getLong(0), r.getLong(1)))
     val input = MemoryStream[(Long, Long)]
-    val out = StreamOps.quantileBucketStream(
-      input.toDF().toDF("doc_id", "n_chars"), "n_chars", thrs)
+    val out = graft.operators.Curation.bucketByThresholds(
+      input.toDF().toDF("doc_id", "n_chars"), col("n_chars"), thrs,
+      Seq("tail", "middle", "head"))
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("qb_stream")
       .outputMode("append").start()
@@ -454,7 +464,7 @@ class StreamingSpec extends AnyFunSuite {
       .limit(100).select("event_id", "value")
     val rows = valsDf.collect().map(r => (r.getLong(0), r.getDouble(1)))
     val input = MemoryStream[(Long, Double)]
-    val out = StreamOps.histogramStream(
+    val out = graft.operators.Stats.histogram(
       input.toDF().toDF("event_id", "value"), "value", binWidth = 5.0)
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("hist_stream")
@@ -495,7 +505,8 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
         r.getInt(3))).toSet
     val input = MemoryStream[StreamDoc]
-    val out = StreamOps.phraseSearchStream(input.toDF(), phrases)
+    val out = graft.operators.TextSearch.phraseSearchInline(input.toDF(),
+      phrases, passthroughCols = Seq("ts"))
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("phrase_stream")
       .outputMode("append").start()
@@ -529,8 +540,8 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getDouble(1), r.getInt(2),
         r.getBoolean(3))).toSet
     val input = MemoryStream[LangDoc]
-    val out = StreamOps.approxDistinctTokensStream(input.toDF(), "text",
-      Seq("lang"), k = 16)
+    val out = graft.operators.TextAnalysis.approxDistinctTokens(
+      input.toDF(), "text", Seq("lang"), k = 16)
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("kmv_stream")
       .outputMode("complete").start()
@@ -1035,7 +1046,8 @@ class StreamingSpec extends AnyFunSuite {
     import s.implicits._
     implicit val ctx = s.sqlContext
     val input = MemoryStream[Ev]
-    val out = StreamOps.dedupByKey(input.toDF(), Seq("event_id"))
+    val out = configStream("drop_duplicates_watermarked",
+      "keys" -> Seq("event_id"), "watermark_delay" -> "2 hours")(input.toDF())
     val q = out.writeStream.format("memory").queryName("dedup_stream")
       .outputMode("append").start()
     val e = Ev(1, Timestamp.valueOf("2024-01-01 00:05:00"), 7, "click", 1.0)
@@ -1436,7 +1448,8 @@ class StreamingSpec extends AnyFunSuite {
     val batch = graft.operators.TextAnalysis
       .gopherRepetitionFlags(docsDf).collect().map(asKey).toSet
     val input = MemoryStream[StreamDoc]
-    val out = StreamOps.repetitionGateStream(input.toDS())
+    val out = configStream("gopher_repetition_flags",
+      "passthrough_cols" -> Seq("ts"))(input.toDF())
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("rep_stream")
       .outputMode("append").start()
@@ -1472,7 +1485,8 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getBoolean(5))).toSet
     val input = MemoryStream[StreamDoc]
-    val out = StreamOps.c4CleanStream(input.toDS())
+    val out = configStream("c4_clean",
+      "passthrough_cols" -> Seq("ts"))(input.toDF())
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("c4_stream")
       .outputMode("append").start()
@@ -1539,8 +1553,8 @@ class StreamingSpec extends AnyFunSuite {
         s.createDataFrame(urls).toDF("doc_id", "text"), "doc_id", "text")
       .collect().map(r => (r.getLong(0), Option(r.getString(2)))).toSet
     val input = MemoryStream[StreamDoc]
-    val out = StreamOps.canonicalizeUrlsStream(input.toDF(),
-      urlCol = "text")
+    val out = configStream("canonicalize_urls",
+      "url_col" -> "text", "passthrough_cols" -> Seq("ts"))(input.toDF())
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("url_stream")
       .outputMode("append").start()
@@ -1567,7 +1581,8 @@ class StreamingSpec extends AnyFunSuite {
         s.createDataFrame(texts).toDF("doc_id", "text")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getBoolean(2))).toSet
     val input = MemoryStream[StreamDoc]
-    val out = StreamOps.normalizeTextStream(input.toDS())
+    val out = configStream("normalize_text",
+      "passthrough_cols" -> Seq("ts"))(input.toDF())
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("norm_stream")
       .outputMode("append").start()
@@ -1601,7 +1616,10 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         r.getLong(3))).toSet
     val input = MemoryStream[StreamDoc]
-    val out = StreamOps.extractTextStream(input.toDS(), minStopFrac = 0.05)
+    // extract_text exposes no min_stop_frac: the batch operator runs
+    // on the stream frame unchanged
+    val out = graft.operators.HtmlExtract.extractText(input.toDF(),
+      "doc_id", "text", minStopFrac = 0.05, passthroughCols = Seq("ts"))
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("extract_stream")
       .outputMode("append").start()
@@ -1633,7 +1651,8 @@ class StreamingSpec extends AnyFunSuite {
         s.createDataFrame(texts).toDF("doc_id", "text")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
     val input = MemoryStream[StreamDoc]
-    val out = StreamOps.splitSentencesStream(input.toDS())
+    val out = configStream("split_sentences",
+      "passthrough_cols" -> Seq("ts"))(input.toDF())
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("sent_stream")
       .outputMode("append").start()
@@ -1660,7 +1679,8 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         Option(r.get(4)), Option(r.get(5)))).toSet
     val input = MemoryStream[StreamDoc]
-    val out = StreamOps.readabilityScoresStream(input.toDS())
+    val out = configStream("readability_scores",
+      "passthrough_cols" -> Seq("ts"))(input.toDF())
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("read_stream")
       .outputMode("append").start()
@@ -1687,14 +1707,14 @@ class StreamingSpec extends AnyFunSuite {
     val warcBlob = "WARC/1.0\r\nWARC-Type: response\r\n" +
       "Content-Length: 5\r\n\r\nhello"
     val input = MemoryStream[StreamDoc]
-    val smOut = StreamOps.parseSitemapsStream(
+    val smOut = graft.operators.Sitemaps.parseSitemaps(
       input.toDF().select(col("doc_id").cast("string").as("host"),
         col("text").as("xml")))
     assert(smOut.isStreaming)
     val q1 = smOut.writeStream.format("memory").queryName("sm_stream")
       .outputMode("append").start()
     val input2 = MemoryStream[StreamDoc]
-    val warcOut = StreamOps.parseWarcStream(
+    val warcOut = graft.sources.Warc.parseWarc(
       input2.toDF().select(col("doc_id"), col("text").as("blob")))
     assert(warcOut.isStreaming)
     val q2 = warcOut.writeStream.format("memory").queryName("warc_stream")
@@ -1743,7 +1763,8 @@ class StreamingSpec extends AnyFunSuite {
       .select("doc_id", "rec_id", "http_status", "charset", "body")
       .collect().map(_.toSeq).toSet
     val input = MemoryStream[GzDoc]
-    val out = StreamOps.parseWarcGzStream(input.toDF())
+    val out = graft.sources.Warc.httpResponses(
+      graft.sources.Warc.parseWarcGz(input.toDF()))
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("warcgz_stream")
       .outputMode("append").start()
@@ -1764,14 +1785,14 @@ class StreamingSpec extends AnyFunSuite {
     val body = "User-agent: *\nSitemap: https://h/s1.xml\n" +
       "sitemap: https://h/s2.xml\nSitemap:\n"
     val input = MemoryStream[StreamDoc]
-    val smOut = StreamOps.sitemapDirectivesStream(
+    val smOut = graft.operators.Robots.sitemapDirectivesRaw(
       input.toDF().select(col("doc_id").cast("string").as("host"),
         col("text").as("body")))
     assert(smOut.isStreaming)
     val q1 = smOut.writeStream.format("memory").queryName("smd_stream")
       .outputMode("append").start()
     val input2 = MemoryStream[StreamDoc]
-    val shOut = StreamOps.rendezvousShardsStream(
+    val shOut = graft.sources.Layout.rendezvousShards(
       input2.toDF().select(col("doc_id")), Seq("doc_id"), 8)
     assert(shOut.isStreaming)
     val q2 = shOut.writeStream.format("memory").queryName("shard_stream")
@@ -1978,8 +1999,8 @@ class StreamingSpec extends AnyFunSuite {
       StreamDoc(10L, "spark park", Timestamp.valueOf("2024-01-01 00:00:01")),
       StreamDoc(11L, "sparkz", Timestamp.valueOf("2024-01-01 00:00:02")))
     val input = MemoryStream[StreamDoc]
-    val out = StreamOps.piecesTokenizeStream(input.toDS(), vocab,
-      maxPieceLen = 4)
+    val out = graft.operators.TextAnalysis.piecesTokenize(input.toDF(),
+      "doc_id", "text", vocab, maxPieceLen = 4)
     val q = out.writeStream.format("memory").queryName("pieces_stream")
       .outputMode("append").start()
     input.addData(docs: _*)
@@ -2020,7 +2041,8 @@ class StreamingSpec extends AnyFunSuite {
       StreamDoc(11L, "newest low",
         Timestamp.valueOf("2024-01-01 00:00:02")))
     val input = MemoryStream[StreamDoc]
-    val out = StreamOps.bpeTokenizeStream(input.toDS(), store)
+    val out = configStream("bpe_tokenize_stored",
+      "model_path" -> store)(input.toDF())
     val q = out.writeStream.format("memory").queryName("bpe_stream")
       .outputMode("append").start()
     input.addData(docs: _*)
@@ -2064,8 +2086,10 @@ class StreamingSpec extends AnyFunSuite {
       StreamDoc(11L, "schnelle spa",
         Timestamp.valueOf("2024-01-01 00:00:02")))
     val input = MemoryStream[StreamDoc]
-    val outP = StreamOps.piecesTokenizeStoredStream(input.toDS(), pStore)
-    val outL = StreamOps.scoreLogisticStoredStream(input.toDS(), lStore)
+    val outP = configStream("pieces_tokenize_stored",
+      "model_path" -> pStore)(input.toDF())
+    val outL = configStream("score_logistic_stored",
+      "model_path" -> lStore)(input.toDF())
     val qp = outP.writeStream.format("memory").queryName("pcs_stored")
       .outputMode("append").start()
     val ql = outL.writeStream.format("memory").queryName("lg_stored")
@@ -2107,7 +2131,12 @@ class StreamingSpec extends AnyFunSuite {
       StreamDoc(10L, "a b c d", Timestamp.valueOf("2024-01-01 00:00:01")),
       StreamDoc(11L, "q b c x", Timestamp.valueOf("2024-01-01 00:00:02")))
     val input = MemoryStream[StreamDoc]
-    val out = StreamOps.knScoreStream(input.toDS(), store, order = 3)
+    // score_kn_ngram_stored aggregates per document without a
+    // watermark, so it is batch-only in config; the batch operator
+    // runs on the stream frame in complete mode
+    val out = graft.operators.LanguageModel.scoreByKneserNeyN(input.toDF(),
+      graft.operators.ModelStore.ngramsFromModel(s, store),
+      "doc_id", "text", 3)
     val q = out.writeStream.format("memory").queryName("kn_stream")
       .outputMode("complete").start()
     input.addData(docs: _*)
@@ -2166,8 +2195,9 @@ class StreamingSpec extends AnyFunSuite {
       (105L, Multimodal.encodePng(img(55L))), // unrelated
       (106L, Array[Byte](9, 9, 9))) // corrupt: no hash, no pair
     val input = MemoryStream[(Long, Array[Byte])]
-    val out = StreamOps.phashDedupStream(
-      asAssets(input.toDF().toDF("id", "content")), corpusHashes)
+    val out = Multimodal.phashNearDupPairsAgainst(
+      Multimodal.perceptualHashes(
+        asAssets(input.toDF().toDF("id", "content"))), corpusHashes)
     val q = out.writeStream.format("memory").queryName("phash_stream")
       .outputMode("append").start()
     input.addData(batchRows(2), batchRows(0)) // out of order
@@ -2676,7 +2706,7 @@ class StreamingSpec extends AnyFunSuite {
         extra = Map("tag" -> tag))
     }
     val gated = Pipeline.fromStepsStreaming(Seq(Pipeline.Step("tag")),
-      extra = Map("tag" -> tag), extraStreamable = Set("tag"))
+      extra = Map("tag" -> tag.copy(streaming = Pipeline.Streamable())))
     assert(gated(input.toDF()).isStreaming)
   }
 
