@@ -531,9 +531,8 @@ object Events {
     * no per-event state. Output: events + (hour, n_obs, cell_mean,
     * cell_sd, is_anomaly). */
   /** The (key, hour-of-day) baseline cells: (__key, hour, n_obs,
-    * __mean, __sd) — fit once on a historical frame, score many
-    * (batch via [[seasonalScore]], streams via the collected-literal
-    * form in StreamOps). */
+    * __mean, __sd) — fit once on a historical frame, score many via
+    * [[seasonalScore]]. */
   def seasonalCells(events: DataFrame, keyCol: String = "event_type",
                     valueCol: String = "value",
                     tsCol: String = "ts"): DataFrame =

@@ -23,13 +23,12 @@ import org.apache.spark.sql.types._
   * Everything
   * around the decoders is the real Spark shape —
   * schema, partition-level batching via `mapPartitions`, metadata
-  * struct, size-aware repartition — so adding a decoder is a
-  * one-function change dispatched on `meta.mime`.
+  * struct — so adding a decoder is a one-function change dispatched
+  * on `meta.mime`.
   *
   * Scale notes: payloads stay opaque binary end-to-end (no driver
-  * collection, no string round-trip); `repartitionBySize` keeps partition
-  * byte-budgets bounded when payload sizes are skewed; extraction is a
-  * narrow mapPartitions so it pipelines with the scan.
+  * collection, no string round-trip); extraction is a narrow
+  * mapPartitions so it pipelines with the scan.
   */
 object Multimodal {
 
@@ -118,7 +117,7 @@ object Multimodal {
                                           bits: Int)
 
   /** RIFF/WAVE header walk shared by [[decodeWavPcm]] and
-    * [[spectralFeatures]]: returns None for anything that is not
+    * [[audioFingerprints]]: returns None for anything that is not
     * well-formed 8/16-bit PCM. */
   private[operators] def parseWav(content: Array[Byte]): Option[WavLayout] = {
     import java.nio.{ByteBuffer, ByteOrder}
@@ -258,7 +257,7 @@ object Multimodal {
     * arithmetic runs in Long and the raw buffer is bounds-checked
     * BEFORE allocation, so an adversarial IHDR cannot OOM or overflow.
     * [[decodePngRaw]] exposes the dense pixel buffer shared by feature
-    * extraction and [[resizePng]]. */
+    * extraction and [[perceptualHashes]]. */
   private[graft] case class PngImage(width: Int, height: Int,
                                      channels: Int, pixels: Array[Byte])
 
@@ -787,158 +786,6 @@ object Multimodal {
     Some(PngImage(width, height, 3, px))
   }
 
-  /** One composited animation frame: the FULL logical-screen canvas
-    * after this frame is drawn, plus its GCE delay in centiseconds. */
-  private[graft] case class GifFrame(canvas: PngImage, delayCs: Int)
-
-  /** REAL animated-GIF decoder — every frame, composited per GIF89a:
-    * walks all image descriptors (not just the first), honoring each
-    * frame's Graphic Control Extension — transparency index (pixels
-    * show what is already on the canvas), disposal method 2 (restore
-    * the frame rect to the background color) and 3 (restore the canvas
-    * to its pre-frame state) — and each frame's local palette and
-    * logical-screen offset. Emits the full composited canvas per frame:
-    * the correct input for frame-level feature extraction, where a
-    * delta-encoded frame must be seen over what it was drawn on.
-    *
-    * Budget: the canvas obeys the shared 256 MB decode budget and
-    * frames are capped at `maxFrames` (default 4096) so an adversarial
-    * block list cannot run away. Interlaced frames return None → the
-    * ImageIO fallback; malformed streams return None → the stub. */
-  private[graft] def decodeGifFramesRaw(
-      content: Array[Byte],
-      maxFrames: Int = 4096): Option[Seq[GifFrame]] = {
-    def u8(i: Int) = content(i) & 0xff
-    def u16(i: Int) = u8(i) | (u8(i + 1) << 8) // little-endian
-    if (content.length < 13) return None
-    val sig = new String(content, 0, 6, "US-ASCII")
-    if (sig != "GIF87a" && sig != "GIF89a") return None
-    val screenW = u16(6)
-    val screenH = u16(8)
-    val screenFlags = u8(10)
-    val bgIndex = u8(11)
-    if (screenW <= 0 || screenH <= 0) return None
-    if (screenW.toLong * screenH * 3 > (256L << 20)) return None
-    var pos = 13
-    var globalPalette: Array[Byte] = null
-    if ((screenFlags & 0x80) != 0) {
-      val size = 3 * (2 << (screenFlags & 7))
-      if (pos + size > content.length) return None
-      globalPalette = java.util.Arrays.copyOfRange(content, pos, pos + size)
-      pos += size
-    }
-    // canvas starts as the background color (or black without a palette)
-    val canvas = new Array[Byte](screenW * screenH * 3)
-    if (globalPalette != null && bgIndex * 3 + 2 < globalPalette.length) {
-      var i = 0
-      while (i < canvas.length) {
-        canvas(i) = globalPalette(bgIndex * 3 + (i % 3))
-        i += 1
-      }
-    }
-    val frames = Seq.newBuilder[GifFrame]
-    var nFrames = 0
-    // pending GCE state (applies to the NEXT image descriptor only)
-    var transparentIdx = -1
-    var disposal = 0
-    var delayCs = 0
-    while (pos < content.length && u8(pos) != 0x3b) { // trailer
-      u8(pos) match {
-        case 0x21 => // extension
-          if (pos + 2 > content.length) return None
-          val label = u8(pos + 1)
-          pos += 2
-          if (label == 0xf9) { // graphic control extension
-            if (pos + 6 > content.length) return None
-            val sz = u8(pos) // always 4
-            val flags = u8(pos + 1)
-            delayCs = u16(pos + 2)
-            transparentIdx = if ((flags & 1) != 0) u8(pos + 4) else -1
-            disposal = (flags >> 2) & 7
-            pos += 1 + sz
-          }
-          while (pos < content.length && u8(pos) != 0) {
-            pos += 1 + u8(pos)
-          }
-          if (pos >= content.length) return None
-          pos += 1 // terminator
-        case 0x2c => // image descriptor
-          if (pos + 10 > content.length) return None
-          val fx = u16(pos + 1)
-          val fy = u16(pos + 3)
-          val fw = u16(pos + 5)
-          val fh = u16(pos + 7)
-          val imgFlags = u8(pos + 9)
-          pos += 10
-          if ((imgFlags & 0x40) != 0) return None // interlaced: ImageIO
-          var palette = globalPalette
-          if ((imgFlags & 0x80) != 0) {
-            val size = 3 * (2 << (imgFlags & 7))
-            if (pos + size > content.length) return None
-            palette = java.util.Arrays.copyOfRange(content, pos, pos + size)
-            pos += size
-          }
-          if (palette == null || fw <= 0 || fh <= 0) return None
-          if (fx + fw > screenW || fy + fh > screenH) return None
-          val lzw = gifLzwDecode(content, pos, fw * fh)
-          if (lzw.isEmpty) return None
-          val (indices, newPos) = lzw.get
-          pos = newPos
-          val nColors = palette.length / 3
-          // disposal 3 needs the pre-frame canvas back afterwards
-          val saved = if (disposal == 3) canvas.clone() else null
-          var y = 0
-          while (y < fh) {
-            var x = 0
-            while (x < fw) {
-              val idx = indices(y * fw + x) & 0xff
-              if (idx != transparentIdx) {
-                if (idx >= nColors) return None
-                val o = ((fy + y) * screenW + (fx + x)) * 3
-                canvas(o) = palette(idx * 3)
-                canvas(o + 1) = palette(idx * 3 + 1)
-                canvas(o + 2) = palette(idx * 3 + 2)
-              }
-              x += 1
-            }
-            y += 1
-          }
-          frames += GifFrame(
-            PngImage(screenW, screenH, 3, canvas.clone()), delayCs)
-          nFrames += 1
-          if (nFrames >= maxFrames) return Some(frames.result())
-          disposal match {
-            case 2 => // restore the frame rect to the background color
-              val bg = new Array[Byte](3)
-              if (globalPalette != null &&
-                  bgIndex * 3 + 2 < globalPalette.length) {
-                bg(0) = globalPalette(bgIndex * 3)
-                bg(1) = globalPalette(bgIndex * 3 + 1)
-                bg(2) = globalPalette(bgIndex * 3 + 2)
-              }
-              var yy = 0
-              while (yy < fh) {
-                var xx = 0
-                while (xx < fw) {
-                  val o = ((fy + yy) * screenW + (fx + xx)) * 3
-                  canvas(o) = bg(0); canvas(o + 1) = bg(1)
-                  canvas(o + 2) = bg(2)
-                  xx += 1
-                }
-                yy += 1
-              }
-            case 3 => System.arraycopy(saved, 0, canvas, 0, canvas.length)
-            case _ => // 0/1: leave the canvas as drawn
-          }
-          // GCE state is one-shot
-          transparentIdx = -1; disposal = 0; delayCs = 0
-        case _ => return None // unknown block: malformed
-      }
-    }
-    val out = frames.result()
-    if (out.isEmpty) None else Some(out)
-  }
-
   /** Batched feature extraction over the asset table: one decoder pass per
     * partition (mapPartitions — the Scala analogue of a batched
     * mapInPandas), emitting [[FeatureSchema]] rows. Dispatches on
@@ -1168,8 +1015,7 @@ object Multimodal {
     * none). A pair joining on k agreeing chunks appears k times; the
     * `chunk === firstAgreeingChunk` filter keeps exactly one — a pure
     * expression, so candidate dedup costs NO extra shuffle (vs
-    * `distinct()`, which exchanges the whole candidate volume) and the
-    * streaming form stays stateless. */
+    * `distinct()`, which exchanges the whole candidate volume). */
   private def firstAgreeingChunk(a: Column, b: Column,
                                  chunks: Int): Column = {
     val width = 64 / chunks
@@ -1202,32 +1048,6 @@ object Multimodal {
       .filter(col("a.chunk") ===
         firstAgreeingChunk(col("a.phash"), col("b.phash"), chunks))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        bit_count(col("a.phash").bitwiseXOR(col("b.phash")))
-          .cast("long").as("hamming"))
-      .filter(col("hamming") <= hammingMax)
-  }
-
-  /** Cross-corpus variant of [[phashNearDupPairs]]: every (batch id,
-    * corpus id) pair within `hammingMax` — the incremental-ingest
-    * form (does this arriving image duplicate anything already
-    * stored?). Only the corpus side is corpus-sized; the batch side
-    * rides the same chunk equi-join, so per-batch cost is flat in the
-    * stored corpus (the signature-store property, here for images).
-    * Stateless end to end (candidate dedup is the
-    * [[firstAgreeingChunk]] expression), which is what lets the
-    * streaming form run append-mode with no watermark. Output:
-    * (id, corpus_id, hamming) — the batch perspective only. */
-  def phashNearDupPairsAgainst(batch: DataFrame, corpus: DataFrame,
-                               hammingMax: Int = 3,
-                               chunks: Int = 4): DataFrame = {
-    chunkGuards(hammingMax, chunks)
-    chunkedHashes(batch, chunks).as("a")
-      .join(chunkedHashes(corpus, chunks).as("b"),
-        col("a.chunk") === col("b.chunk") &&
-        col("a.chunk_val") === col("b.chunk_val"))
-      .filter(col("a.chunk") ===
-        firstAgreeingChunk(col("a.phash"), col("b.phash"), chunks))
-      .select(col("a.id").as("id"), col("b.id").as("corpus_id"),
         bit_count(col("a.phash").bitwiseXOR(col("b.phash")))
           .cast("long").as("hamming"))
       .filter(col("hamming") <= hammingMax)
@@ -1521,579 +1341,11 @@ object Multimodal {
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
-  /** In-place iterative radix-2 Cooley-Tukey FFT (re, im same length,
-    * a power of two). Textbook butterfly with a recurrence twiddle —
-    * O(n log n), zero allocation beyond the caller's buffers. */
-  private[operators] def fftPow2(re: Array[Double],
-                                 im: Array[Double]): Unit = {
-    val n = re.length
-    var j = 0
-    var i = 1
-    while (i < n) { // bit-reversal permutation
-      var bit = n >> 1
-      while ((j & bit) != 0) { j ^= bit; bit >>= 1 }
-      j |= bit
-      if (i < j) {
-        val tr = re(i); re(i) = re(j); re(j) = tr
-        val ti = im(i); im(i) = im(j); im(j) = ti
-      }
-      i += 1
-    }
-    var len = 2
-    while (len <= n) {
-      val ang = -2.0 * math.Pi / len
-      val wr = math.cos(ang)
-      val wi = math.sin(ang)
-      var base = 0
-      while (base < n) {
-        var cwr = 1.0
-        var cwi = 0.0
-        var k = 0
-        while (k < len / 2) {
-          val ur = re(base + k); val ui = im(base + k)
-          val vr0 = re(base + k + len / 2); val vi0 = im(base + k + len / 2)
-          val vr = vr0 * cwr - vi0 * cwi
-          val vi = vr0 * cwi + vi0 * cwr
-          re(base + k) = ur + vr; im(base + k) = ui + vi
-          re(base + k + len / 2) = ur - vr; im(base + k + len / 2) = ui - vi
-          val nwr = cwr * wr - cwi * wi
-          cwi = cwr * wi + cwi * wr
-          cwr = nwr
-          k += 1
-        }
-        base += len
-      }
-      len <<= 1
-    }
-  }
-
-  private val SpectralSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("id",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("frames",
-      org.apache.spark.sql.types.IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("dominant_hz",
-      org.apache.spark.sql.types.DoubleType, nullable = false),
-    org.apache.spark.sql.types.StructField("centroid_hz",
-      org.apache.spark.sql.types.DoubleType, nullable = false),
-    org.apache.spark.sql.types.StructField("rolloff85_hz",
-      org.apache.spark.sql.types.DoubleType, nullable = false),
-    org.apache.spark.sql.types.StructField("bandwidth_hz",
-      org.apache.spark.sql.types.DoubleType, nullable = false)))
-
-  /** FFT-based spectral features over `audio/wav` assets — the
-    * frequency-domain complement to [[decodeWavPcm]]'s time-domain
-    * vector, computed with a self-contained radix-2 FFT (no codec or DSP
-    * dependency). Channel 0 is framed into up to `maxFrames`
-    * non-overlapping Hann-windowed `fftSize` windows; the averaged
-    * periodogram (bins 1..fftSize/2−1, DC excluded) yields
-    * `dominant_hz` (peak bin, ties to the lowest), `centroid_hz`
-    * (power-weighted mean frequency), `rolloff85_hz` (85% cumulative
-    * power), and `bandwidth_hz` (power-weighted std around the
-    * centroid). Digital silence reports 0.0 across the board.
-    *
-    * Rows that aren't decodable PCM WAV, or are shorter than one frame,
-    * are OMITTED — this is a feature table over the audio slice of a
-    * mixed corpus, and a stub row would poison downstream aggregates.
-    * Same `mapPartitions` codec-boundary shape as [[extractFeatures]];
-    * the per-row work is `maxFrames` bounded, so the pass stays
-    * scan-speed at any corpus size. Spec-pinned against analytic sines
-    * (an FFT is not expressible in an external SQL oracle). */
-  def spectralFeatures(assets: DataFrame, fftSize: Int = 1024,
-                       maxFrames: Int = 16): DataFrame = {
-    require(fftSize >= 8 && (fftSize & (fftSize - 1)) == 0,
-      "fftSize must be a power of two >= 8")
-    require(maxFrames >= 1, "maxFrames must be >= 1")
-    val enc = ExpressionEncoder(SpectralSchema)
-    assets.select(col("id"), col("content"), col("meta.mime").as("mime"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          val id = r.getLong(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          if (r.getString(2) != "audio/wav") None
-          else scala.util.Try(
-            spectralRow(id, bytes, fftSize, maxFrames)).toOption.flatten
-        }
-      }(enc)
-  }
-
-  private def spectralRow(id: Long, content: Array[Byte], fftSize: Int,
-                          maxFrames: Int): Option[Row] = {
-    import java.nio.{ByteBuffer, ByteOrder}
-    val lay = parseWav(content).getOrElse(return None)
-    val bb = ByteBuffer.wrap(content).order(ByteOrder.LITTLE_ENDIAN)
-    val perChannel = lay.n / lay.channels
-    val frames = math.min(perChannel / fftSize, maxFrames)
-    if (frames == 0) return None
-    def sample(t: Int): Double = { // channel 0 of interleaved PCM
-      val idx = t * lay.channels
-      if (lay.bits == 16) bb.getShort(lay.dataOff + idx * 2).toDouble / 32768.0
-      else ((content(lay.dataOff + idx) & 0xff) - 128).toDouble / 128.0
-    }
-    val half = fftSize / 2
-    val power = new Array[Double](half)
-    val re = new Array[Double](fftSize)
-    val im = new Array[Double](fftSize)
-    var f = 0
-    while (f < frames) {
-      var t = 0
-      while (t < fftSize) {
-        val hann = 0.5 * (1.0 - math.cos(2.0 * math.Pi * t / (fftSize - 1)))
-        re(t) = sample(f * fftSize + t) * hann
-        im(t) = 0.0
-        t += 1
-      }
-      fftPow2(re, im)
-      var k = 1 // skip DC: the Hann mean offset is not signal content
-      while (k < half) {
-        power(k) += re(k) * re(k) + im(k) * im(k)
-        k += 1
-      }
-      f += 1
-    }
-    val binHz = lay.sampleRate.toDouble / fftSize
-    var total = 0.0
-    var best = 1
-    var weighted = 0.0
-    var k = 1
-    while (k < half) {
-      total += power(k)
-      weighted += k * power(k)
-      if (power(k) > power(best)) best = k // strict >: ties keep lowest
-      k += 1
-    }
-    if (total == 0.0) return Some(Row(id, frames, 0.0, 0.0, 0.0, 0.0))
-    val centroid = weighted / total * binHz
-    var cum = 0.0
-    var roll = half - 1
-    k = 1
-    var found = false
-    while (k < half && !found) {
-      cum += power(k)
-      if (cum >= 0.85 * total) { roll = k; found = true }
-      k += 1
-    }
-    var variance = 0.0
-    k = 1
-    while (k < half) {
-      val d = k * binHz - centroid
-      variance += power(k) * d * d
-      k += 1
-    }
-    Some(Row(id, frames, best * binHz, centroid, roll * binHz,
-      math.sqrt(variance / total)))
-  }
-
-  private val SegmentSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
-    StructField("seg_idx", IntegerType, nullable = false),
-    StructField("start_frame", IntegerType, nullable = false),
-    StructField("end_frame", IntegerType, nullable = false),
-    StructField("start_ms", DoubleType, nullable = false),
-    StructField("end_ms", DoubleType, nullable = false),
-    StructField("mean_rms", DoubleType, nullable = false)))
-
-  /** Energy-based activity segmentation per WAV asset (the classic
-    * VAD front-end): frame the signal at `frameMs`, mark frames whose
-    * RMS clears `relThreshold` × the asset's peak frame RMS (relative,
-    * so gain never matters; `absFloor` keeps all-silence assets from
-    * segmenting their noise), and merge active runs — runs separated
-    * by ≤ `bridgeFrames` quiet frames join, the standard hangover that
-    * keeps a syllable gap from splitting an utterance. The prep step
-    * before per-segment feature extraction ([[spectralFeatures]],
-    * [[mfccFeatures]]) or speech/music routing.
-    *
-    * One row per segment: (id, seg_idx, start_frame, end_frame
-    * inclusive, start_ms, end_ms, mean_rms across the segment's frames
-    * incl. bridged quiet ones, rounded 6). Non-WAV and malformed
-    * payloads are omitted. Same codec-boundary `mapPartitions` shape
-    * as the other audio ops — bounded per-row work, no shuffle. */
-  def energySegments(assets: DataFrame, frameMs: Int = 20,
-                     relThreshold: Double = 0.25,
-                     absFloor: Double = 0.01,
-                     bridgeFrames: Int = 1): DataFrame = {
-    require(frameMs >= 1, "frameMs must be >= 1")
-    require(relThreshold > 0 && relThreshold < 1,
-      "relThreshold must be in (0,1)")
-    require(bridgeFrames >= 0, "bridgeFrames must be >= 0")
-    val enc = ExpressionEncoder(SegmentSchema)
-    assets.select(col("id"), col("content"), col("meta.mime").as("mime"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          if (r.getString(2) != "audio/wav") Iterator.empty
-          else scala.util.Try(segmentRows(r.getLong(0),
-              r.getAs[Array[Byte]](1), frameMs, relThreshold, absFloor,
-              bridgeFrames))
-            .getOrElse(Iterator.empty)
-        }
-      }(enc)
-  }
-
-  private def segmentRows(id: Long, content: Array[Byte], frameMs: Int,
-                          relThreshold: Double, absFloor: Double,
-                          bridgeFrames: Int): Iterator[Row] = {
-    import java.nio.{ByteBuffer, ByteOrder}
-    val lay = parseWav(content).getOrElse(return Iterator.empty)
-    val bb = ByteBuffer.wrap(content).order(ByteOrder.LITTLE_ENDIAN)
-    val frameLen = math.max(1, lay.sampleRate * frameMs / 1000)
-    val perChannel = lay.n / lay.channels
-    val nFrames = perChannel / frameLen
-    if (nFrames == 0) return Iterator.empty
-    def sample(t: Int): Double = { // channel 0 of interleaved PCM
-      val idx = t * lay.channels
-      if (lay.bits == 16) bb.getShort(lay.dataOff + idx * 2).toDouble / 32768.0
-      else ((content(lay.dataOff + idx) & 0xff) - 128).toDouble / 128.0
-    }
-    val rms = Array.tabulate(nFrames) { f =>
-      var acc = 0.0
-      var t = 0
-      while (t < frameLen) {
-        val v = sample(f * frameLen + t)
-        acc += v * v
-        t += 1
-      }
-      math.sqrt(acc / frameLen)
-    }
-    val thr = math.max(relThreshold * rms.max, absFloor)
-    val active = rms.map(_ >= thr)
-    if (!active.contains(true)) return Iterator.empty
-    // active runs, then hangover-merge runs separated by short gaps
-    val runs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    var f = 0
-    while (f < nFrames) {
-      if (active(f)) {
-        val start = f
-        while (f + 1 < nFrames && active(f + 1)) f += 1
-        runs += ((start, f))
-      }
-      f += 1
-    }
-    val merged = runs.foldLeft(
-      scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]) {
-      case (acc, (s, e)) =>
-        if (acc.nonEmpty && s - acc.last._2 - 1 <= bridgeFrames) {
-          val (ps, _) = acc.remove(acc.length - 1)
-          acc += ((ps, e))
-        } else acc += ((s, e))
-        acc
-    }
-    merged.iterator.zipWithIndex.map { case ((s, e), i) =>
-      val mean = rms.slice(s, e + 1).sum / (e - s + 1)
-      Row(id, i, s, e, s.toDouble * frameMs, (e + 1).toDouble * frameMs,
-        BigDecimal(mean).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-          .toDouble)
-    }
-  }
-
-  private val MfccSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
-    StructField("n_frames", IntegerType, nullable = false),
-    StructField("mfcc_mean", ArrayType(DoubleType, containsNull = false),
-      nullable = false),
-    StructField("mfcc_std", ArrayType(DoubleType, containsNull = false),
-      nullable = false)))
-
-  /** Mel-frequency cepstral coefficients per WAV asset — the standard
-    * compact audio fingerprint (speech/music front-ends, audio dedup,
-    * content clustering): per frame, Hann-windowed power spectrum →
-    * triangular mel filterbank → log → DCT-II, keeping the first
-    * `numCoeffs` cepstral coefficients; frames pool into per-asset
-    * mean and std vectors. c₀ carries overall log-energy; c₁… are
-    * amplitude-invariant up to fp (a gain change shifts every log mel
-    * energy by the same constant, which the DCT isolates into c₀ —
-    * spec-pinned). Non-WAV and malformed payloads are omitted, like
-    * [[spectralFeatures]]. Same codec-boundary `mapPartitions` shape;
-    * downstream similarity/dedup joins run on the fixed-size pooled
-    * vectors, so the expensive per-sample pass happens exactly once
-    * per asset. */
-  def mfccFeatures(assets: DataFrame, numCoeffs: Int = 13,
-                   numFilters: Int = 26, fftSize: Int = 512,
-                   maxFrames: Int = 16): DataFrame = {
-    require(fftSize >= 8 && (fftSize & (fftSize - 1)) == 0,
-      "fftSize must be a power of two >= 8")
-    require(numFilters >= 2, "numFilters must be >= 2")
-    require(numCoeffs >= 1 && numCoeffs <= numFilters,
-      "numCoeffs must be in [1, numFilters]")
-    require(maxFrames >= 1, "maxFrames must be >= 1")
-    val enc = ExpressionEncoder(MfccSchema)
-    assets.select(col("id"), col("content"), col("meta.mime").as("mime"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          if (r.getString(2) != "audio/wav") None
-          else scala.util.Try(mfccRow(r.getLong(0),
-            r.getAs[Array[Byte]](1), numCoeffs, numFilters, fftSize,
-            maxFrames)).toOption.flatten
-        }
-      }(enc)
-  }
-
-  private def mel(hz: Double): Double =
-    2595.0 * math.log10(1.0 + hz / 700.0)
-
-  private def melInv(m: Double): Double =
-    700.0 * (math.pow(10.0, m / 2595.0) - 1.0)
-
-  private def mfccRow(id: Long, content: Array[Byte], numCoeffs: Int,
-                      numFilters: Int, fftSize: Int,
-                      maxFrames: Int): Option[Row] = {
-    import java.nio.{ByteBuffer, ByteOrder}
-    val lay = parseWav(content).getOrElse(return None)
-    val bb = ByteBuffer.wrap(content).order(ByteOrder.LITTLE_ENDIAN)
-    val perChannel = lay.n / lay.channels
-    val frames = math.min(perChannel / fftSize, maxFrames)
-    if (frames == 0) return None
-    def sample(t: Int): Double = {
-      val idx = t * lay.channels
-      if (lay.bits == 16) bb.getShort(lay.dataOff + idx * 2).toDouble / 32768.0
-      else ((content(lay.dataOff + idx) & 0xff) - 128).toDouble / 128.0
-    }
-    val half = fftSize / 2
-    // triangular mel filterbank: numFilters+2 points uniform in mel
-    // space from 0 Hz to Nyquist, mapped back to FFT bin units
-    val melMax = mel(lay.sampleRate / 2.0)
-    val binHz = lay.sampleRate.toDouble / fftSize
-    val pts = Array.tabulate(numFilters + 2)(i =>
-      melInv(melMax * i / (numFilters + 1)) / binHz)
-    val re = new Array[Double](fftSize)
-    val im = new Array[Double](fftSize)
-    val power = new Array[Double](half)
-    val sumC = new Array[Double](numCoeffs)
-    val sumSq = new Array[Double](numCoeffs)
-    val logE = new Array[Double](numFilters)
-    var f = 0
-    while (f < frames) {
-      var t = 0
-      while (t < fftSize) {
-        val hann = 0.5 * (1.0 - math.cos(2.0 * math.Pi * t / (fftSize - 1)))
-        re(t) = sample(f * fftSize + t) * hann
-        im(t) = 0.0
-        t += 1
-      }
-      fftPow2(re, im)
-      var k = 0
-      while (k < half) { power(k) = re(k) * re(k) + im(k) * im(k); k += 1 }
-      var m = 0
-      while (m < numFilters) {
-        val lo = pts(m); val c = pts(m + 1); val hi = pts(m + 2)
-        var e = 0.0
-        var kk = math.max(math.ceil(lo).toInt, 0)
-        val kEnd = math.min(math.floor(hi).toInt, half - 1)
-        while (kk <= kEnd) {
-          val w =
-            if (kk <= c) (kk - lo) / math.max(c - lo, 1e-12)
-            else (hi - kk) / math.max(hi - c, 1e-12)
-          if (w > 0) e += w * power(kk)
-          kk += 1
-        }
-        logE(m) = math.log(math.max(e, 1e-12))
-        m += 1
-      }
-      var n = 0
-      while (n < numCoeffs) {
-        var s = 0.0
-        var mm = 0
-        while (mm < numFilters) {
-          s += logE(mm) *
-            math.cos(math.Pi * n * (2 * mm + 1) / (2.0 * numFilters))
-          mm += 1
-        }
-        sumC(n) += s
-        sumSq(n) += s * s
-        n += 1
-      }
-      f += 1
-    }
-    val meanV = Array.tabulate(numCoeffs)(n => sumC(n) / frames)
-    val stdV = Array.tabulate(numCoeffs)(n =>
-      math.sqrt(math.max(sumSq(n) / frames - meanV(n) * meanV(n), 0.0)))
-    Some(Row(id, frames, meanV.toSeq, stdV.toSeq))
-  }
-
-  /** REAL image resize for the decodable format: `image/bmp` payloads
-    * are nearest-neighbor-resampled to `targetW` × `targetH` and
-    * re-encoded as minimal 24-bit bottom-up BMPs (metadata n_bytes
-    * updated); every other row — other mimes, malformed BMPs — passes
-    * through unchanged, so the operator is safe to run over a mixed
-    * corpus. Batched per partition like [[extractFeatures]]; compressed
-    * formats would slot into the same dispatch with a codec. */
-  def resizeBmp(assets: DataFrame, targetW: Int, targetH: Int): DataFrame = {
-    requireTargetDims(targetW, targetH)
-    resizeWith(assets, Set("image/bmp"), resampleBmp(_, targetW, targetH))
-  }
-
-  /** Target-dims gate shared by every resize operator: positive, and
-    * inside the decoders' 256 MB budget at the worst-case 8 bytes/px
-    * (so the resample output buffer is always Int-addressable). */
-  private def requireTargetDims(targetW: Int, targetH: Int): Unit = {
-    require(targetW >= 1 && targetH >= 1, "target dims must be >= 1")
-    require(targetW.toLong * targetH * 8 <= (256L << 20),
-      "target dims exceed the 256 MB decode budget")
-  }
-
-  /** Shared resize driver: rows whose mime is in `mimes` are resampled
-    * via `resample` (metadata n_bytes updated); every other row —
-    * other mimes, malformed payloads — passes through unchanged, so
-    * the resize operators are safe over a mixed corpus. Batched per
-    * partition like [[extractFeatures]]. */
-  private def resizeWith(assets: DataFrame, mimes: Set[String],
-      resample: Array[Byte] => Option[Array[Byte]]): DataFrame = {
-    val enc = ExpressionEncoder(
-      org.apache.spark.sql.types.StructType(Seq(
-        StructField("id", LongType),
-        StructField("content", BinaryType),
-        StructField("meta", MetaSchema))))
-    assets.select(col("id"), col("content"), col("meta"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          val meta = r.getStruct(2)
-          val resized =
-            if (mimes(meta.getString(0)))
-              scala.util.Try(resample(bytes)).toOption.flatten
-            else None
-          resized match {
-            case Some(out) => Row(id, out,
-              Row(meta.getString(0), meta.getString(1), out.length.toLong))
-            case None => Row(id, bytes, meta)
-          }
-        }
-      }(enc)
-  }
-
-  /** Sample-rate conversion for PCM WAV payloads — the audio analogue
-    * of the image resizes: feature extractors (MFCC filterbanks, VAD
-    * frames) assume one rate, crawled audio arrives at many. Rows
-    * whose mime is `audio/wav` re-encode at `targetRate`; everything
-    * else passes through unchanged (the [[resizeWith]] mixed-corpus
-    * contract). */
-  def resampleWav(assets: DataFrame, targetRate: Int): DataFrame = {
-    require(targetRate >= 1 && targetRate <= 768000,
-      "targetRate must be in [1, 768000]")
-    resizeWith(assets, Set("audio/wav"), resampleWavRaw(_, targetRate))
-  }
-
-  /** Linear-interpolation PCM resample, re-encoded canonical 16-bit
-    * little-endian WAV (44-byte header; 8-bit input widens to 16).
-    * Source positions are exact rationals (`i·srcRate / targetRate`
-    * split into integer index + fractional part), so the mapping has
-    * no float accumulation drift — sample i's value depends only on
-    * its two source neighbors, deterministically. Output length =
-    * ceil(frames·target/src) frames; the final fractional position
-    * clamps to the last frame. All sizing arithmetic runs in Long
-    * with a 256 MB output budget BEFORE allocation. */
-  private[graft] def resampleWavRaw(content: Array[Byte],
-                                    targetRate: Int): Option[Array[Byte]] = {
-    import java.nio.{ByteBuffer, ByteOrder}
-    val lay = parseWav(content).getOrElse(return None)
-    val bb = ByteBuffer.wrap(content).order(ByteOrder.LITTLE_ENDIAN)
-    val ch = lay.channels
-    if (ch > 64) return None // byte-rate header would overflow Int
-    val srcFrames = lay.n / ch
-    if (srcFrames == 0) return None
-    val dstFramesL =
-      (srcFrames.toLong * targetRate + lay.sampleRate - 1) / lay.sampleRate
-    val outBytesL = 44L + dstFramesL * ch * 2
-    if (outBytesL > (256L << 20)) return None
-    val dstFrames = dstFramesL.toInt
-    def src(frame: Int, c: Int): Int = {
-      val idx = frame * ch + c
-      if (lay.bits == 16) bb.getShort(lay.dataOff + idx * 2).toInt
-      else (((content(lay.dataOff + idx) & 0xff) - 128) << 8)
-    }
-    val out = new Array[Byte](outBytesL.toInt)
-    val ob = ByteBuffer.wrap(out).order(ByteOrder.LITTLE_ENDIAN)
-    var i = 0
-    while (i < dstFrames) {
-      val num = i.toLong * lay.sampleRate
-      val idx0 = math.min(num / targetRate, (srcFrames - 1).toLong).toInt
-      val idx1 = math.min(idx0 + 1, srcFrames - 1)
-      val fracNum = num - idx0.toLong * targetRate // < targetRate
-      var c = 0
-      while (c < ch) {
-        val a = src(idx0, c).toDouble
-        val b = src(idx1, c).toDouble
-        val v = a + (b - a) * (fracNum.toDouble / targetRate)
-        val s = math.max(-32768.0, math.min(32767.0, math.rint(v)))
-        ob.putShort(44 + (i * ch + c) * 2, s.toShort)
-        c += 1
-      }
-      i += 1
-    }
-    // canonical PCM header
-    val dataLen = dstFrames * ch * 2
-    ob.putInt(0, 0x46464952)             // "RIFF"
-    ob.putInt(4, 36 + dataLen)
-    ob.putInt(8, 0x45564157)             // "WAVE"
-    ob.putInt(12, 0x20746d66)            // "fmt "
-    ob.putInt(16, 16)
-    ob.putShort(20, 1)                   // PCM
-    ob.putShort(22, ch.toShort)
-    ob.putInt(24, targetRate)
-    ob.putInt(28, targetRate * ch * 2)   // byte rate
-    ob.putShort(32, (ch * 2).toShort)    // block align
-    ob.putShort(34, 16)                  // bits
-    ob.putInt(36, 0x61746164)            // "data"
-    ob.putInt(40, dataLen)
-    Some(out)
-  }
-
-  /** The one nearest-neighbor source-index mapping every resize path
-    * uses, over the shared dense-pixel form. */
-  private def resampleDense(img: PngImage, targetW: Int,
-                            targetH: Int): PngImage = {
-    val ch = img.channels
-    val out = new Array[Byte](targetW * targetH * ch)
-    var y = 0
-    while (y < targetH) {
-      val srcY = (y.toLong * img.height / targetH).toInt
-      var x = 0
-      while (x < targetW) {
-        val srcX = (x.toLong * img.width / targetW).toInt
-        System.arraycopy(img.pixels, (srcY * img.width + srcX) * ch,
-          out, (y * targetW + x) * ch, ch)
-        x += 1
-      }
-      y += 1
-    }
-    PngImage(targetW, targetH, ch, out)
-  }
-
-  /** Nearest-neighbor BMP resample, re-encoded 24-bit bottom-up. */
-  private def resampleBmp(content: Array[Byte], targetW: Int,
-                          targetH: Int): Option[Array[Byte]] = {
-    import java.nio.{ByteBuffer, ByteOrder}
-    val l = parseBmp(content).getOrElse(return None)
-    val outStride = ((targetW * 3 + 3) / 4) * 4
-    val out = ByteBuffer.allocate(54 + outStride * targetH)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    out.put('B'.toByte).put('M'.toByte).putInt(54 + outStride * targetH)
-      .putInt(0).putInt(54)
-      .putInt(40).putInt(targetW).putInt(targetH)
-      .putShort(1).putShort(24).putInt(0)
-      .putInt(outStride * targetH).putInt(0).putInt(0).putInt(0).putInt(0)
-    var yOut = targetH - 1 // write bottom-up: last raster row first
-    while (yOut >= 0) {
-      var x = 0
-      while (x < targetW) {
-        val srcX = (x.toLong * l.width / targetW).toInt
-        val srcYRaster = (yOut.toLong * l.height / targetH).toInt
-        val srcRow = if (l.topDown) srcYRaster else l.height - 1 - srcYRaster
-        val p = (l.dataOff + srcRow * l.stride + srcX.toLong * l.bpp).toInt
-        out.put(content(p)).put(content(p + 1)).put(content(p + 2)) // BGR
-        x += 1
-      }
-      var pad = targetW * 3
-      while (pad < outStride) { out.put(0.toByte); pad += 1 }
-      yOut -= 1
-    }
-    Some(out.array())
-  }
-
-  /** Minimal PNG encoder for [[resizePng]]'s re-encode: filter-0 rows,
-    * one deflated IDAT, CRC32 per chunk — a valid baseline PNG any
-    * reader accepts. Color type follows the channel count (1 → gray,
-    * 2 → gray+alpha, 3 → RGB, 4 → RGBA), bit depth 8. */
+  /** Minimal PNG encoder: filter-0 rows, one deflated IDAT, CRC32 per
+    * chunk — a valid baseline PNG any reader accepts, and the reference
+    * [[decodePngRaw]] round-trips against. Color type follows the
+    * channel count (1 → gray, 2 → gray+alpha, 3 → RGB, 4 → RGBA), bit
+    * depth 8. */
   private[graft] def encodePng(img: PngImage): Array[Byte] = {
     import java.util.zip.{CRC32, Deflater}
     val colorType = img.channels match {
@@ -2137,62 +1389,12 @@ object Multimodal {
       chunk("IEND", Array.empty[Byte])
   }
 
-  /** Nearest-neighbor PNG resample: decode, sample with the same
-    * source-index mapping as the BMP path, re-encode. */
-  private def resamplePng(content: Array[Byte], targetW: Int,
-                          targetH: Int): Option[Array[Byte]] =
-    // interlaced/exotic PNGs decode via ImageIO and re-encode as
-    // baseline filter-0 (the resize normalizes the variant away)
-    decodePngRaw(content).orElse(decodeImageIoRaw(content))
-      .map(img => encodePng(resampleDense(img, targetW, targetH)))
-
-  /** REAL image resize for PNG payloads — the [[resizeBmp]] counterpart:
-    * `image/png` rows are nearest-neighbor-resampled and re-encoded as
-    * baseline filter-0 PNGs (metadata n_bytes updated); every other
-    * row passes through unchanged. */
-  def resizePng(assets: DataFrame, targetW: Int, targetH: Int): DataFrame = {
-    requireTargetDims(targetW, targetH)
-    resizeWith(assets, Set("image/png"), resamplePng(_, targetW, targetH))
-  }
-
-  /** Nearest-neighbor JPEG resample: ImageIO decode, the shared
-    * source-index mapping, ImageIO re-encode. */
-  private def resampleJpeg(content: Array[Byte], targetW: Int,
-                           targetH: Int): Option[Array[Byte]] =
-    decodeJpegRaw(content)
-      .flatMap(img => encodeJpeg(resampleDense(img, targetW, targetH)))
-
-  /** REAL image resize for JPEG payloads — the [[resizeBmp]]/[[resizePng]]
-    * counterpart via the JDK's ImageIO codec: `image/jpeg` rows are
-    * nearest-neighbor-resampled and re-encoded (metadata n_bytes
-    * updated); every other row passes through unchanged. */
-  def resizeJpeg(assets: DataFrame, targetW: Int, targetH: Int): DataFrame = {
-    requireTargetDims(targetW, targetH)
-    resizeWith(assets, Set("image/jpeg", "image/jpg"),
-      resampleJpeg(_, targetW, targetH))
-  }
-
-  /** STUB resize for formats without a codec in this environment: keeps
-    * the Spark shape (narrow binary→binary projection, codegen'd
-    * substring) by truncating/padding the payload to `targetBytes`.
-    * `image/bmp`, `image/png` and `image/jpeg` have the real paths above
-    * ([[resizeBmp]] / [[resizePng]] / [[resizeJpeg]]). */
-  def resizeStub(assets: DataFrame, targetBytes: Int): DataFrame =
-    assets
-      .withColumn("content",
-        rpad(substring(col("content"), 1, targetBytes), targetBytes,
-          Array[Byte](0)))
-      // keep the metadata invariant consumed by repartitionBySize
-      .withColumn("meta",
-        col("meta").withField("n_bytes", lit(targetBytes.toLong)))
-
   /** Frame sampling over a chunked binary payload: treats `content` as
     * fixed-size `frameBytes` frames and keeps every `everyN`-th one,
     * exploded to (id, frame_index, frame). The chunk arithmetic and
     * explode are the real distributed plumbing; for real video, frame
-    * boundaries come from the container parser instead of fixed stride
-    * — [[sampleGifFrames]] is that real path for the one motion format
-    * this environment can decode. */
+    * boundaries come from the container parser instead of fixed
+    * stride. */
   def sampleFrames(assets: DataFrame, frameBytes: Int,
                    everyN: Int): DataFrame = {
     val nFrames = ceil(octet_length(col("content")).cast("double") / frameBytes)
@@ -2205,72 +1407,5 @@ object Multimodal {
       .select(col("id"), col("frame_index"),
         expr(s"substring(content, frame_index * $frameBytes + 1, $frameBytes)")
           .as("frame"))
-  }
-
-  /** Per-frame row produced by [[sampleGifFrames]]. */
-  val GifFrameSchema: StructType = StructType(Seq(
-    StructField("id", LongType),
-    StructField("frame_index", IntegerType),
-    StructField("n_frames", IntegerType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("delay_cs", IntegerType),
-    StructField("mean_r", DoubleType),
-    StructField("mean_g", DoubleType),
-    StructField("mean_b", DoubleType)))
-
-  /** REAL video-style frame sampling for `image/gif` payloads: decodes
-    * EVERY animation frame with full GIF89a compositing
-    * ([[decodeGifFramesRaw]] — transparency, disposal methods, local
-    * palettes, screen offsets), keeps every `everyN`-th composited
-    * canvas, and emits one row per kept frame with its dimensions,
-    * GCE delay and per-channel means — the per-frame feature shape a
-    * video pipeline feeds to a sampler or embedder. Animated GIF is the
-    * one motion format this environment can decode without an external
-    * codec; a container parser for real video would slot into the same
-    * mapPartitions dispatch and row shape. Non-GIF and malformed rows
-    * are dropped (features for stills are [[extractFeatures]]'s job);
-    * the per-payload frame count and canvas obey the decode budget. */
-  def sampleGifFrames(assets: DataFrame, everyN: Int = 1): DataFrame = {
-    require(everyN >= 1, "everyN must be >= 1")
-    val enc = ExpressionEncoder(GifFrameSchema)
-    assets.select(col("id"), col("content"), col("meta.mime").as("mime"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          val id = r.getLong(0)
-          val mime = r.getString(2)
-          val frames =
-            if (mime != "image/gif") None
-            else scala.util.Try(
-              decodeGifFramesRaw(r.getAs[Array[Byte]](1))).toOption.flatten
-          frames.toSeq.flatMap { fs =>
-            fs.zipWithIndex
-              .filter { case (_, i) => i % everyN == 0 }
-              .map { case (GifFrame(img, delay), i) =>
-                var (sr, sg, sb) = (0.0, 0.0, 0.0)
-                var p = 0
-                while (p < img.pixels.length) {
-                  sr += (img.pixels(p) & 0xff)
-                  sg += (img.pixels(p + 1) & 0xff)
-                  sb += (img.pixels(p + 2) & 0xff)
-                  p += 3
-                }
-                val n = (img.width.toLong * img.height).toDouble
-                Row(id, i, fs.size, img.width, img.height, delay,
-                  sr / n, sg / n, sb / n)
-              }
-          }
-        }
-      }(enc)
-  }
-
-  /** Repartition so each partition carries roughly `targetBytes` of
-    * payload — a skew guard for mixed image/video corpora where row count
-    * is a bad proxy for partition weight. */
-  def repartitionBySize(assets: DataFrame, targetBytes: Long): DataFrame = {
-    val row = assets.agg(sum(col("meta.n_bytes"))).first()
-    val totalBytes = if (row.isNullAt(0)) 0L else row.getLong(0) // empty input
-    val parts = math.max(1, (totalBytes / targetBytes).toInt)
-    assets.repartition(parts, col("id"))
   }
 }

@@ -548,8 +548,8 @@ object Pipeline {
     // loaded table `r`); broadcast=true pins the hint the way a
     // dimension join at 100 TB wants it. Streams as a stream-STATIC
     // join: the loaded side is a batch table re-read per micro-batch
-    // (inner / left_outer per Spark's own support matrix — unsupported
-    // shapes fail at stream start with Spark's error)
+    // (inner / left_outer / left_anti per Spark's own support matrix —
+    // unsupported shapes fail at stream start with Spark's error)
     "join_table" -> OpSpec(Set("path"),
       Set("on", "condition", "how", "broadcast"),
       p => {
@@ -3082,7 +3082,7 @@ object Pipeline {
                 .as("violations")).filter(ok)
             case (Right(f), _) => cur = f(cur)
           }
-          cur.write.mode("overwrite").parquet(s"$sinkPath/batch=$id")
+          writeBatchTable(cur, sinkPath, id)
           // counts arrive through the listener bus; a count that does
           // not arrive in time, or arrives empty (a later step pruned
           // the gate's subtree from the plan), leaves the gate unknown,
@@ -3092,9 +3092,8 @@ object Pipeline {
             val violations = scala.util.Try(scala.concurrent.Await
               .result(seen.future, deadline.timeLeft).getLong(0))
             if (violations.toOption.contains(0L))
-              graft.streaming.StreamOps.clearQuarantineBatch(
-                batch.sparkSession, dir, id)
-            else graft.streaming.StreamOps.writeQuarantineBatch(bad, dir, id)
+              clearBatchTable(batch.sparkSession, dir, id)
+            else writeBatchTable(bad, dir, id)
           }
         } finally {
           pinned.unpersist()
@@ -3102,6 +3101,32 @@ object Pipeline {
         }
       }
       .start()
+  }
+
+  /** One micro-batch's table under a gated runner root (the survivors'
+    * `sinkPath` or a gate's quarantine directory): overwrite
+    * `dir`/batch=<id> — keyed by the micro-batch id, the canonical
+    * exactly-once `foreachBatch` sink pattern (a REPLAYED batch
+    * rewrites its own table instead of double-appending). Reading
+    * `dir` as parquet yields every row with the batch id as a
+    * partition column. */
+  private[graft] def writeBatchTable(batch: DataFrame, dir: String,
+                                     id: Long): Unit =
+    batch.write.mode("overwrite").parquet(s"$dir/batch=$id")
+
+  /** The empty-gate side of [[writeBatchTable]]: a gate that
+    * quarantined nothing in micro-batch `id` writes no table (no job,
+    * no empty file per gate per trigger); a table an earlier attempt
+    * of the same batch id left there is deleted, so the batch's
+    * quarantine state is still this attempt's, as an overwrite
+    * would leave it. */
+  private[graft] def clearBatchTable(
+      spark: org.apache.spark.sql.SparkSession, dir: String,
+      id: Long): Unit = {
+    val path = new org.apache.hadoop.fs.Path(s"$dir/batch=$id")
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(path)) fs.delete(path, true)
+    ()
   }
 
   /** Config composition: an `include` step splices another config

@@ -4,8 +4,6 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-
-import graft.operators.Checkpoints.TruncateOps
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming forms of the engine's operators.
@@ -94,307 +92,8 @@ object StreamOps {
         col("dst_host"), col("n_links"), col("n_pages_approx"))
   }
 
-  /** Input/output/state rows for streaming MinHash dedup. */
+  /** Input rows for [[trendingTokensStream]]. */
   case class StreamDoc(doc_id: Long, text: String, ts: Timestamp)
-  case class DupCandidate(id_a: Long, id_b: Long, est_jaccard: Double)
-  case class BandedDoc(doc_id: Long, ts: Timestamp, sig: Seq[Long],
-                       band: Int, bucket: Long)
-  case class SigEntry(tsMicros: Long, docId: Long, sig: Seq[Long])
-  case class BucketState(entries: Seq[SigEntry])
-
-  /** Streaming MinHash near-dup detection via stateful LSH bands — the
-    * Structured Streaming form of `Dedup.minHashLshPairs`.
-    *
-    * Each document is shingled and MinHash-signed as a narrow projection
-    * (the scalar `minhash_signature` expression — an aggregate can't
-    * precede a stateful operator in append mode), exploded into the SAME
-    * `(band, bucket)` keys as the batch operator, and grouped by bucket:
-    * per-bucket state holds the (ts, id, signature) of every in-horizon
-    * member, and an arriving document emits a `DupCandidate` against each
-    * stored member whose signature agreement ≥ `threshold`.
-    *
-    * Two deliberate divergences from batch, both inherent to streaming:
-    *   - pairs are scored by SIGNATURE AGREEMENT (the standard unbiased
-    *     Jaccard estimator), not exact-verified — exact verify would
-    *     require holding every shingle set in state;
-    *   - a pair colliding in several bands is emitted once per colliding
-    *     band (at-least-once semantics) — cross-key dedup would need a
-    *     second stateful operator; dedup downstream (e.g. `foreachBatch`
-    *     + `dropDuplicates`) or in the consumer.
-    *
-    * State is bounded by the watermark horizon per bucket: entries older
-    * than the watermark are evicted on every visit, the whole bucket
-    * expires by event-time timeout once the watermark passes its newest
-    * entry, and incoming late rows are dropped. At 100 TB-rate ingest the
-    * shuffle is `bands` small rows per document — same keys, same
-    * volume as the batch LSH join's build side. */
-  def minHashDupPairsStream(docs: Dataset[StreamDoc], n: Int = 3,
-                            numHashes: Int = 64, bands: Int = 32,
-                            threshold: Double = 0.5,
-                            watermark: String = "2 hours"): Dataset[DupCandidate] = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    val session = docs.sparkSession
-    import session.implicits._
-
-    val banded = docs.toDF()
-      .withWatermark("ts", watermark)
-      .withColumn("shingles",
-        graft.operators.TextAnalysis.hashedShingles(col("text"), n))
-      .filter(size(col("shingles")) > 0)
-      .withColumn("sig", org.apache.spark.sql.graftext.MinHashSignature(
-        col("shingles"), numHashes))
-      .select(col("doc_id"), col("ts"), col("sig"),
-        explode(graft.operators.Dedup.bandBuckets(col("sig"), bands, rows))
-          .as("bb"))
-      .select(col("doc_id"), col("ts"), col("sig"),
-        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      .as[BandedDoc]
-
-    def agreement(a: Seq[Long], b: Seq[Long]): Double = {
-      var eq = 0
-      var k = 0
-      val n = math.min(a.length, b.length)
-      while (k < n) {
-        if (a(k) == b(k)) eq += 1
-        k += 1
-      }
-      eq.toDouble / math.max(n, 1)
-    }
-
-    banded.groupByKey(d => (d.band, d.bucket))
-      .flatMapGroupsWithState[BucketState, DupCandidate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: (Int, Long), in: Iterator[BandedDoc],
-         state: GroupState[BucketState]) =>
-          val wmMicros = state.getCurrentWatermarkMs() * 1000L
-          val kept = state.getOption.map(_.entries).getOrElse(Vector.empty)
-            .filter(_.tsMicros >= wmMicros) // horizon eviction
-          val incoming = in
-            .map(d => SigEntry(micros(d.ts), d.doc_id, d.sig))
-            .filter(_.tsMicros >= wmMicros) // standard late-data drop
-            .toVector.sortBy(e => (e.tsMicros, e.docId))
-          val out = Vector.newBuilder[DupCandidate]
-          var entries: Vector[SigEntry] = kept.toVector
-          incoming.foreach { e =>
-            entries.foreach { o =>
-              if (o.docId != e.docId) { // replays never pair with themselves
-                val est = agreement(o.sig, e.sig)
-                if (est >= threshold)
-                  out += DupCandidate(math.min(o.docId, e.docId),
-                    math.max(o.docId, e.docId), est)
-              }
-            }
-            // a replayed doc REPLACES its entry only when the replay is
-            // NEWER — state stays bounded by distinct docs per bucket,
-            // and an out-of-order older replay can't shorten the doc's
-            // horizon (it would evict earlier and miss later pairs)
-            if (!entries.exists(o => o.docId == e.docId &&
-                o.tsMicros >= e.tsMicros))
-              entries = entries.filterNot(_.docId == e.docId) :+ e
-          }
-          if (entries.nonEmpty) {
-            state.update(BucketState(entries))
-            // expire the bucket once the watermark passes its newest entry
-            state.setTimeoutTimestamp(math.max(
-              entries.map(_.tsMicros).max / 1000 + 1,
-              state.getCurrentWatermarkMs() + 1))
-          } else if (state.exists) {
-            state.remove()
-          }
-          out.result().iterator
-      }
-  }
-
-  /** Streaming passage-level dedup — the Structured Streaming form of
-    * `Dedup.dedupPassages`: each arriving document is split into
-    * non-overlapping `windowWords`-word passages, a passage already
-    * seen IN ARRIVAL ORDER within the watermark horizon is dropped, and
-    * the survivors are reassembled per document. Emits
-    * (doc_id, text_deduped, n_kept, n_dropped) once the watermark
-    * closes the document's window — one row per document, a
-    * fully-duplicated document included (a per-document marker row
-    * rides through the chunk dedup so no document can vanish).
-    *
-    * Inherent divergence from batch, documented rather than hidden:
-    * batch "first occurrence" is (doc_id, position) order; streaming is
-    * ARRIVAL order, and two documents sharing a new passage in the SAME
-    * micro-batch race for it (exactly one wins). Feed in id order, one
-    * batch at a time, and the output equals the batch operator
-    * (spec-pinned). State: one row per distinct passage within the
-    * watermark horizon (`dropDuplicatesWithinWatermark`) plus the
-    * per-window reassembly counters — both engine-owned, both
-    * watermark-bounded. */
-  def dedupPassagesStream(docs: Dataset[StreamDoc], windowWords: Int = 10,
-                          watermark: String = "2 hours"): DataFrame = {
-    require(windowWords >= 1, "windowWords must be >= 1")
-    val w = lit(windowWords)
-    val nChunks = greatest(
-      ceil(size(col("ws")) / w.cast("double")), lit(1L)).cast("int")
-    val withWs = docs.toDF()
-      .withWatermark("ts", watermark)
-      .select(col("doc_id"), col("ts"),
-        graft.operators.TextAnalysis.tokens(coalesce(col("text"), lit("")))
-          .as("ws"))
-    val chunked = withWs
-      .select(col("doc_id"), col("ts"),
-        lit(null).cast("long").as("total"),
-        posexplode(transform(sequence(lit(0), nChunks - 1),
-          i => array_join(slice(col("ws"), i * w + 1, w), " ")))
-          .as(Seq("ci", "chunk")))
-    // one marker row per document: its key is NUL-prefixed (the same
-    // reserved separator hashKey uses), so no whitespace-split passage
-    // can collide with it unless the text itself contains NUL; it
-    // always survives the chunk dedup, so a fully-duplicated document
-    // still emits its row, and it carries the doc's total chunk count
-    // for the dropped computation
-    val markers = withWs
-      .select(col("doc_id"), col("ts"), nChunks.cast("long").as("total"),
-        lit(-1).as("ci"),
-        concat(lit("\u0000doc:"), col("doc_id")).as("chunk"))
-    chunked.unionByName(markers)
-      .dropDuplicatesWithinWatermark("chunk")
-      .groupBy(window(col("ts"), "1 second"), col("doc_id"))
-      .agg(
-        array_join(transform(
-          array_sort(collect_list(when(col("ci") >= 0,
-            struct(col("ci"), col("chunk"))))),
-          _.getField("chunk")), " ").as("text_deduped"),
-        sum(when(col("ci") >= 0, 1L).otherwise(0L)).as("n_kept"),
-        (max(col("total")) -
-          sum(when(col("ci") >= 0, 1L).otherwise(0L))).as("n_dropped"))
-      .select(col("doc_id"), col("text_deduped"),
-        col("n_kept"), col("n_dropped"))
-  }
-
-  /** Streaming benchmark decontamination — the Structured Streaming form
-    * of `Curation.contaminationFlags`: each arriving document is flagged
-    * when it shares ≥ `minShared` distinct n-gram shingles with the
-    * STATIC benchmark set. Emits (doc_id, n_shared) for flagged docs.
-    *
-    * Shape: shingle the stream (narrow projection), stream-static
-    * broadcast-join against the benchmark's distinct shingle index (the
-    * join is stateless — the static side broadcasts exactly as in
-    * batch), then a per-document windowed count finalized by the
-    * watermark. `hashedShingles` is already distinct per document, so
-    * the plain count IS the distinct-shingle count (streaming forbids
-    * exact count-distinct; none is needed). State is one counter per
-    * (window, flagged-candidate doc) within the watermark horizon —
-    * the broadcast join discards non-benchmark shingles BEFORE state,
-    * so an uncontaminated corpus contributes almost nothing. Each
-    * doc_id arrives once, so every count closes with its window; at
-    * scale pre-materialize the benchmark shingle index to parquet
-    * instead of re-deriving it per micro-batch. */
-  def decontaminateStream(docs: Dataset[StreamDoc], benchmark: DataFrame,
-                          benchTextCol: String = "text", n: Int = 3,
-                          minShared: Int = 5,
-                          watermark: String = "2 hours"): DataFrame = {
-    require(minShared >= 1, "minShared must be >= 1")
-    val benchShingles = benchmark.select(
-        explode(graft.operators.TextAnalysis
-          .hashedShingles(col(benchTextCol), n)).as("shingle"))
-      .distinct()
-    docs.toDF()
-      .withWatermark("ts", watermark)
-      .select(col("doc_id"), col("ts"),
-        explode(graft.operators.TextAnalysis.hashedShingles(col("text"), n))
-          .as("shingle"))
-      .join(broadcast(benchShingles), "shingle")
-      .groupBy(window(col("ts"), "1 second"), col("doc_id"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-      .select(col("doc_id"), col("n_shared"))
-  }
-
-  /** Streaming robots gate — the Structured Streaming form of
-    * `Robots.robotsGate`: each arriving frontier record checks against
-    * the parsed rule table. The batch operator's per-key decision
-    * aggregate would be a stateful streaming aggregation, so here the
-    * (tiny, policy-sized) rule table collects ONCE at stream start
-    * into a host → rules literal map riding inside the plan — the
-    * fit-once convention of the scoring/threshold streams — and the
-    * decision becomes a pure per-row projection: filter the host's
-    * rules to path-prefix matches, array_max picks (longest, Allow on
-    * tie), missing host or no match defaults to allowed. Stateless,
-    * append-mode, == batch robotsGate row-for-row (parity-spec'd);
-    * refresh rules by restarting the query. */
-  def robotsGateStream(urls: DataFrame, rules: DataFrame,
-                       urlCol: String = "url"): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val table: Map[String, Seq[(Int, Boolean, String)]] = rules
-      .select(col("host"), col("allow"), col("prefix"),
-        col("prefix_len"))
-      .collect()
-      .map(r => (r.getString(0),
-        (r.getInt(3), r.getBoolean(1), r.getString(2))))
-      .groupBy(_._1).map { case (h, rs) => h -> rs.map(_._2).toSeq }
-    val tableLit = typedlit(table)
-    val host = graft.operators.UrlOps.hostOf(col(urlCol))
-    val rawPathq = regexp_extract(col(urlCol),
-      "^(?i)https?://[^/?#]*([^#]*)", 1)
-    val pathq = when(host.isNotNull,
-      when(rawPathq =!= "", rawPathq).otherwise(lit("/")))
-    val winner = array_max(filter(element_at(tableLit, host),
-      r => pathq.startsWith(r.getField("_3"))))
-    urls.withColumn("host", host)
-      .withColumn("allowed",
-        coalesce(winner.getField("_2"), lit(true)))
-      .withColumn("rule_prefix", winner.getField("_3"))
-  }
-
-  /** Typed event shape for [[seasonalAnomaliesStream]] inputs. */
-  case class MetricEvent(event_id: Long, ts: java.sql.Timestamp,
-                         event_type: String, value: Double)
-
-  /** Streaming seasonal-baseline anomalies — `Events.seasonalScore`
-    * against a batch-fitted (key, hour-of-day) cell table: the
-    * periodic complement to `rollingAnomaliesStream`, for metrics
-    * where "normal" depends on the clock. The cell table (≤ |keys|×24
-    * rows) collects ONCE at stream start into a literal map riding
-    * inside the plan — the fit-once convention of the MAD/quantile/
-    * logistic gates — so scoring is a stateless append-mode
-    * projection. Events whose (key, hour) has no baseline cell DROP
-    * (inner-join parity with the batch scorer); refresh the baseline
-    * by restarting the query. */
-  def seasonalAnomaliesStream(events: DataFrame, baseline: DataFrame,
-                              keyCol: String = "event_type",
-                              valueCol: String = "value",
-                              tsCol: String = "ts",
-                              idCol: String = "event_id",
-                              k: Double = 3.0,
-                              minObs: Long = 30L): DataFrame = {
-    import org.apache.spark.sql.functions._
-    require(k > 0, "k must be > 0")
-    val table: Map[String, (Long, Double, Double)] =
-      graft.operators.Events
-        .seasonalCells(baseline, keyCol, valueCol, tsCol)
-        // a null baseline key must not become the literal map key
-        // "null#<h>" (which a live event whose key is the STRING
-        // "null" would then match) — the batch scorer's inner join
-        // drops null keys on both sides, so drop them here too
-        .filter(col("__key").isNotNull)
-        .collect()
-        .map(r => (r.getString(0) + "#" + r.getInt(1)) ->
-          ((r.getLong(2), r.getDouble(3), r.getDouble(4))))
-        .toMap
-    val tableLit = typedlit(table)
-    val hr = hour(col(tsCol))
-    val cell = element_at(tableLit,
-      concat(col(keyCol), lit("#"), hr.cast("string")))
-    def disp(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      round(c * lit(1e6)).cast("double") / lit(1e6)
-    events
-      .withColumn("hour", hr)
-      .withColumn("__cell", cell)
-      .filter(col("__cell").isNotNull)
-      .select(col(idCol), col(keyCol), col("hour"), col(valueCol),
-        col("__cell._1").as("n_obs"),
-        disp(col("__cell._2")).as("cell_mean"),
-        disp(col("__cell._3")).as("cell_sd"),
-        (col("__cell._1") >= minObs && col("__cell._3") > 0 &&
-          abs(col(valueCol) - col("__cell._2")) >
-            lit(k) * col("__cell._3")).as("is_anomaly"))
-  }
 
   /** Per-window quantiles on streams — the "hourly p99" metric: exact
     * (ε = 0) or bounded-state (ε > 0) quantiles per tumbling event-time
@@ -429,179 +128,6 @@ object StreamOps {
       .select((col("window_start") +: groupCols.map(col)) ++ Seq(
         element_at(qlits, col("pos") + 1).as("q"),
         col("col").as("value")): _*)
-  }
-
-  /** Streaming ingest dedup against a persisted LSH signature store —
-    * the Structured Streaming form of
-    * `Dedup.minHashLshPairsAgainstStore`: each arriving document is
-    * checked against the corpus whose signatures live at `path`
-    * (written by `Dedup.writeBandSignatures`), and every near-dup pair
-    * with exact Jaccard ≥ `threshold` is emitted as (id_a = stored id,
-    * id_b = stream doc id, jaccard) — the batch operator's output on
-    * the same rows.
-    *
-    * Shape: the store's band index and shingle sets load as STATIC
-    * frames, so per-batch cost is ∝ the batch and the corpus is never
-    * re-derived (the store IS the corpus's signatures — the streaming
-    * payoff of the persisted layout). Stream docs shingle and sign with
-    * the SCALAR `MinHashSignature` (value-identical to the store's
-    * aggregate — spec-pinned; an aggregate ahead of the join would be
-    * illegal in append mode anyway), bucket-join the store bands,
-    * exact-verify against stored shingles (precision 1, like every LSH
-    * path), and a watermark-bounded windowed aggregate dedups per-pair
-    * band collisions, mirroring the batch `distinct()`. All joins are
-    * stream-static and stateless; sketch parameters come from the
-    * store's meta. */
-  def dedupAgainstStoreStream(docs: Dataset[StreamDoc], path: String,
-                              threshold: Double = 0.5,
-                              watermark: String = "2 hours"): DataFrame = {
-    import org.apache.spark.sql.graftext.MinHashSignature
-    val spark = docs.sparkSession
-    val (n, numHashes, bands) =
-      graft.operators.Dedup.readStoreMeta(spark, path)
-    val rows = numHashes / bands
-    // cold-start store (meta, empty shingles file, no band files — the
-    // batch probe's guarded state; an empty partitioned write emits
-    // nothing while the shingles write leaves a schema-only file): match
-    // nothing instead of failing schema inference at query construction.
-    // NON-empty shingles without bands is a crash between storeWrite's
-    // shingle and band writes, bands without shingles a pre-fix torn
-    // store, and NEITHER readable a crash during the very first shingles
-    // write (meta lands first; even an empty-corpus store leaves the
-    // schema-only shingles file, so (None, None) never means
-    // "legitimately empty") — all three stay loud errors, exactly like
-    // the batch guard.
-    val frames =
-      (scala.util.Try(spark.read.parquet(s"$path/bands")).toOption,
-        scala.util.Try(spark.read.parquet(s"$path/shingles")).toOption)
-    val (storeBands0, storeShingles0) = frames match {
-      case (Some(b), Some(sh)) => (b, sh)
-      case (None, Some(sh)) if !sh.isEmpty => throw new IllegalStateException(
-        s"signature store at $path is partially written (shingles " +
-          "without bands) — rebuild with writeBandSignatures")
-      case (None, Some(_)) =>
-        return docs.toDF().filter(lit(false))
-          .select(col("doc_id").as("id_a"), col("doc_id").as("id_b"),
-            lit(0.0).as("jaccard"))
-      case (None, None) => throw new IllegalStateException(
-        s"signature store at $path is partially written (meta without " +
-          "shingles) — rebuild with writeBandSignatures")
-      case (Some(_), None) => throw new IllegalStateException(
-        s"signature store at $path is partially written (bands without " +
-          "shingles) — rebuild with writeBandSignatures")
-    }
-    val storeBands = storeBands0
-      .select(col("id"), col("band"), col("bucket"))
-    val storeShingles = storeShingles0
-      .select(col("id").as("id_a"), col("shingles").as("sh_a"))
-    docs.toDF()
-      .withWatermark("ts", watermark)
-      .select(col("doc_id"), col("ts"),
-        graft.operators.TextAnalysis.hashedShingles(col("text"), n)
-          .as("sh_b"))
-      .filter(size(col("sh_b")) > 0)
-      .withColumn("sig", MinHashSignature(col("sh_b"), numHashes))
-      .select(col("doc_id"), col("ts"), col("sh_b"),
-        explode(graft.operators.Dedup.bandBuckets(col("sig"), bands, rows))
-          .as("bb"))
-      .select(col("doc_id"), col("ts"), col("sh_b"),
-        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      .join(storeBands, Seq("band", "bucket"))
-      .select(col("id").as("id_a"), col("doc_id").as("id_b"), col("ts"),
-        col("sh_b"))
-      .join(storeShingles, "id_a")
-      .withColumn("n_common", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", col("n_common").cast("double") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("n_common"))
-          .cast("double"))
-      .filter(col("jaccard") >= threshold)
-      // per-pair dedup: jaccard is identical across a pair's band
-      // collisions, so max() under the windowed group reproduces the
-      // batch distinct-then-verify result
-      .groupBy(window(col("ts"), "1 second"), col("id_a"), col("id_b"))
-      .agg(max(col("jaccard")).as("jaccard"))
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-  }
-
-  /** Input rows for streaming embedding decontamination. */
-  case class StreamEmb(vec_id: Long, vec: Seq[Double], ts: Timestamp)
-
-  /** Streaming semantic decontamination / ingest near-dup — the
-    * Structured Streaming form of `Similarity.lshNearDupPairsAgainst`:
-    * each arriving embedding is checked against the STATIC corpus and
-    * every (corpus, stream) pair with cosine ≥ `threshold` is emitted as
-    * (id_a = corpus id, id_b = stream id, cosine), exactly the batch
-    * operator's output on the same rows.
-    *
-    * Shape: the corpus side is prepared ONCE — (id, vec, norm) verify
-    * frame and the banded hyperplane keys frame, both lazily
-    * local-checkpointed so micro-batches reuse the materialized
-    * partitions instead of re-hashing the corpus each trigger (at scale,
-    * persist the keys frame next to the corpus like the MinHash
-    * signature store). Each micro-batch hashes only its own rows with
-    * the SAME planes, stream-static-joins the corpus keys on
-    * (table, bucket) — stateless, the candidate join is inner and the
-    * static side is hot — then re-scores candidates with exact cosine,
-    * so precision is 1 and recall is the batch operator's banded-LSH
-    * recall. The only STATE is the windowed per-pair dedup (a pair
-    * colliding in several tables must emit once, mirroring the batch
-    * `distinct()`), keyed by (window, id_a, id_b) and finalized by the
-    * watermark. Zero-norm stream rows are excluded exactly as in batch
-    * (NaN ≥ t is TRUE under Spark's NaN ordering). */
-  def embeddingDecontaminateStream(stream: Dataset[StreamEmb],
-                                   corpus: DataFrame, idCol: String,
-                                   vecCol: String, threshold: Double,
-                                   numPlanes: Int = 5, tables: Int = 64,
-                                   seed: Long = 42L,
-                                   watermark: String = "2 hours"): DataFrame = {
-    import graft.functions.VectorFunctions._
-    import org.apache.spark.sql.graftext.HyperplaneSignBuckets
-    val old = corpus
-      .select(col(idCol).as("id"), toDouble(col(vecCol)).as("vec"))
-      .withColumn("norm", l2Norm(col("vec")))
-      .filter(col("norm") > 0)
-      .truncateLineage(false) // keys + every micro-batch's verify read this
-    val dim = old.select(size(col("vec"))).head(1)
-      .headOption.map(_.getInt(0)).getOrElse(0)
-    if (dim == 0) {
-      // cold-start: an empty (or all-zero-vector) corpus matches
-      // nothing — dim-0 planes would instead make the sign-bucket
-      // kernel throw on the first real arriving row and kill the query
-      return stream.toDF().filter(lit(false))
-        .select(col("vec_id").as("id_a"), col("vec_id").as("id_b"),
-          lit(0.0).as("cosine"))
-    }
-    val planes = graft.operators.Similarity
-      .hyperplanes(tables * numPlanes, dim, seed)
-    val corpusKeys = old.select(col("id"),
-        posexplode(HyperplaneSignBuckets(col("vec"), planes, numPlanes,
-          tables)).as(Seq("t", "bucket")))
-      .truncateLineage(false) // hashed once, joined every micro-batch
-    val arriving = stream.toDF()
-      .withWatermark("ts", watermark)
-      .select(col("vec_id"), col("ts"), toDouble(col("vec")).as("vec"))
-      .withColumn("norm", l2Norm(col("vec")))
-      .filter(col("norm") > 0)
-      .select(col("vec_id"), col("ts"), col("vec"), col("norm"),
-        posexplode(HyperplaneSignBuckets(col("vec"), planes, numPlanes,
-          tables)).as(Seq("t", "bucket")))
-    arriving.as("b").join(corpusKeys.as("a"),
-        col("a.t") === col("b.t") && col("a.bucket") === col("b.bucket"))
-      .select(col("a.id").as("id_a"), col("b.vec_id").as("id_b"),
-        col("b.ts").as("ts"), col("b.vec").as("vec_b"),
-        col("b.norm").as("norm_b"))
-      .join(old.select(col("id").as("id_a"), col("vec").as("vec_a"),
-        col("norm").as("norm_a")), "id_a")
-      .withColumn("cosine", cosineWithNorms(
-        dotProduct(col("vec_a"), col("vec_b")),
-        col("norm_a"), col("norm_b")))
-      .filter(col("cosine") >= threshold)
-      // per-pair dedup: the cosine is identical for every table collision
-      // of a pair, so max() under the windowed group reproduces the batch
-      // distinct-then-score result
-      .groupBy(window(col("ts"), "1 second"), col("id_a"), col("id_b"))
-      .agg(max(col("cosine")).as("cosine"))
-      .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
   }
 
   /** Input/output/state rows for streaming as-of enrichment. */
@@ -1248,62 +774,6 @@ object StreamOps {
       }
   }
 
-  /** Streaming entity resolution against a canonical dictionary: each
-    * arriving record's string matches dictionary entries within
-    * Levenshtein `maxDist` that share its head-noun block — the
-    * stream-static form of `Dedup.editDistancePairs`, used to snap
-    * noisy incoming names/titles onto a curated inventory at ingest.
-    * STATELESS: the dictionary is a static frame (broadcast when
-    * small), blocking + the threshold distance are expressions, so
-    * each micro-batch is one equi-join — append-mode, no watermark,
-    * no state. Unmatched records pass through with a null match (left
-    * join), preserving the ingest stream. Output: every dictionary
-    * match within budget, closest first by (dist, dict_id) —
-    * downstream takes rank 1 for snap-to-canonical or all rows for
-    * review queues. */
-  def fuzzyMatchStream(stream: DataFrame, dictionary: DataFrame,
-                       streamIdCol: String, streamStrCol: String,
-                       dictIdCol: String, dictStrCol: String,
-                       maxDist: Int = 2): DataFrame = {
-    require(maxDist >= 1, "maxDist must be >= 1")
-    val dict = dictionary.select(col(dictIdCol).as("dict_id"),
-      col(dictStrCol).as("__ds"),
-      element_at(split(col(dictStrCol), " "), -1).as("__blk"))
-    stream.select(col("*"),
-        element_at(split(col(streamStrCol), " "), -1).as("__sblk"))
-      .join(dict,
-        col("__sblk") === col("__blk") &&
-        abs(length(col(streamStrCol)) - length(col("__ds"))) <= maxDist &&
-        levenshtein(col(streamStrCol), col("__ds"), maxDist) >= 0,
-        "left")
-      .select(col(streamIdCol), col(streamStrCol), col("dict_id"),
-        col("__ds").as("dict_str"),
-        levenshtein(col(streamStrCol), col("__ds"), maxDist).as("dist"))
-  }
-
-  /** Streaming referential quarantine — the ingest-time form of
-    * [[graft.operators.Stats.referentialOrphans]]: records whose
-    * foreign key has no match in the static `parent` dimension pass
-    * through UNCHANGED (plus a `relationship` tag) for routing to a
-    * quarantine sink, instead of being silently dropped by the first
-    * downstream inner join. NULL keys quarantine too (a left-anti
-    * join keeps them — nothing matches null), which on a stream is
-    * the right default: both diseases need eyes on them before the
-    * data lands.
-    *
-    * Shape: a stream-static LEFT-ANTI equi-join against the parent's
-    * distinct key dictionary — STATELESS (no watermark; the dictionary
-    * is re-planned per micro-batch, so a dimension refresh on disk is
-    * picked up), append-mode, per-batch cost one broadcast-able
-    * dictionary probe. The batch operator remains the summary/audit
-    * form; this is the row-level router. */
-  def referentialQuarantineStream(stream: DataFrame, parent: DataFrame,
-                                  childKey: String, parentKey: String,
-                                  relationship: String): DataFrame =
-    stream.join(parent.select(col(parentKey).as("__pk")).distinct(),
-        col(childKey) === col("__pk"), "left_anti")
-      .withColumn("relationship", lit(relationship))
-
   case class GapEvent(user_id: Long, event_id: Long, ts: Timestamp,
                       value: Double)
   case class GapOut(user_id: Long, period: Long, observed: Boolean,
@@ -1624,92 +1094,6 @@ object StreamOps {
       }
   }
 
-  case class CreditOut(user_id: Long, conversion_id: Long,
-                       touch_type: String, credit: Double)
-  case class AttrState(touches: Seq[Scd2Buf], pendConv: Seq[Scd2Buf])
-
-  /** Streaming multi-touch attribution — the per-conversion form of
-    * `Events.attributeConversions` (whose output is just the per-type
-    * rollup of these rows): each conversion credits the user's touch
-    * events inside `lookbackSeconds` before it, 1/n each under
-    * `linear`, all to the (ts, id, type)-max touch under
-    * `last_touch` — the same struct-max tie-break as batch, the same
-    * round-6 per-touch credit.
-    *
-    * Finality: a conversion's credit set is fixed once its OWN time is
-    * below the watermark — any touch that could still join its window
-    * would be older than the conversion, hence older than the
-    * watermark, hence dropped on arrival. Conversions with no in-window
-    * touch emit nothing (the batch "unattributed gap"). Emitted rows
-    * therefore equal the batch per-conversion credits over every
-    * sub-watermark prefix, any arrival order (parity-spec'd).
-    *
-    * State per user is doubly bounded: touches older than
-    * `watermark − lookback` can never join a future conversion's
-    * window and are pruned every invocation; pending conversions are
-    * watermark-bounded with a release timer (the
-    * [[transitionPairsStream]] discipline). Caller applies
-    * `withWatermark` upstream (EventTimeTimeout contract). */
-  def attributeConversionsStream(events: Dataset[Scd2Event],
-                                 conversionType: String,
-                                 lookbackSeconds: Long,
-                                 model: String = "last_touch")
-      : Dataset[CreditOut] = {
-    require(lookbackSeconds > 0, "lookbackSeconds must be positive")
-    require(Set("last_touch", "linear")(model),
-      "model must be last_touch or linear")
-    import events.sparkSession.implicits._
-    val lookbackMicros = lookbackSeconds * 1000000L
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[AttrState, CreditOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[Scd2Event],
-         state: GroupState[AttrState]) =>
-          val prior = state.getOption
-            .getOrElse(AttrState(Vector.empty, Vector.empty))
-          val wmMicros = state.getCurrentWatermarkMs() * 1000L
-          val fresh = rows
-            .map(e => Scd2Buf(micros(e.ts), e.event_id, e.value))
-            .filter(_.tsMicros >= wmMicros).toVector
-          val touches = (prior.touches ++
-              fresh.filterNot(_.value == conversionType))
-            .sortBy(e => (e.tsMicros, e.tie))
-          val convs = (prior.pendConv ++
-              fresh.filter(_.value == conversionType))
-            .sortBy(e => (e.tsMicros, e.tie))
-          val (readyConv, pendConv) = convs.span(_.tsMicros < wmMicros)
-          val outs = readyConv.flatMap { c =>
-            val inWin = touches.filter(t => t.tsMicros < c.tsMicros &&
-              t.tsMicros >= c.tsMicros - lookbackMicros)
-            if (inWin.isEmpty) Vector.empty
-            else model match {
-              case "last_touch" =>
-                val w = inWin.maxBy(t => (t.tsMicros, t.tie, t.value))
-                Vector(CreditOut(userId, c.tie, w.value, 1.0))
-              case "linear" =>
-                val credit = BigDecimal(1.0 / inWin.size)
-                  .setScale(6, BigDecimal.RoundingMode.HALF_UP)
-                  .toDouble
-                inWin.map(t => CreditOut(userId, c.tie, t.value, credit))
-            }
-          }
-          // touches below watermark − lookback can never join a future
-          // (≥ watermark) conversion's window: prune — the state bound
-          val keptTouches =
-            touches.filter(_.tsMicros >= wmMicros - lookbackMicros)
-          if (pendConv.nonEmpty) {
-            state.update(AttrState(keptTouches, pendConv.toVector))
-            val releaseAtMs = pendConv.head.tsMicros / 1000 + 1
-            state.setTimeoutTimestamp(
-              math.max(releaseAtMs, state.getCurrentWatermarkMs() + 1))
-          } else if (keptTouches != prior.touches ||
-              readyConv.nonEmpty) {
-            state.update(AttrState(keptTouches, Vector.empty))
-          }
-          outs.iterator
-      }
-  }
-
   case class TransitionPair(user_id: Long, src_type: String,
                             dst_type: String)
   case class TransState(lastFinal: Option[Scd2Buf], buf: Seq[Scd2Buf])
@@ -1948,8 +1332,8 @@ object StreamOps {
     * micro-batch of ACCEPTED documents appends its signatures
     * (`Dedup.appendBandSignaturesIdempotent` — replays and the
     * mid-append crash window both converge duplicate-free), so
-    * `dedupAgainstStoreStream` / `minHashLshPairsAgainstStore`
-    * probes see the corpus grow batch by batch. Gate FIRST, append
+    * `Dedup.minHashLshPairsAgainstStore` probes see the corpus grow
+    * batch by batch. Gate FIRST, append
     * survivors: the standard ingest loop is probe → drop near-dups →
     * this sink. */
   def appendSignaturesStream(docs: DataFrame, path: String,
@@ -2073,31 +1457,6 @@ object StreamOps {
             }
           }
       }
-  }
-
-  /** One quarantined micro-batch of a streaming contract gate (the
-    * unified gated runner, [[graft.operators.Pipeline.startGatedUnified]]):
-    * overwrite `dir`/batch=<id> — keyed by the micro-batch id, the
-    * canonical exactly-once `foreachBatch` sink pattern (a REPLAYED
-    * batch rewrites its own table instead of double-appending).
-    * Reading `dir` as parquet yields every quarantined row with the
-    * batch id as a partition column. */
-  def writeQuarantineBatch(batch: DataFrame, dir: String,
-                           id: Long): Unit =
-    batch.write.mode("overwrite").parquet(s"$dir/batch=$id")
-
-  /** The empty-gate side of [[writeQuarantineBatch]]: a gate that
-    * quarantined nothing in micro-batch `id` writes no table (no job,
-    * no empty file per gate per trigger); a table an earlier attempt
-    * of the same batch id left there is deleted, so the batch's
-    * quarantine state is still this attempt's, as an overwrite
-    * would leave it. */
-  def clearQuarantineBatch(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, id: Long): Unit = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/batch=$id")
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(path)) fs.delete(path, true)
-    ()
   }
 
   /** Streaming first-order transition pairs — the live feed of

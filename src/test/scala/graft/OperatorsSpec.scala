@@ -2395,7 +2395,7 @@ class OperatorsSpec extends AnyFunSuite {
     // storeWrite persists shingles BEFORE bands, so a crash between the
     // two writes leaves non-empty shingles with no bands directory — the
     // probe must refuse (matching nothing would admit every near-dup of
-    // the half-written corpus), in both the batch and streaming guards.
+    // the half-written corpus).
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
     val batch = docs.filter(col("doc_id") % 5 === 0)
     val dir = java.nio.file.Files
@@ -2411,24 +2411,12 @@ class OperatorsSpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       Dedup.minHashLshPairsAgainstStore(batch, dir, "doc_id", "text", 0.5)
     }
-    // streaming guard fires at query-construction time, before any
-    // stream starts, so a batch-backed empty Dataset[StreamDoc] suffices
-    val s2 = spark
-    import s2.implicits._
-    intercept[IllegalStateException] {
-      graft.streaming.StreamOps.dedupAgainstStoreStream(
-        Seq.empty[graft.streaming.StreamOps.StreamDoc].toDS(), dir)
-    }
     // meta-only store (crash during the very first shingles write):
     // also torn — a legitimately empty store always leaves the
-    // schema-only shingles file, so neither guard may match nothing
+    // schema-only shingles file, so the guard may not match nothing
     rmTree(java.nio.file.Paths.get(dir, "shingles"))
     intercept[IllegalStateException] {
       Dedup.minHashLshPairsAgainstStore(batch, dir, "doc_id", "text", 0.5)
-    }
-    intercept[IllegalStateException] {
-      graft.streaming.StreamOps.dedupAgainstStoreStream(
-        Seq.empty[graft.streaming.StreamOps.StreamDoc].toDS(), dir)
     }
   }
 
@@ -2836,14 +2824,6 @@ class OperatorsSpec extends AnyFunSuite {
 
   // ---- multimodal ----
 
-  test("resizeStub pads/truncates payloads to the target size") {
-    val assets = Multimodal.asAssets(docs.limit(5), "doc_id", "text",
-      "text/plain", "source")
-    val sizes = Multimodal.resizeStub(assets, targetBytes = 100)
-      .select(octet_length(col("content"))).collect().map(_.getInt(0))
-    assert(sizes.forall(_ == 100))
-  }
-
   test("sampleFrames chunks the payload on the fixed stride") {
     val assets = Multimodal.asAssets(docs.filter(col("doc_id") === 1),
       "doc_id", "text", "text/plain", "source")
@@ -3249,39 +3229,6 @@ class OperatorsSpec extends AnyFunSuite {
       Multimodal.decodeStub(2L, jpeg.take(40)).getSeq[Double](3))
   }
 
-  test("resizeJpeg downsamples a JPEG; non-JPEG rows pass through") {
-    import java.awt.image.BufferedImage
-    val s = spark
-    import s.implicits._
-    val (w, h) = (64, 48)
-    val bi = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
-    for (y <- 0 until h; x <- 0 until w)
-      bi.setRGB(x, y, ((x * 4 % 256) << 16) | (128 << 8) | (y * 5 % 256))
-    val baos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(bi, "jpeg", baos)
-    val jpeg = baos.toByteArray
-    val other = "not an image".getBytes("UTF-8")
-    val assets = Seq(
-      (1L, jpeg, "image/jpeg"), (2L, other, "text/plain"),
-      (3L, jpeg.take(10), "image/jpeg")). // corrupt → passthrough
-      toDF("id", "content", "mime")
-      .select(col("id"), col("content"),
-        struct(col("mime"), lit("synth").as("source"),
-          octet_length(col("content")).cast("long").as("n_bytes")).as("meta"))
-    val out = Multimodal.resizeJpeg(assets, 16, 12).collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
-    // resized row: decodes to the target dims with the gradient intact
-    val f = Multimodal.decodeJpeg(1L, out(1L)).get.getSeq[Double](3)
-    assert(f(0) == 16.0 && f(1) == 12.0, f)
-    // n_bytes metadata tracks the re-encoded payload
-    val metaBytes = Multimodal.resizeJpeg(assets, 16, 12)
-      .filter(col("id") === 1L).select(col("meta.n_bytes")).head().getLong(0)
-    assert(metaBytes == out(1L).length.toLong)
-    // non-JPEG and corrupt rows pass through untouched
-    assert(out(2L).sameElements(other))
-    assert(out(3L).sameElements(jpeg.take(10)))
-  }
-
   test("interlaced PNG and GIF decode for real via the ImageIO fallback") {
     import java.awt.image.BufferedImage
     val s = spark
@@ -3318,11 +3265,6 @@ class OperatorsSpec extends AnyFunSuite {
     // …but the pipeline still yields exact dims and LOSSLESS means
     assert(f(0) == w.toDouble && f(1) == h.toDouble && f(7) == 24.0, f)
     assert(math.abs(f(2) - mr) < 1e-9 && math.abs(f(3) - 64.0) < 1e-9, f)
-    // interlaced PNG resize also works through the fallback
-    val resized = Multimodal.resizePng(assets, 12, 8).head()
-      .getAs[Array[Byte]](1)
-    val rimg = Multimodal.decodePngRaw(resized).get
-    assert(rimg.width == 12 && rimg.height == 8)
     // interlaced GIF: same contract
     val gifBi = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
     for (y <- 0 until h; x <- 0 until w)
@@ -3458,213 +3400,6 @@ class OperatorsSpec extends AnyFunSuite {
       Multimodal.decodeStub(2L, gif.dropRight(12)).getSeq[Double](3))
   }
 
-  test("sampleGifFrames composites every animation frame per GIF89a") {
-    val s = spark
-    import s.implicits._
-    val (w, h) = (4, 3)
-    // palette: 0 red (also background), 1 green, 2 blue, 3 white
-    val palette = Seq((255, 0, 0), (0, 255, 0), (0, 0, 255), (255, 255, 255))
-    val out = scala.collection.mutable.ArrayBuffer[Byte]()
-    def u16(v: Int): Unit = { out += (v & 0xff).toByte; out += (v >> 8).toByte }
-    val minCode = 2
-    // trivial GIF LZW: a clear code before every root code, so the code
-    // width never grows and every index is wire-encoded literally
-    def lzwTrivial(indices: Seq[Int]): Array[Byte] = {
-      val clear = 1 << minCode
-      val codes = indices.flatMap(i => Seq(clear, i)) :+ (clear + 1)
-      val cs = minCode + 1
-      val bytes = scala.collection.mutable.ArrayBuffer[Byte]()
-      var acc = 0L
-      var bits = 0
-      codes.foreach { c =>
-        acc |= c.toLong << bits
-        bits += cs
-        while (bits >= 8) { bytes += (acc & 0xff).toByte; acc >>= 8; bits -= 8 }
-      }
-      if (bits > 0) bytes += (acc & 0xff).toByte
-      bytes.toArray
-    }
-    def gce(delayCs: Int, disposal: Int, transparent: Int): Unit = {
-      out += 0x21.toByte; out += 0xf9.toByte; out += 4
-      out += ((disposal << 2) | (if (transparent >= 0) 1 else 0)).toByte
-      u16(delayCs)
-      out += (if (transparent >= 0) transparent else 0).toByte
-      out += 0 // terminator
-    }
-    def frame(fx: Int, fy: Int, fw: Int, fh: Int, indices: Seq[Int]): Unit = {
-      out += 0x2c.toByte
-      u16(fx); u16(fy); u16(fw); u16(fh)
-      out += 0 // no local table, not interlaced
-      out += minCode.toByte
-      lzwTrivial(indices).grouped(255).foreach { blk =>
-        out += blk.length.toByte; out ++= blk
-      }
-      out += 0 // block terminator
-    }
-    out ++= "GIF89a".getBytes("US-ASCII")
-    u16(w); u16(h)
-    out += 0x91.toByte // global table, 4 entries
-    out += 0 // background index 0 (red)
-    out += 0
-    palette.foreach { case (r, g, b) =>
-      out += r.toByte; out += g.toByte; out += b.toByte }
-    gce(10, 1, -1); frame(0, 0, w, h, Seq.fill(12)(3)) // full white
-    gce(20, 2, -1); frame(1, 1, 2, 1, Seq(1, 1)) // green dash, dispose-to-bg
-    // full blue with a transparent hole at (1,1) — the hole must show
-    // the DISPOSED canvas (red), not the green that was there
-    gce(30, 1, 1); frame(0, 0, w, h, Seq.tabulate(12)(i => if (i == 5) 1 else 2))
-    out += 0x3b.toByte // trailer
-    val gif = out.toArray
-    val frames = Multimodal.decodeGifFramesRaw(gif).get
-    assert(frames.size == 3)
-    assert(frames.map(_.delayCs) == Seq(10, 20, 30))
-    def means(f: graft.operators.Multimodal.GifFrame): (Double, Double, Double) = {
-      val px = f.canvas.pixels
-      val n = px.length / 3
-      var (r, g, b) = (0.0, 0.0, 0.0)
-      for (i <- 0 until n) {
-        r += px(i * 3) & 0xff; g += px(i * 3 + 1) & 0xff
-        b += px(i * 3 + 2) & 0xff
-      }
-      (r / n, g / n, b / n)
-    }
-    assert(means(frames(0)) == ((255.0, 255.0, 255.0))) // all white
-    // white canvas + 2 green pixels
-    assert(means(frames(1)) ==
-      ((10 * 255 / 12.0, 255.0, 10 * 255 / 12.0)))
-    // all blue except the hole showing disposed-to-background red
-    assert(means(frames(2)) == ((255 / 12.0, 0.0, 11 * 255 / 12.0)))
-    // distributed surface: everyN=2 keeps frames 0 and 2; non-GIF and
-    // malformed rows are dropped
-    val assets = Seq((1L, gif, "image/gif"), (2L, gif, "text/plain"),
-        (3L, gif.dropRight(10), "image/gif"))
-      .toDF("id", "content", "mime")
-      .select(col("id"), col("content"),
-        struct(col("mime"), lit("synth").as("source"),
-          octet_length(col("content")).cast("long").as("n_bytes")).as("meta"))
-    val rows = Multimodal.sampleGifFrames(assets, everyN = 2).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3),
-        r.getInt(4), r.getInt(5), r.getDouble(6), r.getDouble(7),
-        r.getDouble(8))).sortBy(_._2)
-    assert(rows.map(t => (t._1, t._2, t._3, t._4, t._5, t._6)).toSeq ==
-      Seq((1L, 0, 3, w, h, 10), (1L, 2, 3, w, h, 30)))
-    assert((rows(0)._7, rows(0)._8, rows(0)._9) == ((255.0, 255.0, 255.0)))
-    assert((rows(1)._7, rows(1)._8, rows(1)._9) ==
-      ((255 / 12.0, 0.0, 11 * 255 / 12.0)))
-  }
-
-  test("resizePng resamples and re-encodes; identity roundtrip is lossless") {
-    import java.util.zip.{CRC32, Deflater}
-    val s = spark
-    import s.implicits._
-    val (w, h) = (37, 23)
-    def pix(x: Int, y: Int) =
-      ((x * 5 + y * 3) % 256, (x + y * 7) % 256, (x * 11 + y) % 256)
-    // filter-0 synthesis (the decoder's filter coverage is pinned above)
-    def chunk(ctype: String, data: Array[Byte]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(12 + data.length)
-      bb.putInt(data.length).put(ctype.getBytes("US-ASCII")).put(data)
-      val crc = new CRC32()
-      crc.update(ctype.getBytes("US-ASCII"))
-      crc.update(data)
-      bb.putInt(crc.getValue.toInt)
-      bb.array()
-    }
-    val filtered = new java.io.ByteArrayOutputStream()
-    for (y <- 0 until h) {
-      filtered.write(0)
-      for (x <- 0 until w) {
-        val (r, g, b) = pix(x, y)
-        filtered.write(r); filtered.write(g); filtered.write(b)
-      }
-    }
-    val defl = new Deflater()
-    defl.setInput(filtered.toByteArray)
-    defl.finish()
-    val comp = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](4096)
-    while (!defl.finished()) comp.write(buf, 0, defl.deflate(buf))
-    defl.end()
-    val ihdr = java.nio.ByteBuffer.allocate(13)
-      .putInt(w).putInt(h).put(8.toByte).put(2.toByte)
-      .put(0.toByte).put(0.toByte).put(0.toByte).array()
-    val png = Array(0x89.toByte, 'P'.toByte, 'N'.toByte, 'G'.toByte,
-      0x0d.toByte, 0x0a.toByte, 0x1a.toByte, 0x0a.toByte) ++
-      chunk("IHDR", ihdr) ++ chunk("IDAT", comp.toByteArray) ++
-      chunk("IEND", Array.empty[Byte])
-    def assets(rows: Seq[(Long, Array[Byte], String)]) = rows
-      .toDF("id", "content", "mime")
-      .select(col("id"), col("content"),
-        struct(col("mime"), lit("synth").as("source"),
-          octet_length(col("content")).cast("long").as("n_bytes")).as("meta"))
-    // identity resize: re-encoded bytes differ but every pixel survives,
-    // so the decoded features match the original exactly
-    val same = Multimodal.resizePng(
-        assets(Seq((1L, png, "image/png"))), w, h)
-      .collect().head
-    val f0 = Multimodal.decodePng(1L, png).get.getSeq[Double](3)
-    val f1 = Multimodal
-      .decodePng(1L, same.getAs[Array[Byte]](1)).get.getSeq[Double](3)
-    assert(f0 == f1)
-    assert(same.getStruct(2).getLong(2) ==
-      same.getAs[Array[Byte]](1).length.toLong)
-    // downsize: nearest-neighbor mapping srcX = x*w/tw, srcY = y*h/th
-    val (tw, th) = (10, 7)
-    val down = Multimodal.resizePng(
-        assets(Seq((1L, png, "image/png"))), tw, th)
-      .collect().head.getAs[Array[Byte]](1)
-    val fd = Multimodal.decodePng(1L, down).get.getSeq[Double](3)
-    val sampled = for (y <- 0 until th; x <- 0 until tw)
-      yield pix(x * w / tw, y * h / th)
-    val n = (tw * th).toDouble
-    assert(fd(0) == tw.toDouble && fd(1) == th.toDouble)
-    assert(math.abs(fd(2) - sampled.map(_._1).sum / n) < 1e-9, fd)
-    assert(math.abs(fd(3) - sampled.map(_._2).sum / n) < 1e-9, fd)
-    assert(math.abs(fd(4) - sampled.map(_._3).sum / n) < 1e-9, fd)
-    // non-PNG rows pass through byte-identical
-    val other = Multimodal.resizePng(
-        assets(Seq((2L, "plain".getBytes("UTF-8"), "text/plain"))), tw, th)
-      .collect().head
-    assert(other.getAs[Array[Byte]](1).toSeq == "plain".getBytes("UTF-8").toSeq)
-  }
-
-  test("resizeBmp nearest-neighbor-resamples BMPs; other rows pass through") {
-    import java.nio.{ByteBuffer, ByteOrder}
-    val s = spark
-    import s.implicits._
-    // 4x1 24-bit bottom-up BMP, pixels (r,g,b) left-to-right:
-    // red, green, blue, white — stride 12 (4*3, already aligned)
-    val px = Seq((255, 0, 0), (0, 255, 0), (0, 0, 255), (255, 255, 255))
-    val bb = ByteBuffer.allocate(54 + 12).order(ByteOrder.LITTLE_ENDIAN)
-    bb.put('B'.toByte).put('M'.toByte).putInt(54 + 12).putInt(0).putInt(54)
-      .putInt(40).putInt(4).putInt(1).putShort(1).putShort(24).putInt(0)
-      .putInt(12).putInt(0).putInt(0).putInt(0).putInt(0)
-    px.foreach { case (r, g, b) =>
-      bb.put(b.toByte).put(g.toByte).put(r.toByte) }
-    val bmp = bb.array()
-    val assets = Seq((1L, bmp, "image/bmp"),
-        (2L, "not an image".getBytes("UTF-8"), "text/plain"),
-        (3L, "corrupt".getBytes("UTF-8"), "image/bmp"))
-      .toDF("id", "content", "mime")
-      .select(col("id"), col("content"),
-        struct(col("mime"), lit("synth").as("source"),
-          octet_length(col("content")).cast("long").as("n_bytes")).as("meta"))
-    val out = Multimodal.resizeBmp(assets, targetW = 2, targetH = 1)
-      .collect().map(r => r.getLong(0) -> r).toMap
-    // nearest neighbor at 4->2: srcX = x*4/2 = {0, 2} -> red, blue
-    val resized = out(1L).getAs[Array[Byte]](1)
-    val feats = Multimodal.decodeBmp(1L, resized).get.getSeq[Double](3)
-    assert(feats(0) == 2.0 && feats(1) == 1.0) // new dims
-    assert(feats(2) == 127.5 && feats(3) == 0.0 && feats(4) == 127.5,
-      s"means $feats") // mean of red+blue channels
-    assert(out(1L).getStruct(2).getLong(2) == resized.length.toLong)
-    // non-BMP and malformed rows pass through byte-identical
-    assert(out(2L).getAs[Array[Byte]](1).sameElements(
-      "not an image".getBytes("UTF-8")))
-    assert(out(3L).getAs[Array[Byte]](1).sameElements(
-      "corrupt".getBytes("UTF-8")))
-  }
-
   test("decodeWavPcm extracts real signal features from a synthesized WAV") {
     import java.nio.{ByteBuffer, ByteOrder}
     val s = spark
@@ -3704,118 +3439,6 @@ class OperatorsSpec extends AnyFunSuite {
     val fallback = Multimodal.decodeStub(2L, "not a wav at all".getBytes("UTF-8"))
     assert(feats(2L).getLong(2) == fallback.getLong(2))
     assert(feats(2L).getSeq[Double](3) == fallback.getSeq[Double](3))
-  }
-
-  test("resampleWav: exact linear interpolation on a ramp, rate and " +
-       "duration preserved through decode, mixed rows pass through") {
-    import java.nio.{ByteBuffer, ByteOrder}
-    val s = spark
-    import s.implicits._
-    def wav(rate: Int, pcm: Array[Short], channels: Int = 1): Array[Byte] = {
-      val dataLen = pcm.length * 2
-      val bb = ByteBuffer.allocate(44 + dataLen)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      bb.put("RIFF".getBytes("ASCII")).putInt(36 + dataLen)
-        .put("WAVE".getBytes("ASCII"))
-        .put("fmt ".getBytes("ASCII")).putInt(16)
-        .putShort(1).putShort(channels.toShort).putInt(rate)
-        .putInt(rate * channels * 2).putShort((channels * 2).toShort)
-        .putShort(16)
-        .put("data".getBytes("ASCII")).putInt(dataLen)
-      pcm.foreach(bb.putShort)
-      bb.array()
-    }
-    // 2x upsample of an even ramp: midpoints are EXACT integers
-    val ramp = Array[Short](0, 2, 4, 6)
-    val up = Multimodal.resampleWavRaw(wav(4, ramp), 8).get
-    val ub = ByteBuffer.wrap(up).order(ByteOrder.LITTLE_ENDIAN)
-    assert(ub.getInt(24) == 8) // new rate in the header
-    val got = (0 until ub.getInt(40) / 2).map(i => ub.getShort(44 + 2 * i))
-    assert(got == Seq[Short](0, 1, 2, 3, 4, 5, 6, 6)) // tail clamps
-    // a real tone survives a 8k -> 16k -> spectral round trip
-    val sr = 8000
-    val tone = Array.tabulate(1600)(i =>
-      (0.5 * math.sin(2 * math.Pi * 440 * i / sr) * 32767).toShort)
-    val assets = Seq((1L, wav(sr, tone)),
-        (2L, "not audio".getBytes("UTF-8")))
-      .toDF("id", "content")
-      .select(col("id"), col("content"),
-        struct(lit("audio/wav").as("mime"), lit("synth").as("source"),
-          octet_length(col("content")).cast("long").as("n_bytes"))
-          .as("meta"))
-    val res = Multimodal.resampleWav(assets, 16000)
-    val rows = res.collect().map(r => r.getLong(0) -> r).toMap
-    val outWav = rows(1L).getAs[Array[Byte]](1)
-    val feats = Multimodal.decodeWavPcm(1L, outWav).get.getSeq[Double](3)
-    // [duration, rms, peak, zcr, mean, rate, channels, bits]
-    assert(math.abs(feats(0) - 0.2) < 1e-3, s"duration ${feats(0)}")
-    assert(feats(5) == 16000.0 && feats(6) == 1.0 && feats(7) == 16.0)
-    assert(math.abs(feats(1) - 0.5 / math.sqrt(2)) < 0.01)
-    val spec = Multimodal.spectralFeatures(
-      res.filter(col("id") === 1L)).collect().head
-    assert(math.abs(spec.getAs[Double]("dominant_hz") - 440.0) < 32.0,
-      s"dominant ${spec.getAs[Double]("dominant_hz")}")
-    // non-wav rows pass through byte-identical
-    assert(rows(2L).getAs[Array[Byte]](1)
-      .sameElements("not audio".getBytes("UTF-8")))
-    // stereo: channels resample independently and interleave back
-    val st = Multimodal.resampleWavRaw(
-      wav(4, Array[Short](0, 100, 2, 102, 4, 104), channels = 2), 8).get
-    val sb = ByteBuffer.wrap(st).order(ByteOrder.LITTLE_ENDIAN)
-    val stGot = (0 until sb.getInt(40) / 2).map(i => sb.getShort(44 + 2 * i))
-    assert(stGot == Seq[Short](0, 100, 1, 101, 2, 102, 3, 103, 4, 104,
-      4, 104))
-  }
-
-  test("energySegments finds exact activity bounds; hangover bridges short gaps") {
-    import java.nio.{ByteBuffer, ByteOrder}
-    val s = spark
-    import s.implicits._
-    // frame-aligned layout at 8 kHz / 20 ms frames (160 samples):
-    // 10 silence | 10 tone | 1 silence | 10 tone | 15 silence | 10 tone
-    val sampleRate = 8000
-    val frameLen = 160
-    val pattern = Seq.fill(10)(false) ++ Seq.fill(10)(true) ++
-      Seq(false) ++ Seq.fill(10)(true) ++ Seq.fill(15)(false) ++
-      Seq.fill(10)(true)
-    val pcm = pattern.zipWithIndex.flatMap { case (tone, f) =>
-      (0 until frameLen).map { t =>
-        if (tone) (0.5 * math.sin(
-          2 * math.Pi * 440 * (f * frameLen + t) / sampleRate) * 32767)
-          .toShort
-        else 0.toShort
-      }
-    }
-    val dataLen = pcm.length * 2
-    val bb = ByteBuffer.allocate(44 + dataLen).order(ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("ASCII")).putInt(36 + dataLen)
-      .put("WAVE".getBytes("ASCII"))
-      .put("fmt ".getBytes("ASCII")).putInt(16)
-      .putShort(1).putShort(1).putInt(sampleRate).putInt(sampleRate * 2)
-      .putShort(2).putShort(16)
-      .put("data".getBytes("ASCII")).putInt(dataLen)
-    pcm.foreach(bb.putShort)
-    val assets = Seq((1L, bb.array()),
-        (2L, "not audio".getBytes("UTF-8")))
-      .toDF("id", "content")
-      .select(col("id"), col("content"),
-        struct(lit("audio/wav").as("mime"), lit("synth").as("source"),
-          octet_length(col("content")).cast("long").as("n_bytes")).as("meta"))
-    // bridge=1: the single-frame gap joins its neighbors; 15 frames don't
-    val bridged = Multimodal.energySegments(assets, bridgeFrames = 1)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2),
-        r.getInt(3), r.getDouble(4), r.getDouble(5)))
-    assert(bridged.toSeq == Seq(
-      (1L, 0, 10, 30, 200.0, 620.0), (1L, 1, 46, 55, 920.0, 1120.0)))
-    // bridge=0: three literal runs
-    val strict = Multimodal.energySegments(assets, bridgeFrames = 0)
-      .collect().map(r => (r.getInt(2), r.getInt(3))).toSeq
-    assert(strict == Seq((10, 19), (21, 30), (46, 55)))
-    // segment mean RMS ~ amp/sqrt(2); the bridged quiet frame dilutes
-    val m = Multimodal.energySegments(assets, bridgeFrames = 1)
-      .collect().map(r => r.getInt(1) -> r.getDouble(6)).toMap
-    assert(math.abs(m(1) - 0.5 / math.sqrt(2)) < 0.01)
-    assert(m(0) < m(1) && math.abs(m(0) - m(1) * 20 / 21) < 0.01)
   }
 
   test("audioFingerprints: energy-delta bits replicate a driver-side " +
@@ -3902,130 +3525,6 @@ class OperatorsSpec extends AnyFunSuite {
       d = java.lang.Long.bitCount(ha ^ hb) if d <= 4
     } yield (a, b, d.toLong)).toSet
     assert(pairs == want && pairs.contains((2L, 3L, 0L)))
-  }
-
-  test("mfccFeatures: amplitude isolates into c0; content separates tones") {
-    import java.nio.{ByteBuffer, ByteOrder}
-    val s = spark
-    import s.implicits._
-    def wav(freqs: Seq[(Double, Double)], sampleRate: Int,
-            nSamples: Int): Array[Byte] = {
-      val pcm = Array.tabulate(nSamples) { i =>
-        val v = freqs.map { case (hz, amp) =>
-          amp * math.sin(2 * math.Pi * hz * i / sampleRate) }.sum
-        (v * 32767).toShort
-      }
-      val dataLen = nSamples * 2
-      val bb = ByteBuffer.allocate(44 + dataLen).order(ByteOrder.LITTLE_ENDIAN)
-      bb.put("RIFF".getBytes("ASCII")).putInt(36 + dataLen)
-        .put("WAVE".getBytes("ASCII"))
-        .put("fmt ".getBytes("ASCII")).putInt(16)
-        .putShort(1).putShort(1).putInt(sampleRate).putInt(sampleRate * 2)
-        .putShort(2).putShort(16)
-        .put("data".getBytes("ASCII")).putInt(dataLen)
-      pcm.foreach(bb.putShort)
-      bb.array()
-    }
-    // broadband signal (tones spread across the mel range) at two
-    // gains — every filter needs real energy for the gain shift to be
-    // uniform; a pure tone leaves most filters at the log floor, which
-    // does NOT scale with gain — plus a pure tone and a malformed row
-    val tones = Seq(150.0, 400.0, 800.0, 1300.0, 1900.0, 2600.0, 3300.0)
-    val loud = wav(tones.map(_ -> 0.8 / tones.size), 8000, 2048)
-    val quiet = wav(tones.map(_ -> 0.2 / tones.size), 8000, 2048)
-    val high = wav(Seq(2600.0 -> 0.6), 8000, 2048)
-    val assets = Seq((1L, loud), (2L, quiet), (3L, high),
-        (4L, "not audio".getBytes("UTF-8")))
-      .toDF("id", "content")
-      .select(col("id"), col("content"),
-        struct(lit("audio/wav").as("mime"), lit("synth").as("source"),
-          octet_length(col("content")).cast("long").as("n_bytes")).as("meta"))
-    val got = Multimodal.mfccFeatures(assets, numCoeffs = 13,
-        fftSize = 512).collect()
-      .map(r => r.getLong(0) ->
-        ((r.getInt(1), r.getSeq[Double](2), r.getSeq[Double](3)))).toMap
-    assert(got.keySet == Set(1L, 2L, 3L)) // malformed omitted
-    val (fr, mLoud, _) = got(1L)
-    assert(fr == 4)
-    assert(mLoud.length == 13)
-    // gain change: every log mel energy shifts by ~the same constant,
-    // which the DCT isolates into c0 — c1.. move barely (quantization
-    // of the 16-bit PCM keeps this from being exact)
-    val (_, mQuiet, _) = got(2L)
-    assert(math.abs(mLoud.head - mQuiet.head) > 1.0,
-      s"c0 should carry the gain: ${mLoud.head} vs ${mQuiet.head}")
-    val tailDrift = (1 until 13)
-      .map(i => math.abs(mLoud(i) - mQuiet(i))).max
-    assert(tailDrift < 1.0, s"cepstral tail moved $tailDrift under gain")
-    // different content moves the cepstral SHAPE far more than the
-    // gain edit did (measured: ~0.3 drift vs ~107 gap)
-    val (_, mHigh, _) = got(3L)
-    val toneGap = (1 until 13)
-      .map(i => math.abs(mLoud(i) - mHigh(i))).max
-    assert(toneGap > 20 * tailDrift,
-      s"content change ($toneGap) should dwarf gain drift ($tailDrift)")
-  }
-
-  test("spectralFeatures recovers analytic sine frequencies via the FFT") {
-    import java.nio.{ByteBuffer, ByteOrder}
-    val s = spark
-    import s.implicits._
-    def wav(freqs: Seq[(Double, Double)], sampleRate: Int,
-            nSamples: Int): Array[Byte] = {
-      val pcm = Array.tabulate(nSamples) { i =>
-        val v = freqs.map { case (hz, amp) =>
-          amp * math.sin(2 * math.Pi * hz * i / sampleRate) }.sum
-        (v * 32767).toShort
-      }
-      val dataLen = nSamples * 2
-      val bb = ByteBuffer.allocate(44 + dataLen).order(ByteOrder.LITTLE_ENDIAN)
-      bb.put("RIFF".getBytes("ASCII")).putInt(36 + dataLen)
-        .put("WAVE".getBytes("ASCII"))
-        .put("fmt ".getBytes("ASCII")).putInt(16)
-        .putShort(1).putShort(1).putInt(sampleRate).putInt(sampleRate * 2)
-        .putShort(2).putShort(16)
-        .put("data".getBytes("ASCII")).putInt(dataLen)
-      pcm.foreach(bb.putShort)
-      bb.array()
-    }
-    // 8 kHz / fftSize 1024 -> 7.8125 Hz bins; 1000 Hz = bin 128 exactly
-    val pure = wav(Seq(1000.0 -> 0.5), 8000, 4096)
-    // two tones: 500 Hz strong, 2000 Hz weak -> dominant 500, centroid
-    // pulled between them
-    val duo = wav(Seq(500.0 -> 0.6, 2000.0 -> 0.2), 8000, 4096)
-    // digital silence: all features zero
-    val silent = wav(Seq(1000.0 -> 0.0), 8000, 4096)
-    val assets = Seq((1L, pure), (2L, duo), (3L, silent),
-        (4L, "not audio".getBytes("UTF-8")))
-      .toDF("id", "content")
-      .select(col("id"), col("content"),
-        struct(lit("audio/wav").as("mime"), lit("synth").as("source"),
-          octet_length(col("content")).cast("long").as("n_bytes")).as("meta"))
-    val got = Multimodal.spectralFeatures(assets, fftSize = 1024)
-      .collect().map(r => r.getLong(0) ->
-        (r.getInt(1), r.getDouble(2), r.getDouble(3), r.getDouble(4),
-          r.getDouble(5))).toMap
-    // the malformed row is omitted, not stubbed
-    assert(got.keySet == Set(1L, 2L, 3L))
-    val (fr1, dom1, cen1, roll1, bw1) = got(1L)
-    assert(fr1 == 4)
-    assert(dom1 == 1000.0, s"dominant $dom1")
-    assert(math.abs(cen1 - 1000.0) < 5.0, s"centroid $cen1")
-    assert(math.abs(roll1 - 1000.0) < 10.0, s"rolloff $roll1")
-    assert(bw1 < 30.0, s"bandwidth $bw1")
-    val (_, dom2, cen2, _, bw2) = got(2L)
-    assert(dom2 == 500.0, s"dominant $dom2")
-    // power ratio 9:1 -> centroid = 0.9*500 + 0.1*2000 = 650, leakage
-    // smears it slightly
-    assert(cen2 > 550 && cen2 < 750, s"centroid $cen2")
-    assert(bw2 > 300, s"bandwidth $bw2") // genuinely two-tone spread
-    assert(got(3L) == ((4, 0.0, 0.0, 0.0, 0.0)))
-  }
-
-  test("repartitionBySize bounds partition payload") {
-    val assets = Multimodal.asAssets(docs, "doc_id", "text", "text/plain", "source")
-    val parts = Multimodal.repartitionBySize(assets, targetBytes = 16 * 1024)
-    assert(parts.rdd.getNumPartitions >= 2)
   }
 
   // ---- as-of join ----

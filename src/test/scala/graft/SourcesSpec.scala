@@ -900,6 +900,7 @@ class SourcesSpec extends AnyFunSuite {
     import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.graftext.PslRules
+    import graft.operators.Pipeline
     import graft.sources.{Layout, Warc}
     import graft.streaming.StreamOps
     val s = spark
@@ -937,9 +938,9 @@ class SourcesSpec extends AnyFunSuite {
         Seq("id"), 4)
       assert(!java.nio.file.Files.exists(dir.resolve("snap/__bucket=0")))
       assert(s.read.parquet(snap).count() == 40 - b0.length)
-      // StreamOps.clearQuarantineBatch
+      // Pipeline.clearBatchTable
       s.range(3).write.parquet(at("quarantine/batch=4"))
-      StreamOps.clearQuarantineBatch(s, at("quarantine"), 4L)
+      Pipeline.clearBatchTable(s, at("quarantine"), 4L)
       assert(!java.nio.file.Files.exists(dir.resolve("quarantine/batch=4")))
       // Warc.readWarcGz lists and opens the files
       java.nio.file.Files.write(dir.resolve("a.warc.gz"),

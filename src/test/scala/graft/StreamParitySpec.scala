@@ -16,8 +16,9 @@ import graft.operators.Pipeline.{BatchOnly, BatchSensitive, Step}
 
 /** One streaming contract per registry entry, pinned: every entry whose
   * `OpSpec.streaming` is not `BatchOnly` has a row in [[table]], and the
-  * row runs the entry on a `MemoryStream` fed in at least two chunks
-  * through `Pipeline.fromStepsStreaming`, comparing the sink's row
+  * row runs the entry (followed by the row's `after` steps, if any) on
+  * a `MemoryStream` fed in at least two chunks through
+  * `Pipeline.fromStepsStreaming`, comparing the sink's row
   * multiset with `Pipeline.fromSteps` on the same input. An entry that
   * emits when the watermark closes a window or a key is compared after
   * closing events that advance the watermark past every one of them. */
@@ -32,6 +33,8 @@ class StreamParitySpec extends AnyFunSuite {
   private val piecesPath = s"$dir/pieces"
   private val unigramPath = s"$dir/unigram"
   private val dimPath = s"$dir/dim"
+  private val parentPath = s"$dir/parent"
+  private val dictPath = s"$dir/dict"
   private val klRefPath = s"$dir/kl_ref"
 
   /** The stored models and static tables the rows name by path. */
@@ -54,6 +57,9 @@ class StreamParitySpec extends AnyFunSuite {
       unigramPath, maxPieceLen = 4)
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "label")
       .write.parquet(dimPath)
+    Seq(10L, 20L, 30L).toDF("pk").write.parquet(parentPath)
+    Seq((10L, "red gear"), (11L, "blue gear"), (12L, "red widget"))
+      .toDF("dict_id", "dict_str").write.parquet(dictPath)
     Seq("en", "en", "en", "de", "fr").toDF("category")
       .write.parquet(klRefPath)
   }
@@ -227,9 +233,53 @@ class StreamParitySpec extends AnyFunSuite {
   private val joinOps = {
     val facts = frame("k BIGINT, v DOUBLE", Row(1L, 0.5), Row(2L, 1.5),
       Row(3L, 2.5), Row(9L, 9.9), Row(1L, 3.5))
+    val children = frame("id BIGINT, fk BIGINT", Row(1L, 10L),
+      Row(2L, 99L), Row(3L, null), Row(4L, 20L), Row(5L, 77L))
+    val names = frame("id BIGINT, s STRING", Row(1L, "red gear"),
+      Row(2L, "bed gear"), Row(3L, "red gadget"), Row(4L, "rad widget"))
     Seq(
       Parity("join_table", Map("path" -> dimPath, "on" -> Seq("k")),
         facts, "v < 3"),
+      // referential quarantine: rows whose key has no parent row, NULL
+      // keys included (nothing matches null, so a left-anti join keeps
+      // them), pass through unchanged with a relationship tag
+      Parity("join_table", Map("path" -> parentPath,
+          "condition" -> "l.fk = r.pk", "how" -> "left_anti"),
+        children, "id <= 3", label = "left_anti: referential quarantine",
+        after = Seq(Step("with_column",
+          Map("name" -> "relationship", "expr" -> "'c->p'"))),
+        check = { got =>
+          // healthy rows 1/4 dropped; orphans 2/5 and null-key 3
+          // quarantined, payload intact, relationship tagged
+          assert(multiset(got) == multiset(Seq(Row(2L, 99L, "c->p"),
+            Row(3L, null, "c->p"), Row(5L, 77L, "c->p"))))
+          // the batch audit's row accounting agrees: orphan rows + null
+          // rows == quarantined rows
+          val audit = Stats.referentialOrphans(children(),
+            spark.read.parquet(parentPath), "fk", "pk", "c->p").head()
+          assert(audit.getLong(2) + audit.getLong(3) == got.count())
+        }),
+      // dictionary entity resolution: blocked on the last word, every
+      // entry within edit distance 2; unmatched names pass through with
+      // a null match
+      Parity("join_table", Map("path" -> dictPath, "how" -> "left",
+          "condition" -> ("element_at(split(l.s, ' '), -1) = " +
+            "element_at(split(r.dict_str, ' '), -1) AND " +
+            "abs(length(l.s) - length(r.dict_str)) <= 2 AND " +
+            "levenshtein(l.s, r.dict_str, 2) >= 0")),
+        names, "id % 2 = 0", label = "left: blocked levenshtein match",
+        after = Seq(
+          Step("with_column",
+            Map("name" -> "dist", "expr" -> "levenshtein(s, dict_str, 2)")),
+          Step("select",
+            Map("cols" -> Seq("id", "s", "dict_id", "dict_str", "dist")))),
+        // exact → 0 (blue gear, d=3, is out of budget); typos → 1;
+        // red gadget's block has no entry → unmatched
+        check = got => assert(multiset(got) == multiset(Seq(
+          Row(1L, "red gear", 10L, "red gear", 0),
+          Row(2L, "bed gear", 10L, "red gear", 1),
+          Row(3L, "red gadget", null, null, null),
+          Row(4L, "rad widget", 12L, "red widget", 1))))),
       Parity("bloom_join",
         Map("path" -> dimPath, "fact_key" -> "k", "dim_key" -> "k2",
           "right_renames" -> Seq(Seq("k", "k2"), Seq("label", "label2"))),
@@ -411,24 +461,27 @@ class StreamParitySpec extends AnyFunSuite {
   }
 
   private def multiset(df: DataFrame): Map[Seq[Any], Int] =
-    df.collect().map(r => r.toSeq.map(norm)).groupBy(identity)
+    multiset(df.collect().toSeq)
+
+  private def multiset(rows: Seq[Row]): Map[Seq[Any], Int] =
+    rows.map(r => r.toSeq.map(norm)).groupBy(identity)
       .map { case (k, v) => k -> v.length }
 
-  table.foreach { p =>
-    test(s"stream == batch: ${p.op}") {
+  table.zipWithIndex.foreach { case (p, i) =>
+    test(s"stream == batch: ${p.title}") {
       fixtures
       val s = spark
       implicit val ctx = s.sqlContext
-      val steps = Seq(Step(p.op, p.params))
+      val steps = Step(p.op, p.params) +: p.after
       val raw = p.input()
       val in = s.createDataFrame(raw.collect().toSeq.asJava, raw.schema)
       val chunks = Seq(in.filter(p.chunk), in.filter(not(expr(p.chunk))))
         .map(_.collect().toSeq)
-      assert(chunks.forall(_.nonEmpty), s"${p.op}: a chunk is empty")
+      assert(chunks.forall(_.nonEmpty), s"${p.title}: a chunk is empty")
       implicit val enc: org.apache.spark.sql.Encoder[Row] =
         Encoders.row(in.schema)
       val source = MemoryStream[Row]
-      val name = s"parity_${p.op}"
+      val name = s"parity_$i"
       val q = Pipeline.fromStepsStreaming(steps)(source.toDF())
         .writeStream.format("memory").queryName(name)
         .outputMode(p.mode).start()
@@ -442,17 +495,18 @@ class StreamParitySpec extends AnyFunSuite {
       val batch = p.batch.getOrElse(Pipeline.fromSteps(steps))(in)
         .select(streamed.columns.map(col).toIndexedSeq: _*)
       val got = multiset(streamed)
-      assert(got.nonEmpty, s"${p.op}: the stream emitted nothing")
-      assert(got == multiset(batch), p.op)
+      assert(got.nonEmpty, s"${p.title}: the stream emitted nothing")
+      assert(got == multiset(batch), p.title)
+      p.check(streamed)
     }
   }
 
   test("every streaming registry entry has a parity row") {
-    val rows = table.map(_.op)
-    assert(rows.distinct == rows, "duplicate parity rows")
+    val titles = table.map(_.title)
+    assert(titles.distinct == titles, "duplicate parity rows")
     val missing = Pipeline.builtinOps.collect {
       case (op, spec) if spec.streaming != BatchOnly => op
-    }.toSeq.filterNot(rows.contains).sorted
+    }.toSeq.filterNot(table.map(_.op).contains).sorted
     assert(missing.isEmpty,
       s"streaming registry entries without a parity row: " +
         s"${missing.mkString(", ")} — add a Parity row for each to " +
@@ -540,13 +594,21 @@ object StreamParitySpec {
     * output from the sink. `batch` replaces `fromSteps` with the batch
     * twin for a stateful body that is stream-only (a
     * `flatMapGroupsWithState` state machine that reads the watermark,
-    * which a batch frame does not carry). `view` reshapes the sink's rows before the comparison, and
-    * the batch side is projected onto the view's columns. */
+    * which a batch frame does not carry). `view` reshapes the sink's
+    * rows before the comparison, and the batch side is projected onto
+    * the view's columns. `after` are steps that follow the entry in
+    * the chain, `label` tells apart several rows of one entry, and
+    * `check` asserts on the sink's rows beyond their equality with
+    * batch. */
   final case class Parity(
       op: String, params: Map[String, Any], input: () => DataFrame,
       chunk: String, sensitive: Boolean = false,
       closing: Seq[Row] = Nil, keep: String = "true",
       mode: String = "append",
       batch: Option[DataFrame => DataFrame] = None,
-      view: DataFrame => DataFrame = identity)
+      view: DataFrame => DataFrame = identity,
+      after: Seq[Pipeline.Step] = Nil, label: String = "",
+      check: DataFrame => Unit = _ => ()) {
+    def title: String = if (label.isEmpty) op else s"$op ($label)"
+  }
 }

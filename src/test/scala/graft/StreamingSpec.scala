@@ -99,34 +99,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(docs.forall(d => tsRows(d.doc_id) == d.ts))
   }
 
-  test("fuzzyMatchStream snaps arriving names onto the dictionary per micro-batch") {
-    import StreamOps.StreamDoc
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val dict = Seq((10L, "red gear"), (11L, "blue gear"),
-      (12L, "red widget")).toDF("id", "name")
-    val input = MemoryStream[StreamDoc]
-    val out = StreamOps.fuzzyMatchStream(input.toDF(), dict,
-      "doc_id", "text", "id", "name", maxDist = 2)
-    assert(out.isStreaming)
-    val q = out.writeStream.format("memory").queryName("fuzzy_stream")
-      .outputMode("append").start()
-    val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
-    input.addData(
-      StreamDoc(1L, "red gear", t0),   // exact -> dist 0 (+ blue gear d=3 out)
-      StreamDoc(2L, "bed gear", t0),   // typo  -> red gear d=1
-      StreamDoc(3L, "red gadget", t0), // wrong block -> unmatched
-      StreamDoc(4L, "rad widget", t0)) // typo  -> red widget d=1
-    q.processAllAvailable()
-    q.stop()
-    val got = s.sql("select * from fuzzy_stream").collect()
-      .map(r => (r.getLong(0), Option(r.get(2)).map(_.toString.toLong),
-        if (r.isNullAt(4)) -1 else r.getInt(4))).toSet
-    assert(got == Set((1L, Some(10L), 0), (2L, Some(10L), 1),
-      (3L, None, -1), (4L, Some(12L), 1)))
-  }
-
   test("gapFillStream emits the batch grid rows as the watermark finalizes buckets") {
     import graft.streaming.StreamOps.{GapEvent, GapOut}
     val s = spark
@@ -989,58 +961,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.head._2.nonEmpty) // some right matched
   }
 
-  test("minHashDupPairsStream emits the batch banding+estimate pairs on out-of-order input") {
-    import graft.streaming.StreamOps.{DupCandidate, StreamDoc}
-    import graft.operators.{Dedup, TextAnalysis}
-    import org.apache.spark.sql.graftext.MinHashSignature
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val docsDf = s.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    // deterministic scattered event times, unrelated to doc_id order
-    def tsOf(id: Long) =
-      new Timestamp(Timestamp.valueOf("2024-01-01 00:00:00").getTime +
-        (id * 13 % 97) * 60000L)
-    val docs = docsDf.select("doc_id", "text").collect()
-      .map(r => StreamDoc(r.getLong(0), r.getString(1), tsOf(r.getLong(0))))
-    // batch oracle: same signature, same banding, signature-agreement est
-    val sh = docsDf.select(col("doc_id"),
-        TextAnalysis.hashedShingles(col("text"), 3).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-      .withColumn("sig", MinHashSignature(col("shingles"), 64))
-    val sigs = sh.collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](r.fieldIndex("sig"))).toMap
-    val buckets = sh.select(col("doc_id"),
-        explode(Dedup.bandBuckets(col("sig"), 32, 2)).as("bb"))
-      .select(col("doc_id"), col("bb.band"), col("bb.bucket")).collect()
-      .groupBy(r => (r.getInt(1), r.getLong(2))).values
-    val expected = buckets.flatMap { rs =>
-      val ids = rs.map(_.getLong(0)).sorted
-      for {
-        i <- ids.indices; j <- (i + 1) until ids.length
-        a = sigs(ids(i)); b = sigs(ids(j))
-        est = a.zip(b).count { case (x, y) => x == y } / 64.0
-        if est >= 0.5
-      } yield (ids(i), ids(j), est)
-    }.toSet
-    assert(expected.nonEmpty)
-    // stream the same corpus in three arbitrary out-of-order chunks
-    val input = MemoryStream[StreamDoc]
-    val out = graft.streaming.StreamOps.minHashDupPairsStream(
-      input.toDS(), watermark = "24 hours")
-    val q = out.writeStream.format("memory").queryName("dedup_minhash_stream")
-      .outputMode("append").start()
-    (0 until 3).foreach { c =>
-      input.addData(docs.filter(_.doc_id % 3 == c).toSeq: _*)
-      q.processAllAvailable()
-    }
-    q.stop()
-    val streamed = s.sql("select * from dedup_minhash_stream")
-      .as[DupCandidate].collect()
-      .map(d => (d.id_a, d.id_b, d.est_jaccard)).toSet // at-least-once → set
-    assert(streamed == expected)
-  }
-
   test("dedupByKey drops replayed keys even with a different timestamp") {
     val s = spark
     import s.implicits._
@@ -1282,127 +1202,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(u7 == Seq(FunnelOut(7, 1, false), FunnelOut(7, 2, true)))
   }
 
-  test("dedupPassagesStream equals batch dedupPassages under id-order arrival") {
-    import graft.streaming.StreamOps.StreamDoc
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    def doc(id: Long, text: String, sec: Int) =
-      StreamDoc(id, text, Timestamp.valueOf(f"2024-01-01 00:00:$sec%02d"))
-    // mirrors the batch spec's fixture: repeated span, full duplicate,
-    // short tail, null text
-    val ds = Seq(
-      doc(1, "a b c d", 1),
-      doc(2, "x y c d z w", 2),
-      doc(3, "c d a b", 3),
-      doc(4, "p q r", 4),
-      doc(5, null, 5))
-    val input = MemoryStream[StreamDoc]
-    val out = StreamOps.dedupPassagesStream(input.toDS(), windowWords = 2,
-      watermark = "1 hour")
-    val q = out.writeStream.format("memory").queryName("passages_stream")
-      .outputMode("append").start()
-    // one doc per micro-batch, in id order: streaming first-ARRIVAL
-    // equals batch first-(doc_id, position)
-    ds.foreach { d => input.addData(d); q.processAllAvailable() }
-    // sentinel pushes the watermark past every document's window
-    input.addData(StreamDoc(99, "zz", Timestamp.valueOf("2024-01-01 02:00:00")))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = s.sql(
-        "select * from passages_stream where doc_id < 99")
-      .collect()
-      .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2), r.getLong(3))))
-      .toMap
-    val batch = graft.operators.Dedup.dedupPassages(
-        ds.toDF().select(col("doc_id"), col("text")),
-        "doc_id", "text", windowWords = 2)
-      .collect()
-      .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2), r.getLong(3))))
-      .toMap
-    assert(streamed == batch)
-    // the fully-duplicated doc 3 must still be present, empty
-    assert(streamed(3L) == (("", 0L, 2L)))
-  }
-
-  test("decontaminateStream equals batch contaminationFlags on out-of-order input") {
-    import graft.streaming.StreamOps.StreamDoc
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val bench = Seq((100L, "a b c d e f g"), (101L, "m n o p q"))
-      .toDF("doc_id", "text")
-    def doc(id: Long, text: String, ts: String) =
-      StreamDoc(id, text, Timestamp.valueOf(ts))
-    // doc 1 quotes a 7-word benchmark span (5 shared 3-gram shingles);
-    // doc 2 is clean; doc 3 shares only 2 shingles (below minShared);
-    // doc 4 quotes the second benchmark doc
-    val d1 = doc(1, "x a b c d e f g y", "2024-01-01 00:00:05")
-    val d2 = doc(2, "p q r s t u v w z", "2024-01-01 00:00:02")
-    val d3 = doc(3, "a b c d h i j", "2024-01-01 00:00:08")
-    val d4 = doc(4, "k m n o p q k", "2024-01-01 00:00:01")
-    val input = MemoryStream[StreamDoc]
-    val out = StreamOps.decontaminateStream(input.toDS(), bench,
-      n = 3, minShared = 3, watermark = "10 seconds")
-    val q = out.writeStream.format("memory").queryName("decontam")
-      .outputMode("append").start()
-    // out-of-order arrival within the horizon
-    input.addData(d1); q.processAllAvailable()
-    input.addData(d3, d2); q.processAllAvailable()
-    input.addData(d4); q.processAllAvailable()
-    // sentinel (clean text) pushes the watermark past every window
-    input.addData(doc(99, "z z", "2024-01-01 01:00:00"))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = s.sql("select * from decontam")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batch = graft.operators.Curation.contaminationFlags(
-        Seq(d1, d2, d3, d4).toDF(), bench, "doc_id", "text",
-        n = 3, minShared = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(streamed == batch)
-    assert(streamed.map(_._1) == Set(1L, 4L))
-  }
-
-  test("streaming decontamination cold-starts on empty corpus and store") {
-    import graft.streaming.StreamOps.{StreamDoc, StreamEmb}
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    // empty embedding corpus: dim probes to 0 — the query must run and
-    // emit nothing, not crash the first micro-batch on dim-0 planes
-    val emptyCorpus = Seq.empty[(Long, Seq[Double])]
-      .toDF("vec_id", "embedding")
-    val in1 = MemoryStream[StreamEmb]
-    val out1 = StreamOps.embeddingDecontaminateStream(in1.toDS(),
-      emptyCorpus, "vec_id", "embedding", threshold = 0.9,
-      watermark = "10 seconds")
-    val q1 = out1.writeStream.format("memory").queryName("cold_emb")
-      .outputMode("append").start()
-    in1.addData(StreamEmb(1L, Seq(1.0, 0.0),
-      Timestamp.valueOf("2024-01-01 00:00:01")))
-    q1.processAllAvailable()
-    q1.stop()
-    assert(s.sql("select * from cold_emb").count() == 0)
-    // signature store written from an empty corpus (meta, no frames):
-    // same contract as the batch probe — match nothing
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-cold-store").toString
-    graft.operators.Dedup.writeBandSignatures(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"),
-      "doc_id", "text", dir)
-    val in2 = MemoryStream[StreamDoc]
-    val out2 = StreamOps.dedupAgainstStoreStream(in2.toDS(), dir,
-      threshold = 0.5, watermark = "10 seconds")
-    val q2 = out2.writeStream.format("memory").queryName("cold_store")
-      .outputMode("append").start()
-    in2.addData(StreamDoc(1L, "a b c d",
-      Timestamp.valueOf("2024-01-01 00:00:01")))
-    q2.processAllAvailable()
-    q2.stop()
-    assert(s.sql("select * from cold_store").count() == 0)
-  }
-
   test("gopherQualityFlags runs on a stream unchanged (stateless gate)") {
     // the rule gate is a pure projection, so it needs no watermark, no
     // state, and no streaming-specific form — the parity-core property
@@ -1501,44 +1300,6 @@ class StreamingSpec extends AnyFunSuite {
         r.getLong(4), r.getBoolean(5))).toSet
     assert(streamed == batch)
     assert(streamed.count(_._6) == 1) // only the clean page passes
-  }
-
-  test("robotsGateStream gates on arrival like the batch operator") {
-    import graft.streaming.StreamOps.StreamDoc
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val robots = Seq(("h.com",
-      "User-agent: *\nAllow: /a/b/\nDisallow: /a/\nDisallow: /t\n"))
-      .toDF("host", "body")
-    val rules = graft.operators.Robots.parseRobots(robots)
-    val urls = Seq(
-      1L -> "https://h.com/a/x", 2L -> "https://h.com/a/b/x",
-      3L -> "https://h.com/ok", 4L -> "https://other.com/t",
-      5L -> "junk")
-    val batch = graft.operators.Robots.robotsGate(
-        s.createDataFrame(urls).toDF("doc_id", "text"), rules, "text")
-      .collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Boolean]("allowed"),
-        Option(r.getAs[String]("rule_prefix")))).toSet
-    val input = MemoryStream[StreamDoc]
-    val out = StreamOps.robotsGateStream(input.toDF(), rules, "text")
-    assert(out.isStreaming)
-    val q = out.writeStream.format("memory").queryName("robots_stream")
-      .outputMode("append").start()
-    input.addData(urls.map { case (id, u) =>
-      StreamDoc(id, u, Timestamp.valueOf("2024-01-01 00:00:01")) }: _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = s.sql(
-      "select doc_id, allowed, rule_prefix from robots_stream")
-      .collect()
-      .map(r => (r.getLong(0), r.getBoolean(1),
-        Option(r.getString(2)))).toSet
-    assert(streamed == batch)
-    assert(streamed.contains((1L, false, Some("/a/"))))
-    assert(streamed.contains((2L, true, Some("/a/b/"))))
-    assert(streamed.contains((5L, true, None)))
   }
 
   test("canonicalizeUrlsStream canonicalizes on arrival like batch") {
@@ -1814,177 +1575,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamedShards == batchShards)
   }
 
-  test("seasonalAnomaliesStream scores against the batch-fitted cells " +
-       "like the batch scorer") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    def ts(h: Int, m: Int) =
-      Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
-    // baseline: 31 obs at hour 0 (mean 10-ish), 5 obs at hour 1
-    val hist = ((0 until 30).map(i => (i.toLong, ts(0, i), "x", 10.0)) ++
-      Seq((30L, ts(0, 55), "x", 16.0)) ++
-      (40 until 45).map(i => (i.toLong, ts(1, i - 40), "x", 10.0)))
-      .toDF("event_id", "ts", "event_type", "value")
-    // live events: dense-hour outlier, dense-hour normal, sparse-hour
-    // outlier (minObs silences), unknown hour (no cell -> dropped)
-    val live = Seq(
-      (100L, ts(0, 10), "x", 99.0),
-      (101L, ts(0, 11), "x", 10.0),
-      (102L, ts(1, 10), "x", 99.0),
-      (103L, ts(7, 0), "x", 10.0))
-    val liveDf = live.toDF("event_id", "ts", "event_type", "value")
-    val batch = graft.operators.Events.seasonalScore(liveDf,
-        graft.operators.Events.seasonalCells(hist)).collect()
-      .map(r => (r.getLong(0), r.getLong(4), r.getDouble(5),
-        r.getBoolean(7))).toSet
-    import graft.streaming.StreamOps.MetricEvent
-    val input = MemoryStream[MetricEvent]
-    val out = StreamOps.seasonalAnomaliesStream(input.toDF(), hist)
-    assert(out.isStreaming)
-    val q = out.writeStream.format("memory").queryName("seasonal_stream")
-      .outputMode("append").start()
-    input.addData(live.map(e => MetricEvent(e._1, e._2, e._3, e._4)): _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = s.sql("select event_id, n_obs, cell_mean, is_anomaly " +
-        "from seasonal_stream").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-        r.getBoolean(3))).toSet
-    assert(streamed == batch)
-    val flags = streamed.map(t => t._1 -> t._4).toMap
-    assert(flags == Map(100L -> true, 101L -> false, 102L -> false))
-  }
-
-  test("seasonalAnomaliesStream: null baseline key drops (no \"null#h\" " +
-       "literal cell for a string-\"null\" event to hit)") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    def ts(h: Int, m: Int) =
-      Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
-    // baseline rows with a NULL key plus a real key
-    val hist = ((0 until 5).map(i =>
-        (i.toLong, ts(0, i), null: String, 10.0)) ++
-      (10 until 15).map(i => (i.toLong, ts(0, i - 10), "x", 10.0)))
-      .toDF("event_id", "ts", "event_type", "value")
-    import graft.streaming.StreamOps.MetricEvent
-    val input = MemoryStream[MetricEvent]
-    val out = StreamOps.seasonalAnomaliesStream(input.toDF(), hist,
-      minObs = 1L)
-    val q = out.writeStream.format("memory").queryName("seasonal_nullkey")
-      .outputMode("append").start()
-    // a live event whose event_type is the STRING "null" must drop
-    // (batch inner-join parity: no such baseline key exists)
-    input.addData(MetricEvent(200L, ts(0, 1), "null", 99.0),
-      MetricEvent(201L, ts(0, 2), "x", 10.0))
-    q.processAllAvailable()
-    q.stop()
-    val got = s.sql("select event_id from seasonal_nullkey").collect()
-      .map(_.getLong(0)).toSet
-    assert(got == Set(201L))
-  }
-
-  test("dedupAgainstStoreStream equals the batch store probe " +
-       "on out-of-order input") {
-    import graft.streaming.StreamOps.StreamDoc
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val docs = s.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-    val batch = docs.filter(col("doc_id") % 5 === 0)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-sigstore-stream").toString
-    graft.operators.Dedup.writeBandSignatures(corpus, "doc_id", "text", dir)
-    // deterministic scramble: stream arrival order is unrelated to id
-    // order, timestamps spread inside the watermark horizon
-    val rows = batch.collect().map(r => (r.getLong(0), r.getString(1)))
-      .sortBy(x => (x._1 * 2654435761L) % 1009)
-    val input = MemoryStream[StreamDoc]
-    val out = StreamOps.dedupAgainstStoreStream(input.toDS(), dir,
-      threshold = 0.5, watermark = "10 seconds")
-    val q = out.writeStream.format("memory").queryName("storededup")
-      .outputMode("append").start()
-    rows.grouped(40).zipWithIndex.foreach { case (chunk, i) =>
-      input.addData(chunk.map { case (id, text) =>
-        StreamDoc(id, text, Timestamp.valueOf(f"2024-01-01 00:00:0${i % 9}"))
-      }.toSeq)
-      q.processAllAvailable()
-    }
-    // sentinel pushes the watermark past every window; its text must
-    // SURVIVE shingling (>= 3 words) because the empty-shingle filter
-    // can be pushed below the event-time watermark node — a sub-shingle
-    // sentinel would be dropped before advancing the watermark. Its
-    // unique token pairs with nothing.
-    input.addData(StreamDoc(999999L, "sentinelx sentinelx sentinelx",
-      Timestamp.valueOf("2024-01-01 01:00:00")))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = s.sql("select * from storededup where id_b < 999999")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    val batchPairs = graft.operators.Dedup
-      .minHashLshPairsAgainstStore(batch, dir, "doc_id", "text", 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    assert(streamed.nonEmpty)
-    assert(streamed == batchPairs)
-  }
-
-  test("embeddingDecontaminateStream equals batch lshNearDupPairsAgainst " +
-       "on out-of-order input") {
-    import graft.streaming.StreamOps.StreamEmb
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val corpus = Seq(
-      (100L, Seq(1.0, 0.0, 0.0, 0.0, 1.0, 0.0, 0.0, 1.0)),
-      (101L, Seq(0.0, 1.0, 0.0, 1.0, 0.0, 0.0, 1.0, 0.0)),
-      (102L, Seq(0.5, 0.5, 0.5, 0.0, 0.0, 0.5, 0.0, 0.0))
-    ).toDF("vec_id", "embedding")
-    def emb(id: Long, v: Seq[Double], ts: String) =
-      StreamEmb(id, v, Timestamp.valueOf(ts))
-    // e1 ~ corpus 100, e3 ~ corpus 101, e2 clean, e4 the zero vector
-    // (must be excluded, not paired with everything via NaN >= t)
-    val e1 = emb(1, Seq(1.0, 0.01, 0.0, 0.0, 0.99, 0.02, 0.0, 1.01),
-      "2024-01-01 00:00:05")
-    val e2 = emb(2, Seq(0.0, 0.0, 1.0, 0.0, 0.0, 0.0, 0.0, 0.0),
-      "2024-01-01 00:00:02")
-    val e3 = emb(3, Seq(0.01, 0.99, 0.0, 1.0, 0.01, 0.0, 1.02, 0.0),
-      "2024-01-01 00:00:08")
-    val e4 = emb(4, Seq(0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0),
-      "2024-01-01 00:00:03")
-    val input = MemoryStream[StreamEmb]
-    val out = StreamOps.embeddingDecontaminateStream(input.toDS(), corpus,
-      "vec_id", "embedding", threshold = 0.9, numPlanes = 3, tables = 8,
-      watermark = "10 seconds")
-    val q = out.writeStream.format("memory").queryName("embdecontam")
-      .outputMode("append").start()
-    // out-of-order arrival within the horizon
-    input.addData(e1); q.processAllAvailable()
-    input.addData(e3, e2); q.processAllAvailable()
-    input.addData(e4); q.processAllAvailable()
-    // clean sentinel pushes the watermark past every window
-    input.addData(emb(99, Seq(0.0, 0.0, 1.0, 0.0, 0.0, 0.0, 0.0, 0.0),
-      "2024-01-01 01:00:00"))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = s.sql("select * from embdecontam where id_b < 99")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    val batchSide = Seq(e1, e2, e3, e4).toDF()
-      .select(col("vec_id"), col("vec").as("embedding"))
-    val batch = graft.operators.Similarity.lshNearDupPairsAgainst(
-        batchSide, corpus, "vec_id", "embedding",
-        threshold = 0.9, numPlanes = 3, tables = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    assert(streamed == batch)
-    assert(streamed.map(_._2) == Set(1L, 3L))
-  }
-
   test("piecesTokenizeStream emits the batch greedy segmentation") {
     import graft.streaming.StreamOps.StreamDoc
     val s = spark
@@ -2153,100 +1743,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed == batch && streamed.nonEmpty)
   }
 
-  test("phashDedupStream matches the batch cross-corpus image probe") {
-    import graft.operators.Multimodal
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    // natural-like images (1/f spectrum — see OperatorsSpec's pHash
-    // notes): the stored corpus hashes 4 distinct images; the stream
-    // ships PNG re-encodes of two of them, one unrelated image, and a
-    // corrupt payload, in two out-of-order chunks
-    def img(seed: Long): Multimodal.PngImage = {
-      val rnd = new scala.util.Random(seed)
-      val ph = Array.fill(6, 6)(rnd.nextDouble() * 2 * math.Pi)
-      val px = new Array[Byte](48 * 48 * 3)
-      for (y <- 0 until 48; x <- 0 until 48) {
-        var l = 0.0
-        for (i <- 0 until 6; j <- 0 until 6 if i + j > 0)
-          l += 120.0 / (1 + i + j) *
-            math.cos(math.Pi * i * x / 48.0 + ph(i)(j)) *
-            math.cos(math.Pi * j * y / 48.0 + ph(j)(i))
-        val base = (y * 48 + x) * 3
-        def cl(d: Double) =
-          math.max(25, math.min(230, 128 + d * 0.4)).toInt.toByte
-        px(base) = cl(l); px(base + 1) = cl(l * 0.9 + 8)
-        px(base + 2) = cl(l * 1.1 - 6)
-      }
-      Multimodal.PngImage(48, 48, 3, px)
-    }
-    def asAssets(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("id"), col("content"),
-        struct(lit("image/png").as("mime"), lit("synth").as("source"),
-          octet_length(col("content")).cast("long").as("n_bytes"))
-          .as("meta"))
-    val corpusAssets = asAssets((1L to 4L).map(i =>
-      (i, Multimodal.encodePng(img(i)))).toDF("id", "content"))
-    val corpusHashes = Multimodal.perceptualHashes(corpusAssets)
-      .localCheckpoint(true)
-    val batchRows = Seq(
-      (101L, Multimodal.encodePng(img(1L))), // dup of corpus 1
-      (103L, Multimodal.encodePng(img(3L))), // dup of corpus 3
-      (105L, Multimodal.encodePng(img(55L))), // unrelated
-      (106L, Array[Byte](9, 9, 9))) // corrupt: no hash, no pair
-    val input = MemoryStream[(Long, Array[Byte])]
-    val out = Multimodal.phashNearDupPairsAgainst(
-      Multimodal.perceptualHashes(
-        asAssets(input.toDF().toDF("id", "content"))), corpusHashes)
-    val q = out.writeStream.format("memory").queryName("phash_stream")
-      .outputMode("append").start()
-    input.addData(batchRows(2), batchRows(0)) // out of order
-    q.processAllAvailable()
-    input.addData(batchRows(3), batchRows(1))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = s.sql("select * from phash_stream").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val batch = Multimodal.phashNearDupPairsAgainst(
-        Multimodal.perceptualHashes(asAssets(batchRows.toDF("id", "content"))),
-        corpusHashes)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(streamed == batch)
-    assert(streamed.map(p => (p._1, p._2)) == Set((101L, 1L), (103L, 3L)))
-  }
-
-  test("referentialQuarantineStream routes orphan and null-key rows only") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val parent = Seq(10L, 20L, 30L).toDF("pk")
-    val input = MemoryStream[(Long, java.lang.Long)]
-    val out = StreamOps.referentialQuarantineStream(
-      input.toDF().toDF("id", "fk"), parent, "fk", "pk", "c->p")
-    assert(out.isStreaming)
-    val q = out.writeStream.format("memory").queryName("quarantine")
-      .outputMode("append").start()
-    input.addData((1L, 10L), (2L, 99L), (3L, null))
-    q.processAllAvailable()
-    input.addData((4L, 20L), (5L, 77L))
-    q.processAllAvailable()
-    q.stop()
-    val got = s.sql("select * from quarantine").collect()
-      .map(r => (r.getLong(0), Option(r.get(1)), r.getString(2))).toSet
-    // healthy rows 1/4 dropped; orphans 2/5 and null-key 3 quarantined,
-    // payload intact, relationship tagged
-    assert(got == Set((2L, Some(99L), "c->p"), (3L, None, "c->p"),
-      (5L, Some(77L), "c->p")))
-    // parity with the batch audit's row accounting: orphan rows +
-    // null rows == quarantined rows
-    val batch = graft.operators.Stats.referentialOrphans(
-      Seq((1L, Some(10L)), (2L, Some(99L)), (3L, None),
-        (4L, Some(20L)), (5L, Some(77L)))
-        .toDF("id", "fk"), parent, "fk", "pk", "c->p")
-      .collect().head
-    assert(batch.getLong(2) + batch.getLong(3) == got.size.toLong)
-  }
-
   test("decayedActivityStream matches batch per user under shuffled arrival") {
     import graft.streaming.StreamOps.{AnomEvent, DecayedOut}
     val s = spark
@@ -2389,56 +1885,6 @@ class StreamingSpec extends AnyFunSuite {
       .collect().groupBy(_.path)
       .map { case (k2, v) => k2 -> v.length.toLong }
     assert(streamed == batch && streamed.nonEmpty)
-  }
-
-  test("attributeConversionsStream credits equal the batch rollup " +
-       "for both models") {
-    import graft.streaming.StreamOps.{CreditOut, Scd2Event}
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val evDf = graft.sources.Sources
-      .table(s, "/root/testdata/sf0.001", "events")
-      .filter(col("user_id") < 40)
-      .select("event_id", "ts", "user_id", "event_type")
-    val rows = evDf.collect()
-      .map(r => Scd2Event(r.getAs[Long]("user_id"),
-        r.getAs[Long]("event_id"), r.getAs[Timestamp]("ts"),
-        r.getAs[String]("event_type")))
-      .sortBy(e => (e.ts.getTime, e.event_id))
-    Seq("linear", "last_touch").foreach { model =>
-      val batch = graft.operators.Events.attributeConversions(
-          evDf, "purchase", 21600L, model).collect()
-        .map(r => r.getString(0) ->
-          (r.getAs[Long]("n_conversions"), r.getAs[Double]("credit")))
-        .toMap
-      val input = MemoryStream[Scd2Event]
-      val out = StreamOps.attributeConversionsStream(
-        input.toDF().withWatermark("ts", "0 seconds").as[Scd2Event],
-        "purchase", 21600L, model)
-      val name = s"attr_stream_$model"
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val third = (rows.length + 2) / 3
-      rows.grouped(third).foreach { chunk =>
-        input.addData(chunk.reverse.toSeq: _*)
-        q.processAllAvailable()
-      }
-      input.addData(Scd2Event(999999L, 999999L,
-        Timestamp.valueOf("2030-01-01 00:00:00"), "view"))
-      q.processAllAvailable()
-      q.stop()
-      // roll the per-conversion rows up exactly as batch does:
-      // count distinct conversions, exact decimal credit sum
-      val streamed = s.sql(s"select * from $name").as[CreditOut]
-        .collect().groupBy(_.touch_type)
-        .map { case (t, cs) =>
-          t -> (cs.map(_.conversion_id).distinct.length.toLong,
-            cs.map(c => BigDecimal(c.credit)).sum
-              .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-        }
-      assert(streamed == batch && streamed.nonEmpty, s"model=$model")
-    }
   }
 
   test("transitionPairsStream finalizes the batch pair multiset") {
@@ -2805,11 +2251,11 @@ class StreamingSpec extends AnyFunSuite {
     // replaying a batch id OVERWRITES its own table — no double rows
     val replayDir = base.resolve("replay").toString
     val d = Seq((1L, 2L)).toDF("k", "v")
-    StreamOps.writeQuarantineBatch(d, replayDir, 7L)
-    StreamOps.writeQuarantineBatch(d, replayDir, 7L)
+    Pipeline.writeBatchTable(d, replayDir, 7L)
+    Pipeline.writeBatchTable(d, replayDir, 7L)
     assert(s.read.parquet(replayDir).count() == 1)
     // and a replay that finds the gate empty leaves no table behind
-    StreamOps.clearQuarantineBatch(s, replayDir, 7L)
+    Pipeline.clearBatchTable(s, replayDir, 7L)
     assert(!new java.io.File(s"$replayDir/batch=7").exists())
   }
 
