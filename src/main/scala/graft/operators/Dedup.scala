@@ -476,36 +476,27 @@ object Dedup {
       .select(lit(n).as("n"), lit(numHashes).as("num_hashes"),
         lit(bands).as("bands"))
       .write.mode(SaveMode.Overwrite).parquet(s"$path/meta")
-    storeWrite(corpus, idCol, textCol, path, n, numHashes, bands,
-      SaveMode.Overwrite)
+    val sh = shingled(corpus, idCol, textCol, n)
+    storeWrite(sh, sh, path, numHashes, bands, SaveMode.Overwrite)
   }
 
   /** Append an accepted batch's signatures to a store created by
-    * [[writeBandSignatures]]. Sketch parameters come from the store's own
-    * meta, so appended signatures are always layout-compatible; id
-    * uniqueness across appends is the caller's contract (use the corpus
-    * ids). */
-  def appendBandSignatures(batch: DataFrame, idCol: String, textCol: String,
-                           path: String): Unit = {
-    val (n, numHashes, bands) = readStoreMeta(batch.sparkSession, path)
-    storeWrite(batch, idCol, textCol, path, n, numHashes, bands,
-      SaveMode.Append)
-  }
-
-  /** [[appendBandSignatures]] for STREAMING ingest: append only ids
-    * not yet fully committed, converging to a duplicate-free store
-    * under micro-batch replays AND the mid-append crash window.
-    * "Fully committed" = present in `bands` (the LAST table the
-    * append order writes): a replayed batch drops those ids
-    * entirely; an id left shingles-only by a crash between the two
-    * writes is NOT re-shingled (no duplicate rows — duplicates would
-    * duplicate verified pairs downstream) but DOES get its bands
-    * written, so the store heals to sound instead of losing the
-    * document's recall forever. Each table's append is atomic at the
-    * job level (FileOutputCommitter), so those are the only states. */
-  def appendBandSignaturesIdempotent(batch: DataFrame, idCol: String,
-                                     textCol: String,
-                                     path: String): Unit = {
+    * [[writeBandSignatures]] — the streaming ingest step (the
+    * `append_stream_signature_store` sink runs it per micro-batch).
+    * Sketch parameters come from the store's own meta, so appended
+    * signatures are always layout-compatible. Only ids not yet fully
+    * committed append, so the store converges duplicate-free under
+    * micro-batch replays AND the mid-append crash window. "Fully
+    * committed" = present in `bands` (the LAST table [[storeWrite]]
+    * writes): a replayed batch drops those ids entirely; an id left
+    * shingles-only by a crash between the two writes is NOT
+    * re-shingled (no duplicate rows — duplicates would duplicate
+    * verified pairs downstream) but DOES get its bands written, so the
+    * store heals to sound instead of losing the document's recall
+    * forever. Each table's append is atomic at the job level
+    * (FileOutputCommitter), so those are the only states. */
+  def appendBandSignatures(batch: DataFrame, idCol: String,
+                           textCol: String, path: String): Unit = {
     val spark = batch.sparkSession
     val (n, numHashes, bands) = readStoreMeta(spark, path)
     def seenIds(sub: String): Option[DataFrame] =
@@ -522,26 +513,22 @@ object Dedup {
     val fresh = anti(shingled(batch.dropDuplicates(idCol), idCol,
         textCol, n),
       seenIds("bands")).truncateLineage(true)
-    anti(fresh, seenIds("shingles"))
-      .select(col("id"), col("shingles"))
-      .write.mode(SaveMode.Append).parquet(s"$path/shingles")
-    bandedSignatures(fresh, numHashes, bands, numHashes / bands)
-      .repartition(col("band"))
-      .sortWithinPartitions(col("band"), col("bucket"))
-      .write.mode(SaveMode.Append).partitionBy("band")
-      .parquet(s"$path/bands")
+    storeWrite(fresh, anti(fresh, seenIds("shingles")), path, numHashes,
+      bands, SaveMode.Append)
   }
 
-  private def storeWrite(docs: DataFrame, idCol: String, textCol: String,
-                         path: String, n: Int, numHashes: Int, bands: Int,
+  /** The store's two table writes: `newShingles`' shingle rows, then
+    * the bands of every document in `sh` (both shingled frames).
+    * Shingles FIRST: a crash between the two writes then leaves only
+    * orphan shingle rows, which are recall-neutral (candidates come
+    * from the band join; an id with shingles but no bands is never a
+    * candidate). The reverse order would leave band rows whose
+    * candidate ids silently drop out of the verify join — near-dups
+    * admitted. */
+  private def storeWrite(sh: DataFrame, newShingles: DataFrame,
+                         path: String, numHashes: Int, bands: Int,
                          mode: SaveMode): Unit = {
-    val sh = shingled(docs, idCol, textCol, n)
-    // shingles FIRST: a crash between the two writes then leaves only
-    // orphan shingle rows, which are recall-neutral (candidates come from
-    // the band join; an id with shingles but no bands is never a
-    // candidate). The reverse order would leave band rows whose candidate
-    // ids silently drop out of the verify join — near-dups admitted.
-    sh.select(col("id"), col("shingles"))
+    newShingles.select(col("id"), col("shingles"))
       .write.mode(mode).parquet(s"$path/shingles")
     bandedSignatures(sh, numHashes, bands, numHashes / bands)
       // band-directory layout + bucket-sorted files: a probe join ships

@@ -52,6 +52,10 @@ object Pipeline {
 
     def has(name: String): Boolean = values.contains(name)
 
+    /** These params with `name` set to `value`. */
+    private[Pipeline] def updated(name: String, value: Any): Params =
+      new Params(op, values.updated(name, value))
+
     def str(name: String, default: Option[String] = None): String =
       get(name, default) match {
         case s: String => s
@@ -203,7 +207,7 @@ object Pipeline {
       extends Streaming(sqlParams.toSet)
   /** Streams, but its OUTPUT depends on micro-batch boundaries or
     * watermark progression (stateful windows/timers, arrival-order
-    * semantics): the unified gated runner ([[startGatedUnified]]) runs
+    * semantics): the unified gated runner ([[startStream]]) runs
     * it once in the streaming plan, so it must PRECEDE every quarantine
     * gate — from the first gate on, steps re-apply per materialized
     * micro-batch, where it would compute per-batch rows instead of the
@@ -2839,112 +2843,143 @@ object Pipeline {
       (s, p) => s.readStream.schema(parseDdl(p.str("schema")))
         .format("graftavro").load(p.str("path")))))
 
+  /** How a STREAMING sink step runs. Both forms compile from the
+    * step's params once, when the query starts. */
+  sealed trait StreamSink
+  /** A sink Spark runs itself: the compiled function starts the query
+    * on the frame it is handed. */
+  final case class NativeSink(compile: Params => DataFrame =>
+      org.apache.spark.sql.streaming.StreamingQuery) extends StreamSink
+  /** A per-micro-batch body: [[startStream]] starts the query under
+    * the step's `checkpoint` param and hands the body each micro-batch
+    * and its id (`foreachBatch`). A replayed micro-batch arrives with
+    * the same id, so a body is exactly-once when it overwrites a table
+    * keyed by the id ([[batchPath]]) or drops what an earlier attempt
+    * already applied. */
+  final case class BatchSink(compile: Params => (DataFrame, Long) => Unit)
+      extends StreamSink
+
   /** STREAMING sink steps — the LAST step of a streaming job config;
-    * each starts the query and returns it (the caller owns
-    * awaitTermination / stop). Append mode: the streamable step
-    * whitelist is stateless, so append is always legal. */
-  val streamSinkOps: Map[String, (Seq[String], Seq[String],
-      (DataFrame, Params) => org.apache.spark.sql.streaming.StreamingQuery)] =
+    * the started query returns to the caller, who owns
+    * awaitTermination / stop. The native sinks run in append mode:
+    * the streamable steps emit append-only rows. */
+  val streamSinkOps: Map[String, (Seq[String], Seq[String], StreamSink)] =
     Map(
       "write_stream_parquet" -> ((Seq("path", "checkpoint"), Seq(),
-        (df, p) => df.writeStream.format("parquet")
+        NativeSink(p => df => df.writeStream.format("parquet")
           .option("path", p.str("path"))
           .option("checkpointLocation", p.str("checkpoint"))
-          .outputMode("append").start())),
+          .outputMode("append").start()))),
       // test/dev sink: results land in an in-memory table named here
       "write_stream_memory" -> ((Seq("name"), Seq(),
-        (df, p) => df.writeStream.format("memory")
-          .queryName(p.str("name")).outputMode("append").start())),
+        NativeSink(p => df => df.writeStream.format("memory")
+          .queryName(p.str("name")).outputMode("append").start()))),
       // CDC sink: each micro-batch merges into a parquet snapshot
-      // (StreamOps.applyChangesStream — latest-seq-wins with the
-      // stale-change guard, atomic rename swap)
+      // (Layout.mergeSnapshot — latest-seq-wins with the stale-change
+      // guard; a whole-snapshot swap, or only the touched buckets)
       "merge_stream_snapshot" -> ((
         Seq("snapshot_path", "checkpoint", "key_cols"),
         Seq("seq_col", "op_col", "n_buckets"),
-        (df, p) => graft.streaming.StreamOps.applyChangesStream(df,
-          p.str("snapshot_path"), p.strs("key_cols"),
-          p.str("checkpoint"), p.str("seq_col", Some("seq")),
-          p.str("op_col", Some("op")),
-          if (p.has("n_buckets")) Some(p.int("n_buckets")) else None))),
-      // dedup sink: accepted documents append their LSH signatures
-      // to the persisted store (StreamOps.appendSignaturesStream —
-      // replays and the mid-append crash window converge clean)
+        BatchSink(p => {
+          val path = p.str("snapshot_path")
+          val keys = p.strs("key_cols")
+          require(keys.nonEmpty, "merge_stream_snapshot: key_cols is empty")
+          val seqC = p.str("seq_col", Some("seq"))
+          val opC = p.str("op_col", Some("op"))
+          val buckets =
+            if (p.has("n_buckets")) Some(p.int("n_buckets")) else None
+          (batch, _) => graft.sources.Layout.mergeSnapshot(
+            batch.sparkSession, path, batch, keys, buckets, seqC, opC)
+        }))),
+      // dedup sink: accepted documents append their LSH signatures to
+      // the persisted store (Dedup.appendBandSignatures — replays and
+      // the mid-append crash window converge clean). Gate FIRST, append
+      // survivors: probe → drop near-dups → this sink.
       "append_stream_signature_store" -> ((
         Seq("store_path", "checkpoint"),
         Seq("id_col", "text_col"),
-        (df, p) => graft.streaming.StreamOps.appendSignaturesStream(df,
-          p.str("store_path"), p.str("checkpoint"),
-          p.str("id_col", Some("doc_id")),
-          p.str("text_col", Some("text"))))),
-      // vector-store sink: embeddings append into a persisted IVF
-      // index under the centroids the build sink persisted
-      // (StreamOps.appendIvfIndexStream — replays are no-ops)
+        BatchSink(p => {
+          val path = p.str("store_path")
+          val id = p.str("id_col", Some("doc_id"))
+          val text = p.str("text_col", Some("text"))
+          (batch, _) => Dedup.appendBandSignatures(batch, id, text, path)
+        }))),
+      // vector-store sink: embeddings append into a persisted IVF index
+      // under the centroids the build sink persisted, loaded once at
+      // start (Similarity.appendIvfIndex — already-indexed ids drop, so
+      // replays are no-ops; retraining is a deliberate rebuild)
       "append_stream_ann_index" -> ((
         Seq("index_path", "centroids_path", "checkpoint"),
         Seq("id_col", "vec_col"),
-        (df, p) => {
+        BatchSink(p => {
           val cents = readCentroids(
             org.apache.spark.sql.SparkSession.active,
             p.str("centroids_path"))
           require(cents.nonEmpty,
             s"empty centroid store at ${p.str("centroids_path")}: " +
               "build the index first (build_ann_index)")
-          graft.streaming.StreamOps.appendIvfIndexStream(df,
-            p.str("index_path"), cents, p.str("checkpoint"),
-            p.str("id_col", Some("vec_id")),
-            p.str("vec_col", Some("embedding")))
-        })),
-      // percentile-monitoring sink: one mergeable GK quantile shard
-      // per micro-batch (StreamOps.quantileShardsStream)
-      "write_stream_quantile_shards" -> ((
-        Seq("path", "checkpoint", "value_col", "shard_cols"),
-        Seq("eps"),
-        (df, p) => graft.streaming.StreamOps.quantileShardsStream(df,
-          p.str("path"), p.str("checkpoint"), p.str("value_col"),
-          p.strs("shard_cols"), p.dbl("eps", Some(0.0))))),
-      // monitoring sink: one mergeable profile shard per micro-batch
-      // (StreamOps.profileShardsStream — profile_from_shards reads
-      // the corpus profile at any moment without rescanning)
-      "write_stream_profile_shards" -> ((
-        Seq("path", "checkpoint", "cols", "shard_cols"),
-        Seq(),
-        (df, p) => graft.streaming.StreamOps.profileShardsStream(df,
-          p.str("path"), p.str("checkpoint"), p.strs("cols"),
-          p.strs("shard_cols")))),
-      // distinct-count sink: one bounded register shard per
-      // micro-batch (StreamOps.cardinalityShardsStream —
-      // cardinality_from_shards reads the corpus estimates at any
-      // moment; cross-batch re-seen values collapse by max-merge)
-      "write_stream_cardinality_shards" -> ((
-        Seq("path", "checkpoint", "cols", "shard_cols"),
-        Seq("b"),
-        (df, p) => graft.streaming.StreamOps.cardinalityShardsStream(
-          df, p.str("path"), p.str("checkpoint"), p.strs("cols"),
-          p.strs("shard_cols"), p.int("b", Some(12))))),
+          val idx = p.str("index_path")
+          val id = p.str("id_col", Some("vec_id"))
+          val vec = p.str("vec_col", Some("embedding"))
+          (batch, _) => Similarity.appendIvfIndex(batch, idx, cents, id, vec)
+        }))),
+      // monitoring sinks: one mergeable shard per micro-batch, so the
+      // *_from_shards sources read the corpus summary at any moment
+      // without rescanning ingested data
+      "write_stream_quantile_shards" -> perBatchShards("write_quantile_shards"),
+      "write_stream_profile_shards" -> perBatchShards("write_profile_shards"),
+      "write_stream_cardinality_shards" ->
+        perBatchShards("write_cardinality_shards"),
       // retrieval sink: each micro-batch of documents folds into the
-      // persisted BM25 index (StreamOps.mergeSearchIndexStream —
-      // already-indexed ids skip, swap-in by rename)
+      // persisted BM25 index (TextSearch.mergeSearchIndex's posting
+      // union, swapped in by Layout.swapIn so probes always see a
+      // complete index). Doc ids already in the index drop first (one
+      // anti join against the postings' pruned doc_id column), so a
+      // replayed micro-batch is a no-op: first write wins per doc id —
+      // give a re-crawled revision a new id, or rebuild.
       "merge_stream_search_index" -> ((
         Seq("index_path", "checkpoint"),
         Seq("id_col", "text_col", "shards"),
-        (df, p) => graft.streaming.StreamOps.mergeSearchIndexStream(df,
-          p.str("index_path"), p.str("checkpoint"),
-          p.str("id_col", Some("doc_id")),
-          p.str("text_col", Some("text")),
-          p.int("shards", Some(0))))))
+        BatchSink(p => {
+          val idx = p.str("index_path")
+          val id = p.str("id_col", Some("doc_id"))
+          val text = p.str("text_col", Some("text"))
+          val shards = p.int("shards", Some(0))
+          (batch, _) => {
+            val spark = batch.sparkSession
+            graft.sources.Layout.swapIn(spark, idx, "merge") { tmp =>
+              val seen = spark.read.parquet(s"$idx/postings")
+                .select(col("doc_id").as("__seen")).distinct()
+              val fresh =
+                batch.join(seen, col(id) === col("__seen"), "left_anti")
+              !fresh.isEmpty && {
+                TextSearch.mergeSearchIndex(spark, idx, fresh, tmp, id,
+                  text, shards)
+                true
+              }
+            }
+          }
+        }))))
+
+  /** The streaming shard sink of the batch sink `op`: the batch sink's
+    * params plus `checkpoint`, and each micro-batch's shard written by
+    * the batch body under `path/batch=<id>` — overwritten when a
+    * micro-batch replays, so a replay rewrites its own shard instead
+    * of double-counting. The summaries are mergeable, so the reader
+    * over `path` sees every micro-batch's shard as one corpus. */
+  private def perBatchShards(op: String)
+      : (Seq[String], Seq[String], StreamSink) = {
+    val (required, optional, write) = sinkOps(op)
+    (required :+ "checkpoint", optional, BatchSink(p => {
+      val root = p.str("path")
+      (batch, id) => write(batch, p.updated("path", batchPath(root, id)))
+    }))
+  }
 
   /** Run a COMPLETE STREAMING job config: first step a streaming
-    * source, transforms from the streamable whitelist between, last
-    * step a streaming sink. The whole config validates — including
-    * the non-streamable-step rejection — before the source is
-    * touched; the started [[StreamingQuery]] returns to the caller.
-    *
-    * A chain carrying a STORE-FAILURES contract gate
-    * (`expect_condition` with `quarantine_path`) runs as ONE query
-    * through the unified gated runner ([[startGatedUnified]]): its
-    * survivors overwrite `<path>/batch=<id>` under the
-    * `write_stream_parquet` sink's path. The runner owns that write,
-    * so no other sink is legal in a gated config. */
+    * source, then the chain [[startStream]] starts over the source's
+    * frame. The whole config validates — including the
+    * non-streamable-step rejection — before the source is touched. */
   def startStreamSteps(spark: org.apache.spark.sql.SparkSession,
                        steps: Seq[Step],
                        extra: Map[String, OpSpec] = Map.empty)
@@ -2952,23 +2987,9 @@ object Pipeline {
     val expanded = expandIncludes(steps)
     require(expanded.size >= 2,
       "streaming job config needs a source step and a sink step")
-    val (source, sink) = (expanded.head, expanded.last)
+    val source = expanded.head
     val read = lookup(streamSourceOps, "first", "streaming source", source)
-    val write = lookup(streamSinkOps, "last", "streaming sink", sink)
-    val chain = expanded.slice(1, expanded.size - 1)
-    val sp = new Params(sink.op, sink.params)
-    val start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery =
-      if (chain.exists(isGate)) {
-        require(sink.op == "write_stream_parquet",
-          "gated streaming config: sink must be write_stream_parquet " +
-            "(the unified runner owns the survivors write); got " +
-            s"'${sink.op}'")
-        val run = compileGated(chain, extra)
-        run(_, sp.str("path"), sp.str("checkpoint"))
-      } else {
-        val f = compileStreaming(chain, extra)
-        df => write(f(df), sp)
-      }
+    val start = compileStream(expanded.tail, extra)
     start(read(spark, new Params(source.op, source.params)))
   }
 
@@ -2988,63 +3009,101 @@ object Pipeline {
       : org.apache.spark.sql.streaming.StreamingQuery =
     startStreamJson(spark, json, extra)
 
-  /** UNIFIED gated streaming: ONE StreamingQuery feeds every
-    * quarantine gate AND the survivors sink from the SAME
-    * materialized micro-batch. A batch-boundary-sensitive stateful
-    * step (e.g. `first_seen_flags_watermarked`) ahead of a gate
-    * therefore flags each row exactly once: the row is a survivor or
-    * quarantined, never lost and never both. The caller supplies the
-    * streaming source frame and the survivors path;
-    * [[startStreamSteps]] routes a complete gated job config here.
+  /** Start a streaming chain over the caller's frame: streamable steps,
+    * then a streaming sink step ([[streamSinkOps]]) last. Every step
+    * validates before the query starts.
     *
-    * Chain layout contract, validated eagerly: steps BEFORE the first
+    * A chain carrying a STORE-FAILURES contract gate
+    * (`expect_condition` with `quarantine_path`) runs as ONE query
+    * through the unified gated runner, and its sink must be
+    * `write_stream_parquet`: the runner owns the survivors write.
+    * The runner feeds every quarantine gate AND the survivors from the
+    * SAME materialized micro-batch, so a batch-boundary-sensitive
+    * stateful step (e.g. `first_seen_flags_watermarked`) ahead of a
+    * gate flags each row exactly once: the row is a survivor or
+    * quarantined, never lost and never both.
+    *
+    * Gated chain layout, validated eagerly: steps BEFORE the first
     * gate run once in the streaming plan (stateful steps allowed —
     * that is the point); the first gate and EVERYTHING after it
-    * re-apply per micro-batch inside one `foreachBatch`, so from the
-    * first gate on only stateless row-deterministic steps are legal
-    * ([[BatchSensitive]] entries rejected by name).
+    * re-apply per micro-batch, so from the first gate on only
+    * stateless row-deterministic steps are legal ([[BatchSensitive]]
+    * entries rejected by name).
     *
-    * Sinks: the survivors overwrite `sinkPath/batch=<id>` first, and
-    * that one job counts each gate's violations (a `Dataset.observe`
-    * at the gate's position); then each gate that quarantined rows
-    * overwrites `<quarantine_path>/gate=<name>/batch=<id>`, and a gate
-    * that quarantined none writes nothing (its batch table, if an
-    * earlier attempt left one, is deleted). BOTH roots are
+    * Gated writes: the survivors overwrite `<path>/batch=<id>` first,
+    * and that one job counts each gate's violations (a
+    * `Dataset.observe` at the gate's position); then each gate that
+    * quarantined rows overwrites `<quarantine_path>/gate=<name>/batch=<id>`,
+    * and a gate that quarantined none writes nothing (its batch table,
+    * if an earlier attempt left one, is deleted). BOTH roots are
     * replay-idempotent (a replayed micro-batch rewrites its own
     * tables, never double-appends), so reading either root as parquet
     * is end-to-end exactly-once with the batch id as a partition
     * column. The micro-batch is persisted for the duration of its
     * writes: every gate split and the survivors write observe one
     * pinned set of flagged rows. */
-  def startGatedUnified(src: DataFrame, steps: Seq[Step],
-                        sinkPath: String, checkpoint: String,
-                        extra: Map[String, OpSpec] = Map.empty)
+  def startStream(src: DataFrame, steps: Seq[Step],
+                  extra: Map[String, OpSpec] = Map.empty)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    compileGated(expandIncludes(steps), extra)(src, sinkPath, checkpoint)
+    compileStream(expandIncludes(steps), extra)(src)
+
+  /** [[startStream]]'s compile over an expanded chain ending in its
+    * sink step. */
+  private def compileStream(expanded: Seq[Step], extra: Map[String, OpSpec])
+      : DataFrame => org.apache.spark.sql.streaming.StreamingQuery = {
+    require(expanded.nonEmpty, "streaming chain needs a sink step")
+    val (chain, sink) = (expanded.init, expanded.last)
+    val kind = lookup(streamSinkOps, "last", "streaming sink", sink)
+    val p = new Params(sink.op, sink.params)
+    if (chain.exists(isGate)) {
+      require(sink.op == "write_stream_parquet",
+        "gated streaming config: sink must be write_stream_parquet " +
+          "(the unified runner owns the survivors write); got " +
+          s"'${sink.op}'")
+      compileGated(chain, extra, p.str("path"), p.str("checkpoint"))
+    } else {
+      val f = fromStepsStreaming(chain, extra)
+      val start = kind match {
+        case NativeSink(compile) => compile(p)
+        case BatchSink(compile) =>
+          startBatches(p.str("checkpoint"), compile(p))
+      }
+      df => start(f(df))
+    }
+  }
+
+  /** Start a query that hands each micro-batch and its id to `body`
+    * under `checkpoint` — the one `foreachBatch` of the engine, shared
+    * by the [[BatchSink]]s and the unified gated runner. */
+  private def startBatches(checkpoint: String,
+                           body: (DataFrame, Long) => Unit)
+      : DataFrame => org.apache.spark.sql.streaming.StreamingQuery =
+    df => df.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, id: Long) => body(batch, id) }
+      .start()
 
   /** A store-failures contract gate: the step the unified runner
     * splits each micro-batch on. */
   private def isGate(s: Step): Boolean =
     s.op == "expect_condition" && s.params.contains("quarantine_path")
 
-  /** [[startGatedUnified]]'s compile over an expanded chain: every
-    * step validates here, and the returned function starts the query
-    * on a source frame, survivors path and checkpoint. */
+  /** The unified gated runner ([[startStream]]) over a chain with a
+    * gate: every step validates here, and the returned function starts
+    * the query on a source frame, writing the survivors under
+    * `sinkPath`. */
   private def compileGated(expanded: Seq[Step],
-                           extra: Map[String, OpSpec])
-      : (DataFrame, String, String) =>
-        org.apache.spark.sql.streaming.StreamingQuery = {
+                           extra: Map[String, OpSpec], sinkPath: String,
+                           checkpoint: String)
+      : DataFrame => org.apache.spark.sql.streaming.StreamingQuery = {
     streamingValidate(expanded, extra)
     val registry = builtinOps ++ extra
     val firstGate = expanded.indexWhere(isGate)
-    require(firstGate >= 0,
-      "startGatedUnified: no store-failures gate (expect_condition " +
-        "with quarantine_path) in the chain — use startStreamSteps")
     val (pre, post) = expanded.splitAt(firstGate)
     val badPost = post.filterNot(isGate).map(_.op).distinct
       .filter(streamingOf(extra, _).isInstanceOf[BatchSensitive])
     require(badPost.isEmpty,
-      "startGatedUnified: batch-boundary-sensitive step(s) " +
+      "gated streaming config: batch-boundary-sensitive step(s) " +
         s"${badPost.sorted.mkString(", ")} after the first quarantine " +
         "gate — stateful steps must precede every gate (they run " +
         "once in the streaming plan; gates and later steps re-apply " +
@@ -3061,9 +3120,7 @@ object Pipeline {
           Left((quarantineTarget(p, "expect_condition").get, cond))
         } else Right(compileStep(registry, s))
       }
-    (src, sinkPath, checkpoint) => prefix(src).writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    val start = startBatches(checkpoint, { (batch, id) =>
         val pinned = batch.persist()
         try {
           // survivors first: the same job counts every gate's
@@ -3099,20 +3156,23 @@ object Pipeline {
           pinned.unpersist()
           ()
         }
-      }
-      .start()
+      })
+    src => start(prefix(src))
   }
 
+  /** A micro-batch's table under a per-batch root: `dir`/batch=<id>,
+    * keyed by the micro-batch id — the canonical exactly-once
+    * `foreachBatch` layout (a REPLAYED batch overwrites its own table
+    * instead of double-appending). Reading `dir` as parquet yields
+    * every row with the batch id as a partition column. */
+  private def batchPath(dir: String, id: Long): String = s"$dir/batch=$id"
+
   /** One micro-batch's table under a gated runner root (the survivors'
-    * `sinkPath` or a gate's quarantine directory): overwrite
-    * `dir`/batch=<id> — keyed by the micro-batch id, the canonical
-    * exactly-once `foreachBatch` sink pattern (a REPLAYED batch
-    * rewrites its own table instead of double-appending). Reading
-    * `dir` as parquet yields every row with the batch id as a
-    * partition column. */
+    * `sinkPath` or a gate's quarantine directory), overwritten at
+    * [[batchPath]]. */
   private[graft] def writeBatchTable(batch: DataFrame, dir: String,
                                      id: Long): Unit =
-    batch.write.mode("overwrite").parquet(s"$dir/batch=$id")
+    batch.write.mode("overwrite").parquet(batchPath(dir, id))
 
   /** The empty-gate side of [[writeBatchTable]]: a gate that
     * quarantined nothing in micro-batch `id` writes no table (no job,
@@ -3123,7 +3183,7 @@ object Pipeline {
   private[graft] def clearBatchTable(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       id: Long): Unit = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/batch=$id")
+    val path = new org.apache.hadoop.fs.Path(batchPath(dir, id))
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(path)) fs.delete(path, true)
     ()
@@ -3373,12 +3433,8 @@ object Pipeline {
     * starts. */
   def fromStepsStreaming(steps: Seq[Step],
                          extra: Map[String, OpSpec] = Map.empty)
-      : DataFrame => DataFrame =
-    compileStreaming(expandIncludes(steps), extra)
-
-  private def compileStreaming(expanded: Seq[Step],
-                               extra: Map[String, OpSpec])
       : DataFrame => DataFrame = {
+    val expanded = expandIncludes(steps)
     streamingValidate(expanded, extra)
     // quarantine mode needs a violation WRITE per micro-batch — only
     // the unified gated runner carries it; reject by PARAM here (the
@@ -3386,8 +3442,8 @@ object Pipeline {
     require(!expanded.exists(isGate),
       "streaming step 'expect_condition': quarantine_path needs the " +
         "unified gated runner — start the whole job with " +
-        "startStreamSteps / startStreamJson, or the chain over your " +
-        "own source with startGatedUnified")
+        "startStreamSteps / startStreamJson, or the chain and its " +
+        "write_stream_parquet sink over your own source with startStream")
     compileAll(builtinOps ++ extra, expanded)
   }
 
@@ -3448,13 +3504,6 @@ object Pipeline {
         "retries would emit divergent rows; derive randomness from " +
         "content instead (e.g. split_by_hash / sample_fraction)")
   }
-
-  /** Config text ([[parse]]) → compiled STREAMING pipeline
-    * ([[fromStepsStreaming]]). */
-  def fromJsonStreaming(json: String,
-                        extra: Map[String, OpSpec] = Map.empty)
-      : DataFrame => DataFrame =
-    fromStepsStreaming(parse(json), extra)
 
   /** Compile a step list against the registry (builtins plus `extra`;
     * extra entries override builtin names — the `register_function`

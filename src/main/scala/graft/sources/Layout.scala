@@ -136,55 +136,92 @@ object Layout {
     * re-establishes clustering (re-tightening min/max pruning the way
     * [[zOrderWrite]] does at first write).
     *
-    * Swap protocol: write to a sibling temp dir, rename the original
-    * aside, rename the rewrite in, delete the original — a failed
-    * swap-in restores the original and throws. Not atomic (HDFS
-    * renames are; object-store renames are not) — concurrent readers
-    * mid-swap see the old OR new listing, both complete; concurrent
-    * WRITERS to the directory are the caller's exclusion to hold.
-    * Returns (files_before, files_after). */
+    * Swap protocol: [[swapIn]] (the rewrite lands in a sibling temp
+    * dir and renames in; a directory a crashed swap left parked is
+    * restored first). Concurrent WRITERS to the directory are the
+    * caller's exclusion to hold. Returns (files_before, files_after). */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
               targetBytes: Long = 128L << 20,
               sortCol: Option[String] = None): (Int, Int) = {
     require(targetBytes > 0, "targetBytes must be positive")
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = fs.listStatus(p)
+    def parquetFiles() = fs.listStatus(p)
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    require(files.nonEmpty, s"compact: no parquet files under $path")
-    val total = files.map(_.getLen).sum
-    val nOut = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-    val df = spark.read.parquet(path)
-    val rewrite = sortCol match {
-      case Some(c) =>
-        df.repartitionByRange(nOut, col(c)).sortWithinPartitions(col(c))
-      case None =>
-        // coalesce is the zero-shuffle path, but it can only REDUCE the
-        // scan's partition count — and a small-file scan packs many
-        // files into few input partitions (maxPartitionBytes), so when
-        // the scan under-partitions the target, fall back to a
-        // round-robin shuffle (cheap by definition: the total is small
-        // enough that more files were wanted)
-        if (df.rdd.getNumPartitions >= nOut) df.coalesce(nOut)
-        else df.repartition(nOut)
+    var before = 0
+    swapIn(spark, path, "compact") { tmp =>
+      val files = parquetFiles()
+      require(files.nonEmpty, s"compact: no parquet files under $path")
+      before = files.length
+      val total = files.map(_.getLen).sum
+      val nOut =
+        math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
+      val df = spark.read.parquet(path)
+      val rewrite = sortCol match {
+        case Some(c) =>
+          df.repartitionByRange(nOut, col(c)).sortWithinPartitions(col(c))
+        case None =>
+          // coalesce is the zero-shuffle path, but it can only REDUCE
+          // the scan's partition count — and a small-file scan packs
+          // many files into few input partitions (maxPartitionBytes),
+          // so when the scan under-partitions the target, fall back to
+          // a round-robin shuffle (cheap by definition: the total is
+          // small enough that more files were wanted)
+          if (df.rdd.getNumPartitions >= nOut) df.coalesce(nOut)
+          else df.repartition(nOut)
+      }
+      rewrite.write.mode("overwrite").parquet(tmp)
+      true
     }
+    (before, parquetFiles().length)
+  }
+
+  /** Rewrite the directory at `path` through a sibling temp dir and swap
+    * the rewrite in by rename — the one swap behind [[compact]] and the
+    * streaming snapshot and search-index merges. `produce` writes the
+    * new version to the temp path it is handed, while `path` is still
+    * readable, and returns whether it wrote one (false leaves `path`
+    * as it is). The temp and parked dirs are `<path>__<tag>_tmp` and
+    * `<path>__<tag>_old`.
+    *
+    * Visibility: the two-rename swap has a TRANSIENT window between
+    * `rename(path, old)` and `rename(tmp, path)` in which `path` does
+    * not exist — a concurrent reader in that window gets FileNotFound
+    * and must retry; a reader outside it sees either the complete old
+    * version or the complete new one, never a half-written directory
+    * (HDFS renames are atomic; object-store renames are not). A failed
+    * swap-in restores the original and throws.
+    *
+    * Crash healing: a driver crash inside that window leaves the
+    * directory parked at `old`. On entry, if `path` is missing but
+    * `old` exists, it is renamed back before `produce` runs — so a
+    * restarted stream or a re-run compaction heals the park instead
+    * of failing its first read. */
+  private[graft] def swapIn(spark: org.apache.spark.sql.SparkSession,
+                            path: String, tag: String)
+                           (produce: String => Boolean): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-      p.getName + "__compact_tmp")
+      s"${p.getName}__${tag}_tmp")
     val old = new org.apache.hadoop.fs.Path(p.getParent,
-      p.getName + "__compact_old")
-    rewrite.write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(p, old)) throw new IllegalStateException(
-      s"compact: could not move $path aside — directory left untouched")
-    if (!fs.rename(tmp, p)) {
-      fs.rename(old, p) // restore; the rewrite stays in tmp for debugging
+      s"${p.getName}__${tag}_old")
+    if (!fs.exists(p) && fs.exists(old) && !fs.rename(old, p))
       throw new IllegalStateException(
-        s"compact: swap-in failed — original restored, rewrite at $tmp")
+        s"$tag: crash recovery failed — could not restore $old")
+    if (fs.exists(tmp)) fs.delete(tmp, true)
+    if (produce(tmp.toString)) {
+      if (fs.exists(old)) fs.delete(old, true)
+      if (!fs.rename(p, old)) throw new IllegalStateException(
+        s"$tag: could not move $path aside — directory left untouched")
+      if (!fs.rename(tmp, p)) {
+        fs.rename(old, p) // restore; the rewrite stays in tmp for debugging
+        throw new IllegalStateException(
+          s"$tag: swap-in failed — original restored, rewrite at $tmp")
+      }
+      fs.delete(old, true)
     }
-    fs.delete(old, true)
-    val after = fs.listStatus(p)
-      .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    (files.length, after)
+    ()
   }
 
   /** Snapshot diff between two versions of a keyed dataset: which rows
@@ -343,8 +380,10 @@ object Layout {
     * Crash safety: per-partition overwrite is not atomic across
     * buckets, but re-running the SAME merge is idempotent (latest
     * upserts rewrite the same payload, deletes of absent keys are
-    * no-ops), so recovery is re-run, not restore. Returns the
-    * touched bucket ids. */
+    * no-ops), so recovery is re-run, not restore. `dropStale` applies
+    * [[freshChanges]]' guard against the touched buckets, and a batch
+    * with nothing left after it rewrites nothing. Returns the touched
+    * bucket ids. */
   def applyChangesBucketed(spark: org.apache.spark.sql.SparkSession,
                            path: String, changes: DataFrame,
                            keyCols: Seq[String], nBuckets: Int,
@@ -358,23 +397,10 @@ object Layout {
     if (touched.isEmpty) return touched
     val slice = spark.read.parquet(path)
       .filter(col("__bucket").isin(touched: _*))
-    // the streaming stale-guard, partition-pruned: a change at or
-    // below the snapshot's applied seq for its key is dropped, so
-    // late arrivals cannot overwrite newer state and replayed
-    // micro-batches re-apply as no-ops. The guard join reads only the
-    // TOUCHED buckets' (key, seq) columns — never the corpus.
+    // the stale guard, partition-pruned: it reads only the TOUCHED
+    // buckets' (key, seq) columns — never the corpus
     val eligible =
-      if (!dropStale || !slice.columns.contains(seqCol)) chg
-      else {
-        val cur = slice.select(
-          keyCols.map(c => col(c).as(s"__s_$c")) :+
-            col(seqCol).as("__s_seq"): _*)
-        val on = keyCols.map(c => col(c) <=> col(s"__s_$c"))
-          .reduce(_ && _)
-        chg.join(cur, on, "left")
-          .filter(col("__s_seq").isNull || col(seqCol) > col("__s_seq"))
-          .select(chg.columns.map(col): _*)
-      }
+      if (dropStale) freshChanges(chg, slice, keyCols, seqCol) else chg
     if (dropStale && eligible.isEmpty) return Seq.empty // full replay:
     // nothing eligible, skip the (identical) rewrite entirely
     val merged = applyChanges(slice, eligible, keyCols, seqCol, opCol)
@@ -398,5 +424,60 @@ object Layout {
         true)
     }
     touched
+  }
+
+  /** The stale-change guard of the streaming snapshot merges: drop each
+    * change at or below `current`'s seq for its key, so late arrivals
+    * cannot overwrite newer state and a replayed micro-batch re-applies
+    * as a no-op. Cost: one left join of the changes against `current`'s
+    * (key, seq) projection. Without `seqCol` in `current` every change
+    * passes (replay of the same batch is still idempotent; cross-batch
+    * seq order is then the source's to guarantee). */
+  private def freshChanges(changes: DataFrame, current: DataFrame,
+                           keyCols: Seq[String],
+                           seqCol: String): DataFrame =
+    if (!current.columns.contains(seqCol)) changes
+    else {
+      val cur = current.select(
+        keyCols.map(c => col(c).as(s"__s_$c")) :+
+          col(seqCol).as("__s_seq"): _*)
+      val on = keyCols.map(c => col(c) <=> col(s"__s_$c")).reduce(_ && _)
+      changes.join(cur, on, "left")
+        .filter(col("__s_seq").isNull || col(seqCol) > col("__s_seq"))
+        .select(changes.columns.map(col): _*)
+    }
+
+  /** Merge one micro-batch of a CDC change stream into the parquet
+    * snapshot at `path` — the per-batch body of the
+    * `merge_stream_snapshot` sink. The snapshot must exist (write an
+    * initial one, possibly empty but with its schema, before the
+    * stream starts); keep `seqCol` in it so [[freshChanges]]' stale
+    * guard can drop late and replayed changes.
+    *
+    * `nBuckets = None`: [[applyChanges]]' broadcast-anti plan over the
+    * whole snapshot (which never shuffles), rewritten through
+    * [[swapIn]], so a concurrent reader never sees a half-written
+    * snapshot. `nBuckets = Some(n)` is the 100 TB path: the snapshot
+    * lives in the [[writeBucketedSnapshot]] layout and
+    * [[applyChangesBucketed]] rewrites ONLY the buckets the batch's
+    * keys touch, skipping a fully-stale batch entirely — per-batch IO
+    * ∝ the delta's bucket spread, never the snapshot. */
+  def mergeSnapshot(spark: org.apache.spark.sql.SparkSession, path: String,
+                    changes: DataFrame, keyCols: Seq[String],
+                    nBuckets: Option[Int], seqCol: String,
+                    opCol: String): Unit = nBuckets match {
+    case Some(n) =>
+      applyChangesBucketed(spark, path, changes, keyCols, n, seqCol, opCol,
+        dropStale = true)
+      ()
+    case None =>
+      swapIn(spark, path, "merge") { tmp =>
+        // the write reads the CURRENT snapshot while producing tmp; the
+        // swap happens only after it completes
+        val snap = spark.read.parquet(path)
+        applyChanges(snap, freshChanges(changes, snap, keyCols, seqCol),
+          keyCols, seqCol, opCol).write.mode("overwrite").parquet(tmp)
+        true
+      }
   }
 }

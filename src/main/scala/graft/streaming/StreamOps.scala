@@ -13,7 +13,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `StreamingSpec`. So is every other stateless batch operator: it
   * needs no form here, and the config registry streams it under its
   * batch name (`Pipeline.OpSpec.streaming`). The operators here are the
-  * stateful ones that need watermarks, and the streaming sinks.
+  * stateful ones that need watermarks. The streaming sinks are
+  * per-micro-batch bodies over the batch operators, in
+  * `Pipeline.streamSinkOps`.
   *
   * Scale notes: all state is keyed, and everything EVENT-sized is
   * bounded by the watermark horizon. The one exception is
@@ -1097,276 +1099,6 @@ object StreamOps {
   case class TransitionPair(user_id: Long, src_type: String,
                             dst_type: String)
   case class TransState(lastFinal: Option[Scd2Buf], buf: Seq[Scd2Buf])
-
-  /** Streaming snapshot maintenance — the streaming form of
-    * `Layout.applyChanges`: a CDC change stream (key + payload +
-    * `seqCol` + `opCol` ∈ upsert|delete) continuously merges into a
-    * parquet snapshot, micro-batch by micro-batch, via
-    * `foreachBatch`. The snapshot must exist (write an initial one,
-    * possibly empty-but-schema'd, before starting).
-    *
-    * Ordering + replay safety: when the snapshot carries `seqCol` as
-    * a payload column (recommended — include it in the initial
-    * write), each batch first drops STALE changes (change.seq ≤ the
-    * snapshot's seq for that key), so late-arriving lower-seq
-    * changes cannot overwrite newer state, and a micro-batch
-    * REPLAYED after a checkpoint/swap race re-applies as a no-op —
-    * end-to-end idempotent without a transaction log. Without
-    * `seqCol` in the snapshot, replay of the SAME batch is still
-    * idempotent (same upserts/deletes), but cross-batch seq order
-    * must be guaranteed by the source.
-    *
-    * Scale shape per batch: `applyChanges`' broadcast-anti plan (the
-    * snapshot never shuffles), plus — for the stale guard — one
-    * left join of the BATCH against the snapshot's (key, seq)
-    * projection. The rewrite lands in a sibling tmp dir and swaps in
-    * by rename (the `Layout.compact` discipline), so a concurrent
-    * reader never sees a half-written snapshot.
-    *
-    * `nBuckets = Some(n)` switches to the 100 TB path: the snapshot
-    * must live in the `Layout.writeBucketedSnapshot` layout, each
-    * micro-batch rewrites ONLY the `__bucket=N` directories its keys
-    * touch (`applyChangesBucketed` with the partition-pruned stale
-    * guard), and a fully-stale replayed batch skips the rewrite
-    * entirely — per-batch IO ∝ the delta's bucket spread, never the
-    * snapshot. */
-  def applyChangesStream(changes: DataFrame, snapshotPath: String,
-                         keyCols: Seq[String], checkpoint: String,
-                         seqCol: String = "seq", opCol: String = "op",
-                         nBuckets: Option[Int] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(keyCols.nonEmpty, "keyCols must be non-empty")
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        nBuckets match {
-          case Some(n) =>
-            // the 100 TB path: the snapshot lives in the
-            // writeBucketedSnapshot layout, each batch rewrites ONLY
-            // the buckets its keys touch, and the stale-guard join is
-            // partition-pruned to those buckets
-            graft.sources.Layout.applyChangesBucketed(
-              batch.sparkSession, snapshotPath, batch, keyCols, n,
-              seqCol, opCol, dropStale = true)
-            ()
-          case None =>
-            val spark = batch.sparkSession
-            val snap = spark.read.parquet(snapshotPath)
-            val eligible =
-              if (!snap.columns.contains(seqCol)) batch
-              else {
-                val cur = snap.select(
-                  keyCols.map(c => col(c).as(s"__s_$c")) :+
-                    col(seqCol).as("__s_seq"): _*)
-                val on = keyCols.map(c => col(c) <=> col(s"__s_$c"))
-                  .reduce(_ && _)
-                batch.join(cur, on, "left")
-                  .filter(col("__s_seq").isNull ||
-                    col(seqCol) > col("__s_seq"))
-                  .select(batch.columns.map(col): _*)
-              }
-            val merged = graft.sources.Layout.applyChanges(
-              snap, eligible, keyCols, seqCol, opCol)
-            // the write action reads the CURRENT snapshot while
-            // producing tmp; the swap happens only after it completes
-            writeAndSwap(spark, snapshotPath, "applyChangesStream")(tmp =>
-              merged.write.mode("overwrite").parquet(tmp))
-        }
-      }
-      .start()
-  }
-
-  /** Produce a rewrite of a live directory into a sibling tmp (the
-    * caller's `produce` runs with the live path still readable),
-    * then swap it in by rename — the `Layout.compact` discipline.
-    *
-    * Visibility: the two-rename swap has a TRANSIENT window between
-    * `rename(live, old)` and `rename(tmp, live)` in which the live
-    * path does not exist — a concurrent reader in that window gets
-    * FileNotFound and must retry; a reader outside it sees either
-    * the complete old version or the complete new one, never a
-    * half-written directory. (Readers that must never miss need a
-    * versioned-dir + pointer-file indirection instead.)
-    *
-    * Crash recovery: a driver crash inside that window leaves the
-    * snapshot parked at `__merge_old`. On entry, if the live path is
-    * missing but `__merge_old` exists, it is renamed back before
-    * producing — so a restarted stream heals the park instead of
-    * failing its first read. */
-  private def writeAndSwap(spark: org.apache.spark.sql.SparkSession,
-                           livePath: String, what: String)
-                          (produce: String => Unit): Unit = {
-    val p = new org.apache.hadoop.fs.Path(livePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-      p.getName + "__merge_tmp")
-    val old = new org.apache.hadoop.fs.Path(p.getParent,
-      p.getName + "__merge_old")
-    if (!fs.exists(p) && fs.exists(old) && !fs.rename(old, p))
-      throw new IllegalStateException(
-        s"$what: crash recovery failed — could not restore $old")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    produce(tmp.toString)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(p, old)) throw new IllegalStateException(
-      s"$what: could not move $livePath aside")
-    if (!fs.rename(tmp, p)) {
-      fs.rename(old, p)
-      throw new IllegalStateException(
-        s"$what: swap-in failed — original restored, rewrite at $tmp")
-    }
-    fs.delete(old, true)
-  }
-
-  /** Continuously-refreshed retrieval: a document stream folds into
-    * the persisted BM25 index (`TextSearch.writeSearchIndex` layout)
-    * one micro-batch at a time — `TextSearch.mergeSearchIndex`'s
-    * posting-union merge into a sibling tmp, swapped in by rename,
-    * so concurrent `bm25FromIndex` probes always see a complete
-    * index. The index must exist before the stream starts (write an
-    * initial one, possibly from an empty corpus).
-    *
-    * Idempotence: each batch first drops doc ids ALREADY in the
-    * index (one anti join against the postings' pruned doc_id
-    * column), so a micro-batch replayed after a checkpoint/swap race
-    * re-applies as a no-op instead of tripping the merge's
-    * disjointness gate. Consequence: first write wins per doc id —
-    * a re-crawled document with changed text is NOT re-indexed;
-    * dedup/versioning belongs upstream (give revisions new ids or
-    * rebuild the shard). Per-batch cost: the merge's posting union
-    * (∝ index + batch) plus the pruned id scan — never corpus×batch
-    * pairing. */
-  def mergeSearchIndexStream(docs: DataFrame, indexPath: String,
-                             checkpoint: String,
-                             idCol: String = "doc_id",
-                             textCol: String = "text",
-                             shards: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val existing = spark.read.parquet(s"$indexPath/postings")
-          .select(col("doc_id").as("__seen")).distinct()
-        val fresh = batch
-          .join(existing, col(idCol) === col("__seen"), "left_anti")
-        if (!fresh.isEmpty) {
-          writeAndSwap(spark, indexPath, "mergeSearchIndexStream")(tmp =>
-            graft.operators.TextSearch.mergeSearchIndex(
-              spark, indexPath, fresh, tmp, idCol, textCol, shards))
-        }
-      }
-      .start()
-
-  /** Incremental corpus statistics from a stream: each micro-batch
-    * persists ONE mergeable profile shard (`Stats.writeProfileShards`
-    * layout) under `path/batch=<id>`, so `Stats.profileFromShards`
-    * over `path` yields the corpus profile at any moment WITHOUT
-    * rescanning ingested data — the monitoring half of a streaming
-    * ingest gate (row counts, null rates, min/max/mean drift), at
-    * one bounded summary row-group per batch per shard key.
-    *
-    * Idempotence: the shard directory is keyed by the micro-batch id
-    * and written with overwrite, the canonical exactly-once
-    * `foreachBatch` sink pattern — a replayed batch rewrites its own
-    * shard instead of double-counting. */
-  def profileShardsStream(docs: DataFrame, path: String,
-                          checkpoint: String, cols: Seq[String],
-                          shardCols: Seq[String])
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.Stats.writeProfileShards(
-          batch, s"$path/batch=$id", cols, shardCols)
-      }
-      .start()
-
-  /** Incremental distinct counting from a stream: each micro-batch
-    * persists ONE bounded register shard
-    * (`Stats.writeCardinalityShards` layout) under `path/batch=<id>`,
-    * so `Stats.cardinalityFromShards` over `path` yields the
-    * corpus-level distinct estimates at any moment WITHOUT rescanning
-    * ingested data — registers merge by MAX, so re-seen values across
-    * batches collapse instead of double-counting (the property
-    * per-batch `count(DISTINCT)` sums fundamentally lack).
-    *
-    * Idempotence: shard directory keyed by the micro-batch id,
-    * written with overwrite — a replayed batch rewrites its own
-    * shard, the [[profileShardsStream]] pattern. State is ZERO in
-    * the stream itself; the parquet registers ARE the sketch,
-    * bounded by m per (column, shard key, batch). */
-  def cardinalityShardsStream(docs: DataFrame, path: String,
-                              checkpoint: String, cols: Seq[String],
-                              shardCols: Seq[String], b: Int = 12)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.Stats.writeCardinalityShards(
-          batch, s"$path/batch=$id", cols, shardCols, b)
-      }
-      .start()
-
-  /** Growing vector store: an embedding stream appends into a
-    * persisted IVF index under its FIXED centroids
-    * (`Similarity.appendIvfIndex` per micro-batch — already-indexed
-    * ids drop, so replays are no-ops; probes pick new vectors up
-    * through the same partition-pruned reads). Retraining centroids
-    * is a deliberate rebuild, never in-stream drift. */
-  def appendIvfIndexStream(vectors: DataFrame, indexPath: String,
-                           centroids: Seq[Seq[Double]],
-                           checkpoint: String,
-                           idCol: String = "vec_id",
-                           vecCol: String = "embedding")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Similarity.appendIvfIndex(batch, indexPath,
-          centroids, idCol, vecCol)
-      }
-      .start()
-
-  /** Streaming ingest into the persisted LSH signature store: each
-    * micro-batch of ACCEPTED documents appends its signatures
-    * (`Dedup.appendBandSignaturesIdempotent` — replays and the
-    * mid-append crash window both converge duplicate-free), so
-    * `Dedup.minHashLshPairsAgainstStore` probes see the corpus grow
-    * batch by batch. Gate FIRST, append
-    * survivors: the standard ingest loop is probe → drop near-dups →
-    * this sink. */
-  def appendSignaturesStream(docs: DataFrame, path: String,
-                             checkpoint: String,
-                             idCol: String = "doc_id",
-                             textCol: String = "text")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Dedup.appendBandSignaturesIdempotent(
-          batch, idCol, textCol, path)
-      }
-      .start()
-
-  /** Incremental quantiles from a stream — the [[profileShardsStream]]
-    * pattern over the mergeable GK summary: each micro-batch persists
-    * one quantile shard under `path/batch=<id>` (overwritten on
-    * replay — idempotent), and `Stats.quantilesFromShards` over
-    * `path` answers percentile queries at any moment without
-    * rescanning ingested data. ε = 0 is the exact mergeable regime;
-    * ε > 0 bounds shard size at O((1/ε)·log εn). */
-  def quantileShardsStream(docs: DataFrame, path: String,
-                           checkpoint: String, valueCol: String,
-                           shardCols: Seq[String], eps: Double = 0.0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.Stats.writeQuantileShards(
-          batch, s"$path/batch=$id", valueCol, shardCols, eps)
-      }
-      .start()
 
   /** Arrival-order first-seen flags: every row rides through with a
     * boolean `flagCol` — true iff the row is the FIRST occurrence of

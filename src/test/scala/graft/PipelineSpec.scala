@@ -1640,7 +1640,7 @@ class PipelineSpec extends AnyFunSuite {
         Map("condition" -> "v > 0", "name" -> "g",
           "quarantine_path" -> q))))
     }
-    assert(ns.getMessage.contains("startGatedUnified"))
+    assert(ns.getMessage.contains("own source with startStream"))
     Pipeline.fromStepsStreaming(Seq(Step("expect_condition",
       Map("condition" -> "v > 0")))) // abort mode still streams
   }

@@ -103,6 +103,18 @@ class SourcesSpec extends AnyFunSuite {
       s"expected disjoint sorted ranges, got ${ranges.toSeq}")
   }
 
+  test("compact restores a directory a crashed swap left parked, then " +
+       "compacts it") {
+    // a crash between the swap's two renames leaves the data only at
+    // <path>__compact_old; the next compaction renames it back first
+    val base = java.nio.file.Files.createTempDirectory("graft-compact-heal")
+    val dir = base.resolve("t").toString
+    spark.range(0, 300).repartition(6).write.parquet(s"${dir}__compact_old")
+    assert(graft.sources.Layout.compact(spark, dir) == ((6, 1)))
+    assert(spark.read.parquet(dir).count() == 300)
+    assert(base.toFile.list().toSeq == Seq("t"))
+  }
+
   test("jsonl round-trips content, types, and JSON-hostile strings") {
     val spark = SparkTestSession.spark
     import spark.implicits._
@@ -864,13 +876,14 @@ class SourcesSpec extends AnyFunSuite {
       s.range(0, 50).write.mode("overwrite").parquet(t)
       val qdir = base.resolve("quarantine").toString
       val input = MemoryStream[(Long, Long)]
-      val q = Pipeline.startGatedUnified(input.toDS().toDF("k", "v"),
+      val q = Pipeline.startStream(input.toDS().toDF("k", "v"),
         Pipeline.parse(
           s"""[{"op": "expect_condition",
              |  "params": {"condition": "v > 0", "name": "v_pos",
-             |             "quarantine_path": "$qdir"}}]""".stripMargin),
-        base.resolve("survivors").toString,
-        base.resolve("ckpt").toString)
+             |             "quarantine_path": "$qdir"}}]""".stripMargin) :+
+          Pipeline.Step("write_stream_parquet",
+            Map("path" -> base.resolve("survivors").toString,
+              "checkpoint" -> base.resolve("ckpt").toString)))
       input.addData((1L, 5L), (2L, -1L))
       q.processAllAvailable()
       q.stop()
@@ -902,7 +915,6 @@ class SourcesSpec extends AnyFunSuite {
     import org.apache.spark.sql.graftext.PslRules
     import graft.operators.Pipeline
     import graft.sources.{Layout, Warc}
-    import graft.streaming.StreamOps
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
@@ -946,13 +958,15 @@ class SourcesSpec extends AnyFunSuite {
       java.nio.file.Files.write(dir.resolve("a.warc.gz"),
         gz(warcRecBytes("response", "one".getBytes)))
       assert(Warc.readWarcGz(s, Seq(at("a.warc.gz"))).count() == 1)
-      // StreamOps.applyChangesStream's swap of the merged snapshot
+      // the merge_stream_snapshot sink's swap of the merged snapshot
       val cdc = at("cdc")
       Seq((1L, "a", 10, 0L), (2L, "b", 20, 0L)).toDF("id", "s", "v", "seq")
         .coalesce(1).write.parquet(cdc)
       val input = MemoryStream[CdcChg]
-      val q = StreamOps.applyChangesStream(input.toDF(), cdc, Seq("id"),
-        dir.resolve("ckpt").toString)
+      val q = Pipeline.startStream(input.toDF(), Seq(Pipeline.Step(
+        "merge_stream_snapshot", Map("snapshot_path" -> cdc,
+          "checkpoint" -> dir.resolve("ckpt").toString,
+          "key_cols" -> Seq("id")))))
       input.addData(CdcChg(2, 1, "upsert", "b2", 21),
         CdcChg(1, 1, "delete", null, 0))
       q.processAllAvailable()

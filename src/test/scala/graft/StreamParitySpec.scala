@@ -24,7 +24,7 @@ import graft.operators.Pipeline.{BatchOnly, BatchSensitive, Step}
   * closing events that advance the watermark past every one of them. */
 class StreamParitySpec extends AnyFunSuite {
   import SparkTestSession._
-  import StreamParitySpec.Parity
+  import StreamParitySpec.{Parity, multiset}
 
   private val dir = java.nio.file.Files
     .createTempDirectory("graft-stream-parity").toString
@@ -449,24 +449,6 @@ class StreamParitySpec extends AnyFunSuite {
 
   // ---- the checks ----
 
-  /** Cell values in a form `==` compares by content (binary cells are
-    * arrays). */
-  private def norm(v: Any): Any = v match {
-    case a: Array[_] => a.toSeq.map(norm)
-    case r: Row => r.toSeq.map(norm)
-    case m: scala.collection.Map[_, _] =>
-      m.map { case (k, x) => norm(k) -> norm(x) }.toMap
-    case s: scala.collection.Seq[_] => s.map(norm).toSeq
-    case other => other
-  }
-
-  private def multiset(df: DataFrame): Map[Seq[Any], Int] =
-    multiset(df.collect().toSeq)
-
-  private def multiset(rows: Seq[Row]): Map[Seq[Any], Int] =
-    rows.map(r => r.toSeq.map(norm)).groupBy(identity)
-      .map { case (k, v) => k -> v.length }
-
   table.zipWithIndex.foreach { case (p, i) =>
     test(s"stream == batch: ${p.title}") {
       fixtures
@@ -513,6 +495,10 @@ class StreamParitySpec extends AnyFunSuite {
         "StreamParitySpec.table")
   }
 
+  /** The sink a gated chain ends in: the unified runner's survivors. */
+  private val survivorsSink = Step("write_stream_parquet",
+    Map("path" -> s"$dir/out", "checkpoint" -> s"$dir/ck"))
+
   // compile-only: from the first quarantine gate on, steps re-apply per
   // micro-batch, so a batch-sensitive step there must be rejected by name
   table.filter(_.sensitive).foreach { p =>
@@ -520,8 +506,8 @@ class StreamParitySpec extends AnyFunSuite {
       val gate = Step("expect_condition", Map("condition" -> "true",
         "name" -> "g", "quarantine_path" -> s"$dir/quarantine"))
       val e = intercept[IllegalArgumentException] {
-        Pipeline.startGatedUnified(spark.emptyDataFrame,
-          Seq(gate, Step(p.op, p.params)), s"$dir/out", s"$dir/ck")
+        Pipeline.startStream(spark.emptyDataFrame,
+          Seq(gate, Step(p.op, p.params), survivorsSink))
       }
       assert(e.getMessage.contains("batch-boundary-sensitive") &&
         e.getMessage.contains(p.op), e.getMessage)
@@ -535,8 +521,8 @@ class StreamParitySpec extends AnyFunSuite {
     val gate = Step("expect_condition", Map("condition" -> "true",
       "name" -> "g", "quarantine_path" -> s"$dir/quarantine"))
     val e = intercept[IllegalArgumentException] {
-      Pipeline.startGatedUnified(spark.emptyDataFrame,
-        Seq(gate, Step("per_key_counts")), s"$dir/out", s"$dir/ck",
+      Pipeline.startStream(spark.emptyDataFrame,
+        Seq(gate, Step("per_key_counts"), survivorsSink),
         extra = Map("per_key_counts" -> counted))
     }
     assert(e.getMessage.contains("per_key_counts"))
@@ -578,16 +564,35 @@ class StreamParitySpec extends AnyFunSuite {
 
   test("rand() in a quarantine gate's condition is rejected") {
     val e = intercept[IllegalArgumentException] {
-      Pipeline.startGatedUnified(spark.emptyDataFrame,
+      Pipeline.startStream(spark.emptyDataFrame,
         Seq(Step("expect_condition", Map("condition" -> "rand() < 0.5",
-          "name" -> "g", "quarantine_path" -> s"$dir/quarantine"))),
-        s"$dir/out", s"$dir/ck")
+          "name" -> "g", "quarantine_path" -> s"$dir/quarantine")),
+          survivorsSink))
     }
     assert(e.getMessage.contains("non-deterministic"), e.getMessage)
   }
 }
 
 object StreamParitySpec {
+  /** Cell values in a form `==` compares by content (binary cells are
+    * arrays). */
+  private def norm(v: Any): Any = v match {
+    case a: Array[_] => a.toSeq.map(norm)
+    case r: Row => r.toSeq.map(norm)
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => norm(k) -> norm(x) }.toMap
+    case s: scala.collection.Seq[_] => s.map(norm).toSeq
+    case other => other
+  }
+
+  /** A frame's rows as a multiset of content-compared cells. */
+  def multiset(df: DataFrame): Map[Seq[Any], Int] =
+    multiset(df.collect().toSeq)
+
+  def multiset(rows: Seq[Row]): Map[Seq[Any], Int] =
+    rows.map(r => r.toSeq.map(norm)).groupBy(identity)
+      .map { case (k, v) => k -> v.length }
+
   /** A parity row. `input` is the batch input; the stream gets its
     * rows in two chunks (`chunk` true, then false), then each `closing`
     * row in a chunk of its own, and `keep` drops the closing rows'

@@ -21,8 +21,6 @@ case class GzDoc(doc_id: Long, blob: Array[Byte])
 
 case class CdcChg(id: Long, seq: Long, op: String, s: String, v: Int)
 
-case class VecRow(vec_id: Long, embedding: Seq[Float])
-
 /** Structured Streaming behavior: the parity engine is a stateless
   * projection and runs unchanged on streams; stateful ops are watermarked. */
 class StreamingSpec extends AnyFunSuite {
@@ -2117,7 +2115,7 @@ class StreamingSpec extends AnyFunSuite {
     val batch = Pipeline.fromJson(cfg)(docsDf).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet
     val input = MemoryStream[LangDoc]
-    val out = Pipeline.fromJsonStreaming(cfg)(input.toDF())
+    val out = Pipeline.fromStepsStreaming(Pipeline.parse(cfg))(input.toDF())
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("pipe_stream")
       .outputMode("append").start()
@@ -2134,11 +2132,11 @@ class StreamingSpec extends AnyFunSuite {
     // non-streamable steps reject at compile time, naming themselves
     // AND the streamable whitelist
     val e = intercept[IllegalArgumentException] {
-      Pipeline.fromJsonStreaming(
+      Pipeline.fromStepsStreaming(Pipeline.parse(
         """[{"op": "drop_exact_duplicates"}, {"op": "token_count"},
           |  {"op": "bm25_from_index",
           |   "params": {"index_path": "/tmp/x", "k": 5}}]"""
-          .stripMargin)
+          .stripMargin))
     }
     assert(e.getMessage.contains("not streamable") &&
       e.getMessage.contains("drop_exact_duplicates") &&
@@ -2220,9 +2218,10 @@ class StreamingSpec extends AnyFunSuite {
     // streaming: ONE query splits every micro-batch at both gates
     val input = MemoryStream[(Long, Option[Long])]
     val survivors = base.resolve("survivors").toString
-    val q = Pipeline.startGatedUnified(input.toDS().toDF("k", "v"),
-      Pipeline.parse(cfg(qStream)), survivors,
-      base.resolve("ckpt").toString)
+    val q = Pipeline.startStream(input.toDS().toDF("k", "v"),
+      Pipeline.parse(cfg(qStream)) :+
+        Pipeline.Step("write_stream_parquet", Map("path" -> survivors,
+          "checkpoint" -> base.resolve("ckpt").toString)))
     input.addData(rows.take(4): _*)
     q.processAllAvailable()
     input.addData(rows.drop(4): _*)
@@ -2259,102 +2258,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$replayDir/batch=7").exists())
   }
 
-  test("applyChangesStream maintains a parquet snapshot from a CDC " +
-       "stream: micro-batch merges, stale changes ignored via the " +
-       "snapshot's seq column, swap leaves no half-written state") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-cdc-stream")
-    val snapPath = base.resolve("snap").toString
-    val ckpt = base.resolve("ckpt").toString
-    // initial snapshot CARRIES seq — the stale-guard contract
-    Seq((1L, "a", 10, 0L), (2L, "b", 20, 0L), (3L, "c", 30, 0L))
-      .toDF("id", "s", "v", "seq")
-      .coalesce(1).write.parquet(snapPath)
-    val input = MemoryStream[CdcChg]
-    val q = StreamOps.applyChangesStream(input.toDF(), snapPath,
-      Seq("id"), ckpt)
-    def snap() = s.read.parquet(snapPath).collect()
-      .map(r => r.getAs[Long]("id") ->
-        ((r.getAs[String]("s"), r.getAs[Int]("v"),
-          r.getAs[Long]("seq")))).toMap
-    input.addData(
-      CdcChg(2, 2, "upsert", "b2", 21),  // update
-      CdcChg(5, 1, "upsert", "e", 50),   // insert
-      CdcChg(3, 2, "delete", null, 0))   // delete
-    q.processAllAvailable()
-    assert(snap() == Map(
-      1L -> (("a", 10, 0L)), 2L -> (("b2", 21, 2L)),
-      5L -> (("e", 50, 1L))))
-    input.addData(
-      CdcChg(2, 1, "upsert", "STALE", 99), // seq 1 <= applied 2: ignored
-      CdcChg(1, 5, "upsert", "a2", 11))
-    q.processAllAvailable()
-    q.stop()
-    assert(snap() == Map(
-      1L -> (("a2", 11, 5L)), 2L -> (("b2", 21, 2L)),
-      5L -> (("e", 50, 1L))))
-    // no merge debris next to the snapshot after the swaps
-    val leftovers = new java.io.File(base.toString).list().toSet
-    assert(leftovers == Set("snap", "ckpt"), leftovers.toString)
-  }
-
-  test("applyChangesStream bucketed mode: per-batch rewrites touch " +
-       "only the changed keys' buckets, stale replays skip the " +
-       "rewrite, untouched bucket files stay bit-stable") {
-    import graft.sources.Layout
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-cdc-bstream")
-    val snapPath = base.resolve("snap").toString
-    val nBuckets = 16
-    // a wide initial snapshot (seq INCLUDED — the stale-guard
-    // contract), so most buckets stay untouched by the tiny deltas
-    val init = (0L until 400L).map(i => (i, s"v$i", i.toInt, 0L))
-      .toDF("id", "s", "v", "seq")
-    Layout.writeBucketedSnapshot(init, snapPath, Seq("id"), nBuckets)
-    def files(): Map[String, Set[(String, Long, Long)]] =
-      new java.io.File(snapPath).listFiles().filter(_.isDirectory)
-        .map(d => d.getName -> d.listFiles().filter(_.isFile)
-          .map(f => (f.getName, f.length, f.lastModified)).toSet)
-        .toMap
-    val before = files()
-    val input = MemoryStream[CdcChg]
-    val q = StreamOps.applyChangesStream(input.toDF(), snapPath,
-      Seq("id"), base.resolve("ck").toString,
-      nBuckets = Some(nBuckets))
-    input.addData(
-      CdcChg(7, 1, "upsert", "seven", 77),
-      CdcChg(401, 1, "upsert", "new", 1),
-      CdcChg(9, 1, "delete", null, 0))
-    q.processAllAvailable()
-    val afterB1 = files()
-    // a fully-stale replay batch: nothing rewritten at all
-    input.addData(CdcChg(7, 1, "upsert", "STALE", 0))
-    q.processAllAvailable()
-    q.stop()
-    assert(files() == afterB1, "stale batch rewrote something")
-    // untouched directories from before batch 1 are bit-stable
-    val changedDirs = afterB1.keySet.filter(d =>
-      before.get(d) != afterB1.get(d))
-    assert(changedDirs.nonEmpty && changedDirs.size <= 3,
-      changedDirs.toString)
-    for ((d, fs) <- before if !changedDirs.contains(d))
-      assert(afterB1(d) == fs, s"untouched $d was rewritten")
-    // content: update applied once, stale ignored, delete dropped,
-    // insert present
-    val got = s.read.parquet(snapPath).collect()
-      .map(r => r.getAs[Long]("id") ->
-        ((r.getAs[String]("s"), r.getAs[Long]("seq")))).toMap
-    assert(got(7L) == (("seven", 1L)))
-    assert(got(401L) == (("new", 1L)))
-    assert(!got.contains(9L) && got.size == 400)
-  }
-
   test("merge_stream_snapshot: the CDC sink runs from a pure-JSON " +
        "streaming job config") {
     import graft.operators.Pipeline
@@ -2388,174 +2291,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(got == Map(1L -> "a", 2L -> "b2", 4L -> "d"))
   }
 
-  test("appendIvfIndexStream grows the persisted vector store: " +
-       "exact-regime probes equal brute force over the full corpus; " +
-       "re-sent ids are no-ops") {
-    import graft.operators.Similarity
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val emb = s.read
-      .parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select("vec_id", "embedding").limit(120).cache()
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-ivf-stream")
-    val idx = base.resolve("idx").toString
-    val centroids = Similarity.buildIvfIndex(
-      emb.filter(col("vec_id") % 3 === 0), "vec_id", "embedding",
-      idx, nlist = 4, lloydIters = 1)
-    val rest = emb.filter(col("vec_id") % 3 =!= 0).collect().map(r =>
-      VecRow(r.getLong(0), r.getSeq[Float](1)))
-    val input = MemoryStream[VecRow]
-    val q = StreamOps.appendIvfIndexStream(input.toDF(), idx,
-      centroids, base.resolve("ck").toString)
-    input.addData(rest.take(40).toSeq: _*)
-    q.processAllAvailable()
-    input.addData(rest.drop(40).toSeq: _*)
-    q.processAllAvailable()
-    input.addData(rest.take(10).toSeq: _*) // replay: must not duplicate
-    q.processAllAvailable()
-    q.stop()
-    val queries = emb.filter(col("vec_id") % 17 === 0)
-    def norm(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"),
-        r.getAs[Int]("rank"),
-        math.round(r.getAs[Double]("cosine") * 1e6))).toSet
-    // nprobe = nlist is the exact regime: the grown index must agree
-    // with brute force over ALL 120 vectors
-    val viaIndex = norm(Similarity.ivfTopKIndexed(idx, centroids,
-      queries, "vec_id", "embedding", k = 5, nprobe = 4))
-    val brute = norm(Similarity.bruteForceTopK(emb, queries,
-      "vec_id", "embedding", k = 5))
-    assert(viaIndex == brute && viaIndex.nonEmpty)
-    // no duplicate neighbor rows from the replayed batch
-    val n = s.read.parquet(idx).count()
-    val distinctIds = s.read.parquet(idx)
-      .select("neighbor_id").distinct().count()
-    assert(n == distinctIds)
-  }
-
-  test("appendSignaturesStream grows the LSH store duplicate-free " +
-       "through replays and heals the orphan-shingle crash window; " +
-       "probes equal a directly-built store") {
-    import graft.operators.Dedup
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val docs = s.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "lang", "text").limit(90).cache()
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-sig-stream")
-    val store = base.resolve("store").toString
-    val direct = base.resolve("direct").toString
-    Dedup.writeBandSignatures(docs, "doc_id", "text", direct,
-      n = 3, numHashes = 64, bands = 32)
-    Dedup.writeBandSignatures(docs.filter(col("doc_id") % 3 === 0),
-      "doc_id", "text", store, n = 3, numHashes = 64, bands = 32)
-    val restDf = docs.filter(col("doc_id") % 3 =!= 0)
-    val rest = restDf.collect().map(r =>
-      LangDoc(r.getLong(0), r.getString(1), r.getString(2)))
-    // simulate the mid-append crash: one incoming doc already has its
-    // shingle row (copied from the sound direct store) but no bands
-    val orphanId = rest.head.doc_id
-    val orphanRow = s.read.parquet(s"$direct/shingles")
-      .filter(col("id") === orphanId)
-    assert(orphanRow.count() == 1)
-    orphanRow.write.mode("append").parquet(s"$store/shingles")
-    val input = MemoryStream[LangDoc]
-    val q = StreamOps.appendSignaturesStream(input.toDF(), store,
-      base.resolve("ck").toString)
-    input.addData(rest.take(30).toSeq: _*)
-    q.processAllAvailable()
-    input.addData(rest.drop(30).toSeq: _*)
-    q.processAllAvailable()
-    input.addData(rest.take(10).toSeq: _*) // replay: no duplicates
-    q.processAllAvailable()
-    q.stop()
-    // duplicate-free and complete: every doc exactly one shingle row,
-    // bands ids == shingles ids == the full corpus (orphan healed)
-    val shingleIds = s.read.parquet(s"$store/shingles")
-      .groupBy("id").count().collect()
-    assert(shingleIds.forall(_.getLong(1) == 1))
-    val allIds = docs.select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(shingleIds.map(_.getLong(0)).toSet == allIds)
-    assert(s.read.parquet(s"$store/bands").select("id").distinct()
-      .collect().map(_.getLong(0)).toSet == allIds)
-    // probes against the grown store == against the directly-built one
-    val probe = docs.filter(col("doc_id") % 7 === 0)
-      .select(col("doc_id") + 1000000L as "doc_id",
-        concat(col("text"), lit(" tail")).as("text"))
-    def pairs(p: String) = Dedup
-      .minHashLshPairsAgainstStore(probe, p, "doc_id", "text", 0.4)
-      .collect().map(r => (r.getLong(0), r.getLong(1),
-        math.round(r.getDouble(2) * 1e6))).toSet
-    assert(pairs(store) == pairs(direct) && pairs(store).nonEmpty)
-  }
-
-  test("profileShardsStream: per-micro-batch mergeable shards — the " +
-       "merged profile equals one batch pass over all ingested rows") {
-    import graft.operators.Stats
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-prof-stream")
-    val shards = base.resolve("shards").toString
-    val docs = s.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "lang", "text").limit(80)
-    val rows = docs.collect().map(r =>
-      LangDoc(r.getLong(0), r.getString(1), r.getString(2)))
-    val input = MemoryStream[LangDoc]
-    val q = StreamOps.profileShardsStream(input.toDF(), shards,
-      base.resolve("ck").toString, Seq("doc_id"), Seq("lang"))
-    input.addData(rows.take(30).toSeq: _*)
-    q.processAllAvailable()
-    input.addData(rows.drop(30).toSeq: _*)
-    q.processAllAvailable()
-    q.stop()
-    def prof(path: String) = Stats
-      .profileFromShards(s, path, Seq("doc_id")).collect()
-      .map(r => r.toSeq.map(String.valueOf).mkString("|")).toSet
-    val direct = base.resolve("direct").toString
-    Stats.writeProfileShards(docs, direct, Seq("doc_id"), Seq("lang"))
-    assert(prof(shards) == prof(direct) && prof(shards).nonEmpty)
-  }
-
-  test("cardinalityShardsStream: per-micro-batch register shards — " +
-       "values RE-SEEN across batches collapse by max-merge, so the " +
-       "merged estimate equals one batch pass over the distinct rows") {
-    import graft.operators.Stats
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-card-stream")
-    val shards = base.resolve("shards").toString
-    val docs = s.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "lang", "text").limit(80)
-    val rows = docs.collect().map(r =>
-      LangDoc(r.getLong(0), r.getString(1), r.getString(2)))
-    val input = MemoryStream[LangDoc]
-    val q = StreamOps.cardinalityShardsStream(input.toDF(), shards,
-      base.resolve("ck").toString, Seq("doc_id", "lang"), Seq("lang"))
-    // 20 docs arrive in BOTH micro-batches: a per-batch
-    // count(DISTINCT) sum would double-count them
-    input.addData(rows.take(50).toSeq: _*)
-    q.processAllAvailable()
-    input.addData(rows.drop(30).toSeq: _*)
-    q.processAllAvailable()
-    q.stop()
-    def card(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    val merged = card(Stats.cardinalityFromShards(s, shards,
-      Seq("doc_id", "lang")))
-    val direct = card(Stats.approxDistinct(docs, Seq("doc_id", "lang")))
-    assert(merged == direct && merged.size == 2)
-  }
-
   test("host_graph_windowed: the live host-graph config step — " +
        "closed windows carry the batch run of the same body (counts " +
        "exact, page distincts the same deterministic sketch)") {
@@ -2579,7 +2314,7 @@ class StreamingSpec extends AnyFunSuite {
         |             "src_col": "src_url",
         |             "dst_url_col": "href_abs"}}]""".stripMargin
     val input = MemoryStream[(Long, String, String, Timestamp)]
-    val out = Pipeline.fromJsonStreaming(cfg)(
+    val out = Pipeline.fromStepsStreaming(Pipeline.parse(cfg))(
       input.toDF().toDF("doc_id", "src_url", "href_abs", "ts"))
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("cfg_hg")
@@ -2614,84 +2349,6 @@ class StreamingSpec extends AnyFunSuite {
       r._3 == "dst1.example.org" && r._4 == 2L))
   }
 
-  test("quantileShardsStream: per-micro-batch GK shards — merged " +
-       "percentiles equal one batch pass over all ingested rows") {
-    import graft.operators.Stats
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-quant-stream")
-    val shards = base.resolve("shards").toString
-    val docs = s.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "lang", "text").limit(80)
-    val rows = docs.collect().map(r =>
-      LangDoc(r.getLong(0), r.getString(1), r.getString(2)))
-    val input = MemoryStream[LangDoc]
-    val q = StreamOps.quantileShardsStream(
-      input.toDF().withColumn("score", col("doc_id") % 97),
-      shards, base.resolve("ck").toString, "score", Seq("lang"))
-    input.addData(rows.take(30).toSeq: _*)
-    q.processAllAvailable()
-    input.addData(rows.drop(30).toSeq: _*)
-    q.processAllAvailable()
-    q.stop()
-    val qs = Seq(0.1, 0.5, 0.9)
-    def quant(path: String) = Stats.quantilesFromShards(s, path, qs)
-      .collect().map(r => r.toSeq.map(String.valueOf).mkString("|"))
-      .toSet
-    val direct = base.resolve("direct").toString
-    Stats.writeQuantileShards(
-      docs.withColumn("score", col("doc_id") % 97), direct,
-      "score", Seq("lang"))
-    assert(quant(shards) == quant(direct) && quant(shards).nonEmpty)
-  }
-
-  test("mergeSearchIndexStream folds a document stream into the " +
-       "persisted BM25 index: probes equal a directly-built index " +
-       "over the union; re-sent ids are no-ops") {
-    import graft.operators.TextSearch
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val docs = s.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text").limit(60).cache()
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-idx-stream")
-    val idx = base.resolve("idx").toString
-    val initial = docs.filter(col("doc_id") % 3 === 0)
-    TextSearch.writeSearchIndex(initial, idx)
-    val input = MemoryStream[LangDoc]
-    val q = StreamOps.mergeSearchIndexStream(
-      input.toDF().select(col("doc_id"), col("text")), idx,
-      base.resolve("ck").toString)
-    val rows = docs.collect().map(r =>
-      LangDoc(r.getLong(0), "en", r.getString(1)))
-    val batch1 = rows.filter(_.doc_id % 3 == 1)
-    val batch2 = rows.filter(_.doc_id % 3 == 2)
-    input.addData(batch1.toSeq: _*)
-    q.processAllAvailable()
-    input.addData(batch2.toSeq: _*)
-    q.processAllAvailable()
-    // replay: same ids again — must be a no-op, not a corrupt merge
-    input.addData(batch1.take(5).toSeq: _*)
-    q.processAllAvailable()
-    q.stop()
-    val queries = Seq((0L, "spark join fast"), (1L, "customer order"))
-      .toDF("query_id", "qtext")
-    val direct = base.resolve("direct").toString
-    TextSearch.writeSearchIndex(docs, direct)
-    def top(path: String) = TextSearch
-      .bm25FromIndex(s, path, queries, k = 5).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
-        r.getAs[Double]("score"))).toSet
-    assert(top(idx) == top(direct) && top(idx).nonEmpty)
-    val leftovers = new java.io.File(base.toString).list().toSet
-    assert(leftovers == Set("idx", "ck", "direct"), leftovers.toString)
-  }
-
   test("windowed_stats_watermarked: a STATEFUL step from pure config " +
        "— append-mode finalized windows == batch windowed_stats on " +
        "the same rows; missing watermark stays non-streamable") {
@@ -2704,7 +2361,7 @@ class StreamingSpec extends AnyFunSuite {
         |  "params": {"watermark_delay": "30 minutes",
         |             "window_length": "1 hour"}}]""".stripMargin
     val input = MemoryStream[Ev]
-    val out = Pipeline.fromJsonStreaming(cfg)(input.toDF())
+    val out = Pipeline.fromStepsStreaming(Pipeline.parse(cfg))(input.toDF())
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("cfg_win")
       .outputMode("append").start()
@@ -2738,8 +2395,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(batch == direct)
     // the UNwatermarked aggregate stays rejected by name
     val e = intercept[IllegalArgumentException] {
-      Pipeline.fromJsonStreaming(
-        """[{"op": "windowed_stats"}]""")
+      Pipeline.fromStepsStreaming(Pipeline.parse(
+        """[{"op": "windowed_stats"}]"""))
     }
     assert(e.getMessage.contains("not streamable") &&
       e.getMessage.contains("windowed_stats_watermarked"))
@@ -2808,7 +2465,7 @@ class StreamingSpec extends AnyFunSuite {
         |             "window_length": "6 hours",
         |             "group_cols": ["event_type"]}}]""".stripMargin
     val input = MemoryStream[(Long, String, Timestamp, Double)]
-    val out = Pipeline.fromJsonStreaming(cfg)(
+    val out = Pipeline.fromStepsStreaming(Pipeline.parse(cfg))(
       input.toDF().toDF("event_id", "event_type", "ts", "value"))
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("cfg_wq")
@@ -2832,8 +2489,8 @@ class StreamingSpec extends AnyFunSuite {
     // the unwatermarked quantile aggregate has no config spelling at
     // all: the registry only admits the watermarked form
     val e = intercept[IllegalArgumentException] {
-      Pipeline.fromJsonStreaming(
-        """[{"op": "windowed_quantiles"}]""")
+      Pipeline.fromStepsStreaming(Pipeline.parse(
+        """[{"op": "windowed_quantiles"}]"""))
     }
     assert(e.getMessage.contains("unknown op") ||
       e.getMessage.contains("not streamable"))
@@ -2858,7 +2515,7 @@ class StreamingSpec extends AnyFunSuite {
         |  "params": {"watermark_delay": "30 minutes",
         |             "window_seconds": 3600, "top_k": 3}}]""".stripMargin
     val input = MemoryStream[StreamDoc]
-    val out = Pipeline.fromJsonStreaming(cfg)(input.toDF())
+    val out = Pipeline.fromStepsStreaming(Pipeline.parse(cfg))(input.toDF())
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("cfg_trend")
       .outputMode("append").start()
@@ -2905,10 +2562,10 @@ class StreamingSpec extends AnyFunSuite {
       q.stop()
       s.sql(s"select * from $name").as[SessionOut].collect().toSet
     }
-    val cfg = Pipeline.fromJsonStreaming(
+    val cfg = Pipeline.fromStepsStreaming(Pipeline.parse(
       """[{"op": "sessionize_watermarked",
         |  "params": {"watermark_delay": "0 seconds",
-        |             "gap_seconds": 1800}}]""".stripMargin)
+        |             "gap_seconds": 1800}}]""".stripMargin))
     val viaCfg = run(cfg, "cfg_sess")
     val direct = run(df => graft.streaming.StreamOps.sessionizeStream(
       df.withWatermark("ts", "0 seconds").as[SessionEvent],
@@ -2948,12 +2605,12 @@ class StreamingSpec extends AnyFunSuite {
       Seq(ev(31, 3, "2024-01-01 09:00:03"))) // u=3 re-arrival
     def runFlags(name: String): Map[Long, Boolean] = {
       val input = MemoryStream[Ev]
-      val chain = Pipeline.fromJsonStreaming(
+      val chain = Pipeline.fromStepsStreaming(Pipeline.parse(
         """[{"op": "first_seen_flags_watermarked",
           |  "params": {"keys": ["user_id"],
           |             "watermark_delay": "2 seconds",
           |             "order_cols": ["ts", "event_id"]}}]"""
-          .stripMargin)
+          .stripMargin))
       val q = chain(input.toDF()).writeStream.format("memory")
         .queryName(name).outputMode("append").start()
       batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
@@ -2982,10 +2639,10 @@ class StreamingSpec extends AnyFunSuite {
     // (delay 1 hour: no state evicts inside the two batches — a 0 s
     // delay would evict each key as soon as the watermark passes it)
     val input2 = MemoryStream[Ev]
-    val dd = Pipeline.fromJsonStreaming(
+    val dd = Pipeline.fromStepsStreaming(Pipeline.parse(
       """[{"op": "drop_duplicates_watermarked",
         |  "params": {"keys": ["user_id"],
-        |             "watermark_delay": "1 hour"}}]""".stripMargin)(
+        |             "watermark_delay": "1 hour"}}]""".stripMargin))(
       input2.toDF())
     val q2 = dd.writeStream.format("memory").queryName("ddw_stream")
       .outputMode("append").start()
@@ -3015,10 +2672,12 @@ class StreamingSpec extends AnyFunSuite {
     def ck(): String = java.nio.file.Files
       .createTempDirectory("graft-fsf-ck").toString
     val rejected = intercept[IllegalArgumentException] {
-      Pipeline.startGatedUnified(MemoryStream[Ev].toDF(),
-        Pipeline.parse(s"[$gateStep, $flagStep]"), quar, ck())
+      Pipeline.startStream(MemoryStream[Ev].toDF(),
+        Pipeline.parse(s"[$gateStep, $flagStep]") :+
+        Pipeline.Step("write_stream_parquet", Map("path" -> quar,
+          "checkpoint" -> ck())))
     }
-    assert(rejected.getMessage.contains("startGatedUnified") &&
+    assert(rejected.getMessage.contains("batch-boundary-sensitive") &&
       rejected.getMessage.contains("first_seen_flags_watermarked"))
     // ...and the UNIFIED runner handles the stateful-then-gate
     // order: ONE query, gate store and survivors sink both fed from
@@ -3026,8 +2685,10 @@ class StreamingSpec extends AnyFunSuite {
     val input3 = MemoryStream[Ev]
     val survivors = java.nio.file.Files
       .createTempDirectory("graft-fsf-out").toString
-    val q3 = Pipeline.startGatedUnified(input3.toDF(),
-      Pipeline.parse(gatedCfg), survivors, ck())
+    val q3 = Pipeline.startStream(input3.toDF(),
+      Pipeline.parse(gatedCfg) :+
+        Pipeline.Step("write_stream_parquet", Map("path" -> survivors,
+          "checkpoint" -> ck())))
     batches.take(2).foreach { b =>
       input3.addData(b: _*); q3.processAllAvailable()
     }
@@ -3044,13 +2705,14 @@ class StreamingSpec extends AnyFunSuite {
     // typo'd params on a GATED step throw at config time — the gate
     // bypasses compileStep but runs the same param-set validation
     val typo = intercept[IllegalArgumentException] {
-      Pipeline.startGatedUnified(MemoryStream[Ev].toDF(),
+      Pipeline.startStream(MemoryStream[Ev].toDF(),
         Pipeline.parse(
           s"""[{"op": "expect_condition",
              |  "params": {"condition": "true", "name": "g",
              |             "quarantine_path": "$quar",
-             |             "qurantine_pth": "oops"}}]""".stripMargin),
-        quar, ck())
+             |             "qurantine_pth": "oops"}}]""".stripMargin) :+
+        Pipeline.Step("write_stream_parquet", Map("path" -> quar,
+          "checkpoint" -> ck())))
     }
     assert(typo.getMessage.contains("unknown params") &&
       typo.getMessage.contains("qurantine_pth"))
@@ -3058,12 +2720,12 @@ class StreamingSpec extends AnyFunSuite {
     // withColumn would replace, stream schema.add would duplicate —
     // the two faces must agree, so neither is allowed)
     val collide = intercept[IllegalArgumentException] {
-      Pipeline.fromJsonStreaming(
+      Pipeline.fromStepsStreaming(Pipeline.parse(
         """[{"op": "first_seen_flags_watermarked",
           |  "params": {"keys": ["user_id"],
           |             "watermark_delay": "2 seconds",
           |             "order_cols": ["ts", "event_id"],
-          |             "flag_col": "user_id"}}]""".stripMargin)(
+          |             "flag_col": "user_id"}}]""".stripMargin))(
         batches.head.toDF())
     }
     assert(collide.getMessage.contains("already exists"))
@@ -3157,11 +2819,11 @@ class StreamingSpec extends AnyFunSuite {
         .as[Scd2Out].collect().toSet
     }
     // the config maps renamed columns back into the event shape
-    val cfg = Pipeline.fromJsonStreaming(
+    val cfg = Pipeline.fromStepsStreaming(Pipeline.parse(
       """[{"op": "scd2_watermarked",
         |  "params": {"watermark_delay": "24 hours",
         |             "key_col": "uid", "attr_col": "state",
-        |             "ts_col": "ts", "tie_col": "eid"}}]""".stripMargin)
+        |             "ts_col": "ts", "tie_col": "eid"}}]""".stripMargin))
     val viaCfg = run(df => cfg(df.select(col("user_id").as("uid"),
       col("event_id").as("eid"), col("ts"),
       col("value").as("state"))), "cfg_scd2")
@@ -3205,7 +2867,8 @@ class StreamingSpec extends AnyFunSuite {
         direct: org.apache.spark.sql.DataFrame =>
           org.apache.spark.sql.DataFrame,
         mode: String = "append"): Unit = {
-      val viaCfg = run(feed, Pipeline.fromJsonStreaming(cfgJson), mode)
+      val viaCfg = run(feed,
+        Pipeline.fromStepsStreaming(Pipeline.parse(cfgJson)), mode)
       val viaDirect = run(feed, direct, mode)
       assert(viaCfg == viaDirect && viaCfg.nonEmpty, cfgJson)
     }
@@ -3314,11 +2977,11 @@ class StreamingSpec extends AnyFunSuite {
           "timestamp '2024-01-01 02:00:00'")
         .as[DriftOut].collect().toSet
     }
-    val cfg = Pipeline.fromJsonStreaming(
+    val cfg = Pipeline.fromStepsStreaming(Pipeline.parse(
       s"""[{"op": "kl_drift_watermarked",
          |  "params": {"watermark_delay": "30 minutes",
          |             "reference_path": "$refPath",
-         |             "window_seconds": 3600}}]""".stripMargin)
+         |             "window_seconds": 3600}}]""".stripMargin))
     val viaCfg = run(cfg, "cfg_kl")
     val direct = run(df => graft.streaming.StreamOps.klDriftStream(
       df.withWatermark("ts", "30 minutes").as[DriftEvent],
@@ -3359,11 +3022,11 @@ class StreamingSpec extends AnyFunSuite {
         .collect().map(_.mkString("|")).toSet
     }
 
-    val asofCfg = Pipeline.fromJsonStreaming(
+    val asofCfg = Pipeline.fromStepsStreaming(Pipeline.parse(
       """[{"op": "asof_join_watermarked",
         |  "params": {"left_condition": "event_type = 'purchase'",
         |             "right_condition": "event_type = 'click'",
-        |             "watermark_delay": "24 hours"}}]""".stripMargin)
+        |             "watermark_delay": "24 hours"}}]""".stripMargin))
     val asofDirect = (df: org.apache.spark.sql.DataFrame) => {
       val l = df.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("event_id"), col("ts"))
@@ -3378,12 +3041,12 @@ class StreamingSpec extends AnyFunSuite {
     val a2 = run(asofDirect, "direct_asof_join")
     assert(a1 == a2 && a1.nonEmpty)
 
-    val rangeCfg = Pipeline.fromJsonStreaming(
+    val rangeCfg = Pipeline.fromStepsStreaming(Pipeline.parse(
       """[{"op": "range_join_watermarked",
         |  "params": {"left_condition": "event_type = 'purchase'",
         |             "right_condition": "event_type = 'click'",
         |             "lower_seconds": 3600, "upper_seconds": 0,
-        |             "watermark_delay": "24 hours"}}]""".stripMargin)
+        |             "watermark_delay": "24 hours"}}]""".stripMargin))
     val rangeDirect = (df: org.apache.spark.sql.DataFrame) =>
       StreamOps.rangeJoinStream(
         df.filter(col("event_type") === "purchase")
@@ -3424,7 +3087,7 @@ class StreamingSpec extends AnyFunSuite {
          |]""".stripMargin
     val rows =
       Seq((1L, 0.5), (2L, 1.5), (3L, 2.5), (9L, 9.9), (1L, 3.5))
-    val cfg = Pipeline.fromJsonStreaming(json)
+    val cfg = Pipeline.fromStepsStreaming(Pipeline.parse(json))
     val in = MemoryStream[(Long, Double)]
     val q = cfg(in.toDF().toDF("k", "v")).writeStream
       .format("memory").queryName("ss_enrich")
